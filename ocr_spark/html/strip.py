@@ -177,12 +177,3 @@ def strip_html(
     out[joined.index] = joined.values
     out[notnull & out.isna()] = ""
     return out
-
-
-def strip_tags(html: pd.Series) -> pd.Series:
-    """Plain tag removal + entity unescape + whitespace collapse — the
-    SQL-expressible baseline (same regexes as the DuckDB oracle)."""
-    notnull = html.notna()
-    out = pd.Series([None] * len(html), index=html.index, dtype=object)
-    out[notnull] = _clean_text(html[notnull].astype(str))
-    return out

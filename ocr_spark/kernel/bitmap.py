@@ -20,11 +20,6 @@ def black_mask(gray: np.ndarray) -> np.ndarray:
     return gray < 128
 
 
-def rect_fill_factor(mask: np.ndarray, x: int, y: int, w: int, h: int) -> float:
-    """P2 (Bitmap.getRectFillFactor, Bitmap.java:112-126)."""
-    return float(mask[y : y + h, x : x + w].sum()) / (w * h)
-
-
 def get_borders(mask: np.ndarray, x: int, y: int, w: int, h: int):
     """P12 border trim (Bitmap.getBorders, Bitmap.java:506-568).
 
@@ -85,19 +80,6 @@ def extract_matrix(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int):
     crop = gray[y + t : y + h - b + 1, x + l : x + w - r + 1]
     resized = java_resize(crop, n, n)
     return resized <= WHITE_THRESHOLD, (t, l, b, r)
-
-
-def count_vertical_fill(mask: np.ndarray, x: int, y: int, h: int) -> float:
-    """G5 column ink ratio (WordSegmenter.countVerticalLineFillRatio, :161-183)."""
-    H, W = mask.shape
-    if x < 0 or x >= W:
-        return 0.0
-    y0 = max(y, 0)
-    y1 = min(y + h, H)
-    n = y1 - y0
-    if n <= 0:
-        return 0.0  # unreachable for valid boxes (Java would divide by zero)
-    return float(mask[y0:y1, x].sum()) / n
 
 
 def find_hor_line(mask: np.ndarray, x: int, y: int, deviation: int, max_errors: int):

@@ -12,12 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from .bitmap import extract_matrix
-from .features import (
-    curvature_vector,
-    extract_closest_pixel,
-    extract_contour,
-    extract_slopes,
-)
+from .features import curvature_vector, extract_closest_pixel
 
 # CurvatureClassifier.java:19-22 ('*' appears twice; first-wins argmin makes
 # the second template unreachable, preserved bug-for-bug)
@@ -42,7 +37,6 @@ class Alphabet:
         self.def_chars: list[str] = []
         self.fonts: list[str] = []
         self.vectors = np.zeros((0, 8 * 2 * 3), dtype=np.int64)
-        self.contours = np.zeros((0, 8, n), dtype=np.int64)
         self.closest = np.zeros((0, n, n), dtype=np.int64)
 
     def reset(self):
@@ -61,7 +55,7 @@ class Alphabet:
         if len(alphabet) != len(DEFAULT_ALPHABET):
             raise ValueError(f"Alphabet must contain {len(DEFAULT_ALPHABET)} characters")
         gw, gh = 71, 69
-        vecs, conts, clos = [], [], []
+        vecs, clos = [], []
         for gy in range(6):
             for gx in range(13):
                 bx, by, bw, bh = gw * gx + 1, gh * gy + 1, gw - 2, gh - 2
@@ -71,16 +65,13 @@ class Alphabet:
                 matrix, _ = extract_matrix(gray, bx, by, bw, bh, self.n)
                 if not matrix.any():  # empty cell, skipped (:832-835)
                     continue
-                cont = extract_contour(matrix)
                 vecs.append(curvature_vector(matrix).reshape(-1))
-                conts.append(cont)
                 clos.append(extract_closest_pixel(matrix))
                 self.chars.append(ch)
                 self.def_chars.append(dc)
                 self.fonts.append(font_name)
         if vecs:
             self.vectors = np.concatenate([self.vectors, np.stack(vecs)])
-            self.contours = np.concatenate([self.contours, np.stack(conts)])
             self.closest = np.concatenate([self.closest, np.stack(clos)])
         return self
 
@@ -92,7 +83,6 @@ class Alphabet:
             "def_chars": self.def_chars,
             "fonts": self.fonts,
             "vectors": self.vectors,
-            "contours": self.contours,
             "closest": self.closest,
         }
 
@@ -103,7 +93,6 @@ class Alphabet:
         a.def_chars = list(d["def_chars"])
         a.fonts = list(d["fonts"])
         a.vectors = np.asarray(d["vectors"], dtype=np.int64)
-        a.contours = np.asarray(d["contours"], dtype=np.int64)
         a.closest = np.asarray(d["closest"], dtype=np.int64)
         return a
 
@@ -122,14 +111,6 @@ def classify_batch(vectors: np.ndarray, alphabet: Alphabet, accept: np.ndarray |
         d = np.where(accept[None, :], d, np.iinfo(np.int64).max)
     idx = d.argmin(axis=1)  # first index wins ties, like the reference loop
     return idx, d[np.arange(len(idx)), idx]
-
-
-def classify_contour_batch(contours: np.ndarray, alphabet: Alphabet):
-    """T5 (dormant in reference, :871-908): normalized L1 on contour
-    profiles; higher is better. Optional vote scorer, off the parity path."""
-    n = alphabet.n
-    d = np.abs(contours[:, None, :, :] - alphabet.contours[None, :, :, :]).sum(axis=(2, 3))
-    return 1.0 - d / (8.0 * n * n)
 
 
 def classify_template_batch(closest: np.ndarray, alphabet: Alphabet):

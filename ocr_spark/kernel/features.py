@@ -224,31 +224,6 @@ def extract_closest_pixel(matrix: np.ndarray) -> np.ndarray:
     return np.minimum(cheb, n).astype(np.int64)
 
 
-def sobel_filter(gray: np.ndarray, kernel=((-1, 0, 1), (-2, 0, 2), (-1, 0, 1))) -> np.ndarray:
-    """F7: gen-2 Sobel convolution (ocr2/ConvolutionalClassifier.filerImage,
-    :76-107): clamped-edge 3x3 convolution over the sRGB-encoded channel
-    values (the reference draws the gray raster into INT_RGB first), output
-    128 + clip(sum/9, -128, 127) with Java's toward-zero integer division.
-    Validated against sobel_string_9.gray.png."""
-    from .javaimg import SRGB_LUT
-
-    k = np.asarray(kernel, dtype=np.int64)
-    kh, kw = k.shape
-    src = SRGB_LUT[gray].astype(np.int64)
-    H, W = src.shape
-    acc = np.zeros((H, W), dtype=np.int64)
-    for ky in range(kh):
-        for kx in range(kw):
-            if k[ky, kx] == 0:
-                continue
-            ys = np.clip(np.arange(H) + ky - kh // 2, 0, H - 1)
-            xs = np.clip(np.arange(W) + kx - kw // 2, 0, W - 1)
-            acc += k[ky, kx] * src[np.ix_(ys, xs)]
-    n = kw * kh
-    div = np.where(acc >= 0, acc // n, -((-acc) // n))  # Java trunc division
-    return (128 + np.clip(div, -128, 127)).astype(np.uint8)
-
-
 def curvature_vector(matrix: np.ndarray) -> np.ndarray:
     """Full F2->F5 chain for one glyph matrix; (8,2,3) int64."""
     n = matrix.shape[0]

@@ -22,7 +22,7 @@ Reference-bug note (documented, not replicated here): `Bitmap.rotate`
 rotation and discards the quadrant-rotation result entirely, so in the
 reference the *recognition* path always sees the unrotated raster. These
 kernels implement the image operators themselves (what `getImage()`
-returns); the extraction pipeline applies them for real when deskew is
+returns); ``engine.recognize`` applies them for real when deskew is
 requested.
 """
 
@@ -254,214 +254,3 @@ def rotate_gray(gray: np.ndarray, angle_deg: float, bg: int = 0xFFFFFFFF) -> np.
     if angle != 0:
         buf = _rotate45(buf, angle, bg)
     return buffer_to_gray(buf)
-
-
-# --------------------------------------------------------------------------
-# P10: quality 2-5 B-spline rotation (the FreeImage port at
-# ImageRotator.java:590-1002,1086-1120). Off the engine's default path
-# (Bitmap.rotate always passes quality 1) but part of the reference's
-# operator surface. The recursions run vectorized across lines; the inverse
-# mapping and mirror indexing run vectorized across all output pixels.
-# --------------------------------------------------------------------------
-
-def _spline_poles(degree: int):
-    if degree == 2:
-        return [math.sqrt(8.0) - 3.0]
-    if degree == 3:
-        return [math.sqrt(3.0) - 2.0]
-    if degree == 4:
-        return [
-            math.sqrt(664.0 - math.sqrt(438976.0)) + math.sqrt(304.0) - 19.0,
-            math.sqrt(664.0 + math.sqrt(438976.0)) - math.sqrt(304.0) - 19.0,
-        ]
-    if degree == 5:
-        return [
-            math.sqrt(135.0 / 2.0 - math.sqrt(17745.0 / 4.0)) + math.sqrt(105.0 / 4.0) - 13.0 / 2.0,
-            math.sqrt(135.0 / 2.0 + math.sqrt(17745.0 / 4.0)) - math.sqrt(105.0 / 4.0) - 13.0 / 2.0,
-        ]
-    raise ValueError("Invalid spline degree")
-
-
-def _coeffs_along_rows(c: np.ndarray, poles) -> None:
-    """convertToInterpolationCoefficients (:590-627) on every row at once."""
-    N = c.shape[1]
-    if N == 1:
-        return
-    lam = 1.0
-    for z in poles:
-        lam *= (1.0 - z) * (1.0 - 1.0 / z)
-    c *= lam
-    tol = 1e-9
-    for z in poles:
-        horizon = int(math.ceil(math.log(tol) / math.log(abs(z))))
-        if horizon < N:
-            zn = z
-            s = c[:, 0].copy()
-            for n in range(1, horizon):
-                s += zn * c[:, n]
-                zn *= z
-            c[:, 0] = s
-        else:
-            zn = z
-            iz = 1.0 / z
-            z2n = z ** (N - 1)
-            s = c[:, 0] + z2n * c[:, N - 1]
-            z2n *= z2n * iz
-            for n in range(1, N - 1):
-                s += (zn + z2n) * c[:, n]
-                zn *= z
-                z2n *= iz
-            c[:, 0] = s / (1.0 - zn * zn)
-        for n in range(1, N):
-            c[:, n] += z * c[:, n - 1]
-        c[:, N - 1] = (z / (z * z - 1.0)) * (z * c[:, N - 2] + c[:, N - 1])
-        for n in range(N - 2, -1, -1):
-            c[:, n] = z * (c[:, n + 1] - c[:, n])
-
-
-def _samples_to_coefficients(img: np.ndarray, degree: int) -> None:
-    poles = _spline_poles(degree)
-    _coeffs_along_rows(img, poles)          # along x
-    t = np.ascontiguousarray(img.T)
-    _coeffs_along_rows(t, poles)            # along y
-    img[:] = t.T
-
-
-def _bspline_weights(frac: np.ndarray, degree: int):
-    """Interpolation weights per pixel; frac = coord - center index."""
-    w = frac
-    W = [None] * (degree + 1)
-    if degree == 2:
-        W[1] = 3.0 / 4.0 - w * w
-        W[2] = 0.5 * (w - W[1] + 1.0)
-        W[0] = 1.0 - W[1] - W[2]
-    elif degree == 3:
-        W[3] = (1.0 / 6.0) * w * w * w
-        W[0] = (1.0 / 6.0) + 0.5 * w * (w - 1.0) - W[3]
-        W[2] = w + W[0] - 2.0 * W[3]
-        W[1] = 1.0 - W[0] - W[2] - W[3]
-    elif degree == 4:
-        w2 = w * w
-        t = (1.0 / 6.0) * w2
-        W0 = 0.5 - w
-        W0 = W0 * W0
-        W0 = W0 * (1.0 / 24.0) * W0
-        t0 = w * (t - 11.0 / 24.0)
-        t1 = 19.0 / 96.0 + w2 * (0.25 - t)
-        W[0] = W0
-        W[1] = t1 + t0
-        W[3] = t1 - t0
-        W[4] = W0 + t0 + 0.5 * w
-        W[2] = 1.0 - W[0] - W[1] - W[3] - W[4]
-    elif degree == 5:
-        w2 = w * w
-        W[5] = (1.0 / 120.0) * w * w2 * w2
-        w2m = w2 - w
-        w4 = w2m * w2m
-        wh = w - 0.5
-        t = w2m * (w2m - 3.0)
-        W[0] = (1.0 / 24.0) * (1.0 / 5.0 + w2m + w4) - W[5]
-        t0 = (1.0 / 24.0) * (w2m * (w2m - 5.0) + 46.0 / 5.0)
-        t1 = (-1.0 / 12.0) * wh * (t + 4.0)
-        W[2] = t0 + t1
-        W[3] = t0 - t1
-        t0 = (1.0 / 16.0) * (9.0 / 5.0 - t)
-        t1 = (1.0 / 24.0) * wh * (w4 - w2m - 5.0)
-        W[1] = t0 + t1
-        W[4] = t0 - t1
-    else:
-        raise ValueError("Invalid spline degree")
-    return W
-
-
-def _mirror_index(idx: np.ndarray, n: int) -> np.ndarray:
-    """Mirror boundary folding (:898-910), Java truncating int division."""
-    if n == 1:
-        return np.zeros_like(idx)
-    n2 = 2 * n - 2
-    neg = idx < 0
-    folded = np.where(neg, -idx - n2 * ((-idx) // n2), idx - n2 * (idx // n2))
-    return np.where(folded >= n, n2 - folded, folded)
-
-
-def _interpolate_grid(coeff: np.ndarray, xs: np.ndarray, ys: np.ndarray, degree: int) -> np.ndarray:
-    """InterpolatedValue (:768-926) for arrays of sample coordinates."""
-    H, W = coeff.shape
-    if degree & 1:
-        xi0 = np.floor(xs).astype(np.int64) - degree // 2
-        yi0 = np.floor(ys).astype(np.int64) - degree // 2
-    else:
-        xi0 = np.floor(xs + 0.5).astype(np.int64) - degree // 2
-        yi0 = np.floor(ys + 0.5).astype(np.int64) - degree // 2
-    cx = degree // 2 if degree & 1 else degree // 2
-    # weight center: index[1] for deg 2/3, index[2] for deg 4/5
-    ctr = 1 if degree in (2, 3) else 2
-    xw = _bspline_weights(xs - (xi0 + ctr), degree)
-    yw = _bspline_weights(ys - (yi0 + ctr), degree)
-    out = np.zeros_like(xs)
-    for j in range(degree + 1):
-        yj = _mirror_index(yi0 + j, H)
-        row_acc = np.zeros_like(xs)
-        for i in range(degree + 1):
-            xi = _mirror_index(xi0 + i, W)
-            row_acc += xw[i] * coeff[yj, xi]
-        out += yw[j] * row_acc
-    return out
-
-
-def _rotate8(src: np.ndarray, angle_deg: float, x_origin: float, y_origin: float,
-             degree: int, bg_channel: int) -> np.ndarray:
-    """Rotate8Bit (:928-1002): one channel, bottom-up buffer convention."""
-    H, W = src.shape
-    img = np.flipud(src).astype(np.float64)
-    _samples_to_coefficients(img, degree)
-
-    a = math.radians(angle_deg)
-    a11, a12, a21, a22 = math.cos(a), -math.sin(a), math.sin(a), math.cos(a)
-    x0 = a11 * x_origin + a12 * y_origin
-    y0 = a21 * x_origin + a22 * y_origin
-    xs_shift = x_origin - x0
-    ys_shift = y_origin - y0
-
-    yy, xx = np.meshgrid(np.arange(H, dtype=np.float64), np.arange(W, dtype=np.float64),
-                         indexing="ij")
-    x1 = a12 * yy + xs_shift + a11 * xx
-    y1 = a22 * yy + ys_shift + a21 * xx
-    inside = (x1 > -0.5) & (x1 < W - 0.5) & (y1 > -0.5) & (y1 < H - 0.5)
-    p = np.full((H, W), float(bg_channel))
-    p[inside] = _interpolate_grid(img, x1[inside], y1[inside], degree)
-    vals = np.clip(np.trunc(p + 0.5), 0, 255).astype(np.uint8)
-    return np.flipud(vals)
-
-
-def rotate_gray_spline(gray: np.ndarray, angle_deg: float, quality: int,
-                       bg: int = 0xFFFFFFFF) -> np.ndarray:
-    """ImageRotatorBuffer.rotate quality 2-5 (:1086-1120): pad to the
-    rotation bounding box with the BACKGROUND color (Arrays.fill), rotate
-    about the padded center, return the whole buffer through the calibrated
-    gray conversions (the post-rotation crop is a no-op for |angle|<90 since
-    both getBoundingBox calls yield the padded dimensions). Gray input means
-    all three RGB channels are identical, so one channel pass suffices."""
-    if quality < 2 or quality > 5:
-        raise ValueError("quality must be 2..5")
-    h, w = gray.shape
-    rad = abs(math.cos(math.radians(angle_deg))), abs(math.sin(math.radians(angle_deg)))
-    if angle_deg in (0, 180):
-        bw, bh = w, h
-    elif angle_deg in (90, 270):
-        bw, bh = h, w
-    else:
-        bw = int(math.ceil(rad[0] * w + rad[1] * h))
-        bh = int(math.ceil(rad[1] * w + rad[0] * h))
-    bw, bh = max(w, bw), max(h, bh)
-
-    bg_ch = (bg >> 8) & 0xFF
-    chan = SRGB_LUT[gray].astype(np.int64)
-    padded = np.full((bh, bw), bg_ch, dtype=np.int64)  # Arrays.fill(tmp, bg)
-    oy, ox = (bh - h) // 2, (bw - w) // 2
-    padded[oy : oy + h, ox : ox + w] = chan
-
-    out = _rotate8(padded.astype(np.float64), angle_deg, bw / 2.0 - 0.5, bh / 2.0 - 0.5,
-                   quality, bg_ch)
-    v = out.astype(np.int64)
-    return _luma(v, v, v).astype(np.uint8)

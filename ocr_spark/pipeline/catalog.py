@@ -3,7 +3,7 @@
 This container ships no Iceberg runtime jar and has no network to fetch one
 (re-verified every round; see BENCH/BASELINE.md "Iceberg commits"), so the
 pipeline's default commit protocol is the parquet substitute implemented in
-``job.extract``: append-only manifest rows as the commit unit, dynamic
+``job.ParquetSink``: append-only manifest rows as the commit unit, dynamic
 partition overwrite for idempotent bucket rewrite. The semantics are already
 Iceberg-shaped; this module makes the swap a CODE PATH instead of prose:
 
@@ -16,7 +16,8 @@ Iceberg-shaped; this module makes the swap a CODE PATH instead of prose:
 
 The guard is unit-tested both ways (absent -> raise with instructions,
 present -> pass) via the ``OCR_SPARK_ICEBERG_JARS_DIR`` override; the
-``writeTo`` branch itself is only reachable on a cluster with the jar.
+``writeTo`` calls of ``IcebergSink`` are tested against a stubbed writer and
+catalog, and only run for real on a cluster with the jar.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from __future__ import annotations
 import glob
 import os
 import textwrap
+
+from pyspark.sql import functions as F
 
 # the spark-runtime artifact name is stable across Iceberg releases:
 # iceberg-spark-runtime-<spark.major.minor>_<scala>-<version>.jar
@@ -126,26 +129,36 @@ def configure_iceberg(builder, warehouse: str, catalog_name: str = "ocr",
     )
 
 
-def iceberg_append(df, table: str) -> None:
-    """Append with create-on-first-write (Iceberg's append requires an
-    existing table; the first wave of a fresh run creates it)."""
-    try:
-        df.writeTo(table).append()
-    except Exception as e:  # TABLE_OR_VIEW_NOT_FOUND on the first wave
-        if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-            raise
-        df.writeTo(table).create()
+class IcebergSink:
+    """The Iceberg commit substrate for ``job.extract`` (the twin of
+    ``job.ParquetSink``): span buckets in ``<catalog>.spans`` partitioned by
+    bucket, manifest rows in ``<catalog>.manifest``. The first wave of a
+    fresh run creates both tables."""
 
+    def __init__(self, spark, catalog: str):
+        self.spark = spark
+        self.spans = f"{catalog}.spans"
+        self.manifest_table = f"{catalog}.manifest"
 
-def iceberg_overwrite_buckets(df, table: str) -> None:
-    """Atomically replace the bucket partitions present in ``df`` (the
-    Iceberg twin of the parquet path's dynamic partition overwrite — no
-    pre-delete of stale dirs needed, the snapshot swap is the commit)."""
-    from pyspark.sql import functions as F
+    def manifest(self):
+        if not self.spark.catalog.tableExists(self.manifest_table):
+            return None
+        return self.spark.table(self.manifest_table)
 
-    try:
-        df.writeTo(table).overwritePartitions()
-    except Exception as e:
-        if "TABLE_OR_VIEW_NOT_FOUND" not in str(e):
-            raise
-        df.writeTo(table).partitionedBy(F.col("bucket")).create()
+    def write_wave(self, out, wave: list[int]) -> None:
+        # atomically replaces the bucket partitions present in ``out``: the
+        # snapshot swap is the commit, so no stale half-written bucket can
+        # exist and the parquet sink's pre-delete is not needed
+        if self.spark.catalog.tableExists(self.spans):
+            out.writeTo(self.spans).overwritePartitions()
+        else:
+            out.writeTo(self.spans).partitionedBy(F.col("bucket")).create()
+
+    def read_wave(self, wave: list[int]):
+        return self.spark.table(self.spans).where(F.col("bucket").isin(wave))
+
+    def append_manifest(self, rows) -> None:
+        if self.spark.catalog.tableExists(self.manifest_table):
+            rows.writeTo(self.manifest_table).append()
+        else:
+            rows.writeTo(self.manifest_table).create()

@@ -22,10 +22,15 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import DOCUMENTS, MANIFEST, MEDIA, OUTPUT_SPANS
 from .udfs import make_ocr_udf, make_strip_udf
+
+#: a span row as committed: the output schema plus its bucket partition
+SPANS_WITH_BUCKET = T.StructType(
+    OUTPUT_SPANS.fields + [T.StructField("bucket", T.IntegerType())]
+)
 
 
 def configure(builder_or_spark, shuffle_partitions: int | None = None):
@@ -270,43 +275,61 @@ def extract_spans(
     return out
 
 
-def _read_committed(spark: SparkSession, manifest_dir: str) -> set[int]:
-    try:
-        hpath, fs = _hadoop_fs(spark, manifest_dir)
+class ParquetSink:
+    """The default commit substrate, plain parquet under ``output_dir``:
+    span buckets in ``spans/bucket=K`` dirs replaced by dynamic partition
+    overwrite, manifest rows appended under ``_manifest``. The Iceberg twin
+    is ``catalog.IcebergSink``; ``extract`` only talks to this interface."""
+
+    def __init__(self, spark: SparkSession, output_dir: str):
+        self.spark = spark
+        self.spans_dir = f"{output_dir}/spans"
+        self.manifest_dir = f"{output_dir}/_manifest"
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+    def manifest(self) -> DataFrame | None:
+        """The commit log, or None before the first commit. Only a missing
+        dir means "nothing committed"; an unreadable one fails the run
+        (resuming from it would silently rewrite every bucket)."""
+        hpath, fs = _hadoop_fs(self.spark, self.manifest_dir)
         if not fs.exists(hpath):
-            return set()
-        m = spark.read.schema(MANIFEST).parquet(manifest_dir)
-        return {
-            r.partition_id
-            for r in m.where(F.col("status") == "committed")
-            .select("partition_id")
-            .distinct()
-            .collect()
-        }
-    except Exception:
-        return set()
+            return None
+        return self.spark.read.schema(MANIFEST).parquet(self.manifest_dir)
+
+    def write_wave(self, out: DataFrame, wave: list[int]) -> None:
+        # dynamic overwrite only replaces partitions present in the new
+        # data; clear stale half-written dirs for wave buckets that may
+        # end empty
+        for b in wave:
+            hpath, fs = _hadoop_fs(self.spark, f"{self.spans_dir}/bucket={b}")
+            fs.delete(hpath, True)
+        out.write.mode("overwrite").partitionBy("bucket").parquet(self.spans_dir)
+
+    def read_wave(self, wave: list[int]) -> DataFrame:
+        # explicit schema: a zero-row wave leaves no partition dirs to
+        # infer from, and its empty buckets must still commit
+        return (
+            self.spark.read.schema(SPANS_WITH_BUCKET)
+            .parquet(self.spans_dir)
+            .where(F.col("bucket").isin(wave))
+        )
+
+    def append_manifest(self, rows: DataFrame) -> None:
+        rows.write.mode("append").parquet(self.manifest_dir)
 
 
-def _read_committed_table(spark: SparkSession, table: str) -> set[int]:
-    """Catalog-mode twin of _read_committed: a missing table (fresh run,
-    created by the first wave's append) means nothing is committed."""
-    try:
-        m = spark.table(table)
-    except Exception:
+def committed_buckets(manifest: DataFrame | None) -> set[int]:
+    """Buckets with a committed manifest row (a re-committed bucket just
+    has more than one)."""
+    if manifest is None:
         return set()
     return {
         r.partition_id
-        for r in m.where(F.col("status") == "committed")
+        for r in manifest.where(F.col("status") == "committed")
         .select("partition_id")
         .distinct()
         .collect()
     }
-
-
-def _hadoop_delete(spark: SparkSession, path: str) -> None:
-    """Delete a path through the Hadoop FS API (works for any scheme)."""
-    hpath, fs = _hadoop_fs(spark, path)
-    fs.delete(hpath, True)
 
 
 def extract(
@@ -338,13 +361,10 @@ def extract(
 
     ``catalog`` switches the commit substrate from the parquet substitute to
     a real Iceberg catalog of that name (guarded — the CLI calls
-    ``pipeline.catalog.require_iceberg`` first): span buckets land via
-    ``writeTo(...).overwritePartitions()`` (the snapshot swap IS the commit,
-    so the stale-dir pre-delete disappears) and manifest rows via
-    ``writeTo(...).append()``; reads go through ``spark.table``. The wave
-    loop, commit unit, and resume semantics are identical in both modes.
+    ``pipeline.catalog.require_iceberg`` first; see ``catalog.IcebergSink``).
+    The wave loop, commit unit, and resume semantics are identical in both
+    modes.
     """
-    import os as _os
     import re as _re
 
     # run_id lands inside a SQL VALUES literal (manifest commit below):
@@ -355,26 +375,17 @@ def extract(
             "embedded in the manifest SQL literal and in output paths"
         )
 
-    trace = _os.environ.get("OCR_SPARK_TIMING") == "1"
-    marks = [("start", time.perf_counter())]
-
-    def mark(name):
-        if trace:
-            marks.append((name, time.perf_counter()))
-
     docs = read_documents(spark, input_dir)
     media = read_media(spark, input_dir)
     pdfs = read_pdfs(spark, input_dir)
-    manifest_dir = f"{output_dir}/_manifest"
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    if catalog:
+        from .catalog import IcebergSink
 
-    if not resume:
-        committed = set()
-    elif catalog is not None:
-        committed = _read_committed_table(spark, f"{catalog}.manifest")
+        sink = IcebergSink(spark, catalog)
     else:
-        committed = _read_committed(spark, manifest_dir)
-    mark("read_committed")
+        sink = ParquetSink(spark, output_dir)
+
+    committed = committed_buckets(sink.manifest()) if resume else set()
     pending = [b for b in range(buckets) if b not in committed]
     metrics = {"buckets_total": buckets, "buckets_skipped": len(committed), "spans": 0}
 
@@ -393,51 +404,17 @@ def extract(
             extract_spans(subset, media, character_spacing, salt=salt,
                           partitions=partitions, pdfs=pdfs, fonts=fonts)
             .withColumn("bucket", (F.crc32(F.col("doc_id")) % buckets).cast("int"))
-            .repartition(max(4 * len(wave), 1), "bucket", "doc_id")
+            .repartition(max(len(wave), 1), "bucket")
         )
-        mark("plan")
-        if catalog is not None:
-            # Iceberg: the snapshot swap is atomic per commit, so stale
-            # half-written buckets cannot exist — no pre-delete needed
-            from .catalog import iceberg_overwrite_buckets
-
-            mark("delete")
-            iceberg_overwrite_buckets(out, f"{catalog}.spans")
-        else:
-            # dynamic overwrite only replaces partitions present in the new
-            # data; clear stale half-written dirs for wave buckets that may
-            # end empty
-            for b in wave:
-                _hadoop_delete(spark, f"{output_dir}/spans/bucket={b}")
-            mark("delete")
-            out.write.mode("overwrite").partitionBy("bucket").parquet(
-                f"{output_dir}/spans"
-            )
-        mark("write")
+        sink.write_wave(out, wave)
 
         # manifest stats come from READING BACK the written files — cheaper
         # than persisting the whole output through the write (measured), and
         # the committed row counts/checksums then describe what actually
-        # landed on storage, not what the plan produced in memory. Explicit
-        # schema: a zero-row wave leaves no partition dirs to infer from,
-        # and the empty buckets must still commit (zero-stat) manifest rows.
-        from pyspark.sql import types as T
-
-        if catalog is not None:
-            written = spark.table(f"{catalog}.spans").where(F.col("bucket").isin(wave))
-        else:
-            written = (
-                spark.read.schema(
-                    T.StructType(
-                        OUTPUT_SPANS.fields + [T.StructField("bucket", T.IntegerType())]
-                    )
-                )
-                .parquet(f"{output_dir}/spans")
-                .where(F.col("bucket").isin(wave))
-            )
+        # landed on storage, not what the plan produced in memory.
         stats = {
             int(r["bucket"]): r
-            for r in written.groupBy("bucket")
+            for r in sink.read_wave(wave).groupBy("bucket")
             .agg(
                 F.countDistinct("doc_id").alias("docs"),
                 F.count(F.lit(1)).alias("spans"),
@@ -455,7 +432,6 @@ def extract(
             )
             .collect()
         }
-        mark("stats")
 
         now = time.strftime("%Y-%m-%dT%H:%M:%S")
         values = []
@@ -472,30 +448,20 @@ def extract(
             metrics["spans"] += spans_n
         # append-only commit log: one small file per wave, no partition
         # dirs, no dynamic-overwrite listing — a re-committed bucket would
-        # just add a row, and _read_committed de-duplicates. Built as a SQL
+        # just add a row, and committed_buckets de-duplicates. Built as a SQL
         # VALUES literal (JVM LocalRelation): a python-list DataFrame would
         # spin up a Python runner for an 8-row write.
-        manifest_df = spark.sql(
+        sink.append_manifest(spark.sql(
             "SELECT * FROM VALUES "
             + ", ".join(values)
             + " AS t(run_id, partition_id, doc_count, span_count, media_count,"
             "        checksum, committed_at, status)"
-        )
-        if catalog is not None:
-            from .catalog import iceberg_append
-
-            iceberg_append(manifest_df.coalesce(1), f"{catalog}.manifest")
-        else:
-            manifest_df.coalesce(1).write.mode("append").parquet(manifest_dir)
-        mark("manifest")
+        ).coalesce(1))
         done += len(wave)
         if fail_after is not None and done >= fail_after:
             raise RuntimeError(f"injected failure after {done} buckets")
 
     metrics["buckets_done"] = done
-    if trace:
-        for (_, t0), (name, t1) in zip(marks, marks[1:]):
-            print(f"TIMING {name} {t1 - t0:.2f}")
     return metrics
 
 

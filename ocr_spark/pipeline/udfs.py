@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import functools
 import os
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import types as T
@@ -91,7 +92,6 @@ def load_alphabet(fonts: tuple = ("arial",)) -> Alphabet:
                 "def_chars": [c for c in z["def_chars"]],
                 "fonts": [c for c in z["fonts"]],
                 "vectors": z["vectors"],
-                "contours": z["contours"],
                 "closest": z["closest"],
             }
             return Alphabet.from_dict(d)
@@ -108,7 +108,6 @@ def load_alphabet(fonts: tuple = ("arial",)) -> Alphabet:
             def_chars=np.array(d["def_chars"]),
             fonts=np.array(d["fonts"]),
             vectors=d["vectors"],
-            contours=d["contours"],
             closest=d["closest"],
         )
         os.replace(tmp + ".npz" if os.path.exists(tmp + ".npz") else tmp, cache)
@@ -125,67 +124,29 @@ def make_strip_udf(min_words: int = 3, max_link_density: float = 0.5):
     return strip_udf
 
 
-def make_ocr_udf(
-    alphabet: Alphabet | None = None,
-    character_spacing: float = 8.0,
-    deskew: bool = False,
-    erase_lines_min_inches: float | None = None,
-    lexicon: list[str] | None = None,
-    lexicon_max_errors: int = 0,
-    char_classes: str | None = None,
-    fonts: tuple | list | None = None,
-):
-    """OCR a batch of PNG blobs. The alphabet dict rides in the closure;
-    workers rebuild the Alphabet lazily and reuse it across batches.
-
-    Optional preprocessing/resolver config (all engine-level, per SURVEY
-    §2.2/§2.6): ``deskew`` (P6+P9), ``erase_lines_min_inches`` (P11),
-    ``lexicon``+``lexicon_max_errors`` (L1/L2 word filter: non-matching
-    words are dropped from the page text), ``char_classes`` (L3/L4 alphabet
-    subset, e.g. "0123456789" for numeric fields), ``fonts`` (bundled
-    sheets to accumulate, T1 multi-font — ignored when an explicit
-    ``alphabet`` is passed)."""
-    if alphabet is None:
-        alphabet = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
+def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = None):
+    """OCR a batch of PNG blobs with the bundled ``fonts`` (T1 multi-font;
+    default arial). The alphabet dict rides in the closure; each task
+    rebuilds the Alphabet and Settings once and reuses them across its
+    Arrow batches."""
+    alphabet = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
     alpha_dict = alphabet.to_dict()
-    state: dict = {}
 
     @pandas_udf(T.StringType())
-    def ocr_udf(png: pd.Series) -> pd.Series:
-        import numpy as np  # noqa: F401  (worker-side import)
-
+    def ocr_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         from ..kernel.engine import recognize
-        from ..kernel.resolver import WordResolver, char_class_mask
         from ..kernel.segment import Settings
         from ..png import decode_gray
 
-        if "alpha" not in state:
-            state["alpha"] = Alphabet.from_dict(alpha_dict)
-            state["settings"] = Settings(character_spacing=character_spacing)
-            state["accept"] = (
-                char_class_mask(state["alpha"].chars, char_classes)
-                if char_classes is not None
-                else None
-            )
-            state["accept_word"] = (
-                WordResolver(lexicon_max_errors, lexicon).accept_word if lexicon else None
-            )
-        alpha = state["alpha"]
-        settings = state["settings"]
+        alpha = Alphabet.from_dict(alpha_dict)
+        settings = Settings(character_spacing=character_spacing)
 
         def one(blob):
             if blob is None:
                 return None
-            return recognize(
-                decode_gray(bytes(blob)),
-                settings,
-                alpha,
-                deskew=deskew,
-                erase_lines_min_inches=erase_lines_min_inches,
-                accept_word=state["accept_word"],
-                accept=state["accept"],
-            )
+            return recognize(decode_gray(bytes(blob)), settings, alpha)
 
-        return png.map(one)
+        for png in batches:
+            yield png.map(one)
 
     return ocr_udf

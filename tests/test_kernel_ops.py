@@ -117,13 +117,6 @@ def test_char_class_masks():
     assert not (nm & lm).any()
 
 
-def test_sobel_bit_exact():
-    from ocr_spark.kernel.features import sobel_filter
-
-    src = _gold("scan_string_9.gray.png")
-    assert np.array_equal(sobel_filter(src), _gold("sobel_string_9.gray.png"))
-
-
 def test_find_ver_line_traces():
     from ocr_spark.kernel.bitmap import black_mask, find_ver_line
 
@@ -251,21 +244,6 @@ def test_multiclassifier_vote(arial_alphabet):
 
     chars2, agreement2 = classify_vote_batch(mats, vecs, arial_alphabet, weights)
     assert chars2 == chars and (agreement2 == agreement).all()
-
-
-@pytest.mark.parametrize("angle,quality,golden", [
-    (7.5, 2, "rot_spline_q2_7.5.gray.png"),
-    (7.5, 3, "rot_spline_q3_7.5.gray.png"),
-    (12.0, 4, "rot_spline_q4_12.gray.png"),
-    (352.0, 5, "rot_spline_q5_m8.gray.png"),
-])
-def test_bspline_rotation_bit_exact(string3, angle, quality, golden):
-    """P10: quality 2-5 B-spline rotation (the FreeImage port), bit-exact
-    including the background-filled bounding-box padding and the
-    mirror-boundary spline recursions."""
-    from ocr_spark.kernel.rotate import rotate_gray_spline
-
-    assert np.array_equal(rotate_gray_spline(string3, angle, quality), _gold(golden))
 
 
 def test_settings_max_character_spacing_fraction(arial_alphabet):

@@ -235,7 +235,6 @@ def test_reset_restores_single_font_behavior(sheets, settings):
     fresh = Alphabet().learn_sheet(arial, "arial")
     assert alpha.chars == fresh.chars
     assert (alpha.vectors == fresh.vectors).all()
-    assert (alpha.contours == fresh.contours).all()
     assert (alpha.closest == fresh.closest).all()
     assert page_text(scan_page(courier_page, settings, alpha)) != COURIER_ONLY_WORDS[0]
     assert page_text(scan_page(arial_page, settings, alpha)) == ARIAL_WORDS[0]

@@ -1,6 +1,6 @@
 """Property fuzzing for the hand-rolled binary parsers (VERDICT r04 #6).
 
-Contracts per parser, each checked two ways:
+Contracts per binary parser, each checked two ways:
 
 1. round trip — ``parse(build(x)) == x`` for arbitrary well-formed inputs
    (the writer twin is the generator, so the property covers every header
@@ -10,6 +10,9 @@ Contracts per parser, each checked two ways:
    or return a result that satisfies the parser's own shape invariants.
    Never hang, never crash with a non-ValueError, never desync into
    returning geometry-inconsistent planes/tensors.
+
+The HTML stripper gets the text twin of the mutation contract: any batch of
+strings and nulls, deeply nested or unbalanced container tags included.
 
 Pure-Python/NumPy — no Spark session, so the whole file runs in seconds.
 """
@@ -306,3 +309,64 @@ def test_png_hostile_dimensions_rejected_fast():
     with pytest.raises(ValueError):
         decode_rgb(blob(8192, 8192, 2))
     assert time.time() - t0 < 1.0
+
+
+# --------------------------------------------------------------------------
+# HTML stripper
+# --------------------------------------------------------------------------
+
+_HTML_TOKENS = [
+    "<nav>", "</nav>", "<footer class='x'>", "</footer>", "<HEADER>", "</header >",
+    "<aside>", "</aside>", "<form>", "</form>", "<script>", "</script>", "<p>",
+    "</p>", "<div>", "<br/>", "<a href='#'>", "</a>", "<", ">", "&amp;", "&nbsp;",
+    " ", "\n", "word", "more words here",
+]
+
+
+def _nested_html(depth: int, closed: int, tag: str) -> str:
+    """``depth`` openers of ``tag`` with ``closed`` of them closed."""
+    body = f"<p>kept content words {depth}</p>"
+    return f"<{tag}>" * depth + body + f"</{tag}>" * closed + " tail words stay here"
+
+
+_html_value = st.one_of(
+    st.none(),
+    st.text(max_size=80),
+    st.lists(st.sampled_from(_HTML_TOKENS), max_size=60).map("".join),
+    st.builds(
+        _nested_html,
+        st.integers(min_value=0, max_value=300),
+        st.integers(min_value=0, max_value=300),
+        st.sampled_from(["nav", "footer", "header", "aside", "form"]),
+    ),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_html_value, max_size=6), st.integers(min_value=-50, max_value=50))
+def test_strip_html_never_raises_and_keeps_shape(values, offset):
+    from unittest import mock
+
+    import pandas as pd
+    from pandas.core.strings.accessor import StringMethods
+
+    from ocr_spark.html import strip
+
+    html = pd.Series(values, index=[offset + 3 * i for i in range(len(values))], dtype=object)
+    passes = {strip._DROP_CONTAINERS: 0, strip._DROP_CONTAINERS_LAZY: 0}
+    replace = StringMethods.replace
+
+    def counting_replace(self, pat, *args, **kwargs):
+        if pat in passes:
+            passes[pat] += 1
+        return replace(self, pat, *args, **kwargs)
+
+    with mock.patch.object(StringMethods, "replace", counting_replace):
+        out = strip.strip_html(html)
+
+    assert isinstance(out, pd.Series)
+    assert out.index.equals(html.index)
+    for v, o in zip(values, out):
+        assert o is None if v is None else isinstance(o, str)
+    # each fixpoint loop stops at its cap (plus the one residual sweep)
+    assert all(n <= strip._MAX_FIXPOINT_PASSES + 1 for n in passes.values())

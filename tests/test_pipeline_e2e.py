@@ -92,6 +92,21 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
     assert got == expected  # (kind, text, media_ref, order) per doc, 100%
 
 
+def test_one_data_file_per_bucket(spark, corpus, tmp_path):
+    """The write shuffle hashes on the bucket alone, so each bucket's rows
+    land in one task and its dir holds exactly one data file."""
+    from ocr_spark.pipeline.job import extract
+
+    out_dir = str(tmp_path / "out_files")
+    extract(spark, corpus, out_dir, buckets=4)
+    for b in range(4):
+        files = [
+            f for f in os.listdir(f"{out_dir}/spans/bucket={b}")
+            if not f.startswith((".", "_"))
+        ]
+        assert len(files) == 1, (b, files)
+
+
 def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     """Three-kind interleaving: text spans -> stripper, media spans -> OCR,
     pdf spans -> PDF parser, reassembled with exact span equality. PDFs are
@@ -153,6 +168,22 @@ def test_resume_is_idempotent(spark, corpus, tmp_path):
     assert m.count() == 4
     assert m.where(F.col("status") == "committed").count() == 4
     assert m.agg(F.sum("span_count")).collect()[0][0] == len(expected)
+
+
+def test_resume_from_unreadable_manifest_raises(spark, corpus, tmp_path):
+    """An unreadable commit log is not an empty one: resuming from it must
+    fail instead of silently rewriting every bucket."""
+    from ocr_spark.pipeline.job import extract
+
+    out_dir = str(tmp_path / "out_corrupt")
+    extract(spark, corpus, out_dir, buckets=4)
+    manifest_dir = f"{out_dir}/_manifest"
+    part = sorted(f for f in os.listdir(manifest_dir) if f.endswith(".parquet"))[0]
+    with open(os.path.join(manifest_dir, part), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+
+    with pytest.raises(Exception, match="_manifest"):
+        extract(spark, corpus, out_dir, buckets=4, resume=True)
 
 
 def test_rerun_after_partial_write_no_dupes(spark, corpus, tmp_path):
