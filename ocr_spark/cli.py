@@ -24,7 +24,6 @@ def main(argv=None):
     ex.add_argument("--run-id", default="run-0")
     ex.add_argument("--buckets", type=int, default=8)
     ex.add_argument("--no-resume", action="store_true")
-    ex.add_argument("--no-salt", action="store_true")
     ex.add_argument("--character-spacing", type=float, default=8.0)
     ex.add_argument(
         "--fonts", default="arial",
@@ -123,7 +122,6 @@ def main(argv=None):
                 buckets=args.buckets,
                 resume=not args.no_resume,
                 character_spacing=args.character_spacing,
-                salt=not args.no_salt,
                 partitions=args.partitions,
                 fonts=tuple(f for f in args.fonts.split(",") if f),
                 catalog=catalog_name,

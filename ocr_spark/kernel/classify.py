@@ -1,6 +1,6 @@
 """Alphabet learning and 1-NN classification (reference CurvatureClassifier).
 
-The learned alphabet is a plain dict of stacked ndarrays — cheap to pickle
+The learned ``Alphabet`` holds stacked ndarrays — cheap to pickle
 into a Spark broadcast / UDF closure. Classification is a batched integer L1
 over the 48-dim curvature vectors with first-index tie-break, exactly the
 reference's truncating accumulation + strict-less argmin
@@ -75,7 +75,7 @@ class Alphabet:
             self.closest = np.concatenate([self.closest, np.stack(clos)])
         return self
 
-    # -- serialization for broadcast ------------------------------------
+    # -- serialization for the on-disk feature cache (np.savez keys) -----
     def to_dict(self) -> dict:
         return {
             "n": self.n,
@@ -88,7 +88,7 @@ class Alphabet:
 
     @classmethod
     def from_dict(cls, d: dict) -> "Alphabet":
-        a = cls(d["n"])
+        a = cls(int(d["n"]))
         a.chars = list(d["chars"])
         a.def_chars = list(d["def_chars"])
         a.fonts = list(d["fonts"])

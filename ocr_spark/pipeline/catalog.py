@@ -132,7 +132,7 @@ def configure_iceberg(builder, warehouse: str, catalog_name: str = "ocr",
 class IcebergSink:
     """The Iceberg commit substrate for ``job.extract`` (the twin of
     ``job.ParquetSink``): span buckets in ``<catalog>.spans`` partitioned by
-    bucket, manifest rows in ``<catalog>.manifest``. The first wave of a
+    bucket, manifest rows in ``<catalog>.manifest``. The first commit of a
     fresh run creates both tables."""
 
     def __init__(self, spark, catalog: str):
@@ -145,7 +145,7 @@ class IcebergSink:
             return None
         return self.spark.table(self.manifest_table)
 
-    def write_wave(self, out, wave: list[int]) -> None:
+    def write_buckets(self, out, buckets: list[int]) -> None:
         # atomically replaces the bucket partitions present in ``out``: the
         # snapshot swap is the commit, so no stale half-written bucket can
         # exist and the parquet sink's pre-delete is not needed
@@ -154,8 +154,8 @@ class IcebergSink:
         else:
             out.writeTo(self.spans).partitionedBy(F.col("bucket")).create()
 
-    def read_wave(self, wave: list[int]):
-        return self.spark.table(self.spans).where(F.col("bucket").isin(wave))
+    def read_buckets(self, buckets: list[int]):
+        return self.spark.table(self.spans).where(F.col("bucket").isin(buckets))
 
     def append_manifest(self, rows) -> None:
         if self.spark.catalog.tableExists(self.manifest_table):

@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import DOCUMENTS, MANIFEST, MEDIA, OUTPUT_SPANS
-from .udfs import make_ocr_udf, make_strip_udf
+from .udfs import make_ocr_udf, make_pdf_udf, make_strip_udf
 
 #: a span row as committed: the output schema plus its bucket partition
 SPANS_WITH_BUCKET = T.StructType(
@@ -94,16 +94,6 @@ def read_pdfs(spark: SparkSession, input_dir: str) -> DataFrame | None:
     return spark.read.schema("media_ref string, pdf binary").parquet(path)
 
 
-def _size_suffix_bytes(v: str) -> int:
-    v = v.strip().lower().rstrip("b")
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suf):
-            v, mult = v[:-1], m
-            break
-    return int(float(v) * mult)
-
-
 def _scan_width_estimate(docs: DataFrame, need: int) -> int:
     """Upper-bounded estimate of the file scan's task width, from metadata
     only (no plan-to-RDD translation): sum over input files of
@@ -119,7 +109,9 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
         return len(files)
     spark = docs.sparkSession
     try:
-        mpb = _size_suffix_bytes(
+        # Spark's own parser for this conf, so "4k"/"1t" mean what they
+        # mean to the scan planner
+        mpb = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         )
         width = 0
@@ -145,7 +137,6 @@ def extract_spans(
     docs: DataFrame,
     media: DataFrame,
     character_spacing: float = 8.0,
-    salt: bool = True,
     partitions: int | None = None,
     pdfs: DataFrame | None = None,
     fonts: tuple | list | None = None,
@@ -165,26 +156,25 @@ def extract_spans(
     Deployments with heterogeneous executors can pass a larger width for
     straggler hiding.
     """
-    if salt and partitions is None:
+    if partitions is None:
         partitions = docs.sparkSession.sparkContext.defaultParallelism
-    if salt:
-        # a single large parquet file scans as 1-2 tasks; spread the docs
-        # across the cluster BEFORE the explode so span generation, the
-        # stripper and the join probe all run at full width. At real scale
-        # the input is thousands of files and the scan is already wide, so
-        # only repartition when the scan is narrower than the target.
-        # Width probe via file metadata (sizes vs maxPartitionBytes) — no
-        # plan-to-RDD translation per extract call, and splittable
-        # single-file scans report their true split width instead of "1"
-        # (counting files alone re-shuffled a 30-way scan and cost the
-        # 8-core scaling leg ~25%). Non-file inputs (in-memory frames,
-        # non-file streaming micro-batches) report width 0 and therefore
-        # ALWAYS repartition: deliberate — their width is unknowable
-        # without an RDD probe, a redundant shuffle of doc rows is cheap,
-        # and an undetected narrow input serializes the OCR stage onto one
-        # core (the measured disaster this probe exists to prevent).
-        if _scan_width_estimate(docs, partitions // 2) < partitions // 2:
-            docs = docs.repartition(partitions, "doc_id")
+    # a single large parquet file scans as 1-2 tasks; spread the docs
+    # across the cluster BEFORE the explode so span generation, the
+    # stripper and the join probe all run at full width. At real scale
+    # the input is thousands of files and the scan is already wide, so
+    # only repartition when the scan is narrower than the target.
+    # Width probe via file metadata (sizes vs maxPartitionBytes) — no
+    # plan-to-RDD translation per extract call, and splittable
+    # single-file scans report their true split width instead of "1"
+    # (counting files alone re-shuffled a 30-way scan and cost the
+    # 8-core scaling leg ~25%). Non-file inputs (in-memory frames,
+    # non-file streaming micro-batches) report width 0 and therefore
+    # ALWAYS repartition: deliberate — their width is unknowable
+    # without an RDD probe, a redundant shuffle of doc rows is cheap,
+    # and an undetected narrow input serializes the OCR stage onto one
+    # core (the measured disaster this probe exists to prevent).
+    if _scan_width_estimate(docs, partitions // 2) < partitions // 2:
+        docs = docs.repartition(partitions, "doc_id")
     exploded = docs.select(
         "doc_id", F.posexplode("spans").alias("ord", "span")
     ).select(
@@ -211,11 +201,12 @@ def extract_spans(
         )
     )
 
-    def route_by_distinct_ref(kind: str, blobs: DataFrame, kernel) -> DataFrame:
+    def route_by_distinct_ref(kind: str, blobs: DataFrame, udf) -> DataFrame:
         """Shared shape for every expensive per-blob cost class (OCR, PDF):
-        process each DISTINCT media_ref once, join the text back to span
-        occurrences — kernel cost scales with |distinct refs| and a hot ref
-        (one image/pdf referenced by many docs) cannot skew the stage.
+        run the blob->text ``udf`` once per DISTINCT media_ref, join the
+        text back to span occurrences — kernel cost scales with |distinct
+        refs| and a hot ref (one image/pdf referenced by many docs) cannot
+        skew the stage. ``blobs`` is a ``(media_ref, <blob>)`` frame.
 
         Salting: the kernel input is spread over an explicit-width shuffle
         keyed by a SALT column, not by media_ref — an exchange on the join
@@ -230,62 +221,46 @@ def extract_spans(
         broadcast — AQE would otherwise take the kernel's shuffle with a
         LOCAL read (one task per mapper), collapsing the whole Python stage
         onto one core; at 10^12 rows the output is never broadcastable
-        anyway. ``kernel(blobs) -> (media_ref, out_text)``.
+        anyway.
         """
+        blob = blobs.columns[1]
         rows = exploded.where(F.col("kind") == kind).select(
             "doc_id", "ord", "kind", "media_ref"
         )
         needed = rows.select("media_ref").distinct()
-        pending = blobs.join(needed, "media_ref")
-        if salt:
-            pending = pending.withColumn(
-                "_salt", F.crc32(F.col("media_ref"))
-            ).repartition(partitions, "_salt")
-        processed = kernel(pending)
+        processed = (
+            blobs.join(needed, "media_ref")
+            .withColumn("_salt", F.crc32(F.col("media_ref")))
+            .repartition(partitions, "_salt")
+            .select("media_ref", udf(F.col(blob)).alias("out_text"))
+        )
         return rows.join(processed.hint("SHUFFLE_HASH"), "media_ref", "left").select(
             "doc_id", "ord", "kind", F.col("out_text").alias("text"), "media_ref"
         )
 
     ocr_udf = make_ocr_udf(character_spacing=character_spacing, fonts=fonts)
-    media_out = route_by_distinct_ref(
-        "media", media,
-        lambda pages: pages.select("media_ref", ocr_udf(F.col("png")).alias("out_text")),
+    out = text_out.unionByName(
+        route_by_distinct_ref("media", media.select("media_ref", "png"), ocr_udf)
     )
-    out = text_out.unionByName(media_out)
-
     if pdfs is not None:
-        # third cost class, ~10x cheaper than OCR but still Python: parse
-        # each distinct pdf, concatenate its page texts in page order
-        from ..functions.multimodal import pdf_text
-
-        def parse_pdfs(blobs: DataFrame) -> DataFrame:
-            return (
-                pdf_text(blobs)
-                .groupBy("media_ref")
-                .agg(
-                    F.concat_ws(
-                        " ", F.array_sort(F.collect_list(F.struct("page_idx", "text")))
-                        .getField("text")
-                    ).alias("out_text")
-                )
-            )
-
-        out = out.unionByName(route_by_distinct_ref("pdf", pdfs, parse_pdfs))
-
+        # third cost class, ~10x cheaper than OCR but still Python
+        out = out.unionByName(
+            route_by_distinct_ref("pdf", pdfs.select("media_ref", "pdf"), make_pdf_udf())
+        )
     return out
 
 
 class ParquetSink:
     """The default commit substrate, plain parquet under ``output_dir``:
-    span buckets in ``spans/bucket=K`` dirs replaced by dynamic partition
-    overwrite, manifest rows appended under ``_manifest``. The Iceberg twin
+    span buckets in ``spans/bucket=K`` dirs replaced by a dynamic partition
+    overwrite (a per-write option: the session conf is left alone),
+    manifest rows appended under ``_manifest``. The Iceberg twin
     is ``catalog.IcebergSink``; ``extract`` only talks to this interface."""
 
     def __init__(self, spark: SparkSession, output_dir: str):
         self.spark = spark
         self.spans_dir = f"{output_dir}/spans"
         self.manifest_dir = f"{output_dir}/_manifest"
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def manifest(self) -> DataFrame | None:
         """The commit log, or None before the first commit. Only a missing
@@ -296,22 +271,26 @@ class ParquetSink:
             return None
         return self.spark.read.schema(MANIFEST).parquet(self.manifest_dir)
 
-    def write_wave(self, out: DataFrame, wave: list[int]) -> None:
+    def write_buckets(self, out: DataFrame, buckets: list[int]) -> None:
         # dynamic overwrite only replaces partitions present in the new
-        # data; clear stale half-written dirs for wave buckets that may
-        # end empty
-        for b in wave:
+        # data; clear stale half-written dirs for buckets that may end empty
+        for b in buckets:
             hpath, fs = _hadoop_fs(self.spark, f"{self.spans_dir}/bucket={b}")
             fs.delete(hpath, True)
-        out.write.mode("overwrite").partitionBy("bucket").parquet(self.spans_dir)
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(self.spans_dir)
+        )
 
-    def read_wave(self, wave: list[int]) -> DataFrame:
-        # explicit schema: a zero-row wave leaves no partition dirs to
+    def read_buckets(self, buckets: list[int]) -> DataFrame:
+        # explicit schema: a zero-row run leaves no partition dirs to
         # infer from, and its empty buckets must still commit
         return (
             self.spark.read.schema(SPANS_WITH_BUCKET)
             .parquet(self.spans_dir)
-            .where(F.col("bucket").isin(wave))
+            .where(F.col("bucket").isin(buckets))
         )
 
     def append_manifest(self, rows: DataFrame) -> None:
@@ -340,29 +319,24 @@ def extract(
     buckets: int = 8,
     resume: bool = True,
     character_spacing: float = 8.0,
-    salt: bool = True,
     partitions: int | None = None,
-    fail_after: int | None = None,  # test hook: die after K bucket commits
     fonts: tuple | list | None = None,
     catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
 ) -> dict:
     """Run the full job with bucketed idempotent commits. Returns metrics.
 
-    All pending (uncommitted) buckets are processed in one *wave*: a single
+    All pending (uncommitted) buckets are processed in one pass: a single
     partitioned write (`spans/bucket=K`, dynamic partition overwrite) plus a
     single per-bucket stats pass and one manifest write — so job-scheduling
     overhead is amortized across buckets instead of paying write+agg+commit
     per bucket (which capped scaling efficiency at small inputs). The commit
-    unit is unchanged: a bucket counts as committed only once its manifest
-    row lands, and a rerun rewrites any bucket without one.
-
-    ``fail_after=K`` shrinks the wave to K buckets and raises after the
-    first wave — the resume-test hook.
+    unit is the bucket: it counts as committed only once its manifest row
+    lands, and a rerun rewrites any bucket without one.
 
     ``catalog`` switches the commit substrate from the parquet substitute to
     a real Iceberg catalog of that name (guarded — the CLI calls
     ``pipeline.catalog.require_iceberg`` first; see ``catalog.IcebergSink``).
-    The wave loop, commit unit, and resume semantics are identical in both
+    The pass, commit unit, and resume semantics are identical in both
     modes.
     """
     import re as _re
@@ -388,80 +362,75 @@ def extract(
     committed = committed_buckets(sink.manifest()) if resume else set()
     pending = [b for b in range(buckets) if b not in committed]
     metrics = {"buckets_total": buckets, "buckets_skipped": len(committed), "spans": 0}
+    if not pending:
+        metrics["buckets_done"] = 0
+        return metrics
 
-    done = 0
-    while pending:
-        wave = pending[:fail_after] if fail_after is not None else pending
-        pending = pending[len(wave):]
+    bucket_of = F.crc32(F.col("doc_id")) % buckets
+    subset = docs.where(bucket_of.isin(pending))
+    # one shuffle collapses the tiny output rows to one file per bucket
+    # BEFORE the committer: a partitionBy write from W wide partitions
+    # creates W x |pending| files whose dynamic-overwrite commit is
+    # driver-serial — file count, not data size, was the scaling ceiling
+    out = (
+        extract_spans(subset, media, character_spacing,
+                      partitions=partitions, pdfs=pdfs, fonts=fonts)
+        .withColumn("bucket", bucket_of.cast("int"))
+        .repartition(len(pending), "bucket")
+    )
+    sink.write_buckets(out, pending)
 
-        bucket_of = F.crc32(F.col("doc_id")) % buckets
-        subset = docs.where(bucket_of.isin(wave))
-        # one shuffle collapses the tiny output rows to one file per bucket
-        # BEFORE the committer: a partitionBy write from W wide partitions
-        # creates W x |wave| files whose dynamic-overwrite commit is
-        # driver-serial — file count, not data size, was the scaling ceiling
-        out = (
-            extract_spans(subset, media, character_spacing, salt=salt,
-                          partitions=partitions, pdfs=pdfs, fonts=fonts)
-            .withColumn("bucket", (F.crc32(F.col("doc_id")) % buckets).cast("int"))
-            .repartition(max(len(wave), 1), "bucket")
-        )
-        sink.write_wave(out, wave)
-
-        # manifest stats come from READING BACK the written files — cheaper
-        # than persisting the whole output through the write (measured), and
-        # the committed row counts/checksums then describe what actually
-        # landed on storage, not what the plan produced in memory.
-        stats = {
-            int(r["bucket"]): r
-            for r in sink.read_wave(wave).groupBy("bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("docs"),
-                F.count(F.lit(1)).alias("spans"),
-                F.sum((F.col("kind") == "media").cast("long")).alias("media"),
-                F.sum(
-                    F.crc32(
-                        F.concat_ws(
-                            "\x1f",
-                            "doc_id",
-                            F.col("ord").cast("string"),
-                            F.coalesce("text", F.lit("")),
-                        )
+    # manifest stats come from READING BACK the written files — cheaper
+    # than persisting the whole output through the write (measured), and
+    # the committed row counts/checksums then describe what actually
+    # landed on storage, not what the plan produced in memory.
+    stats = {
+        int(r["bucket"]): r
+        for r in sink.read_buckets(pending).groupBy("bucket")
+        .agg(
+            F.countDistinct("doc_id").alias("docs"),
+            F.count(F.lit(1)).alias("spans"),
+            F.sum((F.col("kind") == "media").cast("long")).alias("media"),
+            F.sum(
+                F.crc32(
+                    F.concat_ws(
+                        "\x1f",
+                        "doc_id",
+                        F.col("ord").cast("string"),
+                        F.coalesce("text", F.lit("")),
                     )
-                ).alias("chk"),
-            )
-            .collect()
-        }
+                )
+            ).alias("chk"),
+        )
+        .collect()
+    }
 
-        now = time.strftime("%Y-%m-%dT%H:%M:%S")
-        values = []
-        for b in wave:
-            r = stats.get(b)
-            docs_n = int(r["docs"]) if r else 0
-            spans_n = int(r["spans"]) if r else 0
-            media_n = int(r["media"]) if r else 0
-            chk = str(r["chk"]) if r else "0"
-            values.append(
-                f"('{run_id}', {b}, CAST({docs_n} AS BIGINT), CAST({spans_n} AS BIGINT), "
-                f"CAST({media_n} AS BIGINT), '{chk}', '{now}', 'committed')"
-            )
-            metrics["spans"] += spans_n
-        # append-only commit log: one small file per wave, no partition
-        # dirs, no dynamic-overwrite listing — a re-committed bucket would
-        # just add a row, and committed_buckets de-duplicates. Built as a SQL
-        # VALUES literal (JVM LocalRelation): a python-list DataFrame would
-        # spin up a Python runner for an 8-row write.
-        sink.append_manifest(spark.sql(
-            "SELECT * FROM VALUES "
-            + ", ".join(values)
-            + " AS t(run_id, partition_id, doc_count, span_count, media_count,"
-            "        checksum, committed_at, status)"
-        ).coalesce(1))
-        done += len(wave)
-        if fail_after is not None and done >= fail_after:
-            raise RuntimeError(f"injected failure after {done} buckets")
+    now = time.strftime("%Y-%m-%dT%H:%M:%S")
+    values = []
+    for b in pending:
+        r = stats.get(b)
+        docs_n = int(r["docs"]) if r else 0
+        spans_n = int(r["spans"]) if r else 0
+        media_n = int(r["media"]) if r else 0
+        chk = str(r["chk"]) if r else "0"
+        values.append(
+            f"('{run_id}', {b}, CAST({docs_n} AS BIGINT), CAST({spans_n} AS BIGINT), "
+            f"CAST({media_n} AS BIGINT), '{chk}', '{now}', 'committed')"
+        )
+        metrics["spans"] += spans_n
+    # append-only commit log: one small file per run, no partition dirs,
+    # no dynamic-overwrite listing — a re-committed bucket would just add a
+    # row, and committed_buckets de-duplicates. Built as a SQL VALUES
+    # literal (JVM LocalRelation): a python-list DataFrame would spin up a
+    # Python runner for an 8-row write.
+    sink.append_manifest(spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(values)
+        + " AS t(run_id, partition_id, doc_count, span_count, media_count,"
+        "        checksum, committed_at, status)"
+    ).coalesce(1))
 
-    metrics["buckets_done"] = done
+    metrics["buckets_done"] = len(pending)
     return metrics
 
 

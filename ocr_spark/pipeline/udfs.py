@@ -1,10 +1,12 @@
-"""Arrow-vectorized UDFs wrapping the NumPy kernel and the stripper.
+"""Arrow-vectorized UDFs wrapping the NumPy kernel, the PDF parser and the
+stripper. The OCR and PDF UDFs share one shape: a blob column in, a text
+column out, null for a null blob or a blob with no text.
 
-The learned alphabet travels as a plain dict of ndarrays captured by the UDF
-closure (Spark pickles it once per executor — ~30 KB, the broadcast-variable
-pattern without the broadcast plumbing). All heavy work is per-batch NumPy;
-no per-row Python outside the per-page kernel loop, which is itself memoized
-by glyph matrix (ocr_spark.kernel.engine)."""
+The learned ``Alphabet`` is captured by the OCR UDF closure (Spark pickles it
+once per executor — ~30 KB of ndarrays, the broadcast-variable pattern
+without the broadcast plumbing). All heavy work is per-batch NumPy; no
+per-row Python outside the per-page kernel loop, which is itself memoized by
+glyph matrix (ocr_spark.kernel.engine)."""
 
 from __future__ import annotations
 
@@ -18,8 +20,6 @@ from pyspark.sql.functions import pandas_udf
 
 from ..html.strip import strip_html
 from ..kernel.classify import Alphabet
-
-
 
 #: font sheets bundled with the package (Java-gray canonical rasters; the
 #: reference ships the same two fonts, OCR.java / fonts/*.png)
@@ -85,52 +85,33 @@ def load_alphabet(fonts: tuple = ("arial",)) -> Alphabet:
         return _learn()
     if os.path.exists(cache):
         try:
-            z = np.load(cache, allow_pickle=False)
-            d = {
-                "n": int(z["n"]),
-                "chars": [c for c in z["chars"]],
-                "def_chars": [c for c in z["def_chars"]],
-                "fonts": [c for c in z["fonts"]],
-                "vectors": z["vectors"],
-                "closest": z["closest"],
-            }
-            return Alphabet.from_dict(d)
+            with np.load(cache, allow_pickle=False) as z:
+                return Alphabet.from_dict(z)
         except Exception:
             pass
     alpha = _learn()
     try:
-        d = alpha.to_dict()
         tmp = cache + f".{os.getpid()}.tmp"
-        np.savez(
-            tmp,
-            n=d["n"],
-            chars=np.array(d["chars"]),
-            def_chars=np.array(d["def_chars"]),
-            fonts=np.array(d["fonts"]),
-            vectors=d["vectors"],
-            closest=d["closest"],
-        )
+        np.savez(tmp, **alpha.to_dict())
         os.replace(tmp + ".npz" if os.path.exists(tmp + ".npz") else tmp, cache)
     except Exception:
         pass
     return alpha
 
 
-def make_strip_udf(min_words: int = 3, max_link_density: float = 0.5):
+def make_strip_udf():
     @pandas_udf(T.StringType())
     def strip_udf(html: pd.Series) -> pd.Series:
-        return strip_html(html, min_words=min_words, max_link_density=max_link_density)
+        return strip_html(html)
 
     return strip_udf
 
 
 def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = None):
     """OCR a batch of PNG blobs with the bundled ``fonts`` (T1 multi-font;
-    default arial). The alphabet dict rides in the closure; each task
-    rebuilds the Alphabet and Settings once and reuses them across its
-    Arrow batches."""
-    alphabet = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
-    alpha_dict = alphabet.to_dict()
+    default arial). The Alphabet rides in the closure; each task builds
+    Settings once and reuses it across its Arrow batches."""
+    alpha = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
 
     @pandas_udf(T.StringType())
     def ocr_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -138,7 +119,6 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
         from ..kernel.segment import Settings
         from ..png import decode_gray
 
-        alpha = Alphabet.from_dict(alpha_dict)
         settings = Settings(character_spacing=character_spacing)
 
         def one(blob):
@@ -150,3 +130,21 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
             yield png.map(one)
 
     return ocr_udf
+
+
+def make_pdf_udf():
+    """Text of a batch of PDF blobs: the non-empty page texts in page order,
+    space-joined (ocr_spark.pdf documents the parsed subset)."""
+
+    @pandas_udf(T.StringType())
+    def pdf_udf(blobs: pd.Series) -> pd.Series:
+        from ..pdf import extract_text
+
+        def one(blob):
+            if blob is None:
+                return None
+            return " ".join(extract_text(bytes(blob))) or None
+
+        return blobs.map(one)
+
+    return pdf_udf

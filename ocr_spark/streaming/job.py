@@ -55,11 +55,11 @@ def stream_extract(
         (
             out.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(f"{output_dir}/spans")
         )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     writer = (
         docs.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)

@@ -69,10 +69,10 @@ def test_scan_width_probe_skips_wide_splittable_scans(spark, corpus):
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         # tiny split size -> the one corpus file counts as many splits
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
         wide = plan_of(extract_spans(docs, media, partitions=4))
         # huge split size -> the same file is genuinely a 1-wide scan
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1073741824")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
         narrow = plan_of(extract_spans(docs, media, partitions=4))
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
@@ -90,6 +90,23 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
     got = _spans_set(read_output(spark, out_dir))
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert got == expected  # (kind, text, media_ref, order) per doc, 100%
+
+
+def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
+    """The span write asks for dynamic partition overwrite on itself; the
+    session keeps its mode, so a caller's later static overwrite still
+    replaces every partition."""
+    from ocr_spark.pipeline.job import extract
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    extract(spark, corpus, str(tmp_path / "out"), buckets=2)
+    assert spark.conf.get(key) == "STATIC"
+
+    mine = str(tmp_path / "mine")
+    spark.range(2).withColumn("p", F.col("id")).write.partitionBy("p").parquet(mine)
+    spark.range(1).withColumn("p", F.col("id")).write.mode("overwrite").partitionBy("p").parquet(mine)
+    assert [r.p for r in spark.read.parquet(mine).collect()] == [0]
 
 
 def test_one_data_file_per_bucket(spark, corpus, tmp_path):
@@ -147,11 +164,22 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
 
 
 def test_resume_is_idempotent(spark, corpus, tmp_path):
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from ocr_spark.pipeline.job import extract, read_output
 
     out_dir = str(tmp_path / "out_resume")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        extract(spark, corpus, out_dir, buckets=4, fail_after=2)
+    extract(spark, corpus, out_dir, buckets=4)
+    # a run killed after committing buckets 0 and 1: the spans of 2 and 3
+    # are on disk, but the commit log has no row for them
+    manifest_dir = f"{out_dir}/_manifest"
+    log = pq.read_table(manifest_dir)
+    shutil.rmtree(manifest_dir)
+    os.makedirs(manifest_dir)
+    pq.write_table(
+        log.filter(pc.field("partition_id") < 2), f"{manifest_dir}/part-0.parquet"
+    )
 
     # second run resumes: skips the two committed buckets, finishes the rest
     metrics = extract(spark, corpus, out_dir, buckets=4)
@@ -231,27 +259,37 @@ def test_skewed_corpus(spark, tmp_path_factory, tmp_path):
 
 
 def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
-    """Robustness: a media span whose ref is missing from the media table
-    yields a null-text span (left join semantics); docs with empty span
-    arrays disappear from output without failing the job."""
+    """Robustness: a media or pdf span whose ref is missing from its table
+    yields a null-text span (left join semantics), as does a null pdf blob
+    or a pdf with no text; docs with empty span arrays disappear from
+    output without failing the job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media
+    from ocr_spark.pdf import build_pdf
+    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media, read_pdfs
 
     span_type = pa.struct(
         [("kind", pa.string()), ("text", pa.string()),
          ("media_ref", pa.string()), ("offset", pa.int32())]
     )
+    pdf_refs = ["pdf-blank", "pdf-null", "pdf-abc", "pdf-nope"]
     docs_t = pa.table({
-        "doc_id": ["d-empty", "d-dangling", "d-nulltext"],
+        "doc_id": ["d-empty", "d-dangling", "d-nulltext", "d-pdf"],
         "spans": pa.array(
             [
                 [],
                 [{"kind": "media", "text": None, "media_ref": "pg-nope", "offset": 0}],
                 [{"kind": "text", "text": None, "media_ref": None, "offset": 0}],
+                [{"kind": "pdf", "text": None, "media_ref": r, "offset": 0} for r in pdf_refs],
             ],
             type=pa.list_(span_type),
+        ),
+    })
+    pdfs_t = pa.table({
+        "media_ref": pdf_refs[:3],
+        "pdf": pa.array(
+            [build_pdf([[]]), None, build_pdf([["a", "b"], ["c"]])], pa.binary()
         ),
     })
     media_t = pa.table({
@@ -265,10 +303,17 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     os.makedirs(d)
     pq.write_table(docs_t, f"{d}/documents.parquet")
     pq.write_table(media_t, f"{d}/media.parquet")
+    pq.write_table(pdfs_t, f"{d}/pdfs.parquet")
 
-    out = extract_spans(read_documents(spark, d), read_media(spark, d)).collect()
+    out = extract_spans(
+        read_documents(spark, d), read_media(spark, d), pdfs=read_pdfs(spark, d)
+    ).collect()
     rows = {(r.doc_id, r.ord, r.kind, r.text, r.media_ref) for r in out}
     assert rows == {
         ("d-dangling", 0, "media", None, "pg-nope"),
         ("d-nulltext", 0, "text", None, None),
+        ("d-pdf", 0, "pdf", None, "pdf-blank"),
+        ("d-pdf", 1, "pdf", None, "pdf-null"),
+        ("d-pdf", 2, "pdf", "a b c", "pdf-abc"),
+        ("d-pdf", 3, "pdf", None, "pdf-nope"),
     }

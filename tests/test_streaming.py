@@ -65,6 +65,10 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     pq.write_table(t.slice(0, n // 2), os.path.join(stream_dir, "part-0.parquet"))
     pq.write_table(t.slice(n // 2), os.path.join(stream_dir, "part-1.parquet"))
 
+    # each micro-batch write overwrites only its own batch_id partition,
+    # by a per-write option: the session's mode stays as the caller set it
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
     out_dir = str(tmp_path / "out")
     q = stream_extract(
         spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"),
@@ -82,6 +86,7 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(f"{out_dir}/spans").count() == len(expected)
+    assert spark.conf.get(key) == "STATIC"
 
 
 def test_stream_event_rollup_matches_batch(spark, tmp_path):
