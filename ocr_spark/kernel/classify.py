@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from .bitmap import extract_matrix
-from .features import curvature_vector, extract_closest_pixel
+from .features import curvature_vector
 
 # CurvatureClassifier.java:19-22 ('*' appears twice; first-wins argmin makes
 # the second template unreachable, preserved bug-for-bug)
@@ -37,7 +37,6 @@ class Alphabet:
         self.def_chars: list[str] = []
         self.fonts: list[str] = []
         self.vectors = np.zeros((0, 8 * 2 * 3), dtype=np.int64)
-        self.closest = np.zeros((0, n, n), dtype=np.int64)
 
     def reset(self):
         """E4: drop every learned template (CurvatureClassifier.reset,
@@ -55,7 +54,7 @@ class Alphabet:
         if len(alphabet) != len(DEFAULT_ALPHABET):
             raise ValueError(f"Alphabet must contain {len(DEFAULT_ALPHABET)} characters")
         gw, gh = 71, 69
-        vecs, clos = [], []
+        vecs = []
         for gy in range(6):
             for gx in range(13):
                 bx, by, bw, bh = gw * gx + 1, gh * gy + 1, gw - 2, gh - 2
@@ -66,13 +65,11 @@ class Alphabet:
                 if not matrix.any():  # empty cell, skipped (:832-835)
                     continue
                 vecs.append(curvature_vector(matrix).reshape(-1))
-                clos.append(extract_closest_pixel(matrix))
                 self.chars.append(ch)
                 self.def_chars.append(dc)
                 self.fonts.append(font_name)
         if vecs:
             self.vectors = np.concatenate([self.vectors, np.stack(vecs)])
-            self.closest = np.concatenate([self.closest, np.stack(clos)])
         return self
 
     # -- serialization for the on-disk feature cache (np.savez keys) -----
@@ -83,7 +80,6 @@ class Alphabet:
             "def_chars": self.def_chars,
             "fonts": self.fonts,
             "vectors": self.vectors,
-            "closest": self.closest,
         }
 
     @classmethod
@@ -93,99 +89,14 @@ class Alphabet:
         a.def_chars = list(d["def_chars"])
         a.fonts = list(d["fonts"])
         a.vectors = np.asarray(d["vectors"], dtype=np.int64)
-        a.closest = np.asarray(d["closest"], dtype=np.int64)
         return a
 
 
-def classify_batch(vectors: np.ndarray, alphabet: Alphabet, accept: np.ndarray | None = None):
+def classify_batch(vectors: np.ndarray, alphabet: Alphabet):
     """T2: batched nearest-neighbor by integer L1 on curvature vectors.
 
-    ``vectors``: (B, 48) int64. ``accept``: optional (S,) bool template
-    filter (resolver char-class subset, L3/L4 — applied by masking distances
-    to +inf, the *sound* variant; the reference's accept-all default is the
-    only configuration it ever exercises, see SURVEY.md T3).
-    Returns (indices, distances).
+    ``vectors``: (B, 48) int64. Returns (indices, distances).
     """
     d = np.abs(vectors[:, None, :] - alphabet.vectors[None, :, :]).sum(axis=2)
-    if accept is not None:
-        d = np.where(accept[None, :], d, np.iinfo(np.int64).max)
     idx = d.argmin(axis=1)  # first index wins ties, like the reference loop
     return idx, d[np.arange(len(idx)), idx]
-
-
-def classify_template_batch(closest: np.ndarray, alphabet: Alphabet):
-    """T6 (dormant in reference, :911-944): normalized L1 on distance
-    transforms; higher is better. Optional vote scorer, off the parity path."""
-    n = alphabet.n
-    d = np.abs(closest[:, None, :, :] - alphabet.closest[None, :, :, :]).sum(axis=(2, 3))
-    return 1.0 - d / float(n * n * n)
-
-
-# --------------------------------------------------------------------------
-# Multiclassifier vote (north-star slot: curvature 1-NN + template matcher
-# + neural net). The curvature classifier remains the parity path; the vote
-# adds confidence/agreement and an optional override mode for users who
-# want consensus decisions (never used by the default extraction pipeline).
-# --------------------------------------------------------------------------
-
-def load_glyph_mlp():
-    """Committed deterministic MLP weights (tools/train_glyph_mlp.py);
-    loaded via importlib.resources so the --py-files zip works."""
-    import io
-    from importlib import resources
-
-    raw = resources.files("ocr_spark").joinpath("data/glyph_mlp.npz").read_bytes()
-    z = np.load(io.BytesIO(raw), allow_pickle=False)
-    return {k: z[k] for k in ("W1", "b1", "W2", "b2", "chars")}
-
-
-def classify_mlp_batch(matrices: np.ndarray, weights: dict):
-    """T7 realization: 2-layer MLP over flattened 9x9 glyph matrices.
-    Returns (pred char indices into weights['chars'], softmax confidence)."""
-    x = matrices.reshape(len(matrices), -1).astype(np.float64)
-    h = np.tanh(x @ weights["W1"] + weights["b1"])
-    logits = h @ weights["W2"] + weights["b2"]
-    logits -= logits.max(axis=1, keepdims=True)
-    p = np.exp(logits)
-    p /= p.sum(axis=1, keepdims=True)
-    idx = p.argmax(axis=1)
-    return idx, p[np.arange(len(idx)), idx]
-
-
-def classify_vote_batch(
-    matrices: np.ndarray,
-    vectors: np.ndarray,
-    alphabet: Alphabet,
-    mlp_weights: dict | None = None,
-):
-    """Char-level majority vote of three independent classifiers:
-
-      1. curvature 1-NN (T2, the reference's production path)
-      2. template matcher on distance transforms (T6, dormant in reference)
-      3. glyph MLP (T7 slot, trained offline, committed weights)
-
-    Ties (all three disagree) fall back to the curvature decision, so with
-    vote DISABLED or all-tie inputs the output equals the parity path.
-    Returns (chars, agreement in {1,2,3}) per glyph.
-    """
-    if mlp_weights is None:
-        mlp_weights = load_glyph_mlp()
-    idx_curv, _ = classify_batch(vectors, alphabet)
-    closest = np.stack([extract_closest_pixel(m) for m in matrices])
-    idx_tmpl = classify_template_batch(closest, alphabet).argmax(axis=1)
-    idx_mlp, _ = classify_mlp_batch(matrices, mlp_weights)
-
-    mlp_chars = mlp_weights["chars"]
-    out_chars, agreement = [], []
-    for b in range(len(matrices)):
-        c1 = alphabet.chars[int(idx_curv[b])]
-        c2 = alphabet.chars[int(idx_tmpl[b])]
-        c3 = str(mlp_chars[int(idx_mlp[b])])
-        votes = {}
-        for c in (c1, c2, c3):
-            votes[c] = votes.get(c, 0) + 1
-        best = max(votes.values())
-        winner = c1 if votes.get(c1, 0) == best else (c2 if votes.get(c2, 0) == best else c3)
-        out_chars.append(winner)
-        agreement.append(best)
-    return out_chars, np.array(agreement)

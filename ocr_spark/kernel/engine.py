@@ -59,41 +59,23 @@ def _matrix_of(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int) -> np.n
     return m
 
 
-def load_page(gray: np.ndarray, settings: Settings, region=(0.0, 0.0, 1.0, 1.0)):
+def load_page(gray: np.ndarray, settings: Settings):
     """OCREngine.loadPage (:54-71): segmentation only; returns [WordBox]."""
-    rects = find_character_rectangles(gray, settings, *region)
+    rects = find_character_rectangles(gray, settings)
     word_rects = find_word_rectangles(rects, settings)
     return split_words(gray, word_rects, settings)
 
 
-def scan_page(
-    gray: np.ndarray,
-    settings: Settings,
-    alphabet: Alphabet,
-    region=(0.0, 0.0, 1.0, 1.0),
-    accept_word=None,
-    accept: np.ndarray | None = None,
-) -> list[WordBox]:
-    """OCREngine.scan (:101-159) over a loaded page, full-region default.
+def scan_page(gray: np.ndarray, settings: Settings, alphabet: Alphabet) -> list[WordBox]:
+    """OCREngine.scan (:101-159) over the whole loaded page.
 
     Words whose segmentation produced no children are classified as a single
     glyph (scanBox leaf case, :136-149), exactly like the reference.
     """
     words = load_page(gray, settings)
-    H, W = gray.shape
-    fx0, fy0, fx1, fy1 = region
 
-    targets: list[WordBox] = []
     boxes = []  # (word, char_or_none)
     for word in words:
-        if not (
-            word.x + word.w > W * fx0
-            and word.y + word.h > H * fy0
-            and word.x < W * fx1
-            and word.y < H * fy1
-        ):
-            continue
-        targets.append(word)
         if word.chars:
             for cb in word.chars:
                 boxes.append((word, cb))
@@ -106,42 +88,14 @@ def scan_page(
             b = cb if cb is not None else word
             matrix = _matrix_of(gray, b.x, b.y, b.w, b.h, alphabet.n)
             vecs.append(_vector_of(matrix))
-        idx, _ = classify_batch(np.stack(vecs), alphabet, accept=accept)
+        idx, _ = classify_batch(np.stack(vecs), alphabet)
         for (word, cb), i in zip(boxes, idx):
             ch = alphabet.chars[int(i)]
             if cb is None:
                 word.chars.append(CharBox(word.x, word.y, word.w, word.h, 0, ch))
             else:
                 cb.char = ch
-
-    if accept_word is not None:
-        targets = [w for w in targets if accept_word(w.text)]
-    return targets
-
-
-def scan_relative(
-    gray: np.ndarray,
-    settings: Settings,
-    alphabet: Alphabet,
-    anchor: WordBox,
-    offset_x: float,
-    offset_y: float,
-    width: float,
-    height: float,
-    accept_word=None,
-) -> list[WordBox]:
-    """E3: OCREngine.scanRelative (:74-92) — scan a fractional region
-    positioned relative to a previously found box (e.g. "the value to the
-    right of label X"); negative width/height swap into a normal rect."""
-    H, W = gray.shape
-    x1 = anchor.x / W + offset_x
-    y1 = anchor.y / H + offset_y
-    x2, y2 = x1 + width, y1 + height
-    if x2 < x1:
-        x1, x2 = x2, x1
-    if y2 < y1:
-        y1, y2 = y2, y1
-    return scan_page(gray, settings, alphabet, region=(x1, y1, x2, y2), accept_word=accept_word)
+    return words
 
 
 def page_text(words: list[WordBox]) -> str:
@@ -149,37 +103,6 @@ def page_text(words: list[WordBox]) -> str:
     return " ".join(w.text for w in words)
 
 
-def recognize(
-    gray: np.ndarray,
-    settings: Settings,
-    alphabet: Alphabet,
-    deskew: bool = False,
-    erase_lines_min_inches: float | None = None,
-    accept_word=None,
-    accept: np.ndarray | None = None,
-) -> str:
-    """Full page -> text, with optional preprocessing.
-
-    ``erase_lines_min_inches``: P11 ruling-line erasure before segmentation
-    (Bitmap.eraseLines semantics, caller-invoked in the reference too).
-    ``deskew``: P6+P9 — estimate skew, rotate back via the three-shear
-    kernel. NOTE the reference's own adjustPageRotation is doubly broken
-    (Bitmap.java:96-109 never refreshes mRaster, and ImageRotator.rotate
-    throws on the negative angles findAngle usually returns), so there is no
-    reference behavior to match here beyond the individual operators; this
-    composition is the evidently intended one, applied for real.
-    """
-    if deskew:
-        # deskew BEFORE erase: the skew estimate traces the very ruling
-        # lines that erase_lines would remove
-        from .bitmap import find_skew_angle
-        from .rotate import rotate_gray
-
-        angle = find_skew_angle(gray, 10, gray.shape[0] - 10)
-        if 0.0 < abs(angle) < 90.0:
-            gray = rotate_gray(gray, angle % 360.0)
-    if erase_lines_min_inches is not None:
-        from .bitmap import erase_lines
-
-        gray = erase_lines(gray.copy(), erase_lines_min_inches, 2)
-    return page_text(scan_page(gray, settings, alphabet, accept_word=accept_word, accept=accept))
+def recognize(gray: np.ndarray, settings: Settings, alphabet: Alphabet) -> str:
+    """Full page -> text: ``scan_page`` joined in engine scan order."""
+    return page_text(scan_page(gray, settings, alphabet))

@@ -210,20 +210,6 @@ def extract_curvature_vector(triangles, n: int) -> np.ndarray:
     return fill
 
 
-def extract_closest_pixel(matrix: np.ndarray) -> np.ndarray:
-    """F6: Chebyshev ring distance to nearest black, capped at n
-    (CurvatureClassifier.findClosestPixel, :947-974)."""
-    n = matrix.shape[0]
-    dist = np.full((n, n), n, dtype=np.int64)
-    if not matrix.any():
-        return dist
-    ys, xs = np.nonzero(matrix)
-    gy = np.arange(n)[:, None, None]
-    gx = np.arange(n)[None, :, None]
-    cheb = np.maximum(np.abs(gy - ys[None, None, :]), np.abs(gx - xs[None, None, :])).min(axis=2)
-    return np.minimum(cheb, n).astype(np.int64)
-
-
 def curvature_vector(matrix: np.ndarray) -> np.ndarray:
     """Full F2->F5 chain for one glyph matrix; (8,2,3) int64."""
     n = matrix.shape[0]

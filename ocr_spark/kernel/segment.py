@@ -27,14 +27,6 @@ class Settings:
     max_symbol_height: int = 75
     max_line_width: int = 100
 
-    def set_max_character_spacing_fraction(self, fraction: float, page_width: int) -> "Settings":
-        """Reference Settings.setMaxCharacterSpacingFraction (Settings.java:110-113):
-        spacing as a per-mille-of-page-width fraction — ``fraction * pageWidth / 100``.
-        Takes the page width directly (the Java form takes a Page); returns self
-        so callers can chain it at construction."""
-        self.character_spacing = fraction * page_width / 100
-        return self
-
 
 @dataclass
 class CharBox:
@@ -59,16 +51,14 @@ class WordBox:
         return "".join(c.char for c in self.chars)
 
 
-def find_character_rectangles(gray, settings: Settings, from_x=0.0, from_y=0.0, to_x=1.0, to_y=1.0):
+def find_character_rectangles(gray, settings: Settings):
     """G1 (PageSegmenter.findCharacterRectangles, :107-199), all seeds in
     lockstep. Returns rect list [(x, y, w, h)] in reference order (seed
     row-major order, exact-duplicate rects dropped)."""
     mask = black_mask(gray)
     H, W = mask.shape
-    min_x = int(from_x * W) + 1
-    min_y = int(from_y * H) + 1
-    max_x = int(to_x * W) - 1
-    max_y = int(to_y * H) - 1
+    min_x = min_y = 1
+    max_x, max_y = W - 1, H - 1
 
     sub = mask[min_y:max_y, min_x:max_x]
     above = mask[min_y - 1 : max_y - 1, min_x:max_x]

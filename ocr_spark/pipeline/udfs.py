@@ -3,7 +3,7 @@ stripper. The OCR and PDF UDFs share one shape: a blob column in, a text
 column out, null for a null blob or a blob with no text.
 
 The learned ``Alphabet`` is captured by the OCR UDF closure (Spark pickles it
-once per executor — ~30 KB of ndarrays, the broadcast-variable pattern
+once per executor — ~39 KB pickled for arial, the broadcast-variable pattern
 without the broadcast plumbing). All heavy work is per-batch NumPy; no
 per-row Python outside the per-page kernel loop, which is itself memoized by
 glyph matrix (ocr_spark.kernel.engine)."""

@@ -16,10 +16,9 @@ from ocr_spark.png import decode_gray
 from ocr_spark.kernel.javaimg import SRGB_LUT, java_resize
 from ocr_spark.kernel.bitmap import black_mask, extract_matrix, get_borders
 from ocr_spark.kernel.classify import DEFAULT_ALPHABET, Alphabet, classify_batch
-from ocr_spark.kernel.engine import page_text, scan_page
+from ocr_spark.kernel.engine import page_text, recognize, scan_page
 from ocr_spark.kernel.features import (
     curvature_vector,
-    extract_closest_pixel,
     extract_contour,
     extract_curvature,
     extract_slopes,
@@ -86,9 +85,6 @@ def test_alphabet_features_bit_exact(font):
         exp_cv = np.array(s["curvature_vector"], dtype=np.float64).astype(np.int64)
         assert (cv == exp_cv).all(), (s["char"], "curvature_vector")
 
-        cp = extract_closest_pixel(matrix)
-        assert (cp == np.array(s["closest_pixel"])).all(), (s["char"], "closest_pixel")
-
 
 @pytest.mark.parametrize("font", ["arial", "courier"])
 def test_learned_alphabet_charset(font):
@@ -148,3 +144,17 @@ def test_full_page_scan_parity(page, arial_alphabet):
 def test_default_alphabet_is_reference():
     assert len(DEFAULT_ALPHABET) == 78
     assert DEFAULT_ALPHABET[68] == "*" and DEFAULT_ALPHABET[77] == "*"
+
+
+def test_recognize_ignores_ruling_lines(arial_alphabet):
+    """Two full-width ruling lines above and below a rendered line of text
+    leave G1's glyph boxes alone: the page reads back with no preprocessing."""
+    from ocr_spark.fixtures import load_glyphs, render_page
+
+    page = render_page(["Spark", "Extract", "1234"], load_glyphs())
+    H, W = page.shape
+    canvas = np.full((H + 120, W + 120), 255, np.uint8)
+    canvas[60 : 60 + H, 60 : 60 + W] = page
+    for y in (20, H + 100):
+        canvas[y, 10 : W + 110] = 0
+    assert recognize(canvas, Settings(character_spacing=8.0), arial_alphabet) == "Spark Extract 1234"

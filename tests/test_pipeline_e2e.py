@@ -124,6 +124,26 @@ def test_one_data_file_per_bucket(spark, corpus, tmp_path):
         assert len(files) == 1, (b, files)
 
 
+def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
+    """One extract of the tiny corpus runs at most 15 Spark jobs. A change
+    that adds jobs to the fixed cost of every extract fails here; one that
+    removes jobs lowers the bound."""
+    from ocr_spark.pipeline.job import extract
+
+    sc = spark.sparkContext
+    group = "tiny-extract-job-count"
+    sc.setJobGroup(group, "job count of one tiny extract")
+    try:
+        extract(spark, corpus, str(tmp_path / "out"), buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    assert len(jobs) <= 15, f"{len(jobs)} jobs, {len(stages)} stages"
+
+
 def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     """Three-kind interleaving: text spans -> stripper, media spans -> OCR,
     pdf spans -> PDF parser, reassembled with exact span equality. PDFs are

@@ -10,48 +10,6 @@ from hypothesis import given, settings, strategies as st  # noqa: E402
 from conftest import REPO  # noqa: F401
 
 
-def _levenshtein(a: str, b: str) -> int:
-    """Trusted textbook implementation with the resolver's '\\r' wildcard."""
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cost = 0 if (ca == "\r" or ca == cb) else 1
-            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + cost))
-        prev = cur
-    return prev[-1]
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    st.text(alphabet="abcXY", max_size=10),
-    st.text(alphabet="abcXY", max_size=10),
-    st.integers(min_value=0, max_value=6),
-    st.booleans(),
-)
-def test_compare_words_equals_levenshtein(template, compare, budget, case_sensitive):
-    from ocr_spark.kernel.resolver import compare_words
-
-    t = template.lower() if not case_sensitive else template
-    c = compare.lower() if not case_sensitive else compare
-    expected = _levenshtein(t, c) <= budget
-    assert compare_words(template, compare, budget, case_sensitive) == expected
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.text(alphabet="abcd", max_size=8),
-    st.text(alphabet="abcd", min_size=0, max_size=6),
-    st.integers(min_value=0, max_value=4),
-)
-def test_compare_words_prefix_mode(template, suffix, budget):
-    """'template^' accepts any compare whose some prefix is within budget."""
-    from ocr_spark.kernel.resolver import compare_words
-
-    # exact template + arbitrary suffix must always match in prefix mode
-    assert compare_words(template + "^", template + suffix, budget, True)
-
-
 @settings(max_examples=100, deadline=None)
 @given(st.integers(min_value=0, max_value=2**32 - 1))
 def test_contour_sentinels_on_random_matrices(seed):

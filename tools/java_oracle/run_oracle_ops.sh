@@ -1,7 +1,8 @@
 #!/bin/bash
-# Goldens for the auxiliary reference operators (P4/P6/P8/P9/P11, L2, F7) and
-# the INT_RGB->BYTE_GRAY calibration probe. Complements run_oracle.sh; the
-# produced JSON/PNGs are committed so CI never needs Java.
+# Goldens for the F8 debug curvature renders and their Java2D calibration
+# probe. Complements run_oracle.sh; the produced PNGs are committed so CI never
+# needs Java. The dumps for the deleted rotation, skew, line-erasure, resolver,
+# Sobel and RGB->gray operators (and their inputs) are in commit 871d1ef.
 set -euo pipefail
 
 REF=/root/reference
@@ -14,38 +15,6 @@ javac -nowarn -encoding UTF-8 -d "$BUILD" $(find "$REF/src" -name '*.java')
 javac -nowarn -encoding UTF-8 -cp "$BUILD" -d "$BUILD" "$REPO/tools/java_oracle/GoldenDump.java"
 
 J="java -Djava.awt.headless=true -cp $BUILD org.terifan.ocr.GoldenDump"
-
-# P9 three-shear rotation (quality 1, Bitmap.rotate default path)
-$J rotshear "$GOLD/scan_string_3.gray.png" 2.7   "$GOLD/rot_shear_p2.7.gray.png"
-$J rotshear "$GOLD/scan_string_3.gray.png" 353.4 "$GOLD/rot_shear_m6.6.gray.png"
-$J rotshear "$GOLD/lines_input.gray.png"   2.0   "$GOLD/lines_rot_p2.0.gray.png"
-
-# P8 quadrant rotation
-for a in 90 180 270; do
-  $J rotfixed "$GOLD/scan_string_3.gray.png" $a "$GOLD/rot_fixed_$a.gray.png"
-done
-
-# P11 ruling-line erasure (minInches=0.5, extra=2)
-$J erase "$GOLD/lines_input.gray.png" 0.5 2 "$GOLD/erase_lines.gray.png"
-
-# P6 skew estimate on the rotated ruled page
-$J angle "$GOLD/lines_rot_p2.0.gray.png" 10 230 > "$GOLD/angle_lines_rot.txt"
-$J angle "$GOLD/lines_input.gray.png" 10 230 >> "$GOLD/angle_lines_rot.txt"
-
-# L2 bounded fuzzy word matching
-$J words "$GOLD/words_cases.tsv" "$GOLD/words_golden.json"
-
-# F7 gen-2 Sobel
-$J sobel "$GOLD/scan_string_9.gray.png" "$GOLD/sobel_string_9.gray.png"
-
-# INT_RGB -> BYTE_GRAY conversion probe (Bitmap constructor path)
-$J rgb2gray "$GOLD/rgb2gray_probe.json"
-
-# P10 B-spline rotation (quality 2-5)
-$J rotspline "$GOLD/scan_string_3.gray.png" 7.5   2 "$GOLD/rot_spline_q2_7.5.gray.png"
-$J rotspline "$GOLD/scan_string_3.gray.png" 7.5   3 "$GOLD/rot_spline_q3_7.5.gray.png"
-$J rotspline "$GOLD/scan_string_3.gray.png" 12.0  4 "$GOLD/rot_spline_q4_12.gray.png"
-$J rotspline "$GOLD/scan_string_3.gray.png" 352.0 5 "$GOLD/rot_spline_q5_m8.gray.png"
 
 # F8 debug curvature renders + the Java2D AA/SrcOver calibration probe.
 # debugbmp dumps the full learned sheet to a temp dir; only the diverse
