@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from .bitmap import extract_matrix
-from .features import curvature_vector
+from .features import curvature_vectors
 
 # CurvatureClassifier.java:19-22 ('*' appears twice; first-wins argmin makes
 # the second template unreachable, preserved bug-for-bug)
@@ -54,7 +54,7 @@ class Alphabet:
         if len(alphabet) != len(DEFAULT_ALPHABET):
             raise ValueError(f"Alphabet must contain {len(DEFAULT_ALPHABET)} characters")
         gw, gh = 71, 69
-        vecs = []
+        matrices = []
         for gy in range(6):
             for gx in range(13):
                 bx, by, bw, bh = gw * gx + 1, gh * gy + 1, gw - 2, gh - 2
@@ -64,12 +64,12 @@ class Alphabet:
                 matrix, _ = extract_matrix(gray, bx, by, bw, bh, self.n)
                 if not matrix.any():  # empty cell, skipped (:832-835)
                     continue
-                vecs.append(curvature_vector(matrix).reshape(-1))
+                matrices.append(matrix)
                 self.chars.append(ch)
                 self.def_chars.append(dc)
                 self.fonts.append(font_name)
-        if vecs:
-            self.vectors = np.concatenate([self.vectors, np.stack(vecs)])
+        if matrices:
+            self.vectors = np.concatenate([self.vectors, curvature_vectors(np.stack(matrices))])
         return self
 
     # -- serialization for the on-disk feature cache (np.savez keys) -----
@@ -92,11 +92,21 @@ class Alphabet:
         return a
 
 
+#: rows per 1-NN block: bounds the (rows, templates, 48) difference array
+_NN_ROWS = 64
+
+
 def classify_batch(vectors: np.ndarray, alphabet: Alphabet):
     """T2: batched nearest-neighbor by integer L1 on curvature vectors.
 
     ``vectors``: (B, 48) int64. Returns (indices, distances).
     """
-    d = np.abs(vectors[:, None, :] - alphabet.vectors[None, :, :]).sum(axis=2)
-    idx = d.argmin(axis=1)  # first index wins ties, like the reference loop
-    return idx, d[np.arange(len(idx)), idx]
+    idx = np.empty(len(vectors), dtype=np.intp)
+    dist = np.empty(len(vectors), dtype=np.int64)
+    for s in range(0, len(vectors), _NN_ROWS):
+        block = vectors[s : s + _NN_ROWS]
+        d = np.abs(block[:, None, :] - alphabet.vectors[None, :, :]).sum(axis=2)
+        i = d.argmin(axis=1)  # first index wins ties, like the reference loop
+        idx[s : s + len(i)] = i
+        dist[s : s + len(i)] = d[np.arange(len(i)), i]
+    return idx, dist

@@ -1,8 +1,9 @@
 """Page segmentation (reference PageSegmenter.java / WordSegmenter.java).
 
-G1 is vectorized across all seeds simultaneously (the reference grows one
-box per seed in turn; the per-seed state machines are independent, so they
-advance in lockstep here — identical results, ~100x less Python overhead).
+G1 is vectorized across all seeds of a batch of pages simultaneously (the
+reference grows one box per seed in turn; the per-seed state machines are
+independent, so they advance in lockstep here — identical results, ~100x
+less Python overhead).
 G2-G6 operate on dozens of rectangles and stay as faithful loops.
 """
 
@@ -51,40 +52,82 @@ class WordBox:
         return "".join(c.char for c in self.chars)
 
 
+#: pixels per G1 lockstep: pages are grown together up to this many pixels
+#: (a larger page forms its own group), which bounds the prefix-sum and
+#: per-seed working set of one step
+_G1_PIXELS_PER_STEP = 1 << 17
+
+
 def find_character_rectangles(gray, settings: Settings):
-    """G1 (PageSegmenter.findCharacterRectangles, :107-199), all seeds in
-    lockstep. Returns rect list [(x, y, w, h)] in reference order (seed
+    """G1 for one page: ``find_character_rectangles_batch`` of ``[gray]``."""
+    return find_character_rectangles_batch([gray], settings)[0]
+
+
+def find_character_rectangles_batch(grays, settings: Settings):
+    """G1 (PageSegmenter.findCharacterRectangles, :107-199) for a list of
+    pages: per page, the rect list [(x, y, w, h)] in reference order (seed
     row-major order, exact-duplicate rects dropped)."""
-    mask = black_mask(gray)
-    H, W = mask.shape
-    min_x = min_y = 1
-    max_x, max_y = W - 1, H - 1
+    out, group, pixels = [], [], 0
+    for gray in grays:
+        if group and pixels + gray.size > _G1_PIXELS_PER_STEP:
+            out.extend(_grow_rectangles(group, settings))
+            group, pixels = [], 0
+        group.append(gray)
+        pixels += gray.size
+    if group:
+        out.extend(_grow_rectangles(group, settings))
+    return out
 
-    sub = mask[min_y:max_y, min_x:max_x]
-    above = mask[min_y - 1 : max_y - 1, min_x:max_x]
-    seeds = np.argwhere(sub & ~above)  # row-major == reference scan order
-    if len(seeds) == 0:
-        return []
 
-    x = seeds[:, 1].astype(np.int64) + min_x
-    y = seeds[:, 0].astype(np.int64) + min_y
+def _grow_rectangles(grays, settings: Settings):
+    """Grow and shrink every seed of every page in ``grays`` in lockstep.
+    The pages' prefix sums are concatenated flat; each seed carries its
+    page's width, height and offsets, so every clamp stays per page."""
+    rows, cols, seeds_of = [], [], []
+    for gray in grays:
+        mask = black_mask(gray)
+        H, W = mask.shape
+        # row-major == reference scan order; seeds lie in [1, W-1) x [1, H-1)
+        seeds_of.append(np.argwhere(mask[1 : H - 1, 1 : W - 1] & ~mask[0 : H - 2, 1 : W - 1]) + 1)
+        # prefix sums for O(1) "any black in row/col segment" tests
+        rowsum = np.zeros((H, W + 1), dtype=np.int32)
+        np.cumsum(mask, axis=1, out=rowsum[:, 1:])
+        colsum = np.zeros((H + 1, W), dtype=np.int32)
+        np.cumsum(mask, axis=0, out=colsum[1:, :])
+        rows.append(rowsum.ravel())
+        cols.append(colsum.ravel())
+    rowsum = np.concatenate(rows)
+    colsum = np.concatenate(cols)
+
+    counts = [len(s) for s in seeds_of]
+    shapes = np.array([g.shape for g in grays], dtype=np.int64)
+    page = np.repeat(np.arange(len(grays)), counts)
+    H = shapes[page, 0]
+    W = shapes[page, 1]
+    roff = np.repeat(np.cumsum([0] + [r.size for r in rows[:-1]]), counts)
+    coff = np.repeat(np.cumsum([0] + [c.size for c in cols[:-1]]), counts)
+    seeds = np.concatenate(seeds_of)
+    x = seeds[:, 1].copy()
+    y = seeds[:, 0].copy()
     w = np.full(len(seeds), 2, dtype=np.int64)
     h = np.full(len(seeds), 2, dtype=np.int64)
 
-    # prefix sums for O(1) "any black in row/col segment" tests
-    rowsum = np.zeros((H, W + 1), dtype=np.int32)
-    np.cumsum(mask, axis=1, out=rowsum[:, 1:])
-    colsum = np.zeros((H + 1, W), dtype=np.int32)
-    np.cumsum(mask, axis=0, out=colsum[1:, :])
-
-    def scan_bounds(xs, ys, ws, hs):
+    def scan_bounds(ia):
         """PageSegmenter.scanBounds (:202-236): bitmask TOP=1 LEFT=2 BOTTOM=4 RIGHT=8."""
-        cw = np.minimum(ws, W - xs - 1)
-        ch = np.minimum(hs, H - ys - 1)
-        top = rowsum[ys, xs + cw] - rowsum[ys, xs] > 0
-        bottom = rowsum[ys + ch, xs + cw] - rowsum[ys + ch, xs] > 0
-        left = colsum[ys + ch, xs] - colsum[ys, xs] > 0
-        right = colsum[ys + ch, xs + cw] - colsum[ys, xs + cw] > 0
+        # guard: the reference would wrap the raster for x<0/y<0; clamp instead
+        # (unreachable for pages with margins, which the pipeline guarantees)
+        xs, ys = np.maximum(x[ia], 0), np.maximum(y[ia], 0)
+        Ws, Hs = W[ia], H[ia]
+        cw = np.minimum(w[ia], Ws - xs - 1)
+        ch = np.minimum(h[ia], Hs - ys - 1)
+        r0 = roff[ia] + ys * (Ws + 1) + xs
+        r1 = r0 + ch * (Ws + 1)
+        c0 = coff[ia] + ys * Ws + xs
+        c1 = c0 + ch * Ws
+        top = rowsum[r0 + cw] - rowsum[r0] > 0
+        bottom = rowsum[r1 + cw] - rowsum[r1] > 0
+        left = colsum[c1] - colsum[c0] > 0
+        right = colsum[c1 + cw] - colsum[c0 + cw] > 0
         return (
             top.astype(np.int64)
             + 2 * left.astype(np.int64)
@@ -104,9 +147,7 @@ def find_character_rectangles(gray, settings: Settings):
         if not active.any():
             break
         ia = np.nonzero(active)[0]
-        # guard: the reference would wrap the raster for x<0/y<0; clamp instead
-        # (unreachable for pages with margins, which the pipeline guarantees)
-        s = scan_bounds(np.maximum(x[ia], 0), np.maximum(y[ia], 0), w[ia], h[ia])
+        s = scan_bounds(ia)
         t = (s & 1) != 0
         l = (s & 2) != 0
         b = (s & 4) != 0
@@ -126,7 +167,7 @@ def find_character_rectangles(gray, settings: Settings):
         if not active.any():
             break
         ia = np.nonzero(active)[0]
-        s = scan_bounds(np.maximum(x[ia], 0), np.maximum(y[ia], 0), w[ia], h[ia])
+        s = scan_bounds(ia)
         t = (s & 1) == 0
         l = (s & 2) == 0
         b = (s & 4) == 0
@@ -140,14 +181,14 @@ def find_character_rectangles(gray, settings: Settings):
         shrinking[ia[s == 15]] = False
 
     keep = (w >= min_w) & (w <= max_w) & (h >= min_h) & (h <= max_h)
-    rects = []
-    seen = set()
-    for i in np.nonzero(keep)[0]:
-        r = (int(x[i]), int(y[i]), int(w[i]), int(h[i]))
-        if r not in seen:
-            seen.add(r)
-            rects.append(r)
-    return rects
+    rects = np.stack([page, x, y, w, h], axis=1)[keep]
+    out = [[] for _ in grays]
+    if len(rects):
+        # first occurrence of each (page, rect), in seed order
+        _, first = np.unique(rects, axis=0, return_index=True)
+        for p, *r in rects[np.sort(first)].tolist():
+            out[p].append(tuple(r))
+    return out
 
 
 def _intersects(a, b) -> bool:

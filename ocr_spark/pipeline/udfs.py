@@ -4,9 +4,9 @@ column out, null for a null blob or a blob with no text.
 
 The learned ``Alphabet`` is captured by the OCR UDF closure (Spark pickles it
 once per executor — ~39 KB pickled for arial, the broadcast-variable pattern
-without the broadcast plumbing). All heavy work is per-batch NumPy; no
-per-row Python outside the per-page kernel loop, which is itself memoized by
-glyph matrix (ocr_spark.kernel.engine)."""
+without the broadcast plumbing). All heavy work is per-batch NumPy: the OCR
+kernel runs once per Arrow batch (``engine.recognize_pages`` over the batch's
+decoded pages, memoized by glyph crop and matrix)."""
 
 from __future__ import annotations
 
@@ -115,19 +115,21 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
 
     @pandas_udf(T.StringType())
     def ocr_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from ..kernel.engine import recognize
+        from ..kernel.engine import recognize_pages
         from ..kernel.segment import Settings
         from ..png import decode_gray
 
         settings = Settings(character_spacing=character_spacing)
 
-        def one(blob):
-            if blob is None:
-                return None
-            return recognize(decode_gray(bytes(blob)), settings, alpha)
-
         for png in batches:
-            yield png.map(one)
+            blobs = png.tolist()
+            grays = [decode_gray(bytes(b)) for b in blobs if b is not None]
+            texts = iter(recognize_pages(grays, settings, alpha))
+            yield pd.Series(
+                [None if b is None else next(texts) for b in blobs],
+                index=png.index,
+                dtype=object,
+            )
 
     return ocr_udf
 

@@ -158,3 +158,88 @@ def test_recognize_ignores_ruling_lines(arial_alphabet):
     for y in (20, H + 100):
         canvas[y, 10 : W + 110] = 0
     assert recognize(canvas, Settings(character_spacing=8.0), arial_alphabet) == "Spark Extract 1234"
+
+
+def _boxes(words):
+    return [
+        ((w.x, w.y, w.w, w.h), [(c.x, c.y, c.w, c.h, c.index, c.char) for c in w.chars])
+        for w in words
+    ]
+
+
+def test_scan_pages_pages_do_not_affect_each_other(arial_alphabet, monkeypatch):
+    """A batch gives every page the word boxes, char boxes and text that
+    page gets alone — across G1 groups, with a blank page and a repeated
+    page in the batch — and classifies the whole batch in one 1-NN call."""
+    from ocr_spark.fixtures import load_glyphs, render_page
+    from ocr_spark.kernel import engine
+    from ocr_spark.kernel.segment import _G1_PIXELS_PER_STEP
+
+    glyphs = load_glyphs()
+    a = render_page(["Spark", "Extract"], glyphs)
+    b = render_page(["batch", "1234"], glyphs)
+    blank = np.full_like(a, 255)
+    # more pixels than one G1 step holds: this page is grown on its own
+    wide = np.full((b.shape[0], _G1_PIXELS_PER_STEP // b.shape[0] + 1), 255, np.uint8)
+    wide[:, 2000 : 2000 + b.shape[1]] = b
+    assert wide.size > _G1_PIXELS_PER_STEP
+    pages = [a, blank, b, a, wide, b]
+    settings = Settings(character_spacing=8.0)
+
+    alone = []
+    for p in pages:
+        engine._MATRIX_CACHE.clear()
+        engine._VEC_CACHE.clear()
+        alone.append(scan_page(p, settings, arial_alphabet))
+    engine._MATRIX_CACHE.clear()
+    engine._VEC_CACHE.clear()
+    calls = []
+
+    def counted(vectors, alphabet):
+        calls.append(len(vectors))
+        return classify_batch(vectors, alphabet)
+
+    monkeypatch.setattr(engine, "classify_batch", counted)
+    together = engine.scan_pages(pages, settings, arial_alphabet)
+    assert len(calls) == 1
+    assert [_boxes(p) for p in together] == [_boxes(p) for p in alone]
+    assert [page_text(p) for p in together] == [
+        "Spark Extract", "", "batch 1234", "Spark Extract", "batch 1234", "batch 1234"
+    ]
+    assert engine.recognize_pages(pages, settings, arial_alphabet) == [
+        page_text(p) for p in alone
+    ]
+
+
+def test_memo_caches_are_byte_bounded_lru(arial_alphabet):
+    """Both memo caches stay within their byte budgets, evict the least
+    recently used entry first, and eviction never changes the text."""
+    from ocr_spark.fixtures import load_glyphs, render_page
+    from ocr_spark.kernel import engine
+
+    page = render_page(["Spark", "Extract", "1234"], load_glyphs())
+    settings = Settings(character_spacing=8.0)
+    expected = recognize(page, settings, arial_alphabet)
+    value = np.zeros(48, dtype=np.int64)
+    chunk = 1 << 20
+    try:
+        for cache, budget in (
+            (engine._MATRIX_CACHE, engine._MATRIX_CACHE_BYTES),
+            (engine._VEC_CACHE, engine._VEC_CACHE_BYTES),
+        ):
+            cache.clear()
+            keys = []
+            for i in range(budget // chunk + 3):
+                keys.append(i.to_bytes(4, "big") + bytes(chunk - 4))
+                cache.put(keys[-1], value)
+                if i == budget // chunk - 2:  # just short of full
+                    assert cache.get(keys[0]) is value  # the hit makes keys[0] recent
+                assert cache.nbytes <= budget
+            resident = [k for k in keys if k in cache._entries]
+            assert cache.nbytes == sum(len(k) + value.nbytes for k in resident)
+            assert keys[-1] in resident and keys[0] in resident
+            assert keys[1] not in resident
+            assert recognize(page, settings, arial_alphabet) == expected
+    finally:
+        engine._MATRIX_CACHE.clear()
+        engine._VEC_CACHE.clear()

@@ -280,13 +280,18 @@ def test_skewed_corpus(spark, tmp_path_factory, tmp_path):
 
 def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     """Robustness: a media or pdf span whose ref is missing from its table
-    yields a null-text span (left join semantics), as does a null pdf blob
-    or a pdf with no text; docs with empty span arrays disappear from
-    output without failing the job."""
+    yields a null-text span (left join semantics), as does a null pdf blob,
+    a null png blob or a pdf with no text; a blank page reads as "", and one
+    page's bytes under two refs read the same in the OCR UDF's Arrow batch;
+    docs with empty span arrays disappear from output without failing the
+    job."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ocr_spark.fixtures import load_glyphs, render_page
     from ocr_spark.pdf import build_pdf
+    from ocr_spark.png import encode_gray
     from ocr_spark.pipeline.job import extract_spans, read_documents, read_media, read_pdfs
 
     span_type = pa.struct(
@@ -294,14 +299,16 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
          ("media_ref", pa.string()), ("offset", pa.int32())]
     )
     pdf_refs = ["pdf-blank", "pdf-null", "pdf-abc", "pdf-nope"]
+    media_refs = ["pg-null", "pg-blank", "pg-a", "pg-a2"]
     docs_t = pa.table({
-        "doc_id": ["d-empty", "d-dangling", "d-nulltext", "d-pdf"],
+        "doc_id": ["d-empty", "d-dangling", "d-nulltext", "d-pdf", "d-media"],
         "spans": pa.array(
             [
                 [],
                 [{"kind": "media", "text": None, "media_ref": "pg-nope", "offset": 0}],
                 [{"kind": "text", "text": None, "media_ref": None, "offset": 0}],
                 [{"kind": "pdf", "text": None, "media_ref": r, "offset": 0} for r in pdf_refs],
+                [{"kind": "media", "text": None, "media_ref": r, "offset": 0} for r in media_refs],
             ],
             type=pa.list_(span_type),
         ),
@@ -312,12 +319,17 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
             [build_pdf([[]]), None, build_pdf([["a", "b"], ["c"]])], pa.binary()
         ),
     })
+    page = render_page(["Spark", "Extract"], load_glyphs())
+    blank = np.full_like(page, 255)
+    h, w = page.shape
     media_t = pa.table({
-        "media_ref": pa.array([], pa.string()),
-        "width": pa.array([], pa.int32()),
-        "height": pa.array([], pa.int32()),
-        "png": pa.array([], pa.binary()),
-        "truth": pa.array([], pa.string()),
+        "media_ref": media_refs,
+        "width": pa.array([w] * 4, pa.int32()),
+        "height": pa.array([h] * 4, pa.int32()),
+        "png": pa.array(
+            [None, encode_gray(blank), encode_gray(page), encode_gray(page)], pa.binary()
+        ),
+        "truth": pa.array([None, "", "Spark Extract", "Spark Extract"], pa.string()),
     })
     d = str(tmp_path / "edge")
     os.makedirs(d)
@@ -336,4 +348,8 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
         ("d-pdf", 1, "pdf", None, "pdf-null"),
         ("d-pdf", 2, "pdf", "a b c", "pdf-abc"),
         ("d-pdf", 3, "pdf", None, "pdf-nope"),
+        ("d-media", 0, "media", None, "pg-null"),
+        ("d-media", 1, "media", "", "pg-blank"),
+        ("d-media", 2, "media", "Spark Extract", "pg-a"),
+        ("d-media", 3, "media", "Spark Extract", "pg-a2"),
     }

@@ -42,6 +42,84 @@ def test_curvature_vector_deterministic_and_bounded(seed):
     assert np.array_equal(v1, v2)
     assert (v1 >= 0).all() and (v1 <= 81).all()
 
+    # the batched chain spans several F2-F5 passes and equals the
+    # single-glyph chain row by row
+    from ocr_spark.kernel.features import _GLYPHS_PER_PASS, curvature_vectors
+
+    stack = rng.random((_GLYPHS_PER_PASS + 7, 9, 9)) < rng.random((_GLYPHS_PER_PASS + 7, 1, 1))
+    stack[3] = False
+    stack[_GLYPHS_PER_PASS + 1] = True
+    stack[-1] = m
+    batch = curvature_vectors(stack)
+    assert batch.shape == (len(stack), 48)
+    for i, g in enumerate(stack):
+        assert np.array_equal(batch[i], curvature_vector(g).reshape(-1)), i
+
+
+def _jdk_polygon_contains(xs, ys, x, y):
+    """java.awt.Polygon.contains(double, double), statement by statement:
+    the bounding-box pre-test (Rectangle2D.contains, exclusive right and
+    bottom), then the edge-crossing count."""
+    if not (min(xs) <= x < max(xs) and min(ys) <= y < max(ys)):
+        return False
+    hits = 0
+    lastx, lasty = xs[-1], ys[-1]
+    for curx, cury in zip(xs, ys):
+        prevx, prevy = lastx, lasty
+        lastx, lasty = curx, cury
+        if cury == prevy:
+            continue
+        if curx < prevx:
+            if x >= prevx:
+                continue
+            leftx = curx
+        else:
+            if x >= curx:
+                continue
+            leftx = prevx
+        if cury < prevy:
+            if y < cury or y >= prevy:
+                continue
+            if x < leftx:
+                hits += 1
+                continue
+            test1 = x - curx
+            test2 = y - cury
+        else:
+            if y < prevy or y >= cury:
+                continue
+            if x < leftx:
+                hits += 1
+                continue
+            test1 = x - prevx
+            test2 = y - prevy
+        if test1 < (test2 / (prevy - cury) * (prevx - curx)):
+            hits += 1
+    return (hits & 1) != 0
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(min_value=0, max_value=2**32 - 1))
+def test_polygon_contains_lattice_matches_jdk_scalar(seed):
+    """F5 lattice containment for a stack of triangles equals the scalar JDK
+    test at every lattice point, horizontal and degenerate edges included."""
+    from ocr_spark.kernel.features import polygon_contains_lattice
+
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(3, 13))
+    xs = rng.integers(-1, n + 1, size=(24, 3))
+    ys = rng.integers(-1, n + 1, size=(24, 3))
+    ys[:8, 1] = ys[:8, 0]  # a horizontal edge
+    xs[8:10, 2] = xs[8:10, 0]  # a vertical edge
+    ys[10, :] = ys[10, 0]  # all three vertices on one row
+    lat = polygon_contains_lattice(xs, ys, n)
+    assert lat.shape == (24, n, n)
+    for t in range(24):
+        tx, ty = xs[t].tolist(), ys[t].tolist()
+        want = [[_jdk_polygon_contains(tx, ty, float(x), float(y)) for x in range(n)]
+                for y in range(n)]
+        assert lat[t].tolist() == want, (tx, ty)
+
 
 @settings(max_examples=50, deadline=None)
 @given(st.integers(min_value=0, max_value=2**32 - 1))
