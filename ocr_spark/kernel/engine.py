@@ -1,10 +1,12 @@
 """Page-level orchestration (reference OCREngine.java): segment + classify.
 
-``scan_pages`` is the kernel entry point the Spark UDF calls: a batch of gray
-rasters in, recognized words (with char boxes) per page out. It runs G1 over
-the batch in lockstep, sends every distinct uncached glyph of the batch
-through one F2-F5 pass and every distinct curvature vector through one 1-NN
-call; the single-page functions are that path called with one page.
+``scan_pages`` is the kernel entry point: a batch of gray rasters in,
+recognized words (with char boxes) per page out. It runs G1 over the batch
+in lockstep, sends every distinct uncached glyph of the batch through one
+F2-F5 pass and every distinct curvature vector through one 1-NN call; the
+single-page functions are that path called with one page. The Spark UDF
+reaches it through ``recognize_pages``, which decodes and scans an Arrow
+batch in groups of about ``_PIXELS_PER_SCAN`` pixels.
 
 Matrix extraction and feature extraction are memoized by exact input bytes —
 rendered corpora reuse a small glyph set, and even organic pages repeat
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import struct
 from collections import OrderedDict
+from typing import Iterable
 
 import numpy as np
 
@@ -31,6 +34,11 @@ from .segment import (
     split_words,
 )
 from .features import curvature_vectors
+
+#: pixels of decoded pages at which ``recognize_pages`` scans its group
+#: (a group holds less than this plus one page): bounds the resident rasters
+#: and G1's prefix sums (~15 bytes a pixel)
+_PIXELS_PER_SCAN = 1 << 18
 
 #: byte budgets (key + value bytes) of the two per-process memo caches
 _MATRIX_CACHE_BYTES = 64 << 20
@@ -156,10 +164,27 @@ def page_text(words: list[WordBox]) -> str:
 
 
 def recognize_pages(
-    grays: list[np.ndarray], settings: Settings, alphabet: Alphabet
+    grays: Iterable[np.ndarray], settings: Settings, alphabet: Alphabet
 ) -> list[str]:
-    """Pages -> texts: ``scan_pages`` joined in engine scan order."""
-    return [page_text(words) for words in scan_pages(grays, settings, alphabet)]
+    """Pages -> texts (``scan_pages`` joined in engine scan order).
+
+    ``grays`` is consumed lazily: a group of pages is scanned as soon as it
+    reaches ``_PIXELS_PER_SCAN`` pixels, before the next page is pulled, so
+    a generator of decoded pages keeps one group of rasters resident."""
+
+    def texts_of(group):
+        return [page_text(words) for words in scan_pages(group, settings, alphabet)]
+
+    texts: list[str] = []
+    group: list[np.ndarray] = []
+    pixels = 0
+    for gray in grays:
+        group.append(gray)
+        pixels += gray.size
+        if pixels >= _PIXELS_PER_SCAN:
+            texts += texts_of(group)
+            group, pixels = [], 0
+    return texts + texts_of(group) if group else texts
 
 
 def recognize(gray: np.ndarray, settings: Settings, alphabet: Alphabet) -> str:

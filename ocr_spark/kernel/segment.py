@@ -52,12 +52,6 @@ class WordBox:
         return "".join(c.char for c in self.chars)
 
 
-#: pixels per G1 lockstep: pages are grown together up to this many pixels
-#: (a larger page forms its own group), which bounds the prefix-sum and
-#: per-seed working set of one step
-_G1_PIXELS_PER_STEP = 1 << 17
-
-
 def find_character_rectangles(gray, settings: Settings):
     """G1 for one page: ``find_character_rectangles_batch`` of ``[gray]``."""
     return find_character_rectangles_batch([gray], settings)[0]
@@ -65,47 +59,40 @@ def find_character_rectangles(gray, settings: Settings):
 
 def find_character_rectangles_batch(grays, settings: Settings):
     """G1 (PageSegmenter.findCharacterRectangles, :107-199) for a list of
-    pages: per page, the rect list [(x, y, w, h)] in reference order (seed
-    row-major order, exact-duplicate rects dropped)."""
-    out, group, pixels = [], [], 0
-    for gray in grays:
-        if group and pixels + gray.size > _G1_PIXELS_PER_STEP:
-            out.extend(_grow_rectangles(group, settings))
-            group, pixels = [], 0
-        group.append(gray)
-        pixels += gray.size
-    if group:
-        out.extend(_grow_rectangles(group, settings))
-    return out
-
-
-def _grow_rectangles(grays, settings: Settings):
-    """Grow and shrink every seed of every page in ``grays`` in lockstep.
-    The pages' prefix sums are concatenated flat; each seed carries its
-    page's width, height and offsets, so every clamp stays per page."""
-    rows, cols, seeds_of = [], [], []
-    for gray in grays:
+    pages, every seed of every page grown and shrunk in one lockstep: per
+    page, the rect list [(x, y, w, h)] in reference order (seed row-major
+    order, exact-duplicate rects dropped). The pages' prefix sums are laid
+    end to end in flat arrays; each seed carries its page's width, height
+    and offsets, so every clamp stays per page. The working set grows with
+    the summed pixels of ``grays``; ``engine.recognize_pages`` bounds it."""
+    if not grays:
+        return []
+    shapes = np.array([g.shape for g in grays], dtype=np.int64)
+    rsize = shapes[:, 0] * (shapes[:, 1] + 1)
+    csize = (shapes[:, 0] + 1) * shapes[:, 1]
+    roffs = np.cumsum(rsize) - rsize
+    coffs = np.cumsum(csize) - csize
+    # prefix sums for O(1) "any black in row/col segment" tests, each page's
+    # written into its slice of one flat array
+    rowsum = np.zeros(rsize.sum(), dtype=np.int32)
+    colsum = np.zeros(csize.sum(), dtype=np.int32)
+    seeds_of = []
+    for i, gray in enumerate(grays):
         mask = black_mask(gray)
         H, W = mask.shape
         # row-major == reference scan order; seeds lie in [1, W-1) x [1, H-1)
         seeds_of.append(np.argwhere(mask[1 : H - 1, 1 : W - 1] & ~mask[0 : H - 2, 1 : W - 1]) + 1)
-        # prefix sums for O(1) "any black in row/col segment" tests
-        rowsum = np.zeros((H, W + 1), dtype=np.int32)
-        np.cumsum(mask, axis=1, out=rowsum[:, 1:])
-        colsum = np.zeros((H + 1, W), dtype=np.int32)
-        np.cumsum(mask, axis=0, out=colsum[1:, :])
-        rows.append(rowsum.ravel())
-        cols.append(colsum.ravel())
-    rowsum = np.concatenate(rows)
-    colsum = np.concatenate(cols)
+        page_rows = rowsum[roffs[i] : roffs[i] + rsize[i]].reshape(H, W + 1)
+        np.cumsum(mask, axis=1, out=page_rows[:, 1:])
+        page_cols = colsum[coffs[i] : coffs[i] + csize[i]].reshape(H + 1, W)
+        np.cumsum(mask, axis=0, out=page_cols[1:, :])
 
     counts = [len(s) for s in seeds_of]
-    shapes = np.array([g.shape for g in grays], dtype=np.int64)
     page = np.repeat(np.arange(len(grays)), counts)
     H = shapes[page, 0]
     W = shapes[page, 1]
-    roff = np.repeat(np.cumsum([0] + [r.size for r in rows[:-1]]), counts)
-    coff = np.repeat(np.cumsum([0] + [c.size for c in cols[:-1]]), counts)
+    roff = roffs[page]
+    coff = coffs[page]
     seeds = np.concatenate(seeds_of)
     x = seeds[:, 1].copy()
     y = seeds[:, 0].copy()
@@ -120,6 +107,10 @@ def _grow_rectangles(grays, settings: Settings):
         Ws, Hs = W[ia], H[ia]
         cw = np.minimum(w[ia], Ws - xs - 1)
         ch = np.minimum(h[ia], Hs - ys - 1)
+        # flat indexes have no per-page bounds check; they stay inside the
+        # seed's page because 0 <= xs <= W-1 and 0 <= ys <= H-1 (every box
+        # keeps its seed's black pixel: grow adds edges, shrink drops only
+        # empty ones) and the clamps give xs+cw <= W-1 and ys+ch <= H-1
         r0 = roff[ia] + ys * (Ws + 1) + xs
         r1 = r0 + ch * (Ws + 1)
         c0 = coff[ia] + ys * Ws + xs

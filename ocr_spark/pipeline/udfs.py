@@ -5,8 +5,9 @@ column out, null for a null blob or a blob with no text.
 The learned ``Alphabet`` is captured by the OCR UDF closure (Spark pickles it
 once per executor — ~39 KB pickled for arial, the broadcast-variable pattern
 without the broadcast plumbing). All heavy work is per-batch NumPy: the OCR
-kernel runs once per Arrow batch (``engine.recognize_pages`` over the batch's
-decoded pages, memoized by glyph crop and matrix)."""
+UDF hands each Arrow batch to one ``engine.recognize_pages`` call, which
+decodes and scans its pages in pixel-bounded groups (memoized by glyph crop
+and matrix)."""
 
 from __future__ import annotations
 
@@ -123,7 +124,9 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
 
         for png in batches:
             blobs = png.tolist()
-            grays = [decode_gray(bytes(b)) for b in blobs if b is not None]
+            # a generator: recognize_pages decodes as it goes, one pixel-bounded
+            # group of pages at a time
+            grays = (decode_gray(bytes(b)) for b in blobs if b is not None)
             texts = iter(recognize_pages(grays, settings, alpha))
             yield pd.Series(
                 [None if b is None else next(texts) for b in blobs],

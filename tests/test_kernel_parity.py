@@ -169,20 +169,20 @@ def _boxes(words):
 
 def test_scan_pages_pages_do_not_affect_each_other(arial_alphabet, monkeypatch):
     """A batch gives every page the word boxes, char boxes and text that
-    page gets alone — across G1 groups, with a blank page and a repeated
-    page in the batch — and classifies the whole batch in one 1-NN call."""
+    page gets alone — with pages of different widths in one G1 lockstep, a
+    blank page and a repeated page in the batch — and classifies the whole
+    batch in one 1-NN call."""
     from ocr_spark.fixtures import load_glyphs, render_page
     from ocr_spark.kernel import engine
-    from ocr_spark.kernel.segment import _G1_PIXELS_PER_STEP
 
     glyphs = load_glyphs()
     a = render_page(["Spark", "Extract"], glyphs)
     b = render_page(["batch", "1234"], glyphs)
     blank = np.full_like(a, 255)
-    # more pixels than one G1 step holds: this page is grown on its own
-    wide = np.full((b.shape[0], _G1_PIXELS_PER_STEP // b.shape[0] + 1), 255, np.uint8)
+    # alone, this page reaches a recognize_pages group's budget
+    wide = np.full((b.shape[0], engine._PIXELS_PER_SCAN // b.shape[0] + 1), 255, np.uint8)
     wide[:, 2000 : 2000 + b.shape[1]] = b
-    assert wide.size > _G1_PIXELS_PER_STEP
+    assert wide.size > engine._PIXELS_PER_SCAN
     pages = [a, blank, b, a, wide, b]
     settings = Settings(character_spacing=8.0)
 
@@ -209,6 +209,51 @@ def test_scan_pages_pages_do_not_affect_each_other(arial_alphabet, monkeypatch):
     assert engine.recognize_pages(pages, settings, arial_alphabet) == [
         page_text(p) for p in alone
     ]
+
+
+def test_recognize_pages_decodes_and_scans_pixel_bounded_groups(arial_alphabet, monkeypatch):
+    """recognize_pages scans a group as soon as it reaches _PIXELS_PER_SCAN
+    pixels, before it pulls the next page from a generator (a larger page
+    is scanned alone), and returns the per-page texts in input order."""
+    from ocr_spark.fixtures import load_glyphs, render_page
+    from ocr_spark.kernel import engine
+
+    glyphs = load_glyphs()
+    a = render_page(["Spark", "Extract"], glyphs)
+    b = render_page(["batch", "1234"], glyphs)
+    big = np.full((b.shape[0], engine._PIXELS_PER_SCAN // b.shape[0] + 1), 255, np.uint8)
+    big[:, 100 : 100 + b.shape[1]] = b
+    per_group = -(-engine._PIXELS_PER_SCAN // a.size)
+    assert per_group >= 2
+    pages = [a] * per_group + [big, b, a]
+    settings = Settings(character_spacing=8.0)
+    expected = [recognize(p, settings, arial_alphabet) for p in pages]
+
+    pulled = []
+
+    def decoded():
+        for p in pages:
+            pulled.append(p)
+            yield p
+
+    groups = []
+    scan_pages = engine.scan_pages
+
+    def recorded(grays, settings, alphabet):
+        # no page beyond this group has been pulled (decoded) yet
+        assert len(pulled) == sum(map(len, groups)) + len(grays)
+        groups.append(list(grays))
+        return scan_pages(grays, settings, alphabet)
+
+    monkeypatch.setattr(engine, "scan_pages", recorded)
+    assert engine.recognize_pages(decoded(), settings, arial_alphabet) == expected
+    assert [len(g) for g in groups] == [per_group, 1, 2]
+    # every closed group is the shortest prefix that reaches the budget
+    for g in groups[:-1]:
+        assert sum(p.size for p in g) >= engine._PIXELS_PER_SCAN
+        assert sum(p.size for p in g[:-1]) < engine._PIXELS_PER_SCAN
+    assert engine.recognize_pages(iter([]), settings, arial_alphabet) == []
+    assert len(groups) == 3
 
 
 def test_memo_caches_are_byte_bounded_lru(arial_alphabet):
