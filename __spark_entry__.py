@@ -112,14 +112,16 @@ def entry(spark: SparkSession) -> DataFrame:
     and PDF-parse paths. Returns the reassembled span table
     (doc_id, ord, kind, text, media_ref).
     """
-    from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media
+    from ocr_spark.pipeline.job import (
+        configure, extract_spans, read_documents, read_media, read_pdfs,
+    )
     from ocr_spark.pipeline.udfs import make_strip_udf
 
     configure(spark)
     corpus = _synth_corpus("tiny3")
     docs = read_documents(spark, corpus)
     media = read_media(spark, corpus)
-    pdfs = spark.read.parquet(f"{corpus}/pdfs.parquet")
+    pdfs = read_pdfs(spark, corpus)
     synth_spans = extract_spans(docs, media, character_spacing=8.0, pdfs=pdfs)
 
     strip_udf = make_strip_udf()
@@ -1475,15 +1477,18 @@ def _q_ocr_extract(spark, sf_dir):
 
 def _q_ocr_extract3(spark, sf_dir):
     """Three-kind interleaved extraction: text -> stripper, media -> OCR
-    kernel, pdf -> PDF parser, each routed as its own cost class and
-    reassembled. Oracle: the tiny3 corpus's by-construction expected spans."""
-    from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media
+    kernel, pdf -> PDF parser; text and blobs are routed as separate cost
+    classes (media and pdf share the blob route) and reassembled. Oracle:
+    the tiny3 corpus's by-construction expected spans."""
+    from ocr_spark.pipeline.job import (
+        configure, extract_spans, read_documents, read_media, read_pdfs,
+    )
 
     configure(spark)
     corpus = _synth_corpus("tiny3")
-    pdfs = spark.read.parquet(f"{corpus}/pdfs.parquet")
     out = extract_spans(
-        read_documents(spark, corpus), read_media(spark, corpus), pdfs=pdfs
+        read_documents(spark, corpus), read_media(spark, corpus),
+        pdfs=read_pdfs(spark, corpus),
     )
     return out.select(
         "doc_id", F.col("ord").cast("long").alias("ord"), "kind", "text", "media_ref"

@@ -4,13 +4,17 @@ reassemble -> bucketed idempotent commit.
 Scale design (north rule: 10^12 docs, N vs 4N executors):
 
 * Catalyst does the relational work: posexplode, kind routing, the
-  media_ref equi-join (AQE picks broadcast vs shuffle; skew-join enabled).
-* Cost classes are routed separately — a media span costs ~100x a text
-  span, so they never share a task boundary.
-* Skew defusal: after the media join, rows are hash-repartitioned on
-  (doc_id, ord); a document with 10^3 media spans spreads over the whole
-  cluster instead of stalling one task (explicit salt; AQE skew-join is the
-  backstop for the join itself).
+  (media_ref, kind) semi-join and join-back (AQE picks broadcast vs
+  shuffle; skew-join enabled).
+* Two cost classes are routed separately — text and blob. A blob span
+  (a media page to OCR or a pdf to parse) costs ~10-100x a text span, so
+  the two never share a task boundary; media and pdf share one route and
+  one blob->text UDF.
+* Skew defusal: the blob UDF runs once per distinct (media_ref, kind),
+  hash-repartitioned on a full-cardinality crc32(media_ref) salt; a hot
+  ref or a document with 10^3 media spans spreads over the whole cluster
+  instead of stalling one task (AQE skew-join is the backstop for the
+  join-back).
 * Resume: the doc space is split into `buckets` by crc32(doc_id); each
   bucket writes to its own spans/bucket=K dir with overwrite semantics and
   then commits one manifest row (lineage + metrics + checksum). A rerun
@@ -25,7 +29,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import DOCUMENTS, MANIFEST, MEDIA, OUTPUT_SPANS
-from .udfs import make_ocr_udf, make_pdf_udf, make_strip_udf
+from .udfs import make_ocr_udf, make_strip_udf
 
 #: a span row as committed: the output schema plus its bucket partition
 SPANS_WITH_BUCKET = T.StructType(
@@ -84,9 +88,10 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 def read_pdfs(spark: SparkSession, input_dir: str) -> DataFrame | None:
     """Optional third-modality table (three-kind corpora): None when the
-    corpus has no pdfs.parquet, so plain text+media corpora plan exactly as
-    before — but a corpus that DOES ship pdfs gets its pdf spans routed
-    instead of silently dropped."""
+    corpus has no pdfs.parquet, so plain text+media corpora route media
+    blobs alone (and drop pdf spans) — but a corpus that DOES ship pdfs gets
+    its pdf spans routed beside the media pages instead of silently
+    dropped."""
     path = f"{input_dir}/pdfs.parquet"
     hpath, fs = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
@@ -187,7 +192,7 @@ def extract_spans(
 
     # text spans inherit the per-doc distribution from the scan repartition
     # (strip cost is roughly uniform per doc — no extra shuffle needed; only
-    # the media branch needs span-level salting, its cost class is ~100x)
+    # the blob route needs span-level salting, its cost class is ~10-100x)
     strip_udf = make_strip_udf()
     text_out = (
         exploded.where(F.col("kind") == "text")
@@ -201,53 +206,46 @@ def extract_spans(
         )
     )
 
-    def route_by_distinct_ref(kind: str, blobs: DataFrame, udf) -> DataFrame:
-        """Shared shape for every expensive per-blob cost class (OCR, PDF):
-        run the blob->text ``udf`` once per DISTINCT media_ref, join the
-        text back to span occurrences — kernel cost scales with |distinct
-        refs| and a hot ref (one image/pdf referenced by many docs) cannot
-        skew the stage. ``blobs`` is a ``(media_ref, <blob>)`` frame.
-
-        Salting: the kernel input is spread over an explicit-width shuffle
-        keyed by a SALT column, not by media_ref — an exchange on the join
-        key itself gets eliminated as redundant once the join-back requires
-        the same partitioning, silently dropping the kernel onto whatever
-        (often 1-partition, AQE-coalesced) distribution the semi-join
-        produced. The salt stays FULL-cardinality (raw crc32, no
-        % partitions): hashing only `partitions` distinct values into
-        `partitions` buckets is balls-in-bins (measured: 3.4x stragglers).
-
-        Join-back: MUST be a shuffle join (SHUFFLE_HASH hint), never
-        broadcast — AQE would otherwise take the kernel's shuffle with a
-        LOCAL read (one task per mapper), collapsing the whole Python stage
-        onto one core; at 10^12 rows the output is never broadcastable
-        anyway.
-        """
-        blob = blobs.columns[1]
-        rows = exploded.where(F.col("kind") == kind).select(
-            "doc_id", "ord", "kind", "media_ref"
-        )
-        needed = rows.select("media_ref").distinct()
-        processed = (
-            blobs.join(needed, "media_ref")
-            .withColumn("_salt", F.crc32(F.col("media_ref")))
-            .repartition(partitions, "_salt")
-            .select("media_ref", udf(F.col(blob)).alias("out_text"))
-        )
-        return rows.join(processed.hint("SHUFFLE_HASH"), "media_ref", "left").select(
-            "doc_id", "ord", "kind", F.col("out_text").alias("text"), "media_ref"
-        )
-
-    ocr_udf = make_ocr_udf(character_spacing=character_spacing, fonts=fonts)
-    out = text_out.unionByName(
-        route_by_distinct_ref("media", media.select("media_ref", "png"), ocr_udf)
+    # one route for every blob kind (media pages, pdfs): the blob->text UDF
+    # runs once per DISTINCT (media_ref, kind) and its text joins back to
+    # the span occurrences, so kernel cost scales with |distinct refs| and a
+    # hot ref (one page or pdf referenced by many docs) cannot skew the
+    # stage. Keyed on (media_ref, kind): a ref string present in both the
+    # media and the pdf table reads each kind's own blob. pdf spans are
+    # routed only when a pdf table is given, else dropped.
+    kinds = ["media"] if pdfs is None else ["media", "pdf"]
+    blobs = media.select(
+        "media_ref", F.lit("media").alias("kind"), F.col("png").alias("blob")
     )
     if pdfs is not None:
-        # third cost class, ~10x cheaper than OCR but still Python
-        out = out.unionByName(
-            route_by_distinct_ref("pdf", pdfs.select("media_ref", "pdf"), make_pdf_udf())
+        blobs = blobs.unionByName(
+            pdfs.select("media_ref", F.lit("pdf").alias("kind"), F.col("pdf").alias("blob"))
         )
-    return out
+    key = ["media_ref", "kind"]
+    rows = exploded.where(F.col("kind").isin(kinds)).select("doc_id", "ord", *key)
+    blob_udf = make_ocr_udf(character_spacing=character_spacing, fonts=fonts)
+    # Salting: the UDF input is spread over an explicit-width shuffle keyed
+    # by a SALT column, never by the join key — an exchange on the join key
+    # gets eliminated as redundant once the join-back requires the same
+    # partitioning, silently dropping the kernel onto whatever (often
+    # 1-partition, AQE-coalesced) distribution the semi-join produced. The
+    # salt stays FULL-cardinality (raw crc32, no % partitions): hashing only
+    # `partitions` distinct values into `partitions` buckets is balls-in-bins
+    # (measured: 3.4x stragglers).
+    processed = (
+        blobs.join(rows, key, "left_semi")
+        .withColumn("_salt", F.crc32(F.col("media_ref")))
+        .repartition(partitions, "_salt")
+        .select(*key, blob_udf(F.col("kind"), F.col("blob")).alias("out_text"))
+    )
+    # Join-back: MUST be a shuffle join (SHUFFLE_HASH hint), never broadcast
+    # — AQE would otherwise take the UDF's shuffle with a LOCAL read (one task
+    # per mapper), collapsing the whole Python stage onto one core; at 10^12
+    # rows the output is never broadcastable anyway.
+    blob_out = rows.join(processed.hint("SHUFFLE_HASH"), key, "left").select(
+        "doc_id", "ord", "kind", F.col("out_text").alias("text"), "media_ref"
+    )
+    return text_out.unionByName(blob_out)
 
 
 class ParquetSink:

@@ -1,13 +1,14 @@
-"""Arrow-vectorized UDFs wrapping the NumPy kernel, the PDF parser and the
-stripper. The OCR and PDF UDFs share one shape: a blob column in, a text
-column out, null for a null blob or a blob with no text.
+"""Arrow-vectorized UDFs: the HTML stripper and the one blob->text UDF.
+The blob UDF takes a ``(kind, blob)`` batch and dispatches on kind: media
+pages go to the NumPy OCR kernel, pdfs to the PDF parser; a null blob or a
+blob with no text gives null.
 
-The learned ``Alphabet`` is captured by the OCR UDF closure (Spark pickles it
-once per executor — ~39 KB pickled for arial, the broadcast-variable pattern
-without the broadcast plumbing). All heavy work is per-batch NumPy: the OCR
-UDF hands each Arrow batch to one ``engine.recognize_pages`` call, which
-decodes and scans its pages in pixel-bounded groups (memoized by glyph crop
-and matrix)."""
+The learned ``Alphabet`` is captured by the blob UDF closure (Spark pickles
+it once per executor — ~39 KB pickled for arial, the broadcast-variable
+pattern without the broadcast plumbing). All heavy work is per-batch NumPy:
+the UDF hands the media pages of each Arrow batch to one
+``engine.recognize_pages`` call, which decodes and scans them in
+pixel-bounded groups (memoized by glyph crop and matrix)."""
 
 from __future__ import annotations
 
@@ -109,47 +110,40 @@ def make_strip_udf():
 
 
 def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = None):
-    """OCR a batch of PNG blobs with the bundled ``fonts`` (T1 multi-font;
-    default arial). The Alphabet rides in the closure; each task builds
-    Settings once and reuses it across its Arrow batches."""
+    """Text of a batch of ``(kind, blob)`` rows: a ``media`` blob is a PNG page
+    OCR'd with the bundled ``fonts`` (T1 multi-font; default arial), a ``pdf``
+    blob yields its non-empty page texts in page order, space-joined
+    (ocr_spark.pdf documents the parsed subset). The Alphabet rides in the
+    closure; each task builds Settings once and reuses it across its Arrow
+    batches."""
     alpha = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
 
     @pandas_udf(T.StringType())
-    def ocr_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def ocr_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         from ..kernel.engine import recognize_pages
         from ..kernel.segment import Settings
+        from ..pdf import extract_text
         from ..png import decode_gray
 
         settings = Settings(character_spacing=character_spacing)
 
-        for png in batches:
-            blobs = png.tolist()
+        for kind, blob in batches:
+            rows = list(zip(kind.tolist(), blob.tolist()))
             # a generator: recognize_pages decodes as it goes, one pixel-bounded
             # group of pages at a time
-            grays = (decode_gray(bytes(b)) for b in blobs if b is not None)
+            grays = (
+                decode_gray(bytes(b)) for k, b in rows if k == "media" and b is not None
+            )
             texts = iter(recognize_pages(grays, settings, alpha))
             yield pd.Series(
-                [None if b is None else next(texts) for b in blobs],
-                index=png.index,
+                [
+                    None if b is None
+                    else next(texts) if k == "media"
+                    else " ".join(extract_text(bytes(b))) or None
+                    for k, b in rows
+                ],
+                index=blob.index,
                 dtype=object,
             )
 
     return ocr_udf
-
-
-def make_pdf_udf():
-    """Text of a batch of PDF blobs: the non-empty page texts in page order,
-    space-joined (ocr_spark.pdf documents the parsed subset)."""
-
-    @pandas_udf(T.StringType())
-    def pdf_udf(blobs: pd.Series) -> pd.Series:
-        from ..pdf import extract_text
-
-        def one(blob):
-            if blob is None:
-                return None
-            return " ".join(extract_text(bytes(blob))) or None
-
-        return blobs.map(one)
-
-    return pdf_udf

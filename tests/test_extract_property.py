@@ -1,0 +1,186 @@
+"""Differential property for the extraction plan: on random small corpora,
+``extract_spans`` returns exactly the rows a driver-side walk of the same
+documents gives. The walk calls the kernels directly, one span at a time:
+
+* text  -> ``strip_html``
+* media -> ``recognize(decode_gray(png))``, None for a missing ref or a
+  null blob
+* pdf   -> ``" ".join(extract_text(blob)) or None``, None likewise; pdf
+  spans are dropped when the corpus ships no pdfs.parquet
+
+Refs come from a small pool, so one example can hold hot refs (many spans
+on one blob), dangling refs, null blobs, a ref string present in both the
+media and the pdf table, empty and null span arrays. Any plan rewrite
+(routing, semi-join, salt, join-back) must keep this property.
+"""
+
+import functools
+import tempfile
+from collections import Counter
+
+import pytest
+
+hypothesis = pytest.importorskip("hypothesis")
+pytest.importorskip("pyspark")
+from hypothesis import HealthCheck, given, settings, strategies as st  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
+
+from conftest import REPO  # noqa: F401
+from test_parser_fuzz import _html_value  # noqa: E402
+
+_REFS = ["r0", "r1", "r2", "r3"]
+_WORDS = ["Spark", "Data", "Query", "scan", "hash", "Extract"]
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from ocr_spark.pipeline.job import configure
+
+    builder = (
+        SparkSession.builder.master("local[4]")
+        .appName("ocr_spark-extract-property")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+    )
+    s = configure(builder).getOrCreate()
+    yield s
+    s.stop()
+
+
+@functools.lru_cache(maxsize=None)
+def _page_png(word: str) -> bytes:
+    from ocr_spark.fixtures import render_page
+    from ocr_spark.png import encode_gray
+
+    return encode_gray(render_page([word], _glyphs()))
+
+
+@functools.lru_cache(maxsize=1)
+def _glyphs():
+    from ocr_spark.fixtures import load_glyphs
+
+    return load_glyphs()
+
+
+# one blob table entry per pool ref: absent (a dangling ref), a null blob,
+# or a blob built from the drawn value
+_absent = st.just(("absent", None))
+_null = st.just(("null", None))
+_media_entry = st.one_of(_absent, _null, st.tuples(st.just("page"), st.sampled_from(_WORDS)))
+_pdf_entry = st.one_of(
+    _absent,
+    _null,
+    st.tuples(
+        st.just("pdf"),
+        st.lists(st.lists(st.sampled_from(_WORDS), max_size=3), max_size=3),
+    ),
+)
+_span = st.one_of(
+    st.tuples(st.just("text"), _html_value, st.none()),
+    st.tuples(st.sampled_from(["media", "pdf"]), st.none(), st.sampled_from(_REFS + [None])),
+)
+_doc = st.one_of(st.none(), st.lists(_span, max_size=6))
+
+
+def _blob(entry):
+    from ocr_spark.pdf import build_pdf
+
+    what, value = entry
+    if what == "page":
+        return _page_png(value)
+    return build_pdf(value) if what == "pdf" else None
+
+
+def _oracle(docs, media, pdfs):
+    """The driver-side walk: one row per span, kernels called directly."""
+    import pandas as pd
+
+    from ocr_spark.html.strip import strip_html
+    from ocr_spark.kernel.engine import recognize
+    from ocr_spark.kernel.segment import Settings
+    from ocr_spark.pdf import extract_text
+    from ocr_spark.pipeline.udfs import default_alphabet
+    from ocr_spark.png import decode_gray
+
+    settings_, alpha = Settings(character_spacing=8.0), default_alphabet()
+    rows = []
+    for doc_id, spans in docs:
+        for ord_, (kind, text, ref) in enumerate(spans or []):
+            if kind == "text":
+                out = strip_html(pd.Series([text], dtype=object))[0]
+                rows.append((doc_id, ord_, kind, out, None))
+                continue
+            if kind == "pdf" and pdfs is None:
+                continue
+            blob = (media if kind == "media" else pdfs).get(ref)
+            if blob is None:
+                out = None
+            elif kind == "media":
+                out = recognize(decode_gray(blob), settings_, alpha)
+            else:
+                out = " ".join(extract_text(blob)) or None
+            rows.append((doc_id, ord_, kind, out, ref))
+    return rows
+
+
+def _write_corpus(d, docs, media, pdfs):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    span_type = pa.struct(
+        [("kind", pa.string()), ("text", pa.string()),
+         ("media_ref", pa.string()), ("offset", pa.int32())]
+    )
+    pq.write_table(pa.table({
+        "doc_id": [doc_id for doc_id, _ in docs],
+        "spans": pa.array(
+            [
+                None if spans is None else [
+                    {"kind": k, "text": t, "media_ref": r, "offset": i}
+                    for i, (k, t, r) in enumerate(spans)
+                ]
+                for _, spans in docs
+            ],
+            type=pa.list_(span_type),
+        ),
+    }), f"{d}/documents.parquet")
+    pq.write_table(pa.table({
+        "media_ref": pa.array(list(media), pa.string()),
+        "width": pa.array([0] * len(media), pa.int32()),
+        "height": pa.array([0] * len(media), pa.int32()),
+        "png": pa.array(list(media.values()), pa.binary()),
+        "truth": pa.array([None] * len(media), pa.string()),
+    }), f"{d}/media.parquet")
+    if pdfs is not None:
+        pq.write_table(pa.table({
+            "media_ref": pa.array(list(pdfs), pa.string()),
+            "pdf": pa.array(list(pdfs.values()), pa.binary()),
+        }), f"{d}/pdfs.parquet")
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    docs=st.lists(_doc, min_size=1, max_size=6),
+    media_entries=st.lists(_media_entry, min_size=len(_REFS), max_size=len(_REFS)),
+    pdf_entries=st.lists(_pdf_entry, min_size=len(_REFS), max_size=len(_REFS)),
+    ship_pdfs=st.booleans(),
+)
+def test_extract_spans_equals_driver_walk(
+    spark, tmp_path_factory, docs, media_entries, pdf_entries, ship_pdfs
+):
+    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media, read_pdfs
+
+    docs = [(f"d{i}", spans) for i, spans in enumerate(docs)]
+    media = {r: _blob(e) for r, e in zip(_REFS, media_entries) if e[0] != "absent"}
+    pdfs = (
+        {r: _blob(e) for r, e in zip(_REFS, pdf_entries) if e[0] != "absent"}
+        if ship_pdfs else None
+    )
+    d = tempfile.mkdtemp(dir=tmp_path_factory.getbasetemp())
+    _write_corpus(d, docs, media, pdfs)
+
+    got = extract_spans(
+        read_documents(spark, d), read_media(spark, d),
+        partitions=4, pdfs=read_pdfs(spark, d),
+    ).select("doc_id", "ord", "kind", "text", "media_ref").collect()
+    assert Counter(map(tuple, got)) == Counter(_oracle(docs, media, pdfs))

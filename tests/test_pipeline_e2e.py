@@ -46,34 +46,34 @@ def _spans_set(df):
     }
 
 
+def _plan_of(df, mode="simple"):
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain(mode)
+    return buf.getvalue()
+
+
 def test_scan_width_probe_skips_wide_splittable_scans(spark, corpus):
     """Regression pin for the round-3 scaling bug: a SINGLE parquet file
     whose size spans many maxPartitionBytes splits must be treated as a
     wide scan (no pre-UDF doc_id repartition — that redundant shuffle cost
     the 32-core scaling leg ~half its throughput), while a genuinely
     narrow scan must still repartition."""
-    import io
-    from contextlib import redirect_stdout
-
     from ocr_spark.pipeline.job import extract_spans, read_documents, read_media
 
     docs = read_documents(spark, corpus)
     media = read_media(spark, corpus)
-
-    def plan_of(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         # tiny split size -> the one corpus file counts as many splits
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
-        wide = plan_of(extract_spans(docs, media, partitions=4))
+        wide = _plan_of(extract_spans(docs, media, partitions=4), "formatted")
         # huge split size -> the same file is genuinely a 1-wide scan
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-        narrow = plan_of(extract_spans(docs, media, partitions=4))
+        narrow = _plan_of(extract_spans(docs, media, partitions=4), "formatted")
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     assert "hashpartitioning(doc_id" not in wide
@@ -125,9 +125,9 @@ def test_one_data_file_per_bucket(spark, corpus, tmp_path):
 
 
 def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
-    """One extract of the tiny corpus runs at most 15 Spark jobs. A change
-    that adds jobs to the fixed cost of every extract fails here; one that
-    removes jobs lowers the bound."""
+    """One extract of the tiny corpus runs at most 12 Spark jobs (26-27
+    stages on a 4-core host). A change that adds jobs to the fixed cost of
+    every extract fails here; one that removes jobs lowers the bound."""
     from ocr_spark.pipeline.job import extract
 
     sc = spark.sparkContext
@@ -141,17 +141,20 @@ def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-    assert len(jobs) <= 15, f"{len(jobs)} jobs, {len(stages)} stages"
+    assert len(jobs) <= 12, f"{len(jobs)} jobs, {len(stages)} stages"
 
 
 def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     """Three-kind interleaving: text spans -> stripper, media spans -> OCR,
-    pdf spans -> PDF parser, reassembled with exact span equality. PDFs are
-    parsed once per distinct ref and joined back, like the OCR branch."""
+    pdf spans -> PDF parser, reassembled with exact span equality. Media
+    pages and pdfs share one route: one salt shuffle, one blob->text UDF
+    run once per distinct (ref, kind) and one join-back."""
     import pyarrow.parquet as pq
 
     from ocr_spark.fixtures import synthesize, synthesize_pdfs
-    from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media
+    from ocr_spark.pipeline.job import (
+        configure, extract_spans, read_documents, read_media, read_pdfs,
+    )
 
     corpus = str(tmp_path / "pdf_corpus")
     os.makedirs(corpus)
@@ -168,11 +171,19 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     configure(spark)
     docs = read_documents(spark, corpus)
     media_df = read_media(spark, corpus)
-    pdfs_df = spark.read.parquet(f"{corpus}/pdfs.parquet")
-    got = _spans_set(extract_spans(docs, media_df, pdfs=pdfs_df))
+    spans = extract_spans(docs, media_df, pdfs=read_pdfs(spark, corpus))
+    got = _spans_set(spans)
     expected_set = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert got == expected_set
     assert any(k == "pdf" for _, _, k, _, _ in got)  # pdf branch exercised
+
+    # plan shape: one salt shuffle for both blob kinds, no distinct
+    # aggregate ahead of it (a semi-join), and two Python UDF nodes
+    # (stripper + blob->text) — not one route per blob kind
+    plan = _plan_of(spans)
+    assert plan.count("hashpartitioning(_salt") == 1, plan
+    assert "HashAggregate" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 2, plan
 
     # the full job auto-wires pdfs.parquet: pdf spans must survive extract()
     # (a silent drop here would undercount the manifest and break parity)
@@ -283,8 +294,9 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     yields a null-text span (left join semantics), as does a null pdf blob,
     a null png blob or a pdf with no text; a blank page reads as "", and one
     page's bytes under two refs read the same in the OCR UDF's Arrow batch;
-    docs with empty span arrays disappear from output without failing the
-    job."""
+    a ref string present in both the media and the pdf table reads each
+    kind's own blob; docs with empty span arrays disappear from output
+    without failing the job."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -301,7 +313,7 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     pdf_refs = ["pdf-blank", "pdf-null", "pdf-abc", "pdf-nope"]
     media_refs = ["pg-null", "pg-blank", "pg-a", "pg-a2"]
     docs_t = pa.table({
-        "doc_id": ["d-empty", "d-dangling", "d-nulltext", "d-pdf", "d-media"],
+        "doc_id": ["d-empty", "d-dangling", "d-nulltext", "d-pdf", "d-media", "d-shared"],
         "spans": pa.array(
             [
                 [],
@@ -309,27 +321,30 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
                 [{"kind": "text", "text": None, "media_ref": None, "offset": 0}],
                 [{"kind": "pdf", "text": None, "media_ref": r, "offset": 0} for r in pdf_refs],
                 [{"kind": "media", "text": None, "media_ref": r, "offset": 0} for r in media_refs],
+                [{"kind": k, "text": None, "media_ref": "shared", "offset": 0}
+                 for k in ("media", "pdf")],
             ],
             type=pa.list_(span_type),
         ),
     })
     pdfs_t = pa.table({
-        "media_ref": pdf_refs[:3],
+        "media_ref": pdf_refs[:3] + ["shared"],
         "pdf": pa.array(
-            [build_pdf([[]]), None, build_pdf([["a", "b"], ["c"]])], pa.binary()
+            [build_pdf([[]]), None, build_pdf([["a", "b"], ["c"]]), build_pdf([["x", "y"]])],
+            pa.binary(),
         ),
     })
     page = render_page(["Spark", "Extract"], load_glyphs())
     blank = np.full_like(page, 255)
     h, w = page.shape
     media_t = pa.table({
-        "media_ref": media_refs,
-        "width": pa.array([w] * 4, pa.int32()),
-        "height": pa.array([h] * 4, pa.int32()),
+        "media_ref": media_refs + ["shared"],
+        "width": pa.array([w] * 5, pa.int32()),
+        "height": pa.array([h] * 5, pa.int32()),
         "png": pa.array(
-            [None, encode_gray(blank), encode_gray(page), encode_gray(page)], pa.binary()
+            [None, encode_gray(blank)] + [encode_gray(page)] * 3, pa.binary()
         ),
-        "truth": pa.array([None, "", "Spark Extract", "Spark Extract"], pa.string()),
+        "truth": pa.array([None, ""] + ["Spark Extract"] * 3, pa.string()),
     })
     d = str(tmp_path / "edge")
     os.makedirs(d)
@@ -352,4 +367,6 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
         ("d-media", 1, "media", "", "pg-blank"),
         ("d-media", 2, "media", "Spark Extract", "pg-a"),
         ("d-media", 3, "media", "Spark Extract", "pg-a2"),
+        ("d-shared", 0, "media", "Spark Extract", "shared"),
+        ("d-shared", 1, "pdf", "x y", "shared"),
     }

@@ -29,7 +29,8 @@ AUDIT = ["q1_pricing_summary","q3_order_revenue","q5_nation_volume","brand_volum
          "q15_top_supplier","q18_large_orders","q19_disjunctive_revenue",
          "q22_idle_customers","q21_waiting_suppliers","q9_profit_by_nation",
          "q11_important_parts","q16_supplier_counts","q20_excess_shippers",
-         "q2_min_cost_supplier"]
+         "q2_min_cost_supplier",
+         "ocr_extract_spans","ocr_extract_interleaved3"]
 q = e.queries()
 for name in AUDIT:
     df = q[name](spark, SF)
