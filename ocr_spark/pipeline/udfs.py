@@ -8,7 +8,12 @@ it once per executor — ~39 KB pickled for arial, the broadcast-variable
 pattern without the broadcast plumbing). All heavy work is per-batch NumPy:
 the UDF hands the media pages of each Arrow batch to one
 ``engine.recognize_pages`` call, which decodes and scans them in
-pixel-bounded groups (memoized by glyph crop and matrix)."""
+pixel-bounded groups (memoized by glyph crop and matrix).
+
+Both UDFs call ``forget_zip_finders`` after each call or batch, so the next
+task's ``importlib.invalidate_caches()`` has no zip archive to re-read
+(120-210 ms of CPU per task on Python 3.11). Lazy imports inside a UDF cache
+the finders again, so dropping them once at import is not enough."""
 
 from __future__ import annotations
 
@@ -20,6 +25,7 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .. import forget_zip_finders
 from ..html.strip import strip_html
 from ..kernel.classify import Alphabet
 
@@ -104,7 +110,9 @@ def load_alphabet(fonts: tuple = ("arial",)) -> Alphabet:
 def make_strip_udf():
     @pandas_udf(T.StringType())
     def strip_udf(html: pd.Series) -> pd.Series:
-        return strip_html(html)
+        out = strip_html(html)
+        forget_zip_finders()
+        return out
 
     return strip_udf
 
@@ -145,5 +153,6 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
                 index=blob.index,
                 dtype=object,
             )
+            forget_zip_finders()
 
     return ocr_udf

@@ -12,10 +12,20 @@ Refs come from a small pool, so one example can hold hot refs (many spans
 on one blob), dangling refs, null blobs, a ref string present in both the
 media and the pdf table, empty and null span arrays. Any plan rewrite
 (routing, semi-join, salt, join-back) must keep this property.
+
+A second property drives ``extract()`` itself over the same corpora: with
+1-5 buckets, the manifest cut to a random subset of its rows (a run that
+died between writing spans and committing them), then a rerun. The
+committed spans must equal the same walk, each in bucket
+``crc32(doc_id) % buckets``, and every bucket must hold exactly one manifest
+row whose counts and checksum describe those spans.
 """
 
 import functools
+import os
+import shutil
 import tempfile
+import zlib
 from collections import Counter
 
 import pytest
@@ -184,3 +194,87 @@ def test_extract_spans_equals_driver_walk(
         partitions=4, pdfs=read_pdfs(spark, d),
     ).select("doc_id", "ord", "kind", "text", "media_ref").collect()
     assert Counter(map(tuple, got)) == Counter(_oracle(docs, media, pdfs))
+
+
+def _manifest_row(run_id, rows):
+    """The manifest row ``extract()`` commits for a bucket holding ``rows``."""
+    return (
+        run_id,
+        len({r[0] for r in rows}),
+        len(rows),
+        sum(r[2] == "media" for r in rows),
+        str(sum(zlib.crc32(f"{r[0]}\x1f{r[1]}\x1f{r[3] or ''}".encode()) for r in rows)),
+        "committed",
+    )
+
+
+def _cut_manifest(manifest_dir, keep):
+    """Keep only the manifest rows of the buckets in ``keep``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(manifest_dir)
+    kept = pa.array(sorted(keep), table.schema.field("partition_id").type)
+    table = table.filter(pc.is_in(table["partition_id"], value_set=kept))
+    shutil.rmtree(manifest_dir)
+    os.makedirs(manifest_dir)
+    pq.write_table(table, f"{manifest_dir}/part-00000.parquet")
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    docs=st.lists(_doc, min_size=1, max_size=6),
+    media_entries=st.lists(_media_entry, min_size=len(_REFS), max_size=len(_REFS)),
+    pdf_entries=st.lists(_pdf_entry, min_size=len(_REFS), max_size=len(_REFS)),
+    ship_pdfs=st.booleans(),
+    cut=st.integers(1, 5).flatmap(
+        lambda n: st.tuples(st.just(n), st.sets(st.integers(0, n - 1)))
+    ),
+)
+def test_extract_resume_commits_the_driver_walk(
+    spark, tmp_path_factory, docs, media_entries, pdf_entries, ship_pdfs, cut
+):
+    from ocr_spark.pipeline.job import SPANS_WITH_BUCKET, extract
+    from ocr_spark.schemas import MANIFEST
+
+    buckets, keep = cut
+    docs = [(f"d{i}", spans) for i, spans in enumerate(docs)]
+    media = {r: _blob(e) for r, e in zip(_REFS, media_entries) if e[0] != "absent"}
+    pdfs = (
+        {r: _blob(e) for r, e in zip(_REFS, pdf_entries) if e[0] != "absent"}
+        if ship_pdfs else None
+    )
+    d = tempfile.mkdtemp(dir=tmp_path_factory.getbasetemp())
+    _write_corpus(d, docs, media, pdfs)
+    out = f"{d}/out"
+
+    first = extract(spark, d, out, run_id="run-0", buckets=buckets, partitions=4)
+    assert (first["buckets_skipped"], first["buckets_done"]) == (0, buckets)
+    _cut_manifest(f"{out}/_manifest", keep)
+    again = extract(spark, d, out, run_id="run-1", buckets=buckets, partitions=4)
+    assert (again["buckets_skipped"], again["buckets_done"]) == (
+        len(keep), buckets - len(keep)
+    )
+
+    want = [
+        (*row, zlib.crc32(row[0].encode()) % buckets)
+        for row in _oracle(docs, media, pdfs)
+    ]
+    # explicit schema: an output with no span rows has no files to infer from
+    got = (
+        spark.read.schema(SPANS_WITH_BUCKET).parquet(f"{out}/spans")
+        .select("doc_id", "ord", "kind", "text", "media_ref", "bucket")
+        .collect()
+    )
+    assert Counter(map(tuple, got)) == Counter(want)
+
+    manifest = spark.read.schema(MANIFEST).parquet(f"{out}/_manifest").collect()
+    assert sorted(r.partition_id for r in manifest) == list(range(buckets))
+    for r in manifest:
+        assert (
+            r.run_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.status
+        ) == _manifest_row(
+            "run-0" if r.partition_id in keep else "run-1",
+            [w for w in want if w[5] == r.partition_id],
+        )

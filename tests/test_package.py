@@ -1,7 +1,9 @@
 """Packaging smoke test: the zip that tools/package.sh builds for
 ``spark-submit --py-files`` must import and run on its own — bundled font
 sheets learned through importlib.resources, the OCR kernel and the PDF
-parser — with the same results as the source tree."""
+parser — with the same results as the source tree, also after its zip
+finders are dropped from the import cache, as every task of a Spark Python
+worker drops them."""
 
 import hashlib
 import json
@@ -12,8 +14,14 @@ import sys
 from conftest import REPO
 
 _PROBE = """
-import hashlib, json
+import hashlib, importlib, json, sys, zipimport
 import ocr_spark
+
+ocr_spark.forget_zip_finders()
+importlib.invalidate_caches()
+zip_finders = sorted(
+    k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)
+)
 from ocr_spark.fixtures import load_glyphs, render_page
 from ocr_spark.kernel.engine import recognize
 from ocr_spark.kernel.segment import Settings
@@ -29,6 +37,7 @@ print(json.dumps({
     "vectors": hashlib.sha1(alpha.vectors.tobytes()).hexdigest(),
     "ocr": recognize(page, Settings(character_spacing=8.0), alpha),
     "pdf": extract_text(build_pdf([["a", "b"], ["c"]])),
+    "zip_finders": zip_finders,
 }))
 """
 
@@ -65,3 +74,38 @@ def test_package_zip_runs_standalone(tmp_path):
     assert got["vectors"] == hashlib.sha1(alpha.vectors.tobytes()).hexdigest()
     assert got["ocr"] == recognize(page, Settings(character_spacing=8.0), alpha)
     assert got["pdf"] == extract_text(build_pdf([["a", "b"], ["c"]])) == ["a b", "c"]
+    assert got["zip_finders"] == []
+
+
+def test_forget_zip_finders_drops_only_zip_finders(tmp_path):
+    import importlib.machinery
+    import zipfile
+    import zipimport
+
+    import ocr_spark
+
+    archive = tmp_path / "lib.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_probe_mod.py", "VALUE = 7\n")
+    plain = str(tmp_path / "plain")
+    sys.path_importer_cache[str(archive)] = zipimport.zipimporter(str(archive))
+    sys.path_importer_cache[plain] = importlib.machinery.FileFinder(plain)
+    sys.path.insert(0, str(archive))
+    try:
+        import zipped_probe_mod
+
+        ocr_spark.forget_zip_finders()
+        assert not any(
+            isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values()
+        )
+        assert plain in sys.path_importer_cache
+        # an imported module keeps its loader, and a new import from the
+        # same archive rebuilds its finder
+        assert zipped_probe_mod.__loader__.get_source("zipped_probe_mod") == "VALUE = 7\n"
+        del sys.modules["zipped_probe_mod"]
+        assert importlib.import_module("zipped_probe_mod").VALUE == 7
+    finally:
+        sys.path.remove(str(archive))
+        sys.modules.pop("zipped_probe_mod", None)
+        sys.path_importer_cache.pop(str(archive), None)
+        sys.path_importer_cache.pop(plain, None)
