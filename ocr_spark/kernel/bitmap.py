@@ -18,6 +18,13 @@ def black_mask(gray: np.ndarray) -> np.ndarray:
     return gray < 128
 
 
+def _check_box(shape: tuple, x: int, y: int, w: int, h: int) -> None:
+    """Raise unless the box and its row y+h and column x+w lie on the page."""
+    H, W = shape
+    if not (0 <= x and 0 <= y and x + w < W and y + h < H):
+        raise ValueError(f"box ({x},{y},{w},{h}) reaches the page edge")
+
+
 def get_borders(mask: np.ndarray, x: int, y: int, w: int, h: int):
     """P12 border trim (Bitmap.getBorders, Bitmap.java:506-568).
 
@@ -27,10 +34,8 @@ def get_borders(mask: np.ndarray, x: int, y: int, w: int, h: int):
     y+h < page height and x+w < page width (true for any page with margins;
     the reference throws/wraps otherwise).
     """
-    H, W = mask.shape
+    _check_box(mask.shape, x, y, w, h)
     x1, y1 = x + w, y + h
-    if not (0 <= x and 0 <= y and x1 < W and y1 < H):
-        raise ValueError(f"box ({x},{y},{w},{h}) reaches the page edge")
 
     box = mask[y:y1, x:x1]
     rows = box.any(axis=1)
@@ -72,10 +77,14 @@ def extract_matrix(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int):
     Crop with border trim (+1 row/col per the getRegion call at :96), resize
     to n x n (ImageTools parity), threshold at 160 -> black mask (True=black).
     Returns (matrix_bool, (top, left, bottom, right)).
+
+    Reads only the (h+1) x (w+1) window at (x, y), which it binarizes alone.
     """
-    mask = black_mask(gray)
-    t, l, b, r = get_borders(mask, x, y, w, h)
-    crop = gray[y + t : y + h - b + 1, x + l : x + w - r + 1]
+    # checked on the page: a negative x or y would wrap the window's slice
+    _check_box(gray.shape, x, y, w, h)
+    win = gray[y : y + h + 1, x : x + w + 1]
+    t, l, b, r = get_borders(black_mask(win), 0, 0, w, h)
+    crop = win[t : h - b + 1, l : w - r + 1]
     resized = java_resize(crop, n, n)
     return resized <= WHITE_THRESHOLD, (t, l, b, r)
 

@@ -34,7 +34,6 @@ class Alphabet:
     def __init__(self, n: int = DEFAULT_MATRIX_SIZE):
         self.n = n
         self.chars: list[str] = []
-        self.def_chars: list[str] = []
         self.fonts: list[str] = []
         self.vectors = np.zeros((0, 8 * 2 * 3), dtype=np.int64)
 
@@ -45,51 +44,24 @@ class Alphabet:
         self.__init__(self.n)
         return self
 
-    def learn_sheet(self, gray: np.ndarray, font_name: str, alphabet: str | None = None):
-        """T1: learn the fixed 13x6 font sheet grid
+    def learn_sheet(self, gray: np.ndarray, font_name: str):
+        """T1: learn the fixed 13x6 font sheet grid of ``DEFAULT_ALPHABET``
         (CurvatureClassifier.learn, :45-79; grid cell (71x+1, 69y+1, 69, 67)).
         Repeated calls append (multi-font), matching engine semantics."""
-        if alphabet is None:
-            alphabet = DEFAULT_ALPHABET
-        if len(alphabet) != len(DEFAULT_ALPHABET):
-            raise ValueError(f"Alphabet must contain {len(DEFAULT_ALPHABET)} characters")
         gw, gh = 71, 69
         matrices = []
         for gy in range(6):
             for gx in range(13):
                 bx, by, bw, bh = gw * gx + 1, gh * gy + 1, gw - 2, gh - 2
-                char_index = 13 * (by // 69) + (bx // 71)
-                ch = alphabet[char_index] if char_index < len(alphabet) else " "
-                dc = DEFAULT_ALPHABET[char_index] if char_index < len(alphabet) else " "
                 matrix, _ = extract_matrix(gray, bx, by, bw, bh, self.n)
                 if not matrix.any():  # empty cell, skipped (:832-835)
                     continue
                 matrices.append(matrix)
-                self.chars.append(ch)
-                self.def_chars.append(dc)
+                self.chars.append(DEFAULT_ALPHABET[13 * gy + gx])
                 self.fonts.append(font_name)
         if matrices:
             self.vectors = np.concatenate([self.vectors, curvature_vectors(np.stack(matrices))])
         return self
-
-    # -- serialization for the on-disk feature cache (np.savez keys) -----
-    def to_dict(self) -> dict:
-        return {
-            "n": self.n,
-            "chars": self.chars,
-            "def_chars": self.def_chars,
-            "fonts": self.fonts,
-            "vectors": self.vectors,
-        }
-
-    @classmethod
-    def from_dict(cls, d: dict) -> "Alphabet":
-        a = cls(int(d["n"]))
-        a.chars = list(d["chars"])
-        a.def_chars = list(d["def_chars"])
-        a.fonts = list(d["fonts"])
-        a.vectors = np.asarray(d["vectors"], dtype=np.int64)
-        return a
 
 
 #: rows per 1-NN block: bounds the (rows, templates, 48) difference array

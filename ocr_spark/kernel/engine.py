@@ -100,12 +100,14 @@ def _vectors_of(matrices: list[np.ndarray]) -> np.ndarray:
 
 
 def _matrix_of(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int) -> np.ndarray:
-    """extract_matrix memoized by exact crop bytes: repeated glyph imagery
-    (rendered corpora, scanned forms, repeated logos) skips the normalize +
-    Java-bilinear resize chain entirely. Pure memoization — identical input
-    bytes, identical output. Full dimensions go into the key (two crops with
-    identical pixel bytes but transposed shapes must not collide)."""
-    key = gray[y : y + h, x : x + w].tobytes() + struct.pack(">IIB", w, h, n)
+    """extract_matrix memoized by the exact bytes it reads: repeated glyph
+    imagery (rendered corpora, scanned forms, repeated logos) skips the
+    normalize + Java-bilinear resize chain entirely. Pure memoization —
+    identical input bytes, identical output. The key is the (h+1) x (w+1)
+    window, because the border trim also reads row y+h and column x+w; full
+    dimensions go into it too (two windows with identical pixel bytes but
+    transposed shapes must not collide)."""
+    key = gray[y : y + h + 1, x : x + w + 1].tobytes() + struct.pack(">IIB", w, h, n)
     m = _MATRIX_CACHE.get(key)
     if m is None:
         m, _ = extract_matrix(gray, x, y, w, h, n)

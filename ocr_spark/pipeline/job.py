@@ -56,11 +56,11 @@ def configure(builder_or_spark, shuffle_partitions: int | None = None):
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if isinstance(builder_or_spark, SparkSession):
+        # a live session keeps its static confs (spark.serializer,
+        # spark.locality.wait); any other key that fails to set raises
         for k, v in conf.items():
-            try:
+            if builder_or_spark.conf.isModifiable(k):
                 builder_or_spark.conf.set(k, v)
-            except Exception:
-                pass  # static conf (e.g. spark.serializer) on a live session
         return builder_or_spark
     for k, v in conf.items():
         builder_or_spark = builder_or_spark.config(k, v)
@@ -433,4 +433,6 @@ def extract(
 
 
 def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{output_dir}/spans")
+    # explicit schema, as in ParquetSink.read_buckets: a run that committed
+    # no span rows leaves nothing to infer one from
+    return spark.read.schema(SPANS_WITH_BUCKET).parquet(f"{output_dir}/spans")

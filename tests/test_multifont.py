@@ -235,11 +235,5 @@ def test_reset_restores_single_font_behavior(sheets, settings):
     fresh = Alphabet().learn_sheet(arial, "arial")
     assert alpha.chars == fresh.chars
     assert (alpha.vectors == fresh.vectors).all()
-    # alphabet caches written before the T6 templates were dropped still
-    # carry a ``closest`` key; it must load and be ignored
-    old = Alphabet.from_dict(
-        {**alpha.to_dict(), "closest": np.zeros((len(alpha.chars), 9, 9), np.int64)}
-    )
-    assert old.chars == alpha.chars and (old.vectors == alpha.vectors).all()
     assert page_text(scan_page(courier_page, settings, alpha)) != COURIER_ONLY_WORDS[0]
     assert page_text(scan_page(arial_page, settings, alpha)) == ARIAL_WORDS[0]

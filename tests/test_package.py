@@ -53,9 +53,12 @@ def test_package_zip_runs_standalone(tmp_path):
     subprocess.run(["bash", os.path.join(REPO, "tools", "package.sh")], check=True)
     zip_path = os.path.join(REPO, "dist", "ocr_spark.zip")
 
-    # a fresh TMPDIR: the zip's alphabet is learned, not read from a cache
+    # an empty TMPDIR that stays empty: the zip learns its alphabet from the
+    # sheets inside it and leaves no cache behind
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env.update(PYTHONPATH=zip_path, TMPDIR=str(tmp_path))
+    env.update(PYTHONPATH=zip_path, TMPDIR=str(tmpdir))
     got = json.loads(
         subprocess.run(
             [sys.executable, "-c", _PROBE], cwd=tmp_path, env=env,
@@ -63,6 +66,7 @@ def test_package_zip_runs_standalone(tmp_path):
         ).stdout
     )
     assert got["module"].startswith(zip_path + os.sep)
+    assert list(tmpdir.iterdir()) == []
 
     alpha = Alphabet()
     for font in ("arial", "courier"):

@@ -168,7 +168,27 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     pq.write_table(expected, os.path.join(corpus, "expected_spans.parquet"))
     pq.write_table(pdf_tbl, os.path.join(corpus, "pdfs.parquet"))
 
+    # on a live session configure sets every key Spark lets it modify (a
+    # bad value raises) and leaves only the static ones alone
+    class _Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+    conf = configure(_Recorder()).conf
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     configure(spark)
+    assert {k for k in conf if not spark.conf.isModifiable(k)} == {
+        "spark.serializer", "spark.locality.wait"
+    }
+    for k, v in conf.items():
+        if spark.conf.isModifiable(k):
+            assert spark.conf.get(k) == v, k
+    with pytest.raises(Exception, match="spark.sql.shuffle.partitions"):
+        configure(spark, shuffle_partitions=-1)
     docs = read_documents(spark, corpus)
     media_df = read_media(spark, corpus)
     spans = extract_spans(docs, media_df, pdfs=read_pdfs(spark, corpus))
@@ -370,3 +390,34 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
         ("d-shared", 0, "media", "Spark Extract", "shared"),
         ("d-shared", 1, "pdf", "x y", "shared"),
     }
+
+
+def test_read_output_of_a_run_with_no_spans(spark, tmp_path):
+    """A run whose docs all have empty or null span arrays commits no span
+    rows; read_output still gives the output columns, with 0 rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.pipeline.job import extract, read_output
+
+    span_type = pa.struct(
+        [("kind", pa.string()), ("text", pa.string()),
+         ("media_ref", pa.string()), ("offset", pa.int32())]
+    )
+    d = str(tmp_path / "no_spans")
+    os.makedirs(d)
+    pq.write_table(
+        pa.table({"doc_id": ["d-empty", "d-null"],
+                  "spans": pa.array([[], None], type=pa.list_(span_type))}),
+        f"{d}/documents.parquet",
+    )
+    pq.write_table(
+        pa.table({"media_ref": pa.array([], pa.string()), "width": pa.array([], pa.int32()),
+                  "height": pa.array([], pa.int32()), "png": pa.array([], pa.binary())}),
+        f"{d}/media.parquet",
+    )
+    out_dir = str(tmp_path / "no_spans_out")
+    assert extract(spark, d, out_dir, buckets=2)["buckets_done"] == 2
+    got = read_output(spark, out_dir)
+    assert got.columns == ["doc_id", "ord", "kind", "text", "media_ref", "bucket"]
+    assert got.count() == 0
