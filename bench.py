@@ -121,16 +121,14 @@ def main() -> None:
         os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures"),
         f"bench_{EXTRACT_DOCS}x{EXTRACT_PAGES}",
     )
-    from ocr_spark.fixtures import FIXTURE_VERSION
+    from ocr_spark.fixtures import FIXTURE_VERSION, ensure_built
 
     # version-keyed marker (not existence-only): a fixture-content change
     # must regenerate a cached corpus, or machines diverge by cache history
-    marker = os.path.join(corpus, "_DONE")
-    want = f"v{FIXTURE_VERSION} bench corpus\n"
-    if not (os.path.exists(marker) and open(marker).read() == want):
-        write_corpus(corpus, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES)
-        with open(marker, "w") as f:
-            f.write(want)
+    ensure_built(
+        corpus, f"v{FIXTURE_VERSION} bench corpus\n",
+        lambda: write_corpus(corpus, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES),
+    )
     docs = read_documents(spark, corpus)
     media = read_media(spark, corpus)
     m = StealMeter()
@@ -146,12 +144,10 @@ def main() -> None:
         os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures"),
         f"bench3_{EXTRACT_DOCS}x{EXTRACT_PAGES}",
     )
-    marker3 = os.path.join(corpus3, "_DONE")
-    want3 = f"v{FIXTURE_VERSION} bench corpus3\n"
-    if not (os.path.exists(marker3) and open(marker3).read() == want3):
-        write_corpus(corpus3, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES, pdf_p=0.25)
-        with open(marker3, "w") as f:
-            f.write(want3)
+    ensure_built(
+        corpus3, f"v{FIXTURE_VERSION} bench corpus3\n",
+        lambda: write_corpus(corpus3, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES, pdf_p=0.25),
+    )
     docs3 = read_documents(spark, corpus3)
     media3 = read_media(spark, corpus3)
     pdfs3 = read_pdfs(spark, corpus3)

@@ -11,8 +11,8 @@ Layout:
   kernel/    pure-NumPy reimplementation of the OCR engine (no Spark deps)
   html/      boilerplate stripper for text spans (new design, north-rule)
   functions/ column-level text analytics + similarity/dedup primitives
-  pipeline/  the Spark job: explode -> route -> pandas UDFs -> reassemble
-  sources/   I/O helpers (parquet now; Iceberg-shaped writer interface)
+  pipeline/  the Spark job: explode -> route -> pandas UDFs -> reassemble,
+             parquet and Iceberg commit sinks, streaming extraction
 """
 
 import sys

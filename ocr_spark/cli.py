@@ -91,7 +91,7 @@ def main(argv=None):
 
     from pyspark.sql import SparkSession
 
-    from ocr_spark.pipeline.job import configure, extract
+    from ocr_spark.pipeline.job import configure, extract, stream_extract
 
     builder = SparkSession.builder.appName(f"ocr_spark.{args.cmd}")
     if args.master:
@@ -128,8 +128,6 @@ def main(argv=None):
             )
             print(json.dumps(metrics))
         else:  # stream
-            from ocr_spark.streaming.job import stream_extract
-
             q = stream_extract(
                 spark,
                 args.stream_dir,

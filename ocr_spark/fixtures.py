@@ -433,25 +433,38 @@ def write_corpus(out_dir: str, n_docs: int, n_pages: int, skew: bool = False,
     return documents.num_rows, media.num_rows, expected.num_rows
 
 
+def ensure_built(out_dir: str, want: str, build) -> str:
+    """The `_DONE` marker protocol: ``out_dir`` is complete only if its
+    `_DONE` file reads exactly ``want``. Otherwise ``build()`` (re)writes the
+    directory and the marker is written last, so a half-written dir, or one
+    built by an older fixture version, is rebuilt on the next call."""
+    marker = os.path.join(out_dir, "_DONE")
+    if os.path.exists(marker):
+        with open(marker) as f:
+            if f.read() == want:
+                return out_dir
+    build()
+    with open(marker, "w") as f:
+        f.write(want)
+    return out_dir
+
+
 def ensure_idx_fixture(out_dir: str, n_items: int = 64, side: int = 28,
                        seed: int = SEED) -> str:
     """Deterministic idx1/idx3 (MNIST-format) fixture: images.idx3 with
     ``n_items`` seeded uint8 rasters, labels.idx1 with cyclic labels, and
     expected.parquet holding the by-construction per-item truth (dims,
-    pixel md5, float mean, label) the oracle reads back. Same `_DONE`
-    marker protocol as ensure_corpus."""
+    pixel md5, float mean, label) the oracle reads back, committed by a
+    `_DONE` marker (``ensure_built``)."""
+    want = f"v{FIXTURE_VERSION} idx n={n_items} side={side} seed={seed}\n"
+    return ensure_built(out_dir, want, lambda: _write_idx(out_dir, n_items, side, seed))
+
+
+def _write_idx(out_dir: str, n_items: int, side: int, seed: int) -> None:
     import hashlib
 
     from .idx import build_idx
 
-    marker = os.path.join(out_dir, "_DONE")
-    want = f"v{FIXTURE_VERSION} idx n={n_items} side={side} seed={seed}\n"
-    have = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            have = f.read()
-    if have == want:
-        return out_dir
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed + 9000)
     images = rng.integers(0, 256, size=(n_items, side, side), dtype=np.uint8)
@@ -476,23 +489,13 @@ def ensure_idx_fixture(out_dir: str, n_items: int = 64, side: int = 28,
         }
     )
     pq.write_table(expected, os.path.join(out_dir, "expected.parquet"))
-    with open(marker, "w") as f:
-        f.write(want)
-    return out_dir
 
 
 def ensure_corpus(out_dir: str, scale: str = "tiny", skew: bool = False, seed: int = SEED) -> str:
     """Idempotently materialize a named-scale corpus; safe to call from
-    entry()/bench.py. A `_DONE` marker commits the directory (write is not
-    atomic, so a half-written dir without the marker is regenerated)."""
-    marker = os.path.join(out_dir, "_DONE")
+    entry()/bench.py. A `_DONE` marker commits the directory
+    (``ensure_built``)."""
     want = f"v{FIXTURE_VERSION} {scale} skew={skew} seed={seed}\n"
-    have = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            have = f.read()
-    if have != want:
-        write_corpus(out_dir, skew=skew, seed=seed, **SCALES[scale])
-        with open(marker, "w") as f:
-            f.write(want)
-    return out_dir
+    return ensure_built(
+        out_dir, want, lambda: write_corpus(out_dir, skew=skew, seed=seed, **SCALES[scale])
+    )

@@ -26,8 +26,6 @@ LANG_MARKERS = {
     "fr": ["le", "la", "de", "et", "les", "est"],
 }
 
-STOPWORDS = LANG_MARKERS["en"]
-
 PUNCT_CLASS = r"[.!?,;:]"
 
 

@@ -26,7 +26,6 @@ class Settings:
     max_symbol_width: int = 100
     min_symbol_height: int = 1
     max_symbol_height: int = 75
-    max_line_width: int = 100
 
 
 @dataclass

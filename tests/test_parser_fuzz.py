@@ -180,37 +180,6 @@ def test_pdf_round_trip(pages, compress):
     assert got == expected
 
 
-# --------------------------------------------------------------------------
-# stateful sessionizer fold (not a parser, but the same exactness-under-
-# adversarial-chunking contract: any chunking + any disorder == one sorted
-# pass; complements the fixed-seed test in test_streaming.py)
-# --------------------------------------------------------------------------
-
-@settings(max_examples=150, deadline=None)
-@given(
-    st.lists(st.integers(min_value=0, max_value=5_000), min_size=0, max_size=200),
-    st.integers(min_value=1, max_value=500),   # gap
-    st.integers(min_value=1, max_value=9),     # chunk count
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_merge_session_intervals_exact_under_any_chunking(ts, gap, n_chunks, seed):
-    from ocr_spark.streaming.job import _merge_session_intervals
-
-    arr = np.asarray(ts, dtype=np.int64)
-    ref = _merge_session_intervals([], np.sort(arr), gap)
-    rng = np.random.default_rng(seed)
-    shuffled = arr[rng.permutation(len(arr))]
-    acc = []
-    for chunk in np.array_split(shuffled, n_chunks):
-        acc = _merge_session_intervals(acc, chunk, gap)
-    assert acc == ref
-    assert sum(c for _, _, c in ref) == len(arr)          # no event lost
-    for a, b in zip(ref, ref[1:]):
-        assert b[0] - a[1] > gap                          # truly gap-separated
-    for s, e, c in ref:
-        assert s <= e and c >= 1
-
-
 @settings(max_examples=300, deadline=None)
 @given(
     st.lists(st.lists(_LINE, min_size=0, max_size=2), min_size=0, max_size=2),

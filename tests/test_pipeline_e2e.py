@@ -1,5 +1,6 @@
 """End-to-end Spark pipeline tests: span-sequence equality vs the oracle
-table, resume idempotency, skew handling, deterministic parallelism."""
+table, resume idempotency, skew handling, deterministic parallelism, streaming
+extraction."""
 
 import os
 import shutil
@@ -109,19 +110,62 @@ def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
     assert [r.p for r in spark.read.parquet(mine).collect()] == [0]
 
 
+def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
+    """Streaming extraction over two arriving files yields exactly the
+    oracle's spans, and a restart on the same checkpoint adds none."""
+    import pyarrow.parquet as pq
+
+    from ocr_spark.pipeline.job import stream_extract
+
+    stream_dir = str(tmp_path / "incoming")
+    os.makedirs(stream_dir)
+    # two "arriving" files -> two micro-batch-able inputs
+    t = pq.read_table(os.path.join(corpus, "documents.parquet"))
+    n = t.num_rows
+    pq.write_table(t.slice(0, n // 2), os.path.join(stream_dir, "part-0.parquet"))
+    pq.write_table(t.slice(n // 2), os.path.join(stream_dir, "part-1.parquet"))
+
+    # each micro-batch write overwrites only its own batch_id partition,
+    # by a per-write option: the session's mode stays as the caller set it
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    out_dir = str(tmp_path / "out")
+    q = stream_extract(
+        spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+
+    got = _spans_set(spark.read.parquet(f"{out_dir}/spans"))
+    expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
+    assert got == expected
+
+    # restart with no new files: no duplicates (checkpoint resume)
+    q2 = stream_extract(
+        spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"),
+    )
+    q2.awaitTermination(120)
+    assert spark.read.parquet(f"{out_dir}/spans").count() == len(expected)
+    assert spark.conf.get(key) == "STATIC"
+
+
 def test_one_data_file_per_bucket(spark, corpus, tmp_path):
-    """The write shuffle hashes on the bucket alone, so each bucket's rows
-    land in one task and its dir holds exactly one data file."""
+    """The write shuffle sends each bucket to its own task, so each
+    bucket's dir holds exactly one data file and no two buckets share a
+    writer (the ``part-NNNNN`` task number in the file names)."""
     from ocr_spark.pipeline.job import extract
 
     out_dir = str(tmp_path / "out_files")
     extract(spark, corpus, out_dir, buckets=4)
+    tasks = []
     for b in range(4):
         files = [
             f for f in os.listdir(f"{out_dir}/spans/bucket={b}")
             if not f.startswith((".", "_"))
         ]
         assert len(files) == 1, (b, files)
+        tasks.append(files[0].split("-")[1])
+    assert len(set(tasks)) == 4, tasks
 
 
 def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):

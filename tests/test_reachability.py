@@ -1,19 +1,50 @@
-"""Every module under ocr_spark/ is reachable from an entry point.
+"""Every module and every top-level name under ocr_spark/ is reachable from
+an entry point.
 
-Walks the ``import`` / ``from ... import`` statements (function-local and
-relative ones included) of the package from the entry modules: the CLI, the
-batch and streaming jobs, ``__spark_entry__.py`` and ``bench.py``, which
-imports ``ocr_spark.procstat``; tools/ and perfbench/ are not roots. A module
-nothing reaches is dead code; delete it or wire it in.
+Entry points: the CLI (``ocr_spark.cli``), ``__spark_entry__.py``,
+``bench.py``, ``tools/*.py`` and ``perfbench/*.py``.
+
+The module walk follows the ``import`` / ``from ... import`` statements
+(function-local and relative ones included) of the package from the entry
+points. The name walk counts real uses only: ``Name`` ids, ``Attribute``
+attrs and imported names, never docstrings or comments. It starts from the
+entry points and every top-level statement of the package that is not a
+def, class or assignment, then follows the bodies of the defs, classes and
+assignments it reaches until nothing new is reached. A name is matched by
+its spelling alone, whatever module defines it, so the walk can only err
+towards keeping code. A module or name nothing reaches is dead code; delete
+it or wire it in.
 """
 
 import ast
+import glob
 import os
 
 from conftest import REPO
 
-ENTRY_MODULES = ("ocr_spark.cli", "ocr_spark.pipeline.job", "ocr_spark.streaming.job")
-ENTRY_FILES = ("__spark_entry__.py", "bench.py")
+ENTRY_MODULES = ("ocr_spark.cli",)
+ENTRY_FILES = (
+    "__spark_entry__.py",
+    "bench.py",
+    *sorted(
+        os.path.relpath(p, REPO)
+        for d in ("tools", "perfbench")
+        for p in glob.glob(os.path.join(REPO, d, "*.py"))
+    ),
+)
+
+# top-level names kept only for tests; the walk starts from them too
+TEST_ONLY = {
+    "__version__",
+    "decode_rgb",  # png: reads the F8 RGB goldens
+    "simhash_signature",  # dedup: the reference the one-shuffle SimHash is pinned against
+    "scan_page",  # engine: the single-page API the parity tests drive
+}
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
 
 
 def _package_modules() -> dict[str, str]:
@@ -35,10 +66,8 @@ def _imports(path: str, package: str) -> set[str]:
     """Absolute dotted names a file imports; ``package`` anchors relative
     imports. ``from a import b`` yields both ``a`` and ``a.b`` (b may be a
     submodule); callers keep only names that are real modules."""
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
     out = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             out.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -74,13 +103,73 @@ def _reached() -> tuple[set[str], dict[str, str]]:
     return seen, mods
 
 
+def _uses(node: ast.AST) -> set[str]:
+    """Names ``node`` reads: loaded ``Name`` ids, loaded ``Attribute``
+    attrs and imported names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute) and not isinstance(n.ctx, ast.Store):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.update(a.name.rpartition(".")[2] for a in n.names)
+    return out
+
+
+def _defined(stmt: ast.stmt) -> list[str]:
+    """The names a top-level def, class or assignment binds; [] for any
+    other statement."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = (
+        stmt.targets if isinstance(stmt, ast.Assign)
+        else [stmt.target] if isinstance(stmt, ast.AnnAssign)
+        else []
+    )
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def _unreached_names(mods: dict[str, str]) -> list[str]:
+    """``module.name`` for every top-level def, class or assigned name of
+    the package that no entry point reaches."""
+    defs: dict[str, list[tuple[str, ast.stmt]]] = {}
+    used = set(TEST_ONLY)
+    for f in ENTRY_FILES:
+        used |= _uses(_parse(os.path.join(REPO, f)))
+    for mod, path in mods.items():
+        for stmt in _parse(path).body:
+            names = _defined(stmt)
+            if mod in ENTRY_MODULES or not names:
+                used |= _uses(stmt)
+            for name in names:
+                defs.setdefault(name, []).append((mod, stmt))
+    walked: set[str] = set()
+    while todo := (used & defs.keys()) - walked:
+        for name in todo:
+            walked.add(name)
+            for _mod, stmt in defs[name]:
+                used |= _uses(stmt)
+    return sorted(
+        f"{mod}.{name}"
+        for name, sites in defs.items()
+        if name not in used
+        for mod, _stmt in sites
+    )
+
+
 def test_every_package_module_is_reached_from_an_entry_point():
     seen, mods = _reached()
     # the walk sees through function-local relative imports such as
-    # udfs.make_ocr_udf's ``from ..kernel.engine import recognize``
+    # udfs.make_ocr_udf's ``from ..kernel.engine import recognize_pages``
     assert {"ocr_spark.pipeline.udfs", "ocr_spark.kernel.engine", "ocr_spark.procstat"} <= seen
     dead = sorted(
         m for m, path in mods.items()
         if not path.endswith("__init__.py") and m not in seen
     )
     assert not dead, f"modules no entry point imports: {dead}"
+
+
+def test_every_top_level_name_is_reached_from_an_entry_point():
+    dead = _unreached_names(_package_modules())
+    assert not dead, f"top-level names no entry point reaches: {dead}"
