@@ -32,9 +32,9 @@ def forget_zip_finders() -> None:
     its finder from zipimport's in-memory directory cache, so nothing is
     re-read. Where the re-read is lazy (Python 3.12+) this is harmless.
 
-    Called at import (every worker that unpickles an engine UDF imports this
-    package) and after each strip call and blob batch, because lazy imports
-    inside a task create the finders again."""
+    Called at import (every worker that unpickles a package UDF imports this
+    package) and by every package UDF after each call or Arrow batch, because
+    lazy imports inside a task create the finders again."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):

@@ -26,6 +26,9 @@ from .kernel.classify import DEFAULT_ALPHABET
 from .png import decode_gray, encode_gray
 
 SEED = 1337
+AUDIO_RATE = 8000  # Hz, every synthesized WAV clip
+IDX_ITEMS = 64  # rasters in the idx fixture
+IDX_SIDE = 28  # their side, in pixels (MNIST's)
 
 # bump when the corpus schema/content changes: ensure_corpus regenerates any
 # cached dir whose _DONE marker carries an older version
@@ -258,7 +261,7 @@ def synthesize(n_docs: int, n_pages: int, skew: bool = False, seed: int = SEED,
     return documents, media, expected
 
 
-def synthesize_audio(n_clips: int, seed: int = SEED, sample_rate: int = 8000):
+def synthesize_audio(n_clips: int, seed: int = SEED):
     """Deterministic PCM16 WAV clips (stdlib ``wave`` — no external codec)
     with by-construction stats computed on the int16 samples BEFORE
     encoding, so the decode->feature path has a codec-independent oracle
@@ -269,8 +272,8 @@ def synthesize_audio(n_clips: int, seed: int = SEED, sample_rate: int = 8000):
     rng = np.random.default_rng(seed + 7)
     refs, wavs, srs, n_samps, durs, rmss, zcs = [], [], [], [], [], [], []
     for i in range(n_clips):
-        n = int(rng.integers(sample_rate // 4, sample_rate))
-        t = np.arange(n, dtype=np.float64) / sample_rate
+        n = int(rng.integers(AUDIO_RATE // 4, AUDIO_RATE))
+        t = np.arange(n, dtype=np.float64) / AUDIO_RATE
         freq = float(rng.uniform(80.0, 1200.0))
         amp = float(rng.uniform(0.2, 0.9))
         sig = amp * np.sin(2.0 * np.pi * freq * t)
@@ -281,14 +284,14 @@ def synthesize_audio(n_clips: int, seed: int = SEED, sample_rate: int = 8000):
         with wave.open(buf, "wb") as w:
             w.setnchannels(1)
             w.setsampwidth(2)
-            w.setframerate(sample_rate)
+            w.setframerate(AUDIO_RATE)
             w.writeframes(x.tobytes())
 
         refs.append(f"au-{i:06d}")
         wavs.append(buf.getvalue())
-        srs.append(sample_rate)
+        srs.append(AUDIO_RATE)
         n_samps.append(n)
-        durs.append(round(n / sample_rate, 6))
+        durs.append(round(n / AUDIO_RATE, 6))
         xf = x.astype(np.float64)
         rmss.append(round(float(np.sqrt(np.mean(xf * xf))), 6))
         zcs.append(int(np.sum((x[1:] < 0) != (x[:-1] < 0))))
@@ -306,7 +309,7 @@ def synthesize_audio(n_clips: int, seed: int = SEED, sample_rate: int = 8000):
     )
 
 
-def synthesize_videos(n_clips: int, seed: int = SEED, n_sample: int = 4):
+def synthesize_videos(n_clips: int, seed: int = SEED):
     """Deterministic y4m video clips (raw planar YUV — ocr_spark.y4m, no
     codec library) plus by-construction frame-sampling truth: the expected
     table holds mean luma per sampled frame, computed on the uint8 planes
@@ -314,7 +317,7 @@ def synthesize_videos(n_clips: int, seed: int = SEED, n_sample: int = 4):
     stats). Colorspaces cycle 420jpeg/422/444/mono so every chroma layout's
     frame stride is exercised — a desynced frame walk reads chroma bytes as
     luma and fails the value hash. Returns (videos, expected) tables."""
-    from .y4m import build_y4m, sample_indices
+    from .y4m import SAMPLED_FRAMES, build_y4m, sample_indices
 
     rng = np.random.default_rng(seed + 23)
     spaces = ["420jpeg", "422", "444", "mono"]
@@ -340,7 +343,7 @@ def synthesize_videos(n_clips: int, seed: int = SEED, n_sample: int = 4):
         heights.append(h)
         totals.append(n_total)
         css.append(cs)
-        for fi in sample_indices(n_total, n_sample):
+        for fi in sample_indices(n_total, SAMPLED_FRAMES):
             exp_ref.append(ref)
             exp_idx.append(fi)
             exp_feat.append(round(float(y[fi].astype(np.float64).mean()), 6))
@@ -449,40 +452,37 @@ def ensure_built(out_dir: str, want: str, build) -> str:
     return out_dir
 
 
-def ensure_idx_fixture(out_dir: str, n_items: int = 64, side: int = 28,
-                       seed: int = SEED) -> str:
+def ensure_idx_fixture(out_dir: str) -> str:
     """Deterministic idx1/idx3 (MNIST-format) fixture: images.idx3 with
-    ``n_items`` seeded uint8 rasters, labels.idx1 with cyclic labels, and
+    IDX_ITEMS seeded uint8 rasters, labels.idx1 with cyclic labels, and
     expected.parquet holding the by-construction per-item truth (dims,
     pixel md5, float mean, label) the oracle reads back, committed by a
     `_DONE` marker (``ensure_built``)."""
-    want = f"v{FIXTURE_VERSION} idx n={n_items} side={side} seed={seed}\n"
-    return ensure_built(out_dir, want, lambda: _write_idx(out_dir, n_items, side, seed))
+    want = f"v{FIXTURE_VERSION} idx n={IDX_ITEMS} side={IDX_SIDE} seed={SEED}\n"
+    return ensure_built(out_dir, want, lambda: _write_idx(out_dir))
 
 
-def _write_idx(out_dir: str, n_items: int, side: int, seed: int) -> None:
+def _write_idx(out_dir: str) -> None:
     import hashlib
 
     from .idx import build_idx
 
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(seed + 9000)
-    images = rng.integers(0, 256, size=(n_items, side, side), dtype=np.uint8)
-    labels = np.array([i % 10 for i in range(n_items)], dtype=np.uint8)
+    rng = np.random.default_rng(SEED + 9000)
+    images = rng.integers(0, 256, size=(IDX_ITEMS, IDX_SIDE, IDX_SIDE), dtype=np.uint8)
+    labels = np.array([i % 10 for i in range(IDX_ITEMS)], dtype=np.uint8)
     with open(os.path.join(out_dir, "images.idx3-ubyte"), "wb") as f:
         f.write(build_idx(images))
     with open(os.path.join(out_dir, "labels.idx1-ubyte"), "wb") as f:
         f.write(build_idx(labels))
     expected = pa.table(
         {
-            "item_idx": pa.array(range(n_items), pa.int64()),
-            "h": pa.array([side] * n_items, pa.int64()),
-            "w": pa.array([side] * n_items, pa.int64()),
-            "px_md5": pa.array(
-                [hashlib.md5(images[i].tobytes()).hexdigest() for i in range(n_items)]
-            ),
+            "item_idx": pa.array(range(IDX_ITEMS), pa.int64()),
+            "h": pa.array([IDX_SIDE] * IDX_ITEMS, pa.int64()),
+            "w": pa.array([IDX_SIDE] * IDX_ITEMS, pa.int64()),
+            "px_md5": pa.array([hashlib.md5(im.tobytes()).hexdigest() for im in images]),
             "mean_val": pa.array(
-                [float(images[i].astype(np.float64).mean()) for i in range(n_items)],
+                [float(im.astype(np.float64).mean()) for im in images],
                 pa.float64(),
             ),
             "label": pa.array(labels.astype(np.int64), pa.int64()),
@@ -491,11 +491,11 @@ def _write_idx(out_dir: str, n_items: int, side: int, seed: int) -> None:
     pq.write_table(expected, os.path.join(out_dir, "expected.parquet"))
 
 
-def ensure_corpus(out_dir: str, scale: str = "tiny", skew: bool = False, seed: int = SEED) -> str:
-    """Idempotently materialize a named-scale corpus; safe to call from
-    entry()/bench.py. A `_DONE` marker commits the directory
-    (``ensure_built``)."""
-    want = f"v{FIXTURE_VERSION} {scale} skew={skew} seed={seed}\n"
+def ensure_corpus(out_dir: str, scale: str = "tiny") -> str:
+    """Idempotently materialize a named-scale corpus (unskewed, seed SEED);
+    safe to call from entry()/bench.py. A `_DONE` marker commits the
+    directory (``ensure_built``)."""
+    want = f"v{FIXTURE_VERSION} {scale} skew=False seed={SEED}\n"
     return ensure_built(
-        out_dir, want, lambda: write_corpus(out_dir, skew=skew, seed=seed, **SCALES[scale])
+        out_dir, want, lambda: write_corpus(out_dir, **SCALES[scale])
     )

@@ -27,58 +27,67 @@ from .text import tokens
 
 _LOG = logging.getLogger(__name__)
 
+# Every operator reads (doc_id, text); the DuckDB twins in __spark_entry__
+# hard-code the same values.
+SHINGLE_WORDS = 3  # words per shingle (MinHash, Jaccard and winnowing)
+MINHASH_BANDS = 4
+WINNOW_WINDOW = 4  # hashes per winnowing window
+SIMHASH_MAX_HAMMING = 3
+SIMHASH_BANDS = 4  # > SIMHASH_MAX_HAMMING: the pigeonhole guarantee
 
-def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
+# The word shingles of the token array ``_toks``, in order. A doc with fewer
+# than SHINGLE_WORDS tokens has none (sequence() would otherwise generate a
+# *descending* range in Spark).
+_SHINGLES = (
+    f"CASE WHEN size(_toks) < {SHINGLE_WORDS} THEN array() "
+    f"ELSE transform(sequence(1, size(_toks) - {SHINGLE_WORDS - 1}), i -> concat_ws(' ', "
+    + ", ".join(f"_toks[i - 1 + {j}]" for j in range(SHINGLE_WORDS))
+    + ")) END"
+)
+
+
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup groups: md5 of raw text, groups with >1 member.
     At scale: one hash-agg shuffle on a uniformly distributed key."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_md5"))
+        df.select(F.md5(F.col("text")).alias("text_md5"))
         .groupBy("text_md5")
         .agg(F.count(F.lit(1)).cast("long").alias("dup_count"))
         .where(F.col("dup_count") > 1)
     )
 
 
-def shingles(df: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Distinct word-k-gram shingles per doc: (doc_id, shingle).
-
-    Guard: docs with fewer than k tokens produce no shingles (sequence()
-    would otherwise generate a *descending* range in Spark).
-    """
-    parts = ", ".join(f"_toks[i - 1 + {j}]" for j in range(k))
-    shingle_expr = (
-        f"CASE WHEN size(_toks) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(_toks) - {k - 1}), i -> concat_ws(' ', {parts})) END"
-    )
+def shingles(df: DataFrame) -> DataFrame:
+    """Distinct word shingles per doc: (doc_id, shingle)."""
     return (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), F.explode(F.expr(shingle_expr)).alias("shingle"))
+        df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), F.explode(F.expr(_SHINGLES)).alias("shingle"))
         .distinct()
     )
 
 
-def minhash_signatures(sh: DataFrame, bands: int = 4, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """MinHash signature per (doc, band): min over shingles of
     md5(band || '|' || shingle). One band per independent hash function —
     band size 1, so each band IS an LSH bucket key (collision prob = Jaccard).
     Output: (doc_id, band, minhash)."""
     banded = sh.select(
-        F.col(id_col),
-        F.explode(F.expr(f"sequence(0, {bands - 1})")).alias("band"),
+        F.col("doc_id"),
+        F.explode(F.expr(f"sequence(0, {MINHASH_BANDS - 1})")).alias("band"),
         F.col("shingle"),
     )
     return (
         banded.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("band").cast("long").alias("band"),
             F.md5(F.concat_ws("|", F.col("band").cast("string"), F.col("shingle"))).alias("h"),
         )
-        .groupBy(id_col, "band")
+        .groupBy("doc_id", "band")
         .agg(F.min("h").alias("minhash"))
     )
 
 
-def cap_shingle_df(sh: DataFrame, df_max: int, id_col: str = "doc_id") -> DataFrame:
+def cap_shingle_df(sh: DataFrame, df_max: int) -> DataFrame:
     """Drop shingles whose document frequency exceeds ``df_max`` (web-scale
     stop-phrases: a shingle shared by 10^6 docs would explode the self-join
     group to ~10^12 pairs). Standard MinHashLSH practice — such a shingle
@@ -91,7 +100,7 @@ def cap_shingle_df(sh: DataFrame, df_max: int, id_col: str = "doc_id") -> DataFr
     sort the join already pays — measured faster than the uncapped query at
     sf0.1, and ~2x faster than the broadcast-anti-join form.
 
-    Input rows are first deduplicated on (id_col, shingle) so the window
+    Input rows are first deduplicated on (doc_id, shingle) so the window
     count IS document frequency even for callers whose shingle stream
     carries repeats; for `shingles()` output (already distinct) Catalyst
     removes the redundant aggregate."""
@@ -99,7 +108,7 @@ def cap_shingle_df(sh: DataFrame, df_max: int, id_col: str = "doc_id") -> DataFr
 
     w = Window.partitionBy("shingle")
     return (
-        sh.dropDuplicates([id_col, "shingle"])
+        sh.dropDuplicates(["doc_id", "shingle"])
         .withColumn("_df", F.count(F.lit(1)).over(w))
         .where(F.col("_df") <= df_max)
         .drop("_df")
@@ -128,16 +137,15 @@ def cap_hot_buckets(
     )
 
 
-def lsh_candidate_pairs(sig: DataFrame, bucket_max: int | None = None,
-                        id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame, bucket_max: int | None = None) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any (band, minhash) bucket.
     Equi-join on the bucket key — no cartesian product; skew-resistant
     because md5 buckets are uniform. ``bucket_max`` caps degenerate buckets
     via cap_hot_buckets. Output: (doc_a, doc_b) distinct."""
     if bucket_max is not None:
         sig = cap_hot_buckets(sig, bucket_max)
-    a = sig.select(F.col(id_col).alias("doc_a"), "band", "minhash")
-    b = sig.select(F.col(id_col).alias("doc_b"), "band", "minhash")
+    a = sig.select(F.col("doc_id").alias("doc_a"), "band", "minhash")
+    b = sig.select(F.col("doc_id").alias("doc_b"), "band", "minhash")
     return (
         a.join(b, ["band", "minhash"])
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -208,7 +216,7 @@ def release_persisted() -> int:
     return n
 
 
-def persist_if_large(df: DataFrame, threshold: int = REUSE_MIN_SOURCE_BYTES) -> DataFrame:
+def persist_if_large(df: DataFrame) -> DataFrame:
     """Persist a derived frame that several consumers will read — but only
     when its backing source is big enough that recomputing the subtree per
     consumer costs more than materializing it once (see
@@ -228,7 +236,7 @@ def persist_if_large(df: DataFrame, threshold: int = REUSE_MIN_SOURCE_BYTES) -> 
     ``_PERSIST_CAP`` persisted frames — eviction of a cache whose action has
     not run yet silently forfeits the reuse (the eviction is logged so the
     recompute has a trace)."""
-    if _source_bytes(df, threshold) >= threshold:
+    if _source_bytes(df, REUSE_MIN_SOURCE_BYTES) >= REUSE_MIN_SOURCE_BYTES:
         if df.is_cached:
             return df
         df = df.persist()
@@ -247,8 +255,7 @@ def persist_if_large(df: DataFrame, threshold: int = REUSE_MIN_SOURCE_BYTES) -> 
     return df
 
 
-def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None,
-                  id_col: str = "doc_id", reuse: bool | None = None) -> DataFrame:
+def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None) -> DataFrame:
     """n-gram Jaccard similarity for every doc pair sharing >= min_common
     shingles. The shingle equi-join only materializes co-occurring pairs;
     per-doc set sizes are broadcast back via two cheap aggregations.
@@ -257,27 +264,23 @@ def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None,
     DF-capped shingle space (numerator AND denominators) — the self-join
     group per shingle is then bounded by df_max at any corpus size.
 
-    ``reuse`` persists the (capped) shingle frame: three consumers read it
-    (per-doc sizes + both self-join sides), and without the cache each
-    rebuilds the whole scan -> tokenize -> explode -> distinct -> window
-    subtree — at 100 TB that is 3x the corpus I/O and 3x the tokenize
-    CPU for identical bytes. The default ``None`` decides by source size
-    (persist_if_large): big sources cache, small ones recompute — the
-    measured-faster choice on BOTH sides of the crossover. The
+    The (capped) shingle frame has three consumers (per-doc sizes + both
+    self-join sides); without a cache each rebuilds the whole scan ->
+    tokenize -> explode -> distinct -> window subtree — at 100 TB that is
+    3x the corpus I/O and 3x the tokenize CPU for identical bytes.
+    persist_if_large decides by source size: big sources cache, small ones
+    recompute — the measured-faster choice on BOTH sides of the crossover. The
     InMemoryRelation keeps the window's hash(shingle) outputPartitioning
     visible to Catalyst, so the self-join adds no new exchange over the
     cached side, and Spark's cache manager keys on the canonicalized plan,
     so sibling queries capping the same source share one entry.
     Output: (doc_a, doc_b, n_common, n_a, n_b, jaccard)."""
     if df_max is not None:
-        sh = cap_shingle_df(sh, df_max, id_col)
-    if reuse is None:
-        sh = persist_if_large(sh)
-    elif reuse:
-        sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+        sh = cap_shingle_df(sh, df_max)
+    sh = persist_if_large(sh)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     common = (
         a.join(b, "shingle")
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -285,8 +288,8 @@ def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None,
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
         .where(F.col("n_common") >= min_common)
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
         common.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -304,12 +307,7 @@ def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None,
     )
 
 
-def dedup_components(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    strict: bool = True,
-    stats: dict | None = None,
-) -> DataFrame:
+def dedup_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over near-duplicate candidate pairs: the step
     that turns pairwise matches into dedup GROUPS (keep one canonical doc
     per component, drop the rest). Iterative min-label propagation — each
@@ -326,11 +324,8 @@ def dedup_components(
     shape for iterative graph algorithms (GraphFrames' connectedComponents
     alternates the same two steps internally).
 
-    ``strict=True`` (default) raises on non-convergence so a silently
-    under-merged grouping can never reach the manifest; ``strict=False``
-    returns the partial labels with a warning for callers that prefer
-    degrade-over-abort deep inside a long extract run. Pass a dict as
-    ``stats`` to receive {"iterations", "converged", "last_changed"}.
+    Non-convergence within ``max_iters`` raises, so a silently
+    under-merged grouping can never reach the manifest.
     """
     edges_fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = edges_fwd.unionByName(
@@ -342,10 +337,7 @@ def dedup_components(
         .withColumn("component", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    converged = False
-    iterations = 0
-    changed = -1
-    for iterations in range(1, max_iters + 1):
+    for _ in range(max_iters):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")
@@ -381,28 +373,16 @@ def dedup_components(
         # label snapshots are live at once (not one per iteration)
         labels = new_labels.drop("_old")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"dedup_components did not converge in {max_iters} iterations "
-            f"({changed} labels still changing) — the candidate graph is far "
-            "larger-diameter than any near-dup clustering should produce; "
-            "raise max_iters only after checking the upstream candidate caps"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg + " — returning PARTIAL labels (strict=False)")
-    if stats is not None:
-        stats.update(
-            iterations=iterations, converged=converged, last_changed=changed
-        )
-    return labels
+            return labels
+    raise RuntimeError(
+        f"dedup_components did not converge in {max_iters} iterations "
+        f"({changed} labels still changing) — the candidate graph is far "
+        "larger-diameter than any near-dup clustering should produce; "
+        "raise max_iters only after checking the upstream candidate caps"
+    )
 
 
-def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash_bits(df: DataFrame) -> DataFrame:
     """64-bit SimHash, emitted long-form as (doc_id, bit_idx, bit).
 
     Token hash bits come from the first 16 hex chars of md5(token): bit j is
@@ -411,8 +391,8 @@ def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     distinct-token vocabulary and joined back (vocab << corpus at scale).
     """
     doc_tokens = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token"))
-        .groupBy(id_col, "token")
+        df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     vocab_bits = (
@@ -431,30 +411,28 @@ def simhash_bits(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
     return (
         doc_tokens.join(vocab_bits, "token")
-        .groupBy(id_col, "bit_idx")
+        .groupBy("doc_id", "bit_idx")
         .agg(F.sum(F.col("cnt") * F.col("contrib")).alias("s"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "bit_idx",
             F.when(F.col("s") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("bit"),
         )
     )
 
 
-def simhash_signature(bits: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def simhash_signature(bits: DataFrame) -> DataFrame:
     """Fold the long-form (doc_id, bit_idx, bit) table from
     :func:`simhash_bits` into one signed 64-bit signature per doc.
     bit_or of disjoint shifted bits — bit 63 lands in the sign bit, exact
     in two's complement, and bit_or cannot overflow the way SUM of 2^63
     would. Output: (doc_id, simhash BIGINT)."""
-    return bits.groupBy(id_col).agg(
+    return bits.groupBy("doc_id").agg(
         F.expr("bit_or(shiftleft(bit, CAST(bit_idx AS INT)))").alias("simhash")
     )
 
 
-def simhash_signatures_direct(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures_direct(df: DataFrame) -> DataFrame:
     """Same signatures as ``simhash_signature(simhash_bits(df))``, one
     shuffle instead of three explosions: the md5 hex is computed once per
     DISTINCT token, joined back to the (doc, token, cnt) counts, and all
@@ -469,8 +447,8 @@ def simhash_signatures_direct(
     Bit definition identical to simhash_bits (bit j from hex digit j//4);
     equality with the folded form is pinned by a test."""
     doc_tokens = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("token"))
-        .groupBy(id_col, "token")
+        df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     vocab = (
@@ -490,42 +468,33 @@ def simhash_signatures_direct(
         # range (min-long + at most 2^63 - 1), so the sum is exact
         terms.append(f"CASE WHEN {s} > 0 THEN shiftleft(1L, {j}) ELSE 0L END")
     sig = " + ".join(terms)
-    return joined.groupBy(id_col).agg(F.expr(sig).alias("simhash"))
+    return joined.groupBy("doc_id").agg(F.expr(sig).alias("simhash"))
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    bucket_max: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash_near_dups(df: DataFrame, bucket_max: int | None = None) -> DataFrame:
     """SimHash near-duplicate pairs with EXACT recall at distance
-    ``max_hamming`` via pigeonhole banding: the 64-bit signature splits
-    into ``n_bands`` contiguous (64/n_bands)-bit band keys; any pair
-    within hamming distance < n_bands must agree exactly on at least one
-    band, so a (band, band_key) equi-join finds every such pair — no
+    SIMHASH_MAX_HAMMING via pigeonhole banding: the 64-bit signature splits
+    into SIMHASH_BANDS contiguous (64/SIMHASH_BANDS)-bit band keys; any pair
+    within hamming distance < SIMHASH_BANDS must agree exactly on at least
+    one band, so a (band, band_key) equi-join finds every such pair — no
     cartesian product, cost = sum of squared band-bucket sizes. Each
     candidate is then re-checked with the exact
-    ``bit_count(sig_a ^ sig_b)``. Requires ``max_hamming < n_bands`` for
-    the guarantee (asserted).
+    ``bit_count(sig_a ^ sig_b)``.
 
     ``bucket_max`` caps degenerate band buckets (e.g. the all-zero
     signature shared by every token-free doc) with the same count-window
     form as cap_hot_buckets — it rides the join's own exchange+sort.
     Output: (doc_a, doc_b, hamming), distinct pairs.
     """
-    assert max_hamming < n_bands, "pigeonhole guarantee needs max_hamming < n_bands"
-    width = 64 // n_bands
+    width = 64 // SIMHASH_BANDS
     mask = (1 << width) - 1
-    sig = simhash_signatures_direct(df, text_col, id_col)
+    sig = simhash_signatures_direct(df)
     bands = sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, {n_bands - 1}), "
+                f"transform(sequence(0, {SIMHASH_BANDS - 1}), "
                 # mask AFTER the shift: >> is arithmetic, the mask clears
                 # the sign extension from the top band
                 f"b -> shiftright(simhash, b * {width}) & {mask}L)"
@@ -535,11 +504,11 @@ def simhash_near_dups(
     if bucket_max is not None:
         bands = cap_hot_buckets(bands, bucket_max, keys=("band", "band_key"))
     a = bands.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sig_a"),
+        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"),
         "band", "band_key",
     )
     b = bands.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sig_b"),
+        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"),
         "band", "band_key",
     )
     return (
@@ -552,16 +521,16 @@ def simhash_near_dups(
             "doc_b",
             F.expr("bit_count(sig_a ^ sig_b)").cast("long").alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
-def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
-                        text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al. local algorithm):
-    hash every word-k-gram in order, slide a window of ``window`` hashes,
-    keep each window's minimum, dedupe. Guarantees any shared run of
-    k+window-1 tokens between two docs shares a fingerprint.
+    hash every word shingle in order, slide a window of WINNOW_WINDOW
+    hashes, keep each window's minimum, dedupe. Guarantees any shared run of
+    SHINGLE_WORDS + WINNOW_WINDOW - 1 tokens between two docs shares a
+    fingerprint.
 
     One shuffle (the per-doc window sort); at scale the ordered shingle
     stream comes straight off the tokenizer, so cost is O(tokens) per doc.
@@ -569,20 +538,15 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, window: int = 4,
     """
     from pyspark.sql import Window
 
-    parts = ", ".join(f"_toks[i - 1 + {j}]" for j in range(k))
-    shingle_expr = (
-        f"CASE WHEN size(_toks) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(_toks) - {k - 1}), i -> concat_ws(' ', {parts})) END"
-    )
     hashed = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), F.posexplode(F.expr(shingle_expr)).alias("pos", "sh"))
-        .select(F.col(id_col), "pos", F.md5("sh").alias("h"))
+        df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), F.posexplode(F.expr(_SHINGLES)).alias("pos", "sh"))
+        .select(F.col("doc_id"), "pos", F.md5("sh").alias("h"))
     )
-    w = Window.partitionBy(id_col).orderBy("pos").rowsBetween(-(window - 1), 0)
+    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(WINNOW_WINDOW - 1), 0)
     return (
         hashed.withColumn("fp", F.min("h").over(w))
-        .where(F.col("pos") >= window - 1)  # full windows only
-        .select(id_col, "fp")
+        .where(F.col("pos") >= WINNOW_WINDOW - 1)  # full windows only
+        .select("doc_id", "fp")
         .distinct()
     )

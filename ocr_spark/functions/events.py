@@ -34,16 +34,16 @@ def tumbling_hourly(df: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(df: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def sessionize(df: DataFrame) -> DataFrame:
     """Gap-based sessions per user: a new session starts when the gap to the
-    previous event exceeds ``gap_us``. Output one row per session."""
+    previous event exceeds SESSION_GAP_US. Output one row per session."""
     order = [F.col("ts").asc(), F.col("event_id").asc()]
     w = Window.partitionBy("user_id").orderBy(*order)
     # parquet timestamps surface as TIMESTAMP_NTZ; cast with session tz
     # pinned to UTC so epoch micros equal the oracle's naive epoch_us
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev = F.lag(us).over(w)
-    is_new = F.when(prev.isNull() | ((us - prev) > gap_us), 1).otherwise(0)
+    is_new = F.when(prev.isNull() | ((us - prev) > SESSION_GAP_US), 1).otherwise(0)
     with_sess = df.withColumn("_new", is_new).withColumn(
         "session_id",
         F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"),
@@ -56,26 +56,18 @@ def sessionize(df: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     )
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    ts_col: str = "ts",
-    tie_col: str = "event_id",
-    payload_cols: tuple[str, ...] = ("event_id",),
-    prefix: str = "asof_",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, prefix: str = "asof_") -> DataFrame:
     """As-of join: attach to each left row the LATEST right row with
-    ``right.ts <= left.ts`` in the same ``by`` group (inclusive). Spark has
+    ``right.ts <= left.ts`` for the same ``user_id`` (inclusive). Spark has
     no native as-of join; the scale-right composition is union + a
     last-ignore-nulls running window — ONE shuffle on the group key, no
     range-condition join (which would plan as a per-group cross product) and
     no row explosion. Right rows sort before left rows at equal ts so <= is
-    inclusive; among equal-ts right rows the largest ``tie_col`` wins
+    inclusive; among equal-ts right rows the largest ``event_id`` wins
     (deterministic). Left rows with no prior right row get nulls.
 
-    Output: all left columns plus ``prefix+c`` for each payload col and
-    ``prefix+ts`` (the matched right timestamp).
+    Output: all left columns plus ``prefix+event_id`` and ``prefix+ts``
+    (the matched right row's id and timestamp).
     """
     reserved = {"_side", "_tie", "_payload", "_m"}
     for name, cols in (("left", left.columns), ("right", right.columns)):
@@ -87,27 +79,24 @@ def asof_join(
                 "joining"
             )
     r = right.select(
-        F.col(by),
-        F.col(ts_col),
-        F.struct(
-            F.col(ts_col).alias("_ts"),
-            *[F.col(c).alias(c) for c in payload_cols],
-        ).alias("_payload"),
+        F.col("user_id"),
+        F.col("ts"),
+        F.struct(F.col("ts").alias("_ts"), F.col("event_id").alias("event_id")).alias("_payload"),
         F.lit(0).alias("_side"),
-        F.col(tie_col).alias("_tie"),
+        F.col("event_id").alias("_tie"),
     )
-    l = left.withColumn("_side", F.lit(1)).withColumn("_tie", F.col(tie_col))
+    l = left.withColumn("_side", F.lit(1)).withColumn("_tie", F.col("event_id"))
     u = l.unionByName(r, allowMissingColumns=True)
     w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(ts_col).asc(), F.col("_side").asc(), F.col("_tie").asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("_side").asc(), F.col("_tie").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = u.withColumn("_m", F.last("_payload", ignorenulls=True).over(w))
     out = matched.where(F.col("_side") == 1).select(
         *[F.col(c) for c in left.columns],
-        F.col("_m._ts").alias(f"{prefix}{ts_col}"),
-        *[F.col(f"_m.{c}").alias(f"{prefix}{c}") for c in payload_cols],
+        F.col("_m._ts").alias(f"{prefix}ts"),
+        F.col("_m.event_id").alias(f"{prefix}event_id"),
     )
     return out
 
@@ -116,12 +105,10 @@ def range_count_preceding(
     left: DataFrame,
     right: DataFrame,
     window_us: int = SESSION_GAP_US,
-    by: str = "user_id",
-    ts_col: str = "ts",
     out_col: str = "n_prior",
 ) -> DataFrame:
     """Range join, bucketed: count right rows with timestamp in
-    ``(left.ts - window_us, left.ts]`` within the same ``by`` group, for
+    ``(left.ts - window_us, left.ts]`` for the same ``user_id``, for
     every left row (zero-match rows kept with count 0).
 
     Spark has no native range join, and the naive theta-join
@@ -130,7 +117,7 @@ def range_count_preceding(
     by ``floor(ts / W)`` and has each left row probe exactly TWO buckets
     (its own and the previous — any right row in the window must fall in
     one of them), turning the range condition into a plain equi-join on
-    (by, bucket) plus an exact residual filter. Cost is one shuffle per
+    (user_id, bucket) plus an exact residual filter. Cost is one shuffle per
     side on a uniform composite key; no bucket sees more than ~2 windows
     of one group's rows, so group skew is already diluted W-fold.
 
@@ -148,23 +135,22 @@ def range_count_preceding(
                 f"{sorted(clash)} which already exist on the {name} "
                 "DataFrame — rename them before joining"
             )
-    l_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    r_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     # the probe id is projected BEFORE the explode, so both probe rows of
     # one left row share it; ids are partition-local counters (no shuffle)
     lb = left.withColumn("_l_rid", F.monotonically_increasing_id()).select(
         "*",
-        l_us.alias("_l_us"),
+        us.alias("_l_us"),
         F.explode(
             F.array(
-                F.floor(l_us / window_us) - 1, F.floor(l_us / window_us)
+                F.floor(us / window_us) - 1, F.floor(us / window_us)
             )
         ).alias("_bucket"),
     )
     rb = right.select(
-        F.col(by).alias("_r_by"),
-        r_us.alias("_r_us"),
-        F.floor(r_us / window_us).alias("_bucket"),
+        F.col("user_id").alias("_r_by"),
+        us.alias("_r_us"),
+        F.floor(us / window_us).alias("_bucket"),
     )
     in_window = (
         (F.col("_r_us") > F.col("_l_us") - F.lit(window_us))
@@ -175,7 +161,7 @@ def range_count_preceding(
     return (
         lb.join(
             rb,
-            (F.col(by) == F.col("_r_by")) & (lb["_bucket"] == rb["_bucket"]),
+            (F.col("user_id") == F.col("_r_by")) & (lb["_bucket"] == rb["_bucket"]),
             "left",
         )
         .groupBy(lb["_l_rid"], *[lb[c] for c in left.columns])

@@ -6,11 +6,13 @@ iteration, per-batch NumPy vectorization, deterministic outputs — plus a
 *real* 8-bit grayscale PNG decoder (ocr_spark.png, stdlib zlib) used by the
 image path, the same codec the OCR pipeline uses.
 
-What is stubbed (this container ships no imaging/audio libs): decoding of
-non-PNG images, audio PCM decode, and video frame extraction raise
-``NotImplementedError`` unless ``deterministic_fake=True``, which derives a
-fixed pseudo-signal from md5(payload) so pipelines remain testable
-end-to-end without the codec.
+What is stubbed (this container ships no imaging/audio/video codec):
+decoding of non-PNG images, compressed audio and non-y4m video raises
+``NotImplementedError``.
+
+Every operator is one ``_map_blobs`` call: the shell owns the batch loop,
+the null skip, the typed output frame and the zip-finder drop; the operator
+supplies only the rows one blob yields.
 
 Skew note for 100 TB: media blobs dominate row size, so callers should cap
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (the pipeline default is
@@ -21,14 +23,48 @@ mapInPandas — identical to the OCR path's salting.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
+from .. import forget_zip_finders
 from ..kernel.bitmap import black_mask
 from ..png import decode_gray
+
+_DTYPES = {T.LongType: "int64", T.DoubleType: "float64"}
+
+
+def _map_blobs(
+    df: DataFrame,
+    key_col: str,
+    blob_col: str,
+    schema: T.StructType,
+    rows_of: Callable[[object, bytes], Iterable[tuple]],
+) -> DataFrame:
+    """One output frame per Arrow batch: the rows ``rows_of(key, blob)``
+    yields for each non-null blob, as tuples in ``schema`` field order. An
+    empty result still carries the schema's dtypes."""
+    names = schema.fieldNames()
+    dtypes = [_DTYPES.get(type(f.dataType), object) for f in schema.fields]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                row
+                for key, blob in zip(pdf[key_col], pdf[blob_col])
+                if blob is not None
+                for row in rows_of(key, bytes(blob))
+            ]
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=t) for n, c, t in zip(names, cols, dtypes)}
+            )
+            forget_zip_finders()
+
+    return df.select(key_col, blob_col).mapInPandas(kernel, schema)
+
 
 IMAGE_FEATURES = T.StructType(
     [
@@ -53,96 +89,47 @@ def _decode_image(blob: bytes) -> np.ndarray:
     """PNG-gray is decoded for real; other formats need a codec this
     container doesn't ship."""
     if blob[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_gray(bytes(blob))
+        return decode_gray(blob)
     raise NotImplementedError(
         "non-PNG image decode requires an imaging library (PIL/cv2) not "
-        "shipped in this container; gate behind deterministic_fake for tests"
+        "shipped in this container"
     )
 
 
-def image_features(df: DataFrame, ref_col: str = "media_ref", blob_col: str = "png") -> DataFrame:
-    """Decode + feature-extract a binary image column per Arrow batch.
+def image_features(df: DataFrame) -> DataFrame:
+    """Decode + feature-extract the ``png`` column per Arrow batch.
     Output: (media_ref, width, height, ink_ratio, n_ink_rows)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, ws, hs, ratios, rows = [], [], [], [], []
-            for ref, blob in zip(pdf[ref_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                img = _decode_image(blob)
-                mask = black_mask(img)
-                refs.append(ref)
-                hs.append(img.shape[0])
-                ws.append(img.shape[1])
-                ratios.append(round(float(mask.mean()), 6))
-                rows.append(int(mask.any(axis=1).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "ink_ratio": pd.Series(ratios, dtype="float64"),
-                    "n_ink_rows": pd.Series(rows, dtype="int64"),
-                }
-            )
+    def rows_of(ref, blob):
+        img = _decode_image(blob)
+        mask = black_mask(img)
+        h, w = img.shape
+        yield ref, w, h, round(float(mask.mean()), 6), int(mask.any(axis=1).sum())
 
-    return df.select(ref_col, blob_col).mapInPandas(kernel, IMAGE_FEATURES)
+    return _map_blobs(df, "media_ref", "png", IMAGE_FEATURES, rows_of)
 
 
-def frame_sample(
-    df: DataFrame,
-    n_frames: int = 4,
-    ref_col: str = "media_ref",
-    blob_col: str = "payload",
-    deterministic_fake: bool = False,
-) -> DataFrame:
-    """Video frame sampling: emits up to ``n_frames`` evenly-spaced rows per
-    blob with ``frame_idx`` = the sampled source-frame index and ``feature``
-    = that frame's mean luma (rounded 6).
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Video frame sampling: emits up to ``y4m.SAMPLED_FRAMES`` evenly-spaced
+    rows per ``payload`` blob with ``frame_idx`` = the sampled source-frame
+    index and ``feature`` = that frame's mean luma (rounded 6).
 
     YUV4MPEG2 (.y4m) blobs are decoded FOR REAL (ocr_spark.y4m — raw planar
     frames, no codec library needed); fixtures carry by-construction
     per-frame truth computed on the planes before encoding, so a desynced
     frame walk reads the wrong bytes and fails the oracle. Compressed
     containers (mp4/webm) would need ffmpeg, which this container doesn't
-    ship: with ``deterministic_fake`` such blobs get an md5-derived pseudo
-    feature (frame_idx 0..n-1) so pipeline plumbing stays testable; without
-    it they raise."""
-    from ..y4m import MAGIC as Y4M_MAGIC, parse_y4m, sample_indices
+    ship: such blobs raise."""
+    from ..y4m import MAGIC, SAMPLED_FRAMES, parse_y4m, sample_indices
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, idxs, feats = [], [], []
-            for ref, blob in zip(pdf[ref_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                raw = bytes(blob)
-                if raw.startswith(Y4M_MAGIC):
-                    _, frames = parse_y4m(raw)
-                    for fi in sample_indices(len(frames), n_frames):
-                        refs.append(ref)
-                        idxs.append(fi)
-                        feats.append(round(float(frames[fi][0].mean()), 6))
-                    continue
-                if not deterministic_fake:
-                    raise NotImplementedError(
-                        "non-y4m video decode requires ffmpeg/av, not shipped here"
-                    )
-                digest = hashlib.md5(raw).digest()
-                for i in range(n_frames):
-                    refs.append(ref)
-                    idxs.append(i)
-                    feats.append(digest[i % 16] / 255.0)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "feature": pd.Series(feats, dtype="float64"),
-                }
-            )
+    def rows_of(ref, blob):
+        if not blob.startswith(MAGIC):
+            raise NotImplementedError("non-y4m video decode requires ffmpeg/av, not shipped here")
+        _, frames = parse_y4m(blob)
+        for fi in sample_indices(len(frames), SAMPLED_FRAMES):
+            yield ref, fi, round(float(frames[fi][0].mean()), 6)
 
-    return df.select(ref_col, blob_col).mapInPandas(kernel, FRAME_SAMPLE)
+    return _map_blobs(df, "media_ref", "payload", FRAME_SAMPLE, rows_of)
 
 
 AUDIO_FEATURES = T.StructType(
@@ -164,12 +151,12 @@ def _decode_audio(blob: bytes) -> tuple[int, "np.ndarray"]:
     import io
     import wave
 
-    if bytes(blob[:4]) != b"RIFF" or bytes(blob[8:12]) != b"WAVE":
+    if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         raise NotImplementedError(
             "non-WAV audio decode requires an audio library (ffmpeg/soundfile) "
             "not shipped in this container"
         )
-    with wave.open(io.BytesIO(bytes(blob)), "rb") as w:
+    with wave.open(io.BytesIO(blob), "rb") as w:
         if w.getsampwidth() != 2:
             raise NotImplementedError("only PCM16 WAV is decoded natively")
         sr = w.getframerate()
@@ -180,38 +167,22 @@ def _decode_audio(blob: bytes) -> tuple[int, "np.ndarray"]:
     return sr, x
 
 
-def audio_features(df: DataFrame, ref_col: str = "media_ref", blob_col: str = "wav") -> DataFrame:
-    """Decode + feature-extract a binary audio column per Arrow batch:
+def audio_features(df: DataFrame) -> DataFrame:
+    """Decode + feature-extract the ``wav`` column per Arrow batch:
     duration, RMS (int16 domain, rounded 6), zero-crossing count — the cheap
     per-clip stats a training pipeline filters on before expensive featurizing.
     Output: (media_ref, sample_rate, n_samples, duration_s, rms, n_zero_cross)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, srs, ns, durs, rmss, zcs = [], [], [], [], [], []
-            for ref, blob in zip(pdf[ref_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                sr, x = _decode_audio(blob)
-                xf = x.astype(np.float64)
-                refs.append(ref)
-                srs.append(sr)
-                ns.append(len(x))
-                durs.append(round(len(x) / sr, 6))
-                rmss.append(round(float(np.sqrt(np.mean(xf * xf))) if len(x) else 0.0, 6))
-                zcs.append(int(np.sum((x[1:] < 0) != (x[:-1] < 0))))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "sample_rate": pd.Series(srs, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "duration_s": pd.Series(durs, dtype="float64"),
-                    "rms": pd.Series(rmss, dtype="float64"),
-                    "n_zero_cross": pd.Series(zcs, dtype="int64"),
-                }
-            )
+    def rows_of(ref, blob):
+        sr, x = _decode_audio(blob)
+        xf = x.astype(np.float64)
+        rms = float(np.sqrt(np.mean(xf * xf))) if len(x) else 0.0
+        yield (
+            ref, sr, len(x), round(len(x) / sr, 6), round(rms, 6),
+            int(np.sum((x[1:] < 0) != (x[:-1] < 0))),
+        )
 
-    return df.select(ref_col, blob_col).mapInPandas(kernel, AUDIO_FEATURES)
+    return _map_blobs(df, "media_ref", "wav", AUDIO_FEATURES, rows_of)
 
 
 PDF_TEXT = T.StructType(
@@ -223,33 +194,19 @@ PDF_TEXT = T.StructType(
 )
 
 
-def pdf_text(df: DataFrame, ref_col: str = "media_ref", blob_col: str = "pdf") -> DataFrame:
-    """Extract text from a binary PDF column per Arrow batch (north rule:
+def pdf_text(df: DataFrame) -> DataFrame:
+    """Extract text from the ``pdf`` column per Arrow batch (north rule:
     PDF/layout parse): one output row per content-stream page, in document
     order. Real parser for the text-PDF subset (plain/Flate streams, Tj/TJ
     operators — ocr_spark.pdf documents the scope); image-only pages yield
     no rows here, they belong to the OCR path."""
     from ..pdf import extract_text
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            refs, idxs, texts = [], [], []
-            for ref, blob in zip(pdf_batch[ref_col], pdf_batch[blob_col]):
-                if blob is None:
-                    continue
-                for i, t in enumerate(extract_text(bytes(blob))):
-                    refs.append(ref)
-                    idxs.append(i)
-                    texts.append(t)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "page_idx": pd.Series(idxs, dtype="int64"),
-                    "text": pd.Series(texts, dtype=object),
-                }
-            )
+    def rows_of(ref, blob):
+        for i, t in enumerate(extract_text(blob)):
+            yield ref, i, t
 
-    return df.select(ref_col, blob_col).mapInPandas(kernel, PDF_TEXT)
+    return _map_blobs(df, "media_ref", "pdf", PDF_TEXT, rows_of)
 
 
 IDX_RECORDS = T.StructType(
@@ -264,45 +221,30 @@ IDX_RECORDS = T.StructType(
 )
 
 
-def idx_records(df: DataFrame, path_col: str = "path",
-                blob_col: str = "content") -> DataFrame:
+def idx_records(df: DataFrame) -> DataFrame:
     """Explode idx1/idx3 tensor files (MNIST format — inventory row S5,
     reference reader `ocr2/ConvolutionalClassifier.java:123-158`) into one
     row per item. Input is a binary-file frame (``spark.read.format(
-    "binaryFile")``), so sharded corpora parallelize per file; each file
-    parses whole inside its task (bounded by shard size — the standard
-    contract for this format). idx1 (labels) items report h=w=0 with the
-    label byte as mean_val; idx3 (images) report dims, an md5 over the raw
-    pixels, and the float pixel mean."""
+    "binaryFile")``: ``path``, ``content``), so sharded corpora parallelize
+    per file; each file parses whole inside its task (bounded by shard size
+    — the standard contract for this format). idx1 (labels) items report
+    h=w=0 with the label byte as mean_val; idx3 (images) report dims, an md5
+    over the raw pixels, and the float pixel mean."""
     from ..idx import parse_idx
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            paths, idxs, hs, ws, md5s, means = [], [], [], [], [], []
-            for path, blob in zip(b[path_col], b[blob_col]):
-                if blob is None:
-                    continue
-                arr = parse_idx(bytes(blob))
-                for i in range(arr.shape[0] if arr.ndim else 0):
-                    item = arr[i]
-                    paths.append(path)
-                    idxs.append(i)
-                    hs.append(item.shape[0] if item.ndim >= 1 else 0)
-                    ws.append(item.shape[1] if item.ndim >= 2 else 0)
-                    md5s.append(hashlib.md5(item.tobytes()).hexdigest())
-                    means.append(float(item.astype(np.float64).mean()))
-            yield pd.DataFrame(
-                {
-                    "path": paths,
-                    "item_idx": pd.Series(idxs, dtype="int64"),
-                    "h": pd.Series(hs, dtype="int64"),
-                    "w": pd.Series(ws, dtype="int64"),
-                    "px_md5": pd.Series(md5s, dtype=object),
-                    "mean_val": pd.Series(means, dtype="float64"),
-                }
+    def rows_of(path, blob):
+        arr = parse_idx(blob)
+        for i in range(arr.shape[0] if arr.ndim else 0):
+            item = arr[i]
+            yield (
+                path, i,
+                item.shape[0] if item.ndim >= 1 else 0,
+                item.shape[1] if item.ndim >= 2 else 0,
+                hashlib.md5(item.tobytes()).hexdigest(),
+                float(item.astype(np.float64).mean()),
             )
 
-    return df.select(path_col, blob_col).mapInPandas(kernel, IDX_RECORDS)
+    return _map_blobs(df, "path", "content", IDX_RECORDS, rows_of)
 
 
 RESIZED_IMAGE = T.StructType(
@@ -315,34 +257,19 @@ RESIZED_IMAGE = T.StructType(
 )
 
 
-def image_resize(df: DataFrame, target_w: int, target_h: int,
-                 ref_col: str = "media_ref", blob_col: str = "png") -> DataFrame:
-    """Batch image resize through the bit-exact Java2D-parity kernel
-    (mip-chain halving + bilinear, ocr_spark.kernel.javaimg) — the real
-    decode/transform/encode loop a training pipeline runs before feature
-    extraction. PNG-gray in, PNG-gray out."""
+def image_resize(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
+    """Batch image resize of the ``png`` column through the bit-exact
+    Java2D-parity kernel (mip-chain halving + bilinear,
+    ocr_spark.kernel.javaimg) — the real decode/transform/encode loop a
+    training pipeline runs before feature extraction. PNG-gray in, PNG-gray
+    out."""
     from ..kernel.javaimg import java_resize
     from ..png import encode_gray
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            refs, ws, hs, blobs = [], [], [], []
-            for ref, blob in zip(pdf[ref_col], pdf[blob_col]):
-                if blob is None:
-                    continue
-                img = _decode_image(blob)
-                out = np.clip(java_resize(img, target_w, target_h), 0, 255).astype(np.uint8)
-                refs.append(ref)
-                hs.append(out.shape[0])
-                ws.append(out.shape[1])
-                blobs.append(encode_gray(out))
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "width": pd.Series(ws, dtype="int64"),
-                    "height": pd.Series(hs, dtype="int64"),
-                    "png": blobs,
-                }
-            )
+    def rows_of(ref, blob):
+        img = java_resize(_decode_image(blob), target_w, target_h)
+        out = np.clip(img, 0, 255).astype(np.uint8)
+        h, w = out.shape
+        yield ref, w, h, encode_gray(out)
 
-    return df.select(ref_col, blob_col).mapInPandas(kernel, RESIZED_IMAGE)
+    return _map_blobs(df, "media_ref", "png", RESIZED_IMAGE, rows_of)

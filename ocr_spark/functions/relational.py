@@ -16,22 +16,25 @@ key with AQE skew-join as backstop; every query prunes columns at the scan
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 _DEC = "decimal(18,2)"
 
+# The TPC-H substitution parameters of the queries below; the DuckDB twins
+# in __spark_entry__ hard-code the same values.
+Q1_SHIP_CUTOFF = "2000-12-01"
+Q3_SEGMENT = "BUILDING"
+Q5_REGION = "ASIA"
+TOP_PARTS_K = 3
 
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def pricing_summary(lineitem: DataFrame, cutoff: str = "2000-12-01") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: scan + filter + hash-agg with exact decimal sums."""
     qty = F.col("l_quantity").cast(_DEC)
     price = F.col("l_extendedprice").cast(_DEC)
     disc = F.col("l_discount").cast(_DEC)
     return (
-        lineitem.where(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp"))
+        lineitem.where(F.col("l_shipdate") <= F.lit(Q1_SHIP_CUTOFF).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(qty).cast("double").alias("sum_qty"),
@@ -43,10 +46,9 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "2000-12-01") -> DataFram
     )
 
 
-def order_revenue(customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
-                  segment: str = "BUILDING") -> DataFrame:
+def order_revenue(customer: DataFrame, orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q3 shape: broadcast dim filter + two shuffle joins + hash-agg."""
-    cust = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
+    cust = customer.where(F.col("c_mktsegment") == Q3_SEGMENT).select("c_custkey")
     ords = orders.select("o_orderkey", "o_custkey", "o_orderdate")
     li = lineitem.select(
         "l_orderkey",
@@ -63,11 +65,10 @@ def order_revenue(customer: DataFrame, orders: DataFrame, lineitem: DataFrame,
 
 
 def nation_volume(region: DataFrame, nation: DataFrame, customer: DataFrame,
-                  orders: DataFrame, lineitem: DataFrame, supplier: DataFrame,
-                  region_name: str = "ASIA") -> DataFrame:
+                  orders: DataFrame, lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     """TPC-H Q5 shape: star join through 6 tables, local-supplier condition
     (supplier nation == customer nation), revenue per nation."""
-    r = region.where(F.col("r_name") == region_name).select("r_regionkey")
+    r = region.where(F.col("r_name") == Q5_REGION).select("r_regionkey")
     n = nation.join(F.broadcast(r), nation.n_regionkey == r.r_regionkey).select(
         "n_nationkey", "n_name"
     )
@@ -103,18 +104,16 @@ def segment_totals(customer: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
-def top_parts_per_group(
-    lineitem: DataFrame, part: DataFrame, k: int = 3, group_col: str = "p_type"
-) -> DataFrame:
-    """Partitioned top-k: the k highest-revenue parts within each part
-    group. The rank window partitions on ``group_col``, so ranking runs
+def top_parts_per_group(lineitem: DataFrame, part: DataFrame) -> DataFrame:
+    """Partitioned top-k: the TOP_PARTS_K highest-revenue parts within each
+    part type. The rank window partitions on ``p_type``, so ranking runs
     distributed — every group sorts inside its own partition of the window
     exchange; contrast events.top_users, where a GLOBAL rank must instead
     be expressed as TakeOrdered to avoid a single-partition sort. Ties
     break on p_partkey for determinism."""
     from pyspark.sql import Window
 
-    p = part.select("p_partkey", group_col)
+    p = part.select("p_partkey", "p_type")
     li = lineitem.select(
         "l_partkey",
         (F.col("l_extendedprice").cast(_DEC)
@@ -122,15 +121,15 @@ def top_parts_per_group(
     )
     agg = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy(group_col, "p_partkey")
+        .groupBy("p_type", "p_partkey")
         .agg(F.sum("rev").cast("double").alias("revenue"))
     )
-    w = Window.partitionBy(group_col).orderBy(
+    w = Window.partitionBy("p_type").orderBy(
         F.desc("revenue"), F.asc("p_partkey")
     )
     return (
         agg.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
+        .where(F.col("rnk") <= TOP_PARTS_K)
     )
 
 

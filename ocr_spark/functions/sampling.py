@@ -19,6 +19,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 _SPACE = 16 ** 8  # 8 hex chars
 
+# Salts and split weights; the DuckDB twins in __spark_entry__ hard-code the
+# same values.
+SAMPLE_SALT = "sample-v1"
+SPLIT_SALT = "split-v1"
+SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
+
 
 def _hex_threshold(fraction: float) -> str:
     """String t such that P(bucket < t) == fraction (up to 1/16^8),
@@ -41,42 +47,29 @@ def hash_bucket(id_col: Column, salt: str) -> Column:
     )
 
 
-def sample_by_hash(
-    df: DataFrame,
-    fraction: float,
-    salt: str = "sample-v1",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sample_by_hash(df: DataFrame, fraction: float) -> DataFrame:
     """Deterministic ``fraction``-sample: keep rows whose hash bucket falls
     below the threshold. A pure filter — predicate-pushdown-friendly, zero
-    shuffle, and re-runnable: membership is a function of (salt, id) only."""
-    return df.where(hash_bucket(F.col(id_col), salt) < _hex_threshold(fraction))
+    shuffle, and re-runnable: membership is a function of (salt, doc_id)
+    only."""
+    return df.where(hash_bucket(F.col("doc_id"), SAMPLE_SALT) < _hex_threshold(fraction))
 
 
-def hash_split(
-    df: DataFrame,
-    weights: dict[str, float] | None = None,
-    salt: str = "split-v1",
-    id_col: str = "doc_id",
-    out_col: str = "split",
-) -> DataFrame:
-    """Deterministic train/val/test assignment by cumulative hash ranges.
+def hash_split(df: DataFrame) -> DataFrame:
+    """Deterministic train/val/test assignment by cumulative hash ranges,
+    in column ``split``.
 
-    ``weights`` maps split name -> fraction (must sum to ~1; the last split
-    absorbs rounding). Assignment is per-row and independent of everything
-    except (salt, id), so splits are stable under corpus growth: adding
+    SPLIT_WEIGHTS maps split name -> fraction (the last split absorbs
+    rounding). Assignment is per-row and independent of everything except
+    (salt, doc_id), so splits are stable under corpus growth: adding
     documents never moves an existing document between splits — the
     property shuffling-based splitters lack.
     """
-    if weights is None:
-        weights = {"train": 0.9, "val": 0.05, "test": 0.05}
-    names = list(weights)
-    bucket = hash_bucket(F.col(id_col), salt)
-    expr = None
-    cum = 0.0
-    for name in names[:-1]:
-        cum += weights[name]
-        cond = bucket < _hex_threshold(cum)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    expr = F.lit(names[-1]) if expr is None else expr.otherwise(F.lit(names[-1]))
-    return df.withColumn(out_col, expr)
+    *first, last = SPLIT_WEIGHTS
+    bucket = hash_bucket(F.col("doc_id"), SPLIT_SALT)
+    cum, expr = 0.0, F
+    for name in first:
+        cum += SPLIT_WEIGHTS[name]
+        # F.when opens the CASE, Column.when extends it
+        expr = expr.when(bucket < _hex_threshold(cum), F.lit(name))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))

@@ -17,6 +17,8 @@ from __future__ import annotations
 import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints here
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import forget_zip_finders
+
 # marker stopwords per language for the heuristic language IDer; deliberately
 # tiny and fixed so the SQL twin stays readable. Tie-break: language list order.
 LANG_MARKERS = {
@@ -38,23 +40,23 @@ def _n_marker_hits(toks: str, lang: str) -> str:
     return f"size(filter({toks}, t -> array_contains(array({arr}), lower(t))))"
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    t = tokens(F.col(text_col))
+def token_stats(df: DataFrame) -> DataFrame:
+    t = tokens(F.col("text"))
     return df.select(
-        F.col(id_col),
-        F.length(F.col(text_col)).cast("long").alias("n_chars"),
+        F.col("doc_id"),
+        F.length(F.col("text")).cast("long").alias("n_chars"),
         F.size(t).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(F.transform(t, lambda x: F.lower(x)))).cast("long").alias("n_distinct_tokens"),
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Quality features: length, punctuation count, stopword count/ratio,
     mean token length — the standard cheap filters before expensive dedup."""
     d = df.select(
-        F.col(id_col),
-        F.col(text_col).alias("_t"),
-        tokens(F.col(text_col)).alias("_toks"),
+        F.col("doc_id"),
+        F.col("text").alias("_t"),
+        tokens(F.col("text")).alias("_toks"),
     )
     n_tokens = F.size("_toks").cast("long")
     n_chars = F.length("_t").cast("long")
@@ -62,7 +64,7 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     n_stop = F.expr(_n_marker_hits("_toks", "en")).cast("long")
     token_chars = F.expr("aggregate(_toks, 0L, (acc, t) -> acc + length(t))")
     return d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         n_punct.alias("n_punct"),
@@ -72,11 +74,11 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: marker-stopword hit counts per language,
     argmax with deterministic tie-break (language declaration order, then
     'und' when all scores are zero)."""
-    d = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+    d = df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
     scores = {lang: F.expr(_n_marker_hits("_toks", lang)).cast("long") for lang in LANG_MARKERS}
     out = d
     for lang, s in scores.items():
@@ -86,20 +88,20 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     for lang in LANG_MARKERS:  # first language reaching the max wins
         pred = pred.when(F.col(f"s_{lang}") == best, F.lit(lang))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         pred.alias("lang_pred"),
         *[F.col(f"s_{lang}") for lang in LANG_MARKERS],
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprints: md5 over whitespace-normalized lowercased text
     (exact-dup key) and over the first 3 tokens (crude near-dup prefix key)."""
-    d = df.select(F.col(id_col), F.col(text_col).alias("_t"), tokens(F.col(text_col)).alias("_toks"))
+    d = df.select(F.col("doc_id"), F.col("text").alias("_t"), tokens(F.col("text")).alias("_toks"))
     norm = F.lower(F.regexp_replace(F.trim("_t"), r"\s+", " "))
     prefix = F.concat_ws(" ", F.slice("_toks", 1, 3))
     return d.where(F.size("_toks") >= 3).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("fp_norm"),
         F.md5(prefix).alias("fp_prefix3"),
     )
@@ -120,13 +122,13 @@ PII_URL = "https?://[A-Za-z0-9./_%?&=#:~+@-]+"
 PII_PHONE = "[+]?[0-9][0-9(). -]{7,}[0-9]"
 
 
-def redact_pii(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Deterministic PII scrubbing: URLs, then emails, then phone-like
     digit runs replaced with typed placeholders, plus per-doc match counts
     (the audit trail a removal pipeline needs). Pure regexp chain —
     whole-stage codegen, no Python; the output carries md5(redacted) so
     the oracle verifies the full redacted text without shipping it."""
-    after_url = F.regexp_replace(F.col(text_col), PII_URL, "<URL>")
+    after_url = F.regexp_replace(F.col("text"), PII_URL, "<URL>")
     after_email = F.regexp_replace(after_url, PII_EMAIL, "<EMAIL>")
     redacted = F.regexp_replace(after_email, PII_PHONE, "<PHONE>")
 
@@ -143,11 +145,11 @@ def redact_pii(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     def _cnt(col, lit):
         return (F.length(col) - F.length(F.replace(col, F.lit(lit), F.lit("")))) / len(lit)
 
-    n_url = (_cnt(after_url, "<URL>") - _cnt(F.col(text_col), "<URL>")).cast("long")
+    n_url = (_cnt(after_url, "<URL>") - _cnt(F.col("text"), "<URL>")).cast("long")
     n_email = (_cnt(after_email, "<EMAIL>") - _cnt(after_url, "<EMAIL>")).cast("long")
     n_phone = (_cnt(redacted, "<PHONE>") - _cnt(after_email, "<PHONE>")).cast("long")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_email.alias("n_email"),
         n_url.alias("n_url"),
         n_phone.alias("n_phone"),
@@ -155,19 +157,19 @@ def redact_pii(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     )
 
 
-def repetition_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals: the fraction of duplicate
     LINES per document and the fraction of characters living in those
     duplicate instances — the standard web-text repetition filters. One
     explode + two hash-aggs. All sums stay BIGINT (exact, order-free);
     the two fractions are single double divisions at the end."""
     lines = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), "\n")).alias("line")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), "\n")).alias("line")
     ).where(F.length(F.trim("line")) > 0)
-    per_line = lines.groupBy(id_col, "line").agg(
+    per_line = lines.groupBy("doc_id", "line").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    agg = per_line.groupBy(id_col).agg(
+    agg = per_line.groupBy("doc_id").agg(
         F.sum("n").cast("long").alias("n_lines"),
         # a line occurring n times contributes n-1 duplicate instances
         F.sum(F.col("n") - 1).cast("long").alias("n_dup_lines"),
@@ -175,7 +177,7 @@ def repetition_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_
         F.sum(F.col("n") * F.length("line")).cast("long").alias("total_chars"),
     )
     return agg.select(
-        id_col,
+        "doc_id",
         "n_lines",
         "n_dup_lines",
         (F.col("dup_chars").cast("double") / F.col("total_chars")).alias("dup_char_frac"),
@@ -309,12 +311,13 @@ def make_lang_id_ngram_udf():
         lang_arr = np.array(langs, dtype=object)
         out = np.where(norms2 == 0, "und", lang_arr[best])
         out = np.where([t is None for t in raw], None, out)
+        forget_zip_finders()
         return pd.Series(out, index=texts.index, dtype=object)
 
     return lang_udf
 
 
-def lang_id_ngram(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id_ngram(df: DataFrame) -> DataFrame:
     return df.select(
-        F.col(id_col), make_lang_id_ngram_udf()(F.col(text_col)).alias("lang_pred")
+        F.col("doc_id"), make_lang_id_ngram_udf()(F.col("text")).alias("lang_pred")
     )

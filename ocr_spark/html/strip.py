@@ -14,7 +14,7 @@ Pipeline per batch:
   3. split the remainder into blocks at block-level tags
   4. per block (exploded, still vectorized): word count and link density
      (words inside <a> anchors / total words)
-  5. keep blocks with >= min_words words and link density <= max_link_density
+  5. keep blocks with >= MIN_WORDS words and link density <= MAX_LINK_DENSITY
   6. rejoin kept blocks in document order, strip inline tags, unescape basic
      entities, collapse whitespace
 """
@@ -25,6 +25,9 @@ import re
 
 import numpy as np
 import pandas as pd
+
+MIN_WORDS = 3
+MAX_LINK_DENSITY = 0.5
 
 _DROP_SUBTREES = re.compile(
     r"<(script|style|noscript|template)\b[^>]*>.*?</\1\s*>|<!--.*?-->",
@@ -133,11 +136,7 @@ def _clean_text(s: pd.Series) -> pd.Series:
     return s.str.replace(_WS, " ", regex=True).str.strip()
 
 
-def strip_html(
-    html: pd.Series,
-    min_words: int = 3,
-    max_link_density: float = 0.5,
-) -> pd.Series:
+def strip_html(html: pd.Series) -> pd.Series:
     """Extract main content from a batch of HTML strings (nulls pass through;
     docs with no surviving block yield empty string)."""
     idx = html.index
@@ -169,7 +168,7 @@ def strip_html(
         anchor_words = pd.Series(0, index=blocks.index, dtype=np.int64)
 
     link_density = np.where(words > 0, anchor_words / np.maximum(words, 1), 0.0)
-    keep = (words.values >= min_words) & (link_density <= max_link_density)
+    keep = (words.values >= MIN_WORDS) & (link_density <= MAX_LINK_DENSITY)
 
     kept = bf.loc[keep, ["doc"]].assign(text=text[keep])
     joined = kept.groupby("doc", sort=False)["text"].agg(" ".join)

@@ -31,8 +31,8 @@ DEFAULT_MATRIX_SIZE = 9  # OCREngine.java:10
 class Alphabet:
     """Learned template set: characters + stacked feature arrays."""
 
-    def __init__(self, n: int = DEFAULT_MATRIX_SIZE):
-        self.n = n
+    def __init__(self):
+        self.n = DEFAULT_MATRIX_SIZE
         self.chars: list[str] = []
         self.fonts: list[str] = []
         self.vectors = np.zeros((0, 8 * 2 * 3), dtype=np.int64)
@@ -41,7 +41,7 @@ class Alphabet:
         """E4: drop every learned template (CurvatureClassifier.reset,
         :82-85 — the constructor calls it too, so a fresh instance and a
         reset one are indistinguishable)."""
-        self.__init__(self.n)
+        self.__init__()
         return self
 
     def learn_sheet(self, gray: np.ndarray, font_name: str):

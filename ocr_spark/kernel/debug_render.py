@@ -311,9 +311,10 @@ def render_curvature_debug(matrix: np.ndarray, box_xy=(0, 0)):
     return img, mask
 
 
-def _mask_segment_band(mask, x1, y1, x2, y2, pad=4.0):
-    """Mark the AA divergence band around one slanted segment (the triangle
-    hypotenuse and the line stroked over it share the same band)."""
+def _mask_segment_band(mask, x1, y1, x2, y2):
+    """Mark the +-4 px AA divergence band around one slanted segment (the
+    triangle hypotenuse and the line stroked over it share the same band)."""
+    pad = 4.0
     bx0 = int(np.floor(min(x1, x2) - pad - 1))
     by0 = int(np.floor(min(y1, y2) - pad - 1))
     bx1 = int(np.ceil(max(x1, x2) + pad + 1)) + 1
@@ -331,13 +332,14 @@ def _mask_segment_band(mask, x1, y1, x2, y2, pad=4.0):
     mask[by0:by1, bx0:bx1] |= d2 <= pad * pad
 
 
-def render_region_debug(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int = 9):
+def render_region_debug(gray: np.ndarray, x: int, y: int, w: int, h: int):
     """Render the F8 sheet for a page region, as classifySymbol does for each
     character box (CurvatureClassifier.java:850-861: extractBitmap ->
     feature chain -> generateCurvatureBitmap, attached to the TextBox).
     Returns (img, mask) like `render_curvature_debug`; encode with
     ocr_spark.png.encode_rgb to persist."""
     from .bitmap import extract_matrix
+    from .classify import DEFAULT_MATRIX_SIZE
 
-    matrix, _ = extract_matrix(gray, x, y, w, h, n)
+    matrix, _ = extract_matrix(gray, x, y, w, h, DEFAULT_MATRIX_SIZE)
     return render_curvature_debug(matrix, (x, y))

@@ -150,7 +150,7 @@ def decode_rgb(data: bytes) -> np.ndarray:
     return img.reshape(h, w, 3)
 
 
-def _encode(img: np.ndarray, w: int, h: int, color_type: int, compress_level: int) -> bytes:
+def _encode(img: np.ndarray, w: int, h: int, color_type: int) -> bytes:
     """Emit a filter-0 PNG from a C-contiguous (h, stride) byte view."""
     raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
 
@@ -166,22 +166,22 @@ def _encode(img: np.ndarray, w: int, h: int, color_type: int, compress_level: in
     return (
         _SIG
         + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, compress_level))
+        + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
 
 
-def encode_gray(img: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_gray(img: np.ndarray) -> bytes:
     """Encode a (h, w) uint8 array as an 8-bit grayscale PNG (filter 0)."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     h, w = img.shape
-    return _encode(img, w, h, 0, compress_level)
+    return _encode(img, w, h, 0)
 
 
-def encode_rgb(img: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_rgb(img: np.ndarray) -> bytes:
     """Encode a (h, w, 3) uint8 array as an 8-bit truecolor PNG (filter 0)."""
     img = np.ascontiguousarray(img, dtype=np.uint8)
     h, w, c = img.shape
     if c != 3:
         raise ValueError("expected (h, w, 3)")
-    return _encode(img.reshape(h, w * 3), w, h, 2, compress_level)
+    return _encode(img.reshape(h, w * 3), w, h, 2)

@@ -179,6 +179,11 @@ def build_y4m(
     return b"".join(parts)
 
 
+#: frames the video sampler keeps per clip (functions/multimodal.frame_sample
+#: and the fixture's frame truth)
+SAMPLED_FRAMES = 4
+
+
 def sample_indices(n_total: int, n_sample: int) -> list[int]:
     """Evenly-spaced frame indices (first frame always included). Shared by
     the decoder path and the fixture's by-construction truth, so both sides

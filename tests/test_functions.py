@@ -399,19 +399,27 @@ def test_range_count_preceding_duplicate_left_rows(spark):
     assert "_l_rid" not in out.columns
 
 
-def test_jaccard_shingle_reuse_plan_and_equality(spark):
-    """With reuse, the capped shingle subtree is computed ONCE: every scan
-    in the plan tree resolves to a single shared parquet-scan node under
-    InMemoryRelation (round 3 rebuilt it 4x — at 100 TB that is 4x corpus
-    I/O). Values must be identical with and without the cache."""
+def test_jaccard_shingle_reuse_plan_and_equality(spark, monkeypatch):
+    """With reuse (a source above the size threshold), the capped shingle
+    subtree is computed ONCE: every scan in the plan tree resolves to a
+    single shared parquet-scan node under InMemoryRelation (round 3 rebuilt
+    it 4x — at 100 TB that is 4x corpus I/O). Values must be identical with
+    and without the cache."""
     import io
     import re
     from contextlib import redirect_stdout
 
+    from ocr_spark.functions import dedup
     from ocr_spark.functions.dedup import jaccard_pairs, shingles
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    reused = jaccard_pairs(shingles(docs), df_max=64, reuse=True)
+    # below the threshold nothing is cached; collect before the cache exists,
+    # which would otherwise serve this identical plan too
+    plain = jaccard_pairs(shingles(docs), df_max=64)
+    assert "InMemoryRelation" not in plain._jdf.queryExecution().optimizedPlan().toString()
+    b = sorted(map(tuple, plain.collect()))
+    monkeypatch.setattr(dedup, "REUSE_MIN_SOURCE_BYTES", 1)
+    reused = jaccard_pairs(shingles(docs), df_max=64)
     buf = io.StringIO()
     with redirect_stdout(buf):
         reused.explain("formatted")
@@ -421,28 +429,27 @@ def test_jaccard_shingle_reuse_plan_and_equality(spark):
     assert len(scan_ids) == 1, f"shingle subtree not shared: scan ids {scan_ids}"
     assert "InMemoryRelation" in tree
 
-    plain = jaccard_pairs(shingles(docs), df_max=64, reuse=False)
-    key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
     a = sorted(map(tuple, reused.collect()))
-    b = sorted(map(tuple, plain.collect()))
     assert a == b and len(a) > 0
     spark.catalog.clearCache()
 
 
-def test_persist_if_large_threshold(spark):
+def test_persist_if_large_threshold(spark, monkeypatch):
     """Auto-reuse sizes the SOURCE, not the derived frame: below the
     threshold the frame is returned unpersisted (recompute measured faster
     for page-cache-resident inputs), above it the cache is installed."""
+    from ocr_spark.functions import dedup
     from ocr_spark.functions.dedup import persist_if_large
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    small = persist_if_large(docs)  # source << 1 GiB default threshold
+    small = persist_if_large(docs)  # source << 1 GiB threshold
     assert not small.storageLevel.useMemory
-    forced = persist_if_large(docs, threshold=1)
+    monkeypatch.setattr(dedup, "REUSE_MIN_SOURCE_BYTES", 1)
+    forced = persist_if_large(docs)
     assert forced.storageLevel.useMemory
     forced.unpersist()
     # non-file-backed frames size to 0 -> never persisted
-    mem = persist_if_large(spark.range(10), threshold=1)
+    mem = persist_if_large(spark.range(10))
     assert not mem.storageLevel.useMemory
 
 
@@ -564,36 +571,23 @@ def test_dedup_components_thousand_node_chain_and_star(spark):
     chain = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(n - 1)]
     star = [("s0000", f"s{i:04d}") for i in range(1, n)]
     df = spark.createDataFrame(chain + star, "doc_a string, doc_b string")
-    stats = {}
-    labels = dedup_components(df, stats=stats).collect()
+    # converging within the bound means no raise at max_iters=bound
+    bound = math.ceil(math.log2(n - 1)) + 2
+    labels = dedup_components(df, max_iters=bound).collect()
     comp = {r.doc_id: r.component for r in labels}
     assert all(comp[f"c{i:04d}"] == "c0000" for i in range(n))
     assert all(comp[f"s{i:04d}"] == "s0000" for i in range(n))
-    bound = math.ceil(math.log2(n - 1)) + 2
-    assert stats["converged"] and stats["iterations"] <= bound, stats
 
 
-def test_dedup_components_strict_false_returns_partial(spark):
-    """strict=False degrades to partial labels with a warning instead of
-    aborting the job; stats reports non-convergence."""
-    import warnings
-
+def test_dedup_components_raises_on_non_convergence(spark):
+    """A graph whose labels still change after max_iters aborts the job
+    instead of returning an under-merged grouping."""
     from ocr_spark.functions.dedup import dedup_components
 
     chain = [(f"n{i}", f"n{i + 1}") for i in range(30)]
     df = spark.createDataFrame(chain, "doc_a string, doc_b string")
-    import pytest
-
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
         dedup_components(df, max_iters=1)
-    stats = {}
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        labels = dedup_components(df, max_iters=1, strict=False, stats=stats)
-        rows = labels.collect()
-    assert any("PARTIAL" in str(x.message) for x in w)
-    assert not stats["converged"] and stats["last_changed"] > 0
-    assert len(rows) == 31  # all nodes labeled, labels merely not final
 
 
 def test_pdf_text_parser_contract():
@@ -742,8 +736,7 @@ def test_y4m_codec_roundtrip_and_malformed():
 
 def test_frame_sample_real_y4m_decode(spark):
     """Video frame sampling decodes real y4m blobs: known per-frame luma
-    comes back exactly; nulls are skipped; non-y4m blobs raise without the
-    deterministic_fake gate and pseudo-sample with it."""
+    comes back exactly; nulls are skipped; non-y4m blobs raise."""
     import numpy as np
     import pytest as _pytest
 
@@ -760,7 +753,7 @@ def test_frame_sample_real_y4m_decode(spark):
         ("c", None),
     ]
     df = spark.createDataFrame(rows, "media_ref string, payload binary")
-    got = {(r.media_ref, r.frame_idx): r.feature for r in frame_sample(df, n_frames=4).collect()}
+    got = {(r.media_ref, r.frame_idx): r.feature for r in frame_sample(df).collect()}
     assert got == {
         ("a", 0): 0.0, ("a", 1): 10.0, ("a", 3): 30.0, ("a", 4): 40.0,
         ("b", 0): 7.0, ("b", 1): 200.0,
@@ -770,8 +763,6 @@ def test_frame_sample_real_y4m_decode(spark):
                                 "media_ref string, payload binary")
     with _pytest.raises(Exception, match="NotImplementedError|non-y4m"):
         frame_sample(bad).collect()
-    fake = frame_sample(bad, n_frames=3, deterministic_fake=True).collect()
-    assert [r.frame_idx for r in fake] == [0, 1, 2]
 
 
 def test_pdf_length_regex_rejects_indirect_refs():
@@ -788,7 +779,8 @@ def test_pdf_length_regex_rejects_indirect_refs():
 
 
 def test_pdf_text_spark_operator(spark):
-    """The mapInPandas plumbing: per-ref page rows in order, nulls skipped."""
+    """The mapInPandas plumbing: per-ref page rows in order, nulls skipped,
+    and a batch of only null blobs yields no rows."""
     from ocr_spark.functions.multimodal import pdf_text
     from ocr_spark.pdf import build_pdf
 
@@ -804,6 +796,7 @@ def test_pdf_text_spark_operator(spark):
         ("p1", 1): "two",
         ("p2", 0): "solo line",
     }
+    assert pdf_text(df.where(F.col("pdf").isNull())).collect() == []
 
 
 def test_audio_features_decode_contract(spark):

@@ -5,6 +5,8 @@ parser — with the same results as the source tree, also after its zip
 finders are dropped from the import cache, as every task of a Spark Python
 worker drops them."""
 
+import ast
+import glob
 import hashlib
 import json
 import os
@@ -113,3 +115,42 @@ def test_forget_zip_finders_drops_only_zip_finders(tmp_path):
         sys.modules.pop("zipped_probe_mod", None)
         sys.path_importer_cache.pop(str(archive), None)
         sys.path_importer_cache.pop(plain, None)
+
+
+def _called(node: ast.AST, name: str) -> bool:
+    return any(
+        isinstance(c, ast.Call)
+        and name in (getattr(c.func, "id", None), getattr(c.func, "attr", None))
+        for c in ast.walk(node)
+    )
+
+
+def test_every_package_udf_drops_zip_finders():
+    """Static check of the rule above: every function of the package that
+    Spark runs in a Python worker, one decorated with ``pandas_udf`` or one
+    passed to ``mapInPandas``, calls ``forget_zip_finders``."""
+    missing = []
+    for path in sorted(glob.glob(os.path.join(REPO, "ocr_spark", "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        udfs = {}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if any(_called(d, "pandas_udf") or getattr(d, "id", None) == "pandas_udf"
+                   for d in fn.decorator_list):
+                udfs[id(fn)] = fn
+            local = {
+                s.name: s for s in fn.body
+                if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef))
+            }
+            for c in ast.walk(fn):
+                if (isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "mapInPandas"
+                        and c.args and getattr(c.args[0], "id", None) in local):
+                    udfs[id(local[c.args[0].id])] = local[c.args[0].id]
+        rel = os.path.relpath(path, REPO)
+        missing += [
+            f"{rel}:{fn.lineno} {fn.name}" for fn in udfs.values()
+            if not _called(fn, "forget_zip_finders")
+        ]
+    assert not missing, f"UDFs that keep their zip finders: {missing}"

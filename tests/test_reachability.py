@@ -14,6 +14,12 @@ assignments it reaches until nothing new is reached. A name is matched by
 its spelling alone, whatever module defines it, so the walk can only err
 towards keeping code. A module or name nothing reaches is dead code; delete
 it or wire it in.
+
+The options audit holds every defaulted parameter of a package function to
+the same standard: some call of a function of that name, in an entry file
+or in the package, sets it by keyword or by position (a ``**`` splat sets
+every parameter, a ``*`` splat every positional one). A parameter that only
+ever takes its default is a constant in disguise; fold it in.
 """
 
 import ast
@@ -39,6 +45,26 @@ TEST_ONLY = {
     "decode_rgb",  # png: reads the F8 RGB goldens
     "simhash_signature",  # dedup: the reference the one-shuffle SimHash is pinned against
     "scan_page",  # engine: the single-page API the parity tests drive
+}
+
+
+# defaulted parameters only tests set, each because a test must reach a state
+# real inputs reach: ``module.function(parameter)`` -> why
+TEST_SET_OPTIONS = {
+    "ocr_spark.cli.main(argv)": "tests drive the CLI in-process",
+    "ocr_spark.functions.dedup.dedup_components(max_iters)":
+        "forces non-convergence and pins the O(log d) iteration bound",
+    "ocr_spark.functions.similarity.ivf_topk(n_clusters)":
+        "the capped-sample trainer contract on a small index",
+    "ocr_spark.functions.similarity.ivf_topk(sample_cap)":
+        "the capped-sample trainer contract on a small index",
+    "ocr_spark.functions.similarity.near_dup_pairs_lsh(n_bands)":
+        "the banding recall contract against a single band",
+    "ocr_spark.functions.events.range_count_preceding(window_us)":
+        "exact window-boundary hits on a 1 s window",
+    "ocr_spark.y4m.build_y4m(fps)": "the parser fuzz round-trips the frame-rate header",
+    "ocr_spark.pipeline.job.stream_extract(max_files_per_trigger)":
+        "a multi-batch stream over a small corpus",
 }
 
 
@@ -173,3 +199,61 @@ def test_every_package_module_is_reached_from_an_entry_point():
 def test_every_top_level_name_is_reached_from_an_entry_point():
     dead = _unreached_names(_package_modules())
     assert not dead, f"top-level names no entry point reaches: {dead}"
+
+
+def _defaulted_params(tree: ast.Module):
+    """(function name, parameter, positional index or None) for every
+    defaulted parameter of every def in ``tree``; a method's positional
+    index does not count ``self``."""
+    methods = {
+        id(s) for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for s in c.body
+    }
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        shift = 1 if id(fn) in methods else 0
+        for i in range(len(pos) - len(a.defaults), len(pos)):
+            yield fn.name, pos[i].arg, i - shift
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                yield fn.name, arg.arg, None
+
+
+def _sets(call: ast.Call, param: str, index: int | None) -> bool:
+    if any(k.arg in (None, param) for k in call.keywords):
+        return True
+    if index is None:
+        return False
+    return len(call.args) > index or any(isinstance(a, ast.Starred) for a in call.args)
+
+
+def _unset_options(mods: dict[str, str]) -> list[str]:
+    """``module.function(parameter)`` for every defaulted parameter of the
+    package that no call in an entry file or the package sets."""
+    trees = {mod: _parse(path) for mod, path in mods.items()}
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in [*trees.values(), *(_parse(os.path.join(REPO, f)) for f in ENTRY_FILES)]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    return sorted(
+        f"{mod}.{fn}({param})"
+        for mod, tree in trees.items()
+        for fn, param, index in _defaulted_params(tree)
+        if not any(_sets(c, param, index) for c in calls.get(fn, ()))
+    )
+
+
+def test_every_option_is_set_by_some_caller():
+    unset = _unset_options(_package_modules())
+    stray = sorted(set(unset) - TEST_SET_OPTIONS.keys())
+    assert not stray, (
+        f"{len(stray)} defaulted parameters no entry point or package call "
+        f"sets; make each a constant: {stray}"
+    )
+    stale = sorted(TEST_SET_OPTIONS.keys() - set(unset))
+    assert not stale, f"allowlisted but set by a real caller, or gone: {stale}"
