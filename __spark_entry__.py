@@ -23,50 +23,87 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_FIXTURE_DIR = os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures")
+from ocr_spark.fixtures import FIXTURE_ROOT
+from ocr_spark.functions import dedup, events, relational, sampling, similarity, text
 
-_SQL_TOKS = "string_split_regex(trim(text), '\\s+')"
-_SQL_SHINGLES = f"""
-    SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               UNNEST(list_transform(generate_series(1, len(toks) - 2),
-                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingle
-        FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-    )
-"""
+# The registry and its DuckDB twins read every algorithm value from the
+# operator modules, at call time, as module attributes; the values below
+# belong to the queries of this file alone.
+
 # document-frequency ceiling for the dedup self-joins: a web-scale
 # stop-phrase shingle (or the LSH bucket it spawns) shared by 10^6 docs
 # would otherwise explode one join group to ~10^12 pairs. Applied
 # identically on the Spark and DuckDB sides.
 _DF_MAX = 100
+_TOKEN_TOP = 50  # token_histogram's vocabulary cut
+_SAMPLE_FRACTION = 0.1  # doc_sample_10pct
+_RESIZE_W, _RESIZE_H = 64, 32  # media_image_resize's target size
 
-_SQL_SHINGLES_CAPPED = """
-    SELECT * FROM sh0 WHERE shingle NOT IN (
-        SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > {df_max})
+_SQL_TOKS = "string_split_regex(trim(text), '\\s+')"
+
+
+def _sql_shingle(i: str) -> str:
+    """The dedup.SHINGLE_WORDS-word shingle of ``toks`` from token ``i``."""
+    return " || ' ' || ".join(f"toks[{i}+{j}]" for j in range(dedup.SHINGLE_WORDS))
+
+
+def _sql_shingle_starts() -> str:
+    return f"generate_series(1, len(toks) - {dedup.SHINGLE_WORDS - 1})"
+
+
+def _sql_shingles() -> str:
+    """dedup.shingles: distinct (doc_id, shingle)."""
+    return f"""
+    SELECT DISTINCT doc_id, shingle FROM (
+        SELECT doc_id,
+               UNNEST(list_transform({_sql_shingle_starts()}, i -> {_sql_shingle("i")})) AS shingle
+        FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
+    )
 """
 
-_SQL_MINHASH = f"""
+
+def _sql_minhash() -> str:
+    """dedup.minhash_signatures: (doc_id, band, minhash)."""
+    return f"""
     SELECT doc_id, band::BIGINT AS band,
            MIN(md5(band::VARCHAR || '|' || shingle)) AS minhash
-    FROM (SELECT doc_id, shingle, UNNEST(generate_series(0, 3)) AS band
-          FROM ({_SQL_SHINGLES}))
+    FROM (SELECT doc_id, shingle,
+                 UNNEST(generate_series(0, {dedup.MINHASH_BANDS - 1})) AS band
+          FROM ({_sql_shingles()}))
     GROUP BY doc_id, band
 """
 
 
-# connected components over the capped LSH candidate graph (recursive CTE);
-# used directly by dedup_groups and as a subquery by dedup_survivors
-_SQL_COMPONENTS = """
-    WITH RECURSIVE
-    sig0 AS ({minhash}),
+def _sql_capped_sig() -> str:
+    """CTEs sig0, hot and sig: the minhash table without its buckets of more
+    than _DF_MAX docs (dedup.cap_hot_buckets)."""
+    return f"""
+    sig0 AS ({_sql_minhash()}),
     hot AS (SELECT band, minhash FROM sig0
-            GROUP BY 1, 2 HAVING COUNT(*) > {df_max}),
-    sig AS (SELECT sig0.* FROM sig0 ANTI JOIN hot USING (band, minhash)),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sig a JOIN sig b
-          ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-    ),
+            GROUP BY 1, 2 HAVING COUNT(*) > {_DF_MAX}),
+    sig AS (SELECT sig0.* FROM sig0 ANTI JOIN hot USING (band, minhash))"""
+
+
+# the bucket self-join of the capped minhash table
+_SQL_SIG_PAIRS = """
+    FROM sig a JOIN sig b
+      ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id"""
+
+
+def _sql_lsh_pairs() -> str:
+    """dedup.lsh_candidate_pairs over the capped minhash table."""
+    return f"""
+    WITH {_sql_capped_sig()}
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b {_SQL_SIG_PAIRS}
+"""
+
+
+def _sql_components(pairs: str) -> str:
+    """dedup.dedup_components over the (doc_a, doc_b) rows of ``pairs``:
+    (doc_id, component), the least doc_id reachable, by a recursive CTE."""
+    return f"""
+    WITH RECURSIVE
+    pairs AS ({pairs}),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION
@@ -80,7 +117,116 @@ _SQL_COMPONENTS = """
     )
     SELECT node AS doc_id, MIN(label) AS component
     FROM reach GROUP BY node
-""".format(minhash=_SQL_MINHASH, df_max=_DF_MAX)
+"""
+
+
+def _sql_dropped(pairs: str) -> str:
+    """The docs a dedup drops: every component member but the least."""
+    return f"SELECT doc_id FROM ({_sql_components(pairs)}) WHERE doc_id <> component"
+
+
+def _sql_jaccard() -> str:
+    """dedup.jaccard_pairs over the _DF_MAX-capped shingles:
+    (doc_a, doc_b, n_common, n_a, n_b, jaccard)."""
+    return f"""
+    WITH sh0 AS ({_sql_shingles()}),
+    sh AS (
+        SELECT * FROM sh0 WHERE shingle NOT IN (
+            SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > {_DF_MAX})
+    ),
+    sizes AS (SELECT doc_id, COUNT(*)::BIGINT AS n_sh FROM sh GROUP BY doc_id),
+    common AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*)::BIGINT AS n_common
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2 HAVING COUNT(*) >= {dedup.JACCARD_MIN_COMMON}
+    )
+    SELECT doc_a, doc_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
+           CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
+    FROM common
+    JOIN sizes sa ON sa.doc_id = common.doc_a
+    JOIN sizes sb ON sb.doc_id = common.doc_b
+"""
+
+
+# dedup.simhash_bits: (doc_id, bit_idx, bit) through a per-token bit table
+_SQL_SIMHASH_BITS = f"""
+    WITH dt AS (
+        SELECT doc_id, token, COUNT(*)::BIGINT AS cnt
+        FROM (SELECT doc_id, UNNEST({_SQL_TOKS}) AS token FROM documents)
+        GROUP BY 1, 2
+    ), bits AS (
+        SELECT token, b::BIGINT AS bit_idx,
+               2 * (((strpos('0123456789abcdef',
+                             substr(md5(token), (b // 4) + 1, 1)) - 1)
+                     >> (3 - (b % 4))) % 2) - 1 AS contrib
+        FROM (SELECT token, UNNEST(generate_series(0, 63)) AS b
+              FROM (SELECT DISTINCT token FROM dt))
+    )
+    SELECT dt.doc_id, bits.bit_idx,
+           (CASE WHEN SUM(dt.cnt * bits.contrib) > 0 THEN 1 ELSE 0 END)::BIGINT AS bit
+    FROM dt JOIN bits ON dt.token = bits.token
+    GROUP BY dt.doc_id, bits.bit_idx
+"""
+
+
+def _sql_norms(*extra: str) -> str:
+    """similarity.with_norms: (vec_id, vec, nrm) and the ``extra`` columns."""
+    cols = "".join(f", {c}" for c in extra)
+    return f"""
+        SELECT vec_id, embedding::DOUBLE[] AS vec,
+               sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm{cols}
+        FROM embeddings"""
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    return f"list_dot_product({a}.vec, {b}.vec) / ({a}.nrm * {b}.nrm)"
+
+
+def _sql_sign_bucket(first: str) -> str:
+    """similarity.sign_buckets: the sign pattern of the N_BITS embedding
+    dimensions after dimension ``first``."""
+    return f"""CAST(list_sum(list_transform(generate_series(0, {similarity.N_BITS - 1}),
+                    d -> CASE WHEN embedding[{first} + d + 1] > 0
+                              THEN (1::BIGINT << d) ELSE 0::BIGINT END)) AS BIGINT)"""
+
+
+def _sql_top_k(source: str) -> str:
+    """similarity._top_k: each query's K best neighbours by cosine, ties
+    broken by neighbour id, over the norm-table rows q (queries) and o
+    (neighbours) that the FROM clause ``source`` pairs."""
+    return f"""
+        SELECT query_id, neighbor_id, rnk, round(sim, 4) AS sim_r4 FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                         ORDER BY sim DESC, neighbor_id)::BIGINT AS rnk
+            FROM (
+                SELECT q.vec_id AS query_id, o.vec_id AS neighbor_id,
+                       {_sql_cosine("q", "o")} AS sim
+                FROM {source}
+                WHERE q.vec_id < {similarity.N_QUERIES} AND o.vec_id <> q.vec_id
+            )
+        ) WHERE rnk <= {similarity.K}
+    """
+
+
+def _sql_near_dup_pairs() -> str:
+    """similarity.near_dup_pairs_lsh before rounding: (vec_a, vec_b, sim)
+    for the pairs that agree on any band's sign pattern (band b covers
+    dimensions b*N_BITS+1..(b+1)*N_BITS) and pass the cosine re-check."""
+    return f"""
+        WITH n AS ({_sql_norms()}),
+        bk AS (
+            SELECT vec_id, b AS band, {_sql_sign_bucket(f"b * {similarity.N_BITS}")} AS bucket
+            FROM embeddings, UNNEST(generate_series(0, {similarity.N_BANDS - 1})) AS t(b)
+        ),
+        cand AS (
+            SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
+            FROM bk a JOIN bk b2
+              ON a.band = b2.band AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id
+        )
+        SELECT c.vec_a, c.vec_b, {_sql_cosine("a", "b")} AS sim
+        FROM cand c JOIN n a ON a.vec_id = c.vec_a JOIN n b ON b.vec_id = c.vec_b
+        WHERE {_sql_cosine("a", "b")} > {similarity.NEAR_DUP_COSINE}
+    """
 
 
 def _utc(spark: SparkSession) -> None:
@@ -98,7 +244,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _synth_corpus(scale: str = "tiny") -> str:
     from ocr_spark.fixtures import ensure_corpus
 
-    return ensure_corpus(os.path.join(_FIXTURE_DIR, scale), scale=scale)
+    return ensure_corpus(os.path.join(FIXTURE_ROOT, scale), scale=scale)
 
 
 # --------------------------------------------------------------------------
@@ -140,16 +286,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _q_pricing(spark, sf_dir):
-    from ocr_spark.functions.relational import pricing_summary
-
-    return pricing_summary(_read(spark, sf_dir, "lineitem"))
+    return relational.pricing_summary(_read(spark, sf_dir, "lineitem"))
 
 
 def _q_order_revenue(spark, sf_dir):
-    from ocr_spark.functions.relational import order_revenue
-
     _utc(spark)
-    df = order_revenue(
+    df = relational.order_revenue(
         _read(spark, sf_dir, "customer"),
         _read(spark, sf_dir, "orders"),
         _read(spark, sf_dir, "lineitem"),
@@ -163,9 +305,7 @@ def _q_order_revenue(spark, sf_dir):
 
 
 def _q_nation_volume(spark, sf_dir):
-    from ocr_spark.functions.relational import nation_volume
-
-    return nation_volume(
+    return relational.nation_volume(
         _read(spark, sf_dir, "region"),
         _read(spark, sf_dir, "nation"),
         _read(spark, sf_dir, "customer"),
@@ -176,32 +316,26 @@ def _q_nation_volume(spark, sf_dir):
 
 
 def _q_segment_totals(spark, sf_dir):
-    from ocr_spark.functions.relational import segment_totals
-
-    return segment_totals(_read(spark, sf_dir, "customer"), _read(spark, sf_dir, "orders"))
+    return relational.segment_totals(
+        _read(spark, sf_dir, "customer"), _read(spark, sf_dir, "orders")
+    )
 
 
 def _q_brand_volume(spark, sf_dir):
-    from ocr_spark.functions.relational import brand_volume
-
-    return brand_volume(_read(spark, sf_dir, "lineitem"), _read(spark, sf_dir, "part"))
+    return relational.brand_volume(_read(spark, sf_dir, "lineitem"), _read(spark, sf_dir, "part"))
 
 
 def _q_events_hourly(spark, sf_dir):
-    from ocr_spark.functions.events import tumbling_hourly
-
     _utc(spark)
-    return tumbling_hourly(_read(spark, sf_dir, "events")).select(
+    return events.tumbling_hourly(_read(spark, sf_dir, "events")).select(
         F.unix_micros(F.col("hour").cast("timestamp")).alias("hour_us"),
         "event_type", "n_events", "sum_value", "n_users",
     )
 
 
 def _q_events_sessionize(spark, sf_dir):
-    from ocr_spark.functions.events import sessionize
-
     _utc(spark)
-    return sessionize(_read(spark, sf_dir, "events")).select(
+    return events.sessionize(_read(spark, sf_dir, "events")).select(
         "user_id",
         "session_id",
         "n_events",
@@ -212,33 +346,23 @@ def _q_events_sessionize(spark, sf_dir):
 
 
 def _q_events_top_users(spark, sf_dir):
-    from ocr_spark.functions.events import top_users
-
-    return top_users(_read(spark, sf_dir, "events"), k=5)
+    return events.top_users(_read(spark, sf_dir, "events"))
 
 
 def _q_token_stats(spark, sf_dir):
-    from ocr_spark.functions.text import token_stats
-
-    return token_stats(_docs(spark, sf_dir))
+    return text.token_stats(_docs(spark, sf_dir))
 
 
 def _q_quality(spark, sf_dir):
-    from ocr_spark.functions.text import quality_scores
-
-    return quality_scores(_docs(spark, sf_dir))
+    return text.quality_scores(_docs(spark, sf_dir))
 
 
 def _q_lang_id(spark, sf_dir):
-    from ocr_spark.functions.text import lang_id
-
-    return lang_id(_docs(spark, sf_dir))
+    return text.lang_id(_docs(spark, sf_dir))
 
 
 def _q_fingerprints(spark, sf_dir):
-    from ocr_spark.functions.text import fingerprints
-
-    return fingerprints(_docs(spark, sf_dir))
+    return text.fingerprints(_docs(spark, sf_dir))
 
 
 def _q_token_count_bpe(spark, sf_dir):
@@ -271,22 +395,21 @@ def _q_doc_length_quantiles(spark, sf_dir):
 
 
 def _q_token_histogram(spark, sf_dir):
-    """Corpus vocabulary stats: top-50 tokens by frequency, deterministic
-    tie-break by token."""
+    """Corpus vocabulary stats: the _TOKEN_TOP most frequent tokens,
+    deterministic tie-break by token."""
     from pyspark.sql import Window
-    from ocr_spark.functions.text import tokens
 
     counts = (
         _docs(spark, sf_dir)
-        .select(F.explode(tokens(F.col("text"))).alias("token"))
+        .select(F.explode(text.tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     # TakeOrdered shape (orderBy+limit = per-partition heaps), rank derived
-    # over only the 50 survivors — no single-partition window over the full
+    # over only the _TOKEN_TOP survivors — no single-partition window over the full
     # vocabulary (see functions/events.py:top_users for the scale rationale)
     order = [F.desc("n"), F.asc("token")]
-    top = counts.orderBy(*order).limit(50)
+    top = counts.orderBy(*order).limit(_TOKEN_TOP)
     w = Window.orderBy(*order)
     return (
         top.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -333,15 +456,11 @@ def _q_events_funnel(spark, sf_dir):
 
 
 def _q_dedup_exact(spark, sf_dir):
-    from ocr_spark.functions.dedup import exact_duplicates
-
-    return exact_duplicates(_docs(spark, sf_dir))
+    return dedup.exact_duplicates(_docs(spark, sf_dir))
 
 
 def _q_dedup_prefix(spark, sf_dir):
-    from ocr_spark.functions.text import fingerprints
-
-    fp = fingerprints(_docs(spark, sf_dir))
+    fp = text.fingerprints(_docs(spark, sf_dir))
     return (
         fp.groupBy("fp_prefix3")
         .agg(F.count(F.lit(1)).cast("long").alias("dup_count"))
@@ -350,16 +469,12 @@ def _q_dedup_prefix(spark, sf_dir):
 
 
 def _q_minhash(spark, sf_dir):
-    from ocr_spark.functions.dedup import minhash_signatures, shingles
-
-    return minhash_signatures(shingles(_docs(spark, sf_dir)))
+    return dedup.minhash_signatures(dedup.shingles(_docs(spark, sf_dir)))
 
 
 def _q_lsh_pairs(spark, sf_dir):
-    from ocr_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures, shingles
-
-    return lsh_candidate_pairs(
-        minhash_signatures(shingles(_docs(spark, sf_dir))), bucket_max=_DF_MAX
+    return dedup.lsh_candidate_pairs(
+        dedup.minhash_signatures(dedup.shingles(_docs(spark, sf_dir))), bucket_max=_DF_MAX
     )
 
 
@@ -367,8 +482,6 @@ def _q_events_asof(spark, sf_dir):
     """As-of join category: each purchase gets the user's latest click at or
     before it. Spark composition: union + last-ignore-nulls window (one
     shuffle, no range join); oracle: DuckDB's native ASOF LEFT JOIN."""
-    from ocr_spark.functions.events import asof_join
-
     _utc(spark)
     ev = _read(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -377,7 +490,7 @@ def _q_events_asof(spark, sf_dir):
     clicks = ev.where(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id"
     )
-    j = asof_join(purchases, clicks, prefix="click_")
+    j = events.asof_join(purchases, clicks, prefix="click_")
     return j.select(
         "event_id",
         "user_id",
@@ -390,15 +503,11 @@ def _q_events_asof(spark, sf_dir):
 def _q_dedup_survivors(spark, sf_dir):
     """Corpus dedup materialized: keep one canonical doc (the component
     label) per near-dup group, pass every unpaired doc through."""
-    from ocr_spark.functions.dedup import (
-        dedup_components, lsh_candidate_pairs, minhash_signatures, shingles,
-    )
-
     docs = _docs(spark, sf_dir)
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(shingles(docs)), bucket_max=_DF_MAX
+    pairs = dedup.lsh_candidate_pairs(
+        dedup.minhash_signatures(dedup.shingles(docs)), bucket_max=_DF_MAX
     )
-    dropped = dedup_components(pairs).where(F.col("doc_id") != F.col("component"))
+    dropped = dedup.dedup_components(pairs).where(F.col("doc_id") != F.col("component"))
     return docs.select("doc_id").join(dropped, "doc_id", "left_anti")
 
 
@@ -407,28 +516,23 @@ def _q_doc_pii(spark, sf_dir):
     text (URLs -> emails -> phone-like runs — URL class includes '@' so
     userinfo-style emails inside URLs are consumed whole, see
     functions/text.py). Whole-stage-codegen regexp chain, zero Python."""
-    from ocr_spark.functions.text import redact_pii
-
-    return redact_pii(_docs(spark, sf_dir))
+    return text.redact_pii(_docs(spark, sf_dir))
 
 
 def _q_doc_repetition(spark, sf_dir):
     """Gopher-style repetition filters: duplicate-line fraction and
     duplicate-character fraction per document."""
-    from ocr_spark.functions.text import repetition_scores
-
-    return repetition_scores(_docs(spark, sf_dir))
+    return text.repetition_scores(_docs(spark, sf_dir))
 
 
 def _q_promo_revenue(spark, sf_dir):
     """TPC-H Q14 shape: conditional aggregation over a join — promo share
     of revenue. CASE folds inside the same hash-agg as the total (one
     pass); DECIMAL sums, one cast to DOUBLE, ratio in double."""
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     li = _read(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     p = _read(spark, sf_dir, "part").select("p_partkey", "p_type")
     promo = F.sum(F.when(F.col("p_type") == "PROMO", F.col("rev")).otherwise(
@@ -471,11 +575,9 @@ def _q_returned_customers(spark, sf_dir):
     """TPC-H Q10 shape: revenue lost to returns per customer, dims
     broadcast, global top-20 via orderBy+limit (TakeOrdered — no
     single-partition rank window)."""
-    dec = "decimal(18,2)"
     li = _read(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R").select(
         "l_orderkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _read(spark, sf_dir, "customer").select(
@@ -503,7 +605,7 @@ def _q_mnist_idx(spark, sf_dir):
     from ocr_spark.fixtures import ensure_idx_fixture
     from ocr_spark.functions.multimodal import idx_records
 
-    d = ensure_idx_fixture(os.path.join(_FIXTURE_DIR, "idx"))
+    d = ensure_idx_fixture(os.path.join(FIXTURE_ROOT, "idx"))
     files = spark.read.format("binaryFile").load(f"{d}/*-ubyte")
     recs = idx_records(files)
     imgs = recs.where(F.col("path").endswith("images.idx3-ubyte")).select(
@@ -519,30 +621,24 @@ def _q_doc_split_counts(spark, sf_dir):
     """Deterministic train/val/test assignment (hash-range split): per
     (lang, split) document counts. Pure per-row md5 expression — stable
     under corpus growth, no RNG, no shuffle beyond the final count."""
-    from ocr_spark.functions.sampling import hash_split
-
     docs = _docs(spark, sf_dir)
     return (
-        hash_split(docs)
+        sampling.hash_split(docs)
         .groupBy("lang", "split")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
 
 
 def _q_doc_sample(spark, sf_dir):
-    """Deterministic 10% corpus sample by hash threshold — a pure filter
+    """Deterministic _SAMPLE_FRACTION corpus sample by hash threshold — a pure filter
     (no shuffle, no RNG state); membership re-derivable from doc_id."""
-    from ocr_spark.functions.sampling import sample_by_hash
-
-    return sample_by_hash(_docs(spark, sf_dir), 0.1).select("doc_id", "lang")
+    return sampling.sample_by_hash(_docs(spark, sf_dir), _SAMPLE_FRACTION).select("doc_id", "lang")
 
 
 def _q_top_parts_per_type(spark, sf_dir):
     """Partitioned top-k (rank window with a partition key — distributed,
     unlike a global rank): top-3 revenue parts per part type."""
-    from ocr_spark.functions.relational import top_parts_per_group
-
-    return top_parts_per_group(
+    return relational.top_parts_per_group(
         _read(spark, sf_dir, "lineitem"), _read(spark, sf_dir, "part")
     )
 
@@ -552,15 +648,13 @@ def _q_events_range(spark, sf_dir):
     preceding 30 minutes. Spark composition: time-bucketed equi-join (each
     left row probes two buckets) + exact residual filter — no
     broadcast-nested-loop; oracle: plain inequality join."""
-    from ocr_spark.functions.events import range_count_preceding
-
     _utc(spark)
     ev = _read(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
-    j = range_count_preceding(purchases, clicks, out_col="n_prior_clicks")
+    j = events.range_count_preceding(purchases, clicks, out_col="n_prior_clicks")
     return j.select(
         "event_id",
         "user_id",
@@ -575,15 +669,12 @@ def _q_emb_dedup_survivors(spark, sf_dir):
     recheck -> connected components -> keep one canonical vector per
     near-dup group, pass every unpaired vector through. All equi-joins;
     cost = sum of squared band-bucket sizes, never n^2."""
-    from ocr_spark.functions.dedup import dedup_components
-    from ocr_spark.functions.similarity import near_dup_pairs_lsh
-
     emb = _read(spark, sf_dir, "embeddings")
-    pairs = near_dup_pairs_lsh(emb).select(
+    pairs = similarity.near_dup_pairs_lsh(emb).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     dropped = (
-        dedup_components(pairs)
+        dedup.dedup_components(pairs)
         .where(F.col("doc_id") != F.col("component"))
         .withColumnRenamed("doc_id", "vec_id")
     )
@@ -594,26 +685,18 @@ def _q_dedup_groups(spark, sf_dir):
     """Near-dup GROUPS: connected components over the (capped) LSH candidate
     graph — the step that picks one canonical doc per duplicate cluster.
     Spark: iterative min-label propagation; oracle: recursive CTE."""
-    from ocr_spark.functions.dedup import (
-        dedup_components, lsh_candidate_pairs, minhash_signatures, shingles,
+    pairs = dedup.lsh_candidate_pairs(
+        dedup.minhash_signatures(dedup.shingles(_docs(spark, sf_dir))), bucket_max=_DF_MAX
     )
-
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(shingles(_docs(spark, sf_dir))), bucket_max=_DF_MAX
-    )
-    return dedup_components(pairs)
+    return dedup.dedup_components(pairs)
 
 
 def _q_jaccard(spark, sf_dir):
-    from ocr_spark.functions.dedup import jaccard_pairs, shingles
-
-    return jaccard_pairs(shingles(_docs(spark, sf_dir)), df_max=_DF_MAX)
+    return dedup.jaccard_pairs(dedup.shingles(_docs(spark, sf_dir)), df_max=_DF_MAX)
 
 
 def _q_simhash(spark, sf_dir):
-    from ocr_spark.functions.dedup import simhash_bits
-
-    return simhash_bits(_docs(spark, sf_dir))
+    return dedup.simhash_bits(_docs(spark, sf_dir))
 
 
 def _q_simhash_near_dups(spark, sf_dir):
@@ -621,15 +704,13 @@ def _q_simhash_near_dups(spark, sf_dir):
     EXACT recall at hamming <= 3 from a plain (band, band_key) equi-join;
     exact bit_count(xor) recheck. Hot band buckets (the all-zero signature
     of token-free docs) capped at _DF_MAX."""
-    from ocr_spark.functions.dedup import simhash_near_dups
-
-    return simhash_near_dups(_docs(spark, sf_dir), bucket_max=_DF_MAX)
+    return dedup.simhash_near_dups(_docs(spark, sf_dir), bucket_max=_DF_MAX)
 
 
 def _q_forecast_revenue(spark, sf_dir):
     """TPC-H Q6 shape: pure scan + pushed range predicates + single agg."""
     li = _read(spark, sf_dir, "lineitem")
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -672,7 +753,7 @@ def _q_small_qty_revenue(spark, sf_dir):
     subquery would re-scan lineitem per part)."""
     li = _read(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity",
-        F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
+        F.col("l_extendedprice").cast(relational._DEC).alias("price"),
     )
     avg_qty = li.groupBy("l_partkey").agg(
         (F.avg("l_quantity") * 0.2).alias("qty_cap")
@@ -712,7 +793,7 @@ def _q_cube(spark, sf_dir):
     li = _read(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+        F.sum(F.col("l_quantity").cast(relational._DEC)).cast("double").alias("sum_qty"),
     )
 
 
@@ -738,7 +819,7 @@ def _q_rollup(spark, sf_dir):
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
+            F.sum(F.col("l_quantity").cast(relational._DEC)).cast("double").alias("sum_qty"),
         )
     )
 
@@ -765,7 +846,6 @@ def _q_volume_shipping(spark, sf_dir):
     on the already-joined names. Supplier side broadcast; customer side left
     to AQE (it is 8% of a big dim — broadcast at small SF, shuffle at scale)."""
     _utc(spark)
-    dec = "decimal(18,2)"
     nf = _read(spark, sf_dir, "nation").where(
         F.col("n_name").isin("NATION_13", "NATION_19")
     )
@@ -793,8 +873,7 @@ def _q_volume_shipping(spark, sf_dir):
     ).select(
         "l_orderkey", "l_suppkey",
         F.year("l_shipdate").cast("long").alias("l_year"),
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pair = (
@@ -821,7 +900,7 @@ def _q_market_share(spark, sf_dir):
     part and supplier-nation dims broadcast; region restriction semi-reduces
     customer before the fact join."""
     _utc(spark)
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     n = _read(spark, sf_dir, "nation")
     r = _read(spark, sf_dir, "region").where(F.col("r_name") == "AMERICA")
     nr = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
@@ -850,8 +929,7 @@ def _q_market_share(spark, sf_dir):
     )
     li = _read(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -897,14 +975,12 @@ def _q_top_supplier(spark, sf_dir):
     The equality compares exact DECIMAL(18,2) sums (safe; a DOUBLE-sum
     equality would be summation-order-dependent), cast to DOUBLE only on
     output."""
-    dec = "decimal(18,2)"
     li = _read(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     ).select(
         "l_suppkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     revenue = li.groupBy("l_suppkey").agg(F.sum("rev").alias("total_rev_dec"))
     mx = revenue.agg(F.max("total_rev_dec").alias("mx"))
@@ -925,7 +1001,7 @@ def _q_large_orders(spark, sf_dir):
     The heavy agg runs FIRST on (l_orderkey) alone — the join-back sees only
     the tiny qualifying set, so customer arrives by broadcast at any scale."""
     _utc(spark)
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     li = _read(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_quantity").cast(dec).alias("q")
     )
@@ -955,7 +1031,6 @@ def _q_disjunctive_revenue(spark, sf_dir):
     conjunct groups. The disjunction references both sides of the join, so
     it cannot be pushed below it — but the per-side prunable parts (brand
     membership, quantity hull) are pre-filtered to keep the join small."""
-    dec = "decimal(18,2)"
     brands = ("Brand#11", "Brand#12", "Brand#13")
     p = _read(spark, sf_dir, "part").where(F.col("p_brand").isin(*brands)).select(
         "p_partkey", "p_brand", "p_size"
@@ -964,8 +1039,7 @@ def _q_disjunctive_revenue(spark, sf_dir):
         F.col("l_quantity").between(1, 30)
     ).select(
         "l_partkey", "l_quantity",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
     cond = (
         ((F.col("p_brand") == brands[0]) & F.col("p_size").between(1, 5)
@@ -994,7 +1068,7 @@ def _q_idle_customers(spark, sf_dir):
     date filter is pushed into the anti-join build side, shrinking it ~4x
     before the shuffle."""
     _utc(spark)
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     c = _read(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
@@ -1058,7 +1132,7 @@ def _q_profit_by_nation(spark, sf_dir):
     is broadcast; supplier→nation folds to a broadcast name lookup; the fact
     rows shuffle once for the orders join and once for the final small agg."""
     _utc(spark)
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     p = _read(spark, sf_dir, "part").where(
         F.col("p_name").contains("red")
     ).select("p_partkey", F.col("p_retailprice").cast(dec).alias("p_cost"))
@@ -1076,8 +1150,7 @@ def _q_profit_by_nation(spark, sf_dir):
     )
     li = _read(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
         F.col("l_quantity").cast(dec).alias("qty"),
     )
     return (
@@ -1106,15 +1179,11 @@ def _q_important_parts(spark, sf_dir):
     scalar); without reuse Spark would rebuild the full lineitem scan + agg
     for each — persist_if_large caches it when the source is big enough to
     matter (the same size-adaptive rule the shingle subtree uses)."""
-    from ocr_spark.functions.dedup import persist_if_large
-
-    dec = "decimal(18,2)"
     li = _read(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        (F.col("l_extendedprice").cast(dec)
-         * (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))).alias("rev"),
+        relational.net_revenue().alias("rev"),
     )
-    per_part = persist_if_large(
+    per_part = dedup.persist_if_large(
         li.groupBy("l_partkey").agg(F.sum("rev").alias("part_rev_dec"))
     )
     total = per_part.agg(
@@ -1175,7 +1244,7 @@ def _q_excess_shippers(spark, sf_dir):
     probes only qualifying suppliers. Ratio compared in DOUBLE after exact
     DECIMAL sums on both engines."""
     _utc(spark)
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     pr = _read(spark, sf_dir, "part").where(
         F.col("p_name").contains("red")
     ).select("p_partkey")
@@ -1222,7 +1291,7 @@ def _q_min_cost_supplier(spark, sf_dir):
     supplier⋈nation⋈region dim chain broadcast."""
     from pyspark.sql import Window
 
-    dec = "decimal(18,2)"
+    dec = relational._DEC
     ps = (
         _read(spark, sf_dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
@@ -1270,17 +1339,12 @@ def _q_lsh_jaccard_est(spark, sf_dir):
     the shingle join is DF-capped (df_max) and the band-agreement join is
     bucket-capped (cap_hot_buckets) — one stop-phrase shingle can no longer
     re-create the ~10^12-pair join group at corpus scale."""
-    from ocr_spark.functions.dedup import (
-        cap_hot_buckets, jaccard_pairs, minhash_signatures, shingles)
-
     # the distinct-shingle frame feeds BOTH the minhash path and the true-
     # Jaccard path (which caps it again); on large sources persisting it
     # collapses the four scan->tokenize->distinct rebuilds into one compute
     # (small sources recompute — measured faster, see persist_if_large)
-    from ocr_spark.functions.dedup import persist_if_large
-
-    sh = persist_if_large(shingles(_docs(spark, sf_dir)))
-    sig = cap_hot_buckets(minhash_signatures(sh), _DF_MAX)
+    sh = dedup.persist_if_large(dedup.shingles(_docs(spark, sf_dir)))
+    sig = dedup.cap_hot_buckets(dedup.minhash_signatures(sh), _DF_MAX)
     # equi-join on the (band, minhash) bucket key — never a per-band cross
     # join; pairs agreeing on zero bands simply don't appear (estimate 0)
     a = sig.select(F.col("doc_id").alias("doc_a"), "band", "minhash")
@@ -1291,56 +1355,45 @@ def _q_lsh_jaccard_est(spark, sf_dir):
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("bands_agree"))
     )
-    true_j = jaccard_pairs(sh, min_common=2, df_max=_DF_MAX)
+    true_j = dedup.jaccard_pairs(sh, df_max=_DF_MAX)
     return true_j.join(agree, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",
         "jaccard",
         F.coalesce("bands_agree", F.lit(0)).cast("long").alias("bands_agree"),
-        (F.coalesce("bands_agree", F.lit(0)) / F.lit(4.0)).alias("jaccard_est"),
+        (F.coalesce("bands_agree", F.lit(0)) / F.lit(float(dedup.MINHASH_BANDS)))
+        .alias("jaccard_est"),
     )
 
 
 def _q_winnow(spark, sf_dir):
-    from ocr_spark.functions.dedup import winnow_fingerprints
-
-    return winnow_fingerprints(_docs(spark, sf_dir))
+    return dedup.winnow_fingerprints(_docs(spark, sf_dir))
 
 
 def _q_cosine_topk(spark, sf_dir):
-    from ocr_spark.functions.similarity import cosine_topk
-
-    return cosine_topk(_read(spark, sf_dir, "embeddings"))
+    return similarity.cosine_topk(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_bucket_hist(spark, sf_dir):
-    from ocr_spark.functions.similarity import bucket_histogram
-
-    return bucket_histogram(_read(spark, sf_dir, "embeddings"))
+    return similarity.bucket_histogram(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_lsh_topk(spark, sf_dir):
-    from ocr_spark.functions.similarity import bucketed_topk
-
-    return bucketed_topk(_read(spark, sf_dir, "embeddings"))
+    return similarity.bucketed_topk(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_emb_near_dups(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs: all pairs above a cosine
     threshold. Brute-force form for the oracle; the scale path applies the
     same predicate after the sign-LSH/IVF candidate join."""
-    from ocr_spark.functions.similarity import with_norms
-
-    base = with_norms(_read(spark, sf_dir, "embeddings"))
+    base = similarity.with_norms(_read(spark, sf_dir, "embeddings"))
     a = base.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
     b = base.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
     pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-    sim = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-    ) / (F.col("na") * F.col("nb"))
+    sim = F.expr(similarity._DOT.format(a="va", b="vb")) / (F.col("na") * F.col("nb"))
     return (
         pairs.withColumn("sim", sim)
-        .where(F.col("sim") > 0.3)
+        .where(F.col("sim") > similarity.NEAR_DUP_COSINE)
         .select("vec_a", "vec_b", F.round("sim", 4).alias("sim_r4"))
     )
 
@@ -1349,9 +1402,7 @@ def _q_emb_near_dups_lsh(spark, sf_dir):
     """Scale path for near-dup detection: sign-LSH bucket candidates ->
     exact cosine re-check. Equi-join on bucket, no cartesian in the plan
     (tools/plan_audit.py asserts 0 broadcast-nested-loop nodes)."""
-    from ocr_spark.functions.similarity import near_dup_pairs_lsh
-
-    return near_dup_pairs_lsh(_read(spark, sf_dir, "embeddings"))
+    return similarity.near_dup_pairs_lsh(_read(spark, sf_dir, "embeddings"))
 
 
 def _q_lang_ngram(spark, sf_dir):
@@ -1359,43 +1410,38 @@ def _q_lang_ngram(spark, sf_dir):
     pandas UDF). Oracle-checked: the DuckDB twin rebuilds the same profiles
     from the committed seed sentences and replays hash/log1p/cosine/argmax
     in SQL (documents are ASCII, so ord(char) == utf-8 byte)."""
-    from ocr_spark.functions.text import lang_id_ngram
-
-    return lang_id_ngram(_docs(spark, sf_dir))
+    return text.lang_id_ngram(_docs(spark, sf_dir))
 
 
 def _q_ivf_topk(spark, sf_dir):
     """IVF approximate top-k, oracle-checked: the Lloyd trainer quantizes
-    centroids to 1e-6 per iteration, so the DuckDB twin (_sql_ivf_topk)
+    centroids to 1/IVF_ROUND per iteration, so the DuckDB twin (_sql_ivf_topk)
     replays the SAME training as unrolled SQL iterations and reaches
     bit-identical centroids; recall-vs-brute-force is separately asserted
     in tests/test_functions.py."""
-    from ocr_spark.functions.similarity import ivf_topk
-
-    return ivf_topk(_read(spark, sf_dir, "embeddings"))
+    return similarity.ivf_topk(_read(spark, sf_dir, "embeddings"))
 
 
-def _sql_ivf_topk(n_clusters: int = 16, iters: int = 10, sample_mod: int = 1,
-                  sample_cap: int = 4096, nprobe: int = 4, n_queries: int = 8,
-                  k: int = 3) -> str:
+def _sql_ivf_topk() -> str:
     """DuckDB replay of similarity.ivf_topk, INCLUDING the quantizer
     training: Lloyd iterations are unrolled as CTE pairs (a{i} = assignment
     via ROW_NUMBER over (distance, cid); c{i} = per-dimension AVG rounded to
-    1e-6, empty clusters keeping the previous centroid via COALESCE — the
+    1/IVF_ROUND, empty clusters keeping the previous centroid via COALESCE — the
     exact update rule of train_ivf_centroids). Distance ordering uses
     list_distance (euclidean) vs NumPy's squared-L2: monotonic, same argmin.
     Then: distributed assignment of all vectors to the final centroids,
-    nprobe nearest lists per query, cosine top-k — mirroring emb_lsh_topk's
-    twin shapes."""
+    IVF_NPROBE nearest lists per query, cosine top-k — mirroring
+    emb_lsh_topk's twin shapes."""
+    iters, rnd = similarity.IVF_ITERS, similarity.IVF_ROUND
     cte = [f"""
         samp AS MATERIALIZED (
             SELECT vec_id, embedding::DOUBLE[] AS vec
-            FROM embeddings WHERE vec_id % {sample_mod} = 0
-            ORDER BY vec_id LIMIT {sample_cap}
+            FROM embeddings ORDER BY vec_id LIMIT {similarity.IVF_SAMPLE_CAP}
         ),
         c0 AS MATERIALIZED (
             SELECT (ROW_NUMBER() OVER (ORDER BY vec_id) - 1)::INT AS cid, vec
-            FROM (SELECT vec_id, vec FROM samp ORDER BY vec_id LIMIT {n_clusters})
+            FROM (SELECT vec_id, vec FROM samp ORDER BY vec_id
+                  LIMIT {similarity.IVF_CLUSTERS})
         )"""]
     for i in range(1, iters + 1):
         cte.append(f"""
@@ -1409,7 +1455,7 @@ def _sql_ivf_topk(n_clusters: int = 16, iters: int = 10, sample_mod: int = 1,
         ),
         m{i} AS MATERIALIZED (
             SELECT cid, list(mval ORDER BY pos) AS vec FROM (
-                SELECT cid, pos, FLOOR(AVG(val) * 1000000 + 0.5) / 1000000 AS mval
+                SELECT cid, pos, FLOOR(AVG(val) * {rnd} + 0.5) / {rnd} AS mval
                 FROM (SELECT cid, UNNEST(vec) AS val,
                              UNNEST(generate_series(1, len(vec))) AS pos
                       FROM a{i})
@@ -1426,10 +1472,7 @@ def _sql_ivf_topk(n_clusters: int = 16, iters: int = 10, sample_mod: int = 1,
                 SELECT e.vec_id, e.vec, e.nrm, f.cid,
                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
                            ORDER BY list_distance(e.vec, f.vec), f.cid) AS rn
-                FROM (SELECT vec_id, embedding::DOUBLE[] AS vec,
-                             sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                           x -> x * x))) AS nrm
-                      FROM embeddings) e CROSS JOIN c{iters} f
+                FROM ({_sql_norms()}) e CROSS JOIN c{iters} f
             ) WHERE rn = 1
         ),
         probes AS MATERIALIZED (
@@ -1438,25 +1481,13 @@ def _sql_ivf_topk(n_clusters: int = 16, iters: int = 10, sample_mod: int = 1,
                        ROW_NUMBER() OVER (PARTITION BY q.vec_id
                            ORDER BY list_distance(q.vec, f.vec), f.cid) AS rn
                 FROM (SELECT vec_id, embedding::DOUBLE[] AS vec
-                      FROM embeddings WHERE vec_id < {n_queries}) q
+                      FROM embeddings WHERE vec_id < {similarity.N_QUERIES}) q
                 CROSS JOIN c{iters} f
-            ) WHERE rn <= {nprobe}
-        ),
-        pairs AS MATERIALIZED (
-            SELECT q.vec_id AS query_id, o.vec_id AS neighbor_id,
-                   list_dot_product(q.vec, o.vec) / (q.nrm * o.nrm) AS sim
-            FROM n q
-            JOIN probes p ON p.query_id = q.vec_id
-            JOIN n o ON o.cluster = p.cluster AND o.vec_id <> q.vec_id
-            WHERE q.vec_id < {n_queries}
+            ) WHERE rn <= {similarity.IVF_NPROBE}
         )""")
-    return "WITH" + ",".join(cte) + f"""
-        SELECT query_id, neighbor_id, rnk, round(sim, 4) AS sim_r4 FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                          ORDER BY sim DESC, neighbor_id)::BIGINT AS rnk
-            FROM pairs
-        ) WHERE rnk <= {k}
-    """
+    return "WITH" + ",".join(cte) + _sql_top_k(
+        "n q JOIN probes p ON p.query_id = q.vec_id JOIN n o ON o.cluster = p.cluster"
+    )
 
 
 def _q_ocr_extract(spark, sf_dir):
@@ -1517,7 +1548,7 @@ def _q_image_resize(spark, sf_dir):
 
     corpus = _synth_corpus("tiny")
     media = spark.read.parquet(f"{corpus}/media.parquet")
-    resized = image_resize(media, 64, 32)
+    resized = image_resize(media, _RESIZE_W, _RESIZE_H)
     return image_features(resized).select("media_ref", "width", "height")
 
 
@@ -1712,22 +1743,28 @@ def _lang_ngram_oracle_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    dec = "DECIMAL(18,2)"
-    rev = f"CAST(l_extendedprice AS {dec}) * (CAST(1 AS {dec}) - CAST(l_discount AS {dec}))"
-    from ocr_spark.functions.sampling import _hex_threshold as _ht
     from ocr_spark.fixtures import ensure_idx_fixture as _idx_fix
+    from ocr_spark.functions.sampling import _hex_threshold as _ht
     from ocr_spark.functions.text import PII_EMAIL, PII_PHONE, PII_URL
-    stop_en = "['the','a','and','of','to','is']"
-    markers = {
-        "en": stop_en,
-        "es": "['el','la','de','que','y','los']",
-        "de": "['der','die','das','und','nicht','ist']",
-        "fr": "['le','la','de','et','les','est']",
-    }
+
+    dec = relational._DEC
+    rev = f"CAST(l_extendedprice AS {dec}) * (CAST(1 AS {dec}) - CAST(l_discount AS {dec}))"
+    l_rev = f"CAST(l.l_extendedprice AS {dec}) * (CAST(1 AS {dec}) - CAST(l.l_discount AS {dec}))"
+    langs = list(text.LANG_MARKERS)
     score = {
-        lang: f"len(list_filter(toks, t -> list_contains({arr}, lower(t))))::BIGINT"
-        for lang, arr in markers.items()
+        lang: "len(list_filter(toks, t -> list_contains(["
+        + ", ".join(f"'{w}'" for w in words)
+        + "], lower(t))))::BIGINT"
+        for lang, words in text.LANG_MARKERS.items()
     }
+    s_cols = ", ".join(f"s_{lang}" for lang in langs)
+    split_bucket = f"substr(md5('{sampling.SPLIT_SALT}|' || doc_id::VARCHAR), 1, 8)"
+    split_whens = " ".join(
+        f"WHEN {split_bucket} < '{threshold}' THEN '{name}'"
+        for name, threshold in sampling.split_thresholds()
+    )
+    sim_width = 64 // dedup.SIMHASH_BANDS
+    emb_pairs = f"SELECT vec_a AS doc_a, vec_b AS doc_b FROM ({_sql_near_dup_pairs()})"
 
     return {
         "q1_pricing_summary": f"""
@@ -1738,7 +1775,7 @@ def oracle_sql() -> dict[str, str]:
                    COUNT(*)::BIGINT AS count_order,
                    CAST(SUM(CAST(l_quantity AS {dec})) AS DOUBLE) / COUNT(*) AS avg_qty
             FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
+            WHERE l_shipdate <= TIMESTAMP '{relational.Q1_SHIP_CUTOFF} 00:00:00'
             GROUP BY l_returnflag, l_linestatus
         """,
         "q3_order_revenue": f"""
@@ -1746,7 +1783,8 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM({rev}) AS DOUBLE) AS revenue,
                    COUNT(*)::BIGINT AS n_items
             FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey AND c.c_mktsegment = 'BUILDING'
+            JOIN customer c ON o.o_custkey = c.c_custkey
+                           AND c.c_mktsegment = '{relational.Q3_SEGMENT}'
             JOIN lineitem l ON o.o_orderkey = l.l_orderkey
             GROUP BY o.o_orderkey, o.o_orderdate
         """,
@@ -1759,7 +1797,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN supplier s ON l.l_suppkey = s.s_suppkey
             JOIN customer c ON o.o_custkey = c.c_custkey
             JOIN nation n ON s.s_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
+            JOIN region r ON n.n_regionkey = r.r_regionkey
+                         AND r.r_name = '{relational.Q5_REGION}'
             WHERE s.s_nationkey = c.c_nationkey
             GROUP BY n.n_name
         """,
@@ -1773,7 +1812,7 @@ def oracle_sql() -> dict[str, str]:
         "brand_volume": f"""
             SELECT p.p_brand,
                    CAST(SUM(CAST(l.l_quantity AS {dec})) AS DOUBLE) AS sum_qty,
-                   CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue,
+                   CAST(SUM({l_rev}) AS DOUBLE) AS revenue,
                    COUNT(*)::BIGINT AS n_items
             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
             GROUP BY p.p_brand
@@ -1791,7 +1830,7 @@ def oracle_sql() -> dict[str, str]:
                        LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
                 FROM events
             ), s AS (
-                SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
+                SELECT *, CASE WHEN prev_us IS NULL OR us - prev_us > {events.SESSION_GAP_US}
                                THEN 1 ELSE 0 END AS is_new
                 FROM e
             ), t AS (
@@ -1804,12 +1843,12 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(CAST(value AS {dec})) AS DOUBLE) AS sum_value
             FROM t GROUP BY user_id, session_id
         """,
-        "events_top_users": """
+        "events_top_users": f"""
             SELECT user_id, n_events, rnk FROM (
                 SELECT user_id, COUNT(*)::BIGINT AS n_events,
                        ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, user_id)::BIGINT AS rnk
                 FROM events GROUP BY user_id
-            ) WHERE rnk <= 5
+            ) WHERE rnk <= {events.TOP_USERS_K}
         """,
         "doc_token_stats": f"""
             SELECT doc_id, length(text)::BIGINT AS n_chars,
@@ -1821,10 +1860,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
                    length(t)::BIGINT AS n_chars,
                    len(toks)::BIGINT AS n_tokens,
-                   (length(t) - length(regexp_replace(t, '[.!?,;:]', '', 'g')))::BIGINT AS n_punct,
-                   {score['en'].replace('toks,', 'toks,')} AS n_stop,
-                   CAST(len(list_filter(toks, t -> list_contains({stop_en}, lower(t)))) AS DOUBLE)
-                       / len(toks) AS stop_ratio,
+                   (length(t) - length(regexp_replace(t, '{text.PUNCT_CLASS}', '', 'g')))::BIGINT
+                       AS n_punct,
+                   {score['en']} AS n_stop,
+                   CAST({score['en']} AS DOUBLE) / len(toks) AS stop_ratio,
                    CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
                        / len(toks) AS mean_token_len
             FROM (SELECT doc_id, text AS t, {_SQL_TOKS} AS toks FROM documents)
@@ -1832,20 +1871,14 @@ def oracle_sql() -> dict[str, str]:
         "doc_lang_id": f"""
             SELECT doc_id,
                    CASE WHEN best = 0 THEN 'und'
-                        WHEN s_en = best THEN 'en'
-                        WHEN s_es = best THEN 'es'
-                        WHEN s_de = best THEN 'de'
-                        WHEN s_fr = best THEN 'fr' END AS lang_pred,
-                   s_en, s_es, s_de, s_fr
+                        {" ".join(f"WHEN s_{lang} = best THEN '{lang}'" for lang in langs)}
+                   END AS lang_pred,
+                   {s_cols}
             FROM (
-                SELECT doc_id, s_en, s_es, s_de, s_fr,
-                       greatest(s_en, s_es, s_de, s_fr) AS best
+                SELECT doc_id, {s_cols}, greatest({s_cols}) AS best
                 FROM (
                     SELECT doc_id,
-                           {score['en']} AS s_en,
-                           {score['es']} AS s_es,
-                           {score['de']} AS s_de,
-                           {score['fr']} AS s_fr
+                           {", ".join(f"{score[lang]} AS s_{lang}" for lang in langs)}
                     FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
                 )
             )
@@ -1878,7 +1911,7 @@ def oracle_sql() -> dict[str, str]:
                        ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, token)::BIGINT AS rnk
                 FROM (SELECT UNNEST({_SQL_TOKS}) AS token FROM documents)
                 GROUP BY token
-            ) WHERE rnk <= 50
+            ) WHERE rnk <= {_TOKEN_TOP}
         """,
         "events_funnel": """
             WITH firsts AS (
@@ -1910,22 +1943,12 @@ def oracle_sql() -> dict[str, str]:
                 WHERE len(toks) >= 3
             ) GROUP BY 1 HAVING COUNT(*) > 1
         """,
-        "minhash_signatures": _SQL_MINHASH,
-        "lsh_candidate_pairs": f"""
-            WITH sig0 AS ({_SQL_MINHASH}),
-            hot AS (SELECT band, minhash FROM sig0
-                    GROUP BY 1, 2 HAVING COUNT(*) > {_DF_MAX}),
-            sig AS (SELECT sig0.* FROM sig0 ANTI JOIN hot USING (band, minhash))
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM sig a JOIN sig b
-              ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-        """,
-        "dedup_groups": _SQL_COMPONENTS,
+        "minhash_signatures": _sql_minhash(),
+        "lsh_candidate_pairs": _sql_lsh_pairs(),
+        "dedup_groups": _sql_components(_sql_lsh_pairs()),
         "dedup_survivors": f"""
             SELECT d.doc_id FROM documents d
-            WHERE d.doc_id NOT IN (
-                SELECT doc_id FROM ({_SQL_COMPONENTS}) WHERE doc_id <> component
-            )
+            WHERE d.doc_id NOT IN ({_sql_dropped(_sql_lsh_pairs())})
         """,
         "events_asof_click": """
             WITH p AS (SELECT event_id, user_id, ts FROM events
@@ -1944,32 +1967,28 @@ def oracle_sql() -> dict[str, str]:
         # in both engines — no integer parsing)
         "doc_split_counts": f"""
             SELECT lang,
-                   CASE WHEN substr(md5('split-v1|' || doc_id::VARCHAR), 1, 8)
-                             < '{_ht(0.9)}' THEN 'train'
-                        WHEN substr(md5('split-v1|' || doc_id::VARCHAR), 1, 8)
-                             < '{_ht(0.95)}' THEN 'val'
-                        ELSE 'test' END AS split,
+                   CASE {split_whens} ELSE '{list(sampling.SPLIT_WEIGHTS)[-1]}' END AS split,
                    COUNT(*)::BIGINT AS n_docs
             FROM documents GROUP BY 1, 2
         """,
         "doc_sample_10pct": f"""
             SELECT doc_id, lang FROM documents
-            WHERE substr(md5('sample-v1|' || doc_id::VARCHAR), 1, 8)
-                  < '{_ht(0.1)}'
+            WHERE substr(md5('{sampling.SAMPLE_SALT}|' || doc_id::VARCHAR), 1, 8)
+                  < '{_ht(_SAMPLE_FRACTION)}'
         """,
         "top_parts_per_type": f"""
             WITH agg AS (
                 SELECT p.p_type, l.l_partkey AS p_partkey,
-                       CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue
+                       CAST(SUM({l_rev}) AS DOUBLE) AS revenue
                 FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
                 GROUP BY 1, 2
             )
             SELECT p_type, p_partkey, revenue,
                    (ROW_NUMBER() OVER (PARTITION BY p_type
                                        ORDER BY revenue DESC, p_partkey))::BIGINT AS rnk
-            FROM agg QUALIFY rnk <= 3
+            FROM agg QUALIFY rnk <= {relational.TOP_PARTS_K}
         """,
-        "events_range_clicks": """
+        "events_range_clicks": f"""
             WITH p AS (SELECT event_id, user_id, ts FROM events
                        WHERE event_type = 'purchase'),
             c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
@@ -1977,64 +1996,18 @@ def oracle_sql() -> dict[str, str]:
                    COUNT(c.ts)::BIGINT AS n_prior_clicks
             FROM p LEFT JOIN c
               ON c.user_id = p.user_id
-             AND epoch_us(c.ts) > epoch_us(p.ts) - 1800000000
+             AND epoch_us(c.ts) > epoch_us(p.ts) - {events.SESSION_GAP_US}
              AND epoch_us(c.ts) <= epoch_us(p.ts)
             GROUP BY 1, 2, 3
         """,
-        "ngram_jaccard": f"""
-            WITH sh0 AS ({_SQL_SHINGLES}),
-            sh AS ({_SQL_SHINGLES_CAPPED.format(df_max=_DF_MAX)}),
-            sizes AS (SELECT doc_id, COUNT(*)::BIGINT AS n_sh FROM sh GROUP BY doc_id),
-            common AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*)::BIGINT AS n_common
-                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2 HAVING COUNT(*) >= 2
-            )
-            SELECT doc_a, doc_b, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
-                   CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-            FROM common
-            JOIN sizes sa ON sa.doc_id = common.doc_a
-            JOIN sizes sb ON sb.doc_id = common.doc_b
-        """,
-        "simhash_bits": f"""
-            WITH dt AS (
-                SELECT doc_id, token, COUNT(*)::BIGINT AS cnt
-                FROM (SELECT doc_id, UNNEST({_SQL_TOKS}) AS token FROM documents)
-                GROUP BY 1, 2
-            ), bits AS (
-                SELECT token, b::BIGINT AS bit_idx,
-                       2 * (((strpos('0123456789abcdef',
-                                     substr(md5(token), (b // 4) + 1, 1)) - 1)
-                             >> (3 - (b % 4))) % 2) - 1 AS contrib
-                FROM (SELECT token, UNNEST(generate_series(0, 63)) AS b
-                      FROM (SELECT DISTINCT token FROM dt))
-            )
-            SELECT dt.doc_id, bits.bit_idx,
-                   (CASE WHEN SUM(dt.cnt * bits.contrib) > 0 THEN 1 ELSE 0 END)::BIGINT AS bit
-            FROM dt JOIN bits ON dt.token = bits.token
-            GROUP BY dt.doc_id, bits.bit_idx
-        """,
-        # same bit table as simhash_bits, folded to a signed 64-bit signature
-        # (bit 63 = the sign bit, added as min-long; DuckDB's 1<<63 errors),
-        # then 4x16-bit pigeonhole bands -> capped equi-join -> exact hamming
+        "ngram_jaccard": _sql_jaccard(),
+        "simhash_bits": _SQL_SIMHASH_BITS,
+        # the simhash_bits table folded to a signed 64-bit signature (bit 63
+        # = the sign bit, added as min-long; DuckDB's 1<<63 errors), then
+        # SIMHASH_BANDS pigeonhole bands -> capped equi-join -> exact hamming
         "simhash_near_dups": f"""
-            WITH dt AS (
-                SELECT doc_id, token, COUNT(*)::BIGINT AS cnt
-                FROM (SELECT doc_id, UNNEST({_SQL_TOKS}) AS token FROM documents)
-                GROUP BY 1, 2
-            ), bits AS (
-                SELECT token, b::BIGINT AS bit_idx,
-                       2 * (((strpos('0123456789abcdef',
-                                     substr(md5(token), (b // 4) + 1, 1)) - 1)
-                             >> (3 - (b % 4))) % 2) - 1 AS contrib
-                FROM (SELECT token, UNNEST(generate_series(0, 63)) AS b
-                      FROM (SELECT DISTINCT token FROM dt))
-            ), db AS (
-                SELECT dt.doc_id, bits.bit_idx,
-                       (CASE WHEN SUM(dt.cnt * bits.contrib) > 0 THEN 1 ELSE 0 END)::BIGINT AS bit
-                FROM dt JOIN bits ON dt.token = bits.token
-                GROUP BY dt.doc_id, bits.bit_idx
-            ), sig AS (
+            WITH db AS ({_SQL_SIMHASH_BITS}),
+            sig AS (
                 SELECT doc_id,
                        CAST(SUM(CASE WHEN bit = 0 THEN 0
                                      WHEN bit_idx = 63 THEN (-9223372036854775807 - 1)
@@ -2042,8 +2015,8 @@ def oracle_sql() -> dict[str, str]:
                 FROM db GROUP BY doc_id
             ), bands AS (
                 SELECT doc_id, simhash, b AS band,
-                       ((simhash >> (b * 16)) & 65535) AS band_key
-                FROM sig, UNNEST(generate_series(0, 3)) AS t(b)
+                       ((simhash >> (b * {sim_width})) & {(1 << sim_width) - 1}) AS band_key
+                FROM sig, UNNEST(generate_series(0, {dedup.SIMHASH_BANDS - 1})) AS t(b)
             ), capped AS (
                 SELECT doc_id, simhash, band, band_key FROM (
                     SELECT *, COUNT(*) OVER (PARTITION BY band, band_key) AS _n
@@ -2059,7 +2032,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_a, doc_b,
                    bit_count(xor(sig_a, sig_b))::BIGINT AS hamming
             FROM cand
-            WHERE bit_count(xor(sig_a, sig_b)) <= 3
+            WHERE bit_count(xor(sig_a, sig_b)) <= {dedup.SIMHASH_MAX_HAMMING}
         """,
         "q6_forecast_revenue": f"""
             SELECT CAST(SUM(CAST(l_extendedprice AS {dec}) * CAST(l_discount AS {dec})) AS DOUBLE) AS revenue,
@@ -2137,7 +2110,7 @@ def oracle_sql() -> dict[str, str]:
         "q7_volume_shipping": f"""
             SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
                    CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-                   CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue,
+                   CAST(SUM({l_rev}) AS DOUBLE) AS revenue,
                    COUNT(*)::BIGINT AS n_items
             FROM lineitem l
             JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -2154,7 +2127,7 @@ def oracle_sql() -> dict[str, str]:
         "q8_market_share": f"""
             WITH vol AS (
                 SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-                       {rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')} AS rev,
+                       {l_rev} AS rev,
                        sn.n_name AS supp_nation
                 FROM lineitem l
                 JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'PROMO'
@@ -2212,7 +2185,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN customer c ON o.o_custkey = c.c_custkey
         """,
         "q19_disjunctive_revenue": f"""
-            SELECT CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue,
+            SELECT CAST(SUM({l_rev}) AS DOUBLE) AS revenue,
                    COUNT(*)::BIGINT AS n_items
             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
             WHERE ((p.p_brand = 'Brand#11' AND p.p_size BETWEEN 1 AND 5
@@ -2338,34 +2311,16 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1, 2, 3
         """,
         "lsh_jaccard_est": f"""
-            WITH sh0 AS ({_SQL_SHINGLES}),
-            sh AS ({_SQL_SHINGLES_CAPPED.format(df_max=_DF_MAX)}),
-            sizes AS (SELECT doc_id, COUNT(*)::BIGINT AS n_sh FROM sh GROUP BY doc_id),
-            common AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*)::BIGINT AS n_common
-                FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY 1, 2 HAVING COUNT(*) >= 2
-            ),
-            true_j AS (
-                SELECT doc_a, doc_b,
-                       CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-                FROM common
-                JOIN sizes sa ON sa.doc_id = common.doc_a
-                JOIN sizes sb ON sb.doc_id = common.doc_b
-            ),
-            sig0 AS ({_SQL_MINHASH}),
-            hot AS (SELECT band, minhash FROM sig0
-                    GROUP BY 1, 2 HAVING COUNT(*) > {_DF_MAX}),
-            sig AS (SELECT sig0.* FROM sig0 ANTI JOIN hot USING (band, minhash)),
+            WITH true_j AS ({_sql_jaccard()}),
+            {_sql_capped_sig()},
             agree AS (
                 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*)::BIGINT AS bands_agree
-                FROM sig a JOIN sig b
-                  ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
+                {_SQL_SIG_PAIRS}
                 GROUP BY 1, 2
             )
             SELECT t.doc_a, t.doc_b, t.jaccard,
                    COALESCE(g.bands_agree, 0)::BIGINT AS bands_agree,
-                   COALESCE(g.bands_agree, 0) / 4.0 AS jaccard_est
+                   COALESCE(g.bands_agree, 0) / {float(dedup.MINHASH_BANDS)} AS jaccard_est
             FROM true_j t
             LEFT JOIN agree g ON t.doc_a = g.doc_a AND t.doc_b = g.doc_b
         """,
@@ -2373,138 +2328,40 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT doc_id, fp FROM (
                 SELECT doc_id, pos,
                        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                                    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
+                                    ROWS BETWEEN {dedup.WINNOW_WINDOW - 1} PRECEDING
+                                    AND CURRENT ROW) AS fp
                 FROM (
-                    SELECT doc_id, i - 1 AS pos,
-                           md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS h
+                    SELECT doc_id, i - 1 AS pos, md5({_sql_shingle("i")}) AS h
                     FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-                         UNNEST(generate_series(1, len(toks) - 2)) AS g(i)
+                         UNNEST({_sql_shingle_starts()}) AS g(i)
                 )
-            ) WHERE pos >= 3
+            ) WHERE pos >= {dedup.WINNOW_WINDOW - 1}
         """,
-        "emb_cosine_topk": """
-            WITH n AS (
-                SELECT vec_id, embedding::DOUBLE[] AS vec,
-                       sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-                FROM embeddings
-            ), pairs AS (
-                SELECT q.vec_id AS query_id, o.vec_id AS neighbor_id,
-                       list_dot_product(q.vec, o.vec) / (q.nrm * o.nrm) AS sim
-                FROM n q JOIN n o ON o.vec_id <> q.vec_id
-                WHERE q.vec_id < 8
-            )
-            SELECT query_id, neighbor_id, rnk, round(sim, 4) AS sim_r4 FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY sim DESC, neighbor_id)::BIGINT AS rnk
-                FROM pairs
-            ) WHERE rnk <= 3
-        """,
-        "emb_near_dups": """
-            WITH n AS (
-                SELECT vec_id, embedding::DOUBLE[] AS vec,
-                       sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-                FROM embeddings
-            )
+        "emb_cosine_topk": f"WITH n AS ({_sql_norms()}) {_sql_top_k('n q, n o')}",
+        "emb_near_dups": f"""
+            WITH n AS ({_sql_norms()})
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   round(list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm), 4) AS sim_r4
+                   round({_sql_cosine("a", "b")}, 4) AS sim_r4
             FROM n a JOIN n b ON a.vec_id < b.vec_id
-            WHERE list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm) > 0.3
+            WHERE {_sql_cosine("a", "b")} > {similarity.NEAR_DUP_COSINE}
         """,
-        # banded OR-construction: candidates agree on ANY band's sign
-        # pattern (band b covers dims b*8+1..b*8+8), then exact re-check
-        "emb_near_dups_lsh": """
-            WITH n AS (
-                SELECT vec_id, embedding::DOUBLE[] AS vec,
-                       sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-                FROM embeddings
-            ),
-            bk AS (
-                SELECT vec_id, b AS band,
-                       CAST(list_sum(list_transform(generate_series(0, 7),
-                            d -> CASE WHEN embedding[b * 8 + d + 1] > 0
-                                      THEN (1::BIGINT << d) ELSE 0::BIGINT END)) AS BIGINT) AS bucket
-                FROM embeddings, UNNEST(generate_series(0, 3)) AS t(b)
-            ),
-            cand AS (
-                SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-                FROM bk a JOIN bk b2
-                  ON a.band = b2.band AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-            )
-            SELECT c.vec_a, c.vec_b,
-                   round(list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm), 4) AS sim_r4
-            FROM cand c JOIN n a ON a.vec_id = c.vec_a JOIN n b ON b.vec_id = c.vec_b
-            WHERE list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm) > 0.3
+        "emb_near_dups_lsh": f"""
+            SELECT vec_a, vec_b, round(sim, 4) AS sim_r4 FROM ({_sql_near_dup_pairs()})
         """,
-        # banded candidates + exact cosine recheck (same construction as
-        # emb_near_dups_lsh), then recursive-CTE connected components and
-        # an anti-join keeping one canonical vector per near-dup group
-        "emb_dedup_survivors": """
-            WITH RECURSIVE
-            n AS (
-                SELECT vec_id, embedding::DOUBLE[] AS vec,
-                       sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm
-                FROM embeddings
-            ),
-            bk AS (
-                SELECT vec_id, b AS band,
-                       CAST(list_sum(list_transform(generate_series(0, 7),
-                            d -> CASE WHEN embedding[b * 8 + d + 1] > 0
-                                      THEN (1::BIGINT << d) ELSE 0::BIGINT END)) AS BIGINT) AS bucket
-                FROM embeddings, UNNEST(generate_series(0, 3)) AS t(b)
-            ),
-            cand AS (
-                SELECT DISTINCT a.vec_id AS doc_a, b2.vec_id AS doc_b
-                FROM bk a JOIN bk b2
-                  ON a.band = b2.band AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-            ),
-            pairs AS (
-                SELECT c.doc_a, c.doc_b
-                FROM cand c JOIN n a ON a.vec_id = c.doc_a JOIN n b ON b.vec_id = c.doc_b
-                WHERE list_dot_product(a.vec, b.vec) / (a.nrm * b.nrm) > 0.3
-            ),
-            edges AS (
-                SELECT doc_a AS src, doc_b AS dst FROM pairs
-                UNION
-                SELECT doc_b AS src, doc_a AS dst FROM pairs
-            ),
-            nodes AS (SELECT DISTINCT src AS node FROM edges),
-            reach(node, label) AS (
-                SELECT node, node FROM nodes
-                UNION
-                SELECT e.src, r.label FROM edges e JOIN reach r ON e.dst = r.node
-            ),
-            dropped AS (
-                SELECT node FROM reach GROUP BY node HAVING node != MIN(label)
-            )
-            SELECT e.vec_id FROM embeddings e ANTI JOIN dropped d ON e.vec_id = d.node
+        # near-dup pairs -> connected components -> keep one canonical
+        # vector per near-dup group
+        "emb_dedup_survivors": f"""
+            SELECT e.vec_id FROM embeddings e
+            ANTI JOIN ({_sql_dropped(emb_pairs)}) d ON e.vec_id = d.doc_id
         """,
-        "emb_bucket_hist": """
+        "emb_bucket_hist": f"""
             SELECT bucket, COUNT(*)::BIGINT AS n_vecs FROM (
-                SELECT CAST(list_sum(list_transform(generate_series(0, 7),
-                            d -> CASE WHEN embedding[d + 1] > 0
-                                      THEN (1::BIGINT << d) ELSE 0::BIGINT END)) AS BIGINT) AS bucket
-                FROM embeddings
+                SELECT {_sql_sign_bucket("0")} AS bucket FROM embeddings
             ) GROUP BY bucket
         """,
-        "emb_lsh_topk": """
-            WITH n AS (
-                SELECT vec_id, embedding::DOUBLE[] AS vec,
-                       sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS nrm,
-                       CAST(list_sum(list_transform(generate_series(0, 7),
-                            d -> CASE WHEN embedding[d + 1] > 0
-                                      THEN (1::BIGINT << d) ELSE 0::BIGINT END)) AS BIGINT) AS bucket
-                FROM embeddings
-            ), pairs AS (
-                SELECT q.vec_id AS query_id, o.vec_id AS neighbor_id,
-                       list_dot_product(q.vec, o.vec) / (q.nrm * o.nrm) AS sim
-                FROM n q JOIN n o ON q.bucket = o.bucket AND o.vec_id <> q.vec_id
-                WHERE q.vec_id < 8
-            )
-            SELECT query_id, neighbor_id, rnk, round(sim, 4) AS sim_r4 FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                             ORDER BY sim DESC, neighbor_id)::BIGINT AS rnk
-                FROM pairs
-            ) WHERE rnk <= 3
+        "emb_lsh_topk": f"""
+            WITH n AS ({_sql_norms(f"{_sql_sign_bucket('0')} AS bucket")})
+            {_sql_top_k("n q JOIN n o ON q.bucket = o.bucket")}
         """,
         "emb_ivf_topk": _sql_ivf_topk(),
         # flagship extraction vs by-construction truth: the synthesized
@@ -2544,13 +2401,13 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q14_promo_revenue": f"""
             SELECT CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                                 THEN {rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}
+                                 THEN {l_rev}
                                  ELSE CAST(0 AS {dec}) END) AS DOUBLE) AS promo_revenue,
-                   CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS total_revenue,
+                   CAST(SUM({l_rev}) AS DOUBLE) AS total_revenue,
                    100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                                 THEN {rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}
+                                 THEN {l_rev}
                                  ELSE CAST(0 AS {dec}) END) AS DOUBLE)
-                         / CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS promo_pct
+                         / CAST(SUM({l_rev}) AS DOUBLE) AS promo_pct
             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         """,
         "q12_priority_lines": """
@@ -2566,7 +2423,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q10_returned_customers": f"""
             SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-                   CAST(SUM({rev.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue
+                   CAST(SUM({l_rev}) AS DOUBLE) AS revenue
             FROM lineitem l
             JOIN orders o ON l.l_orderkey = o.o_orderkey
             JOIN customer c ON o.o_custkey = c.c_custkey
@@ -2578,7 +2435,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "mnist_idx_read": f"""
             SELECT item_idx, h, w, px_md5, mean_val, label
-            FROM read_parquet('{_idx_fix(os.path.join(_FIXTURE_DIR, "idx"))}/expected.parquet')
+            FROM read_parquet('{_idx_fix(os.path.join(FIXTURE_ROOT, "idx"))}/expected.parquet')
         """,
         "ocr_extract_spans": f"""
             SELECT doc_id, CAST(ord AS BIGINT) AS ord, kind, text, media_ref
@@ -2598,8 +2455,8 @@ def oracle_sql() -> dict[str, str]:
         # resize round trip: every non-null page must come back from
         # resize->encode->decode at exactly the target dimensions
         "media_image_resize": f"""
-            SELECT media_ref, CAST(64 AS BIGINT) AS width,
-                   CAST(32 AS BIGINT) AS height
+            SELECT media_ref, CAST({_RESIZE_W} AS BIGINT) AS width,
+                   CAST({_RESIZE_H} AS BIGINT) AS height
             FROM read_parquet('{_synth_corpus("tiny")}/media.parquet')
             WHERE png IS NOT NULL
         """,

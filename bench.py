@@ -63,7 +63,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
-    from ocr_spark.fixtures import write_corpus
+    from ocr_spark.fixtures import (
+        FIXTURE_ROOT, FIXTURE_VERSION, ensure_built, ensure_corpus, write_corpus,
+    )
     from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media, read_pdfs
     from ocr_spark.procstat import StealMeter
     from perfbench.host import driver_memory_mb
@@ -91,12 +93,8 @@ def main() -> None:
     #     Python runner pool on every core and warms Arrow + the OCR/strip
     #     kernels, so the timed extraction leg measures throughput, not
     #     worker spin-up.
-    from ocr_spark.fixtures import ensure_corpus
-
     _force(qmap["q6_forecast_revenue"](spark, SF_DIR))
-    tiny = ensure_corpus(
-        os.path.join(os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures"), "tiny")
-    )
+    tiny = ensure_corpus(os.path.join(FIXTURE_ROOT, "tiny"))
     _force(extract_spans(read_documents(spark, tiny), read_media(spark, tiny)))
 
     # Per-leg hypervisor-steal telemetry (VERDICT r03 #2): a leg's seconds are
@@ -117,12 +115,7 @@ def main() -> None:
         release_persisted()
 
     # flagship extraction throughput (corpus cached; synth excluded from timing)
-    corpus = os.path.join(
-        os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures"),
-        f"bench_{EXTRACT_DOCS}x{EXTRACT_PAGES}",
-    )
-    from ocr_spark.fixtures import FIXTURE_VERSION, ensure_built
-
+    corpus = os.path.join(FIXTURE_ROOT, f"bench_{EXTRACT_DOCS}x{EXTRACT_PAGES}")
     # version-keyed marker (not existence-only): a fixture-content change
     # must regenerate a cached corpus, or machines diverge by cache history
     ensure_built(
@@ -140,10 +133,7 @@ def main() -> None:
 
     # three-kind interleave (text + image-OCR + PDF parse): the PDF cost
     # class has its own decode path, so the headline tracks it separately
-    corpus3 = os.path.join(
-        os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures"),
-        f"bench3_{EXTRACT_DOCS}x{EXTRACT_PAGES}",
-    )
+    corpus3 = os.path.join(FIXTURE_ROOT, f"bench3_{EXTRACT_DOCS}x{EXTRACT_PAGES}")
     ensure_built(
         corpus3, f"v{FIXTURE_VERSION} bench corpus3\n",
         lambda: write_corpus(corpus3, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES, pdf_p=0.25),

@@ -42,12 +42,6 @@ def main(argv=None):
         "--warehouse", default=None,
         help="warehouse URI for --catalog iceberg (default: <output>/warehouse)",
     )
-    ex.add_argument(
-        "--partitions", type=int, default=None,
-        help="salt-shuffle width for the CPU-bound UDF stages (default: one "
-             "task per core; raise for straggler hiding / bounded retry "
-             "granularity on heterogeneous clusters)",
-    )
 
     st = sub.add_parser("stream", help="streaming extraction over arriving parquet files")
     st.add_argument("--stream-dir", required=True, help="directory watched for documents parquet")
@@ -122,7 +116,6 @@ def main(argv=None):
                 buckets=args.buckets,
                 resume=not args.no_resume,
                 character_spacing=args.character_spacing,
-                partitions=args.partitions,
                 fonts=tuple(f for f in args.fonts.split(",") if f),
                 catalog=catalog_name,
             )

@@ -37,6 +37,9 @@ IDX_SIDE = 28  # their side, in pixels (MNIST's)
 # 30 clips; documents/media/expected unchanged at every scale)
 FIXTURE_VERSION = 6
 
+# where __spark_entry__ and bench.py cache their corpora (a deployment path)
+FIXTURE_ROOT = os.environ.get("OCR_SPARK_FIXTURES", "/tmp/ocr_spark_fixtures")
+
 # validated: each word round-trips render -> segment -> classify exactly
 # (glyphs i j l m w W X 0 and thin punctuation excluded — the reference
 # engine itself misreads them, e.g. 'm' -> 'rn', '0' -> 'o')

@@ -28,12 +28,13 @@ from .text import tokens
 _LOG = logging.getLogger(__name__)
 
 # Every operator reads (doc_id, text); the DuckDB twins in __spark_entry__
-# hard-code the same values.
+# read these constants.
 SHINGLE_WORDS = 3  # words per shingle (MinHash, Jaccard and winnowing)
 MINHASH_BANDS = 4
 WINNOW_WINDOW = 4  # hashes per winnowing window
 SIMHASH_MAX_HAMMING = 3
 SIMHASH_BANDS = 4  # > SIMHASH_MAX_HAMMING: the pigeonhole guarantee
+JACCARD_MIN_COMMON = 2  # shared shingles for a Jaccard pair
 
 # The word shingles of the token array ``_toks``, in order. A doc with fewer
 # than SHINGLE_WORDS tokens has none (sequence() would otherwise generate a
@@ -255,10 +256,11 @@ def persist_if_large(df: DataFrame) -> DataFrame:
     return df
 
 
-def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None) -> DataFrame:
-    """n-gram Jaccard similarity for every doc pair sharing >= min_common
-    shingles. The shingle equi-join only materializes co-occurring pairs;
-    per-doc set sizes are broadcast back via two cheap aggregations.
+def jaccard_pairs(sh: DataFrame, df_max: int | None = None) -> DataFrame:
+    """n-gram Jaccard similarity for every doc pair sharing at least
+    JACCARD_MIN_COMMON shingles. The shingle equi-join only materializes
+    co-occurring pairs; per-doc set sizes are broadcast back via two cheap
+    aggregations.
 
     ``df_max`` applies cap_shingle_df first, so Jaccard is computed over the
     DF-capped shingle space (numerator AND denominators) — the self-join
@@ -286,7 +288,7 @@ def jaccard_pairs(sh: DataFrame, min_common: int = 2, df_max: int | None = None)
         .where(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        .where(F.col("n_common") >= min_common)
+        .where(F.col("n_common") >= JACCARD_MIN_COMMON)
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
+TOP_USERS_K = 5
 
 
 def tumbling_hourly(df: DataFrame) -> DataFrame:
@@ -172,8 +173,8 @@ def range_count_preceding(
     )
 
 
-def top_users(df: DataFrame, k: int = 5) -> DataFrame:
-    """Users ranked by event count, ties broken by user_id.
+def top_users(df: DataFrame) -> DataFrame:
+    """The TOP_USERS_K users ranked by event count, ties broken by user_id.
 
     Scale shape: orderBy+limit plans as TakeOrderedAndProject — per-partition
     k-row heaps, k rows total to the driver — so no global sort and no
@@ -182,7 +183,7 @@ def top_users(df: DataFrame, k: int = 5) -> DataFrame:
     window then runs over only the k survivors."""
     counts = df.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     order = [F.desc("n_events"), F.asc("user_id")]
-    top = counts.orderBy(*order).limit(k)
+    top = counts.orderBy(*order).limit(TOP_USERS_K)
     w = Window.orderBy(*order)
     return (
         top.withColumn("rnk", F.row_number().over(w).cast("long"))

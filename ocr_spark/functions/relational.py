@@ -16,30 +16,35 @@ key with AQE skew-join as backstop; every query prunes columns at the scan
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 _DEC = "decimal(18,2)"
 
 # The TPC-H substitution parameters of the queries below; the DuckDB twins
-# in __spark_entry__ hard-code the same values.
+# in __spark_entry__ read these constants.
 Q1_SHIP_CUTOFF = "2000-12-01"
 Q3_SEGMENT = "BUILDING"
 Q5_REGION = "ASIA"
 TOP_PARTS_K = 3
 
 
+def net_revenue() -> Column:
+    """A lineitem's revenue after discount, exact in the money type."""
+    price = F.col("l_extendedprice").cast(_DEC)
+    return price * (F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC))
+
+
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: scan + filter + hash-agg with exact decimal sums."""
     qty = F.col("l_quantity").cast(_DEC)
     price = F.col("l_extendedprice").cast(_DEC)
-    disc = F.col("l_discount").cast(_DEC)
     return (
         lineitem.where(F.col("l_shipdate") <= F.lit(Q1_SHIP_CUTOFF).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(qty).cast("double").alias("sum_qty"),
             F.sum(price).cast("double").alias("sum_base_price"),
-            F.sum(price * (F.lit(1).cast(_DEC) - disc)).cast("double").alias("sum_disc_price"),
+            F.sum(net_revenue()).cast("double").alias("sum_disc_price"),
             F.count(F.lit(1)).cast("long").alias("count_order"),
         )
         .withColumn("avg_qty", F.col("sum_qty") / F.col("count_order"))
@@ -52,8 +57,7 @@ def order_revenue(customer: DataFrame, orders: DataFrame, lineitem: DataFrame) -
     ords = orders.select("o_orderkey", "o_custkey", "o_orderdate")
     li = lineitem.select(
         "l_orderkey",
-        (F.col("l_extendedprice").cast(_DEC)
-         * (F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC))).alias("rev"),
+        net_revenue().alias("rev"),
     )
     return (
         ords.join(F.broadcast(cust), ords.o_custkey == cust.c_custkey)
@@ -77,8 +81,7 @@ def nation_volume(region: DataFrame, nation: DataFrame, customer: DataFrame,
     o = orders.select("o_orderkey", "o_custkey")
     li = lineitem.select(
         "l_orderkey", "l_suppkey",
-        (F.col("l_extendedprice").cast(_DEC)
-         * (F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC))).alias("rev"),
+        net_revenue().alias("rev"),
     )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -116,8 +119,7 @@ def top_parts_per_group(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     p = part.select("p_partkey", "p_type")
     li = lineitem.select(
         "l_partkey",
-        (F.col("l_extendedprice").cast(_DEC)
-         * (F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC))).alias("rev"),
+        net_revenue().alias("rev"),
     )
     agg = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -139,8 +141,7 @@ def brand_volume(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     li = lineitem.select(
         "l_partkey",
         F.col("l_quantity").cast(_DEC).alias("qty"),
-        (F.col("l_extendedprice").cast(_DEC)
-         * (F.lit(1).cast(_DEC) - F.col("l_discount").cast(_DEC))).alias("rev"),
+        net_revenue().alias("rev"),
     )
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)

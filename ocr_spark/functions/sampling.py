@@ -19,8 +19,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 _SPACE = 16 ** 8  # 8 hex chars
 
-# Salts and split weights; the DuckDB twins in __spark_entry__ hard-code the
-# same values.
+# Salts and split weights; the DuckDB twins in __spark_entry__ read these
+# constants.
 SAMPLE_SALT = "sample-v1"
 SPLIT_SALT = "split-v1"
 SPLIT_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
@@ -35,6 +35,17 @@ def _hex_threshold(fraction: float) -> str:
     if fraction >= 1:
         return "g"
     return format(max(0, int(fraction * _SPACE)), "08x")
+
+
+def split_thresholds() -> list[tuple[str, str]]:
+    """(split, hex threshold) for every split of SPLIT_WEIGHTS but the last:
+    a row lands in the first split whose threshold its hash bucket sorts
+    below, else in the last split (which absorbs rounding)."""
+    out, cum = [], 0.0
+    for name in list(SPLIT_WEIGHTS)[:-1]:
+        cum += SPLIT_WEIGHTS[name]
+        out.append((name, _hex_threshold(cum)))
+    return out
 
 
 def hash_bucket(id_col: Column, salt: str) -> Column:
@@ -59,17 +70,15 @@ def hash_split(df: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by cumulative hash ranges,
     in column ``split``.
 
-    SPLIT_WEIGHTS maps split name -> fraction (the last split absorbs
-    rounding). Assignment is per-row and independent of everything except
+    SPLIT_WEIGHTS maps split name -> fraction (see split_thresholds).
+    Assignment is per-row and independent of everything except
     (salt, doc_id), so splits are stable under corpus growth: adding
     documents never moves an existing document between splits — the
     property shuffling-based splitters lack.
     """
-    *first, last = SPLIT_WEIGHTS
     bucket = hash_bucket(F.col("doc_id"), SPLIT_SALT)
-    cum, expr = 0.0, F
-    for name in first:
-        cum += SPLIT_WEIGHTS[name]
+    expr = F
+    for name, threshold in split_thresholds():
         # F.when opens the CASE, Column.when extends it
-        expr = expr.when(bucket < _hex_threshold(cum), F.lit(name))
-    return df.withColumn("split", expr.otherwise(F.lit(last)))
+        expr = expr.when(bucket < threshold, F.lit(name))
+    return df.withColumn("split", expr.otherwise(F.lit(list(SPLIT_WEIGHTS)[-1])))

@@ -27,7 +27,7 @@ _NORM = "sqrt(aggregate({a}, cast(0.0 as double), (acc, v) -> acc + v * v))"
 
 # Every operator reads (vec_id, embedding) and ranks the K nearest
 # neighbours of the queries vec_id < N_QUERIES; the DuckDB twins in
-# __spark_entry__ hard-code the same values.
+# __spark_entry__ read these constants.
 K = 3
 N_QUERIES = 8
 N_BITS = 8  # sign bits per LSH bucket
@@ -35,6 +35,9 @@ N_BANDS = 4  # near-dup LSH bands
 NEAR_DUP_COSINE = 0.3
 IVF_ITERS = 10
 IVF_NPROBE = 4
+IVF_ROUND = 1_000_000  # centroids round to 1/IVF_ROUND after each Lloyd step
+IVF_CLUSTERS = 16
+IVF_SAMPLE_CAP = 4096  # vectors the quantizer trains on
 
 
 def with_norms(df: DataFrame) -> DataFrame:
@@ -187,17 +190,19 @@ def train_ivf_centroids(df, n_clusters: int, sample_cap: int):
     = the ``sample_cap`` lowest vec_ids, init = first n_clusters sampled
     vectors in vec_id order, IVF_ITERS iterations, no RNG.
 
-    Updated centroids are quantized to 1e-6 after every Lloyd iteration.
+    Updated centroids are quantized to 1/IVF_ROUND after every Lloyd
+    iteration.
     This makes the trainer REPLAYABLE by any engine that can compute a
     per-cluster mean (the DuckDB oracle twin unrolls the same iterations in
     SQL): float summation-order noise between engines is ~1e-13 relative,
     so quantizing each iteration's output keeps the centroid sequences
     bit-identical instead of letting the noise compound across iterations.
-    The quantizer is deliberately MODE-AGNOSTIC — ``floor(x*1e6 + 0.5)/1e6``
-    on both engines — because np.round (half-to-even) and DuckDB ROUND
-    (half-away-from-zero) disagree at half-ulp boundaries; a 1-ULP mean
-    difference near a boundary would flip the 6th decimal differently per
-    engine and compound across iterations. floor() is identical everywhere.
+    The quantizer is deliberately MODE-AGNOSTIC —
+    ``floor(x*IVF_ROUND + 0.5)/IVF_ROUND`` on both engines — because
+    np.round (half-to-even) and DuckDB ROUND (half-away-from-zero) disagree
+    at half-ulp boundaries; a 1-ULP mean difference near a boundary would
+    flip the 6th decimal differently per engine and compound across
+    iterations. floor() is identical everywhere.
     Empty clusters keep their previous (unquantized-init or prior-rounded)
     centroid on both sides.
 
@@ -218,7 +223,7 @@ def train_ivf_centroids(df, n_clusters: int, sample_cap: int):
             if m.any():
                 # shared rounding rule with the SQL twin (see docstring):
                 # floor-based round-half-up, not np.round's half-to-even
-                C[c] = np.floor(X[m].mean(axis=0) * 1e6 + 0.5) / 1e6
+                C[c] = np.floor(X[m].mean(axis=0) * IVF_ROUND + 0.5) / IVF_ROUND
     return C
 
 
@@ -241,7 +246,7 @@ def ivf_assign(df, centroids):
     )
 
 
-def ivf_topk(df, n_clusters: int = 16, sample_cap: int = 4096):
+def ivf_topk(df, n_clusters: int = IVF_CLUSTERS, sample_cap: int = IVF_SAMPLE_CAP):
     """IVF approximate top-k: queries search only their IVF_NPROBE nearest
     inverted lists instead of the whole corpus — the similarity join becomes
     an equi-join on cluster id with selectivity IVF_NPROBE/n_clusters.

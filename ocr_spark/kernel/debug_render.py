@@ -143,8 +143,11 @@ def _fold(mask):
     return mask.reshape(h, _SS, w, _SS).sum(axis=(1, 3))
 
 
-def _draw_line_aa(img, x1, y1, x2, y2, color, alpha=255, width=1):
-    """Stroke with square caps. Axis-aligned runs take the crisp path
+_SEGMENT_WIDTH = 3  # contour segment lines (see _draw_line_aa)
+
+
+def _draw_line_aa(img, x1, y1, x2, y2, color):
+    """Opaque stroke with square caps. Axis-aligned runs take the crisp path
     (identical to Java under stroke normalization); slants are supersampled
     (divergence-masked). The segment lines use width 3: Java sets
     BasicStroke(3) for the zone third-lines and never restores it
@@ -152,10 +155,10 @@ def _draw_line_aa(img, x1, y1, x2, y2, color, alpha=255, width=1):
     if x1 == x2 and y1 == y2:
         return
     if x1 == x2 or y1 == y2:
-        _draw_hv_line(img, x1, y1, x2, y2, color, alpha, width=width)
+        _draw_hv_line(img, x1, y1, x2, y2, color, 255, width=_SEGMENT_WIDTH)
         return
     # normalized path: pixel centers
-    half = width / 2.0
+    half = _SEGMENT_WIDTH / 2.0
     fx1, fy1, fx2, fy2 = x1 + 0.5, y1 + 0.5, x2 + 0.5, y2 + 0.5
     dx, dy = fx2 - fx1, fy2 - fy1
     ln = float(np.hypot(dx, dy))
@@ -169,7 +172,7 @@ def _draw_line_aa(img, x1, y1, x2, y2, color, alpha=255, width=1):
     t = (gx - fx1) * ux + (gy - fy1) * uy
     p = (gx - fx1) * -uy + (gy - fy1) * ux
     inside = (t >= -half) & (t <= ln + half) & (np.abs(p) <= half)
-    _coverage_to_img(img, bx0, by0, _fold(inside), _SS * _SS, color, alpha)
+    _coverage_to_img(img, bx0, by0, _fold(inside), _SS * _SS, color, 255)
 
 
 def _fill_triangle_aa(img, xs, ys, color, alpha):
@@ -272,7 +275,7 @@ def render_curvature_debug(matrix: np.ndarray, box_xy=(0, 0)):
             pxs = tuple(offx + SCALE * v for v in xs)
             pys = tuple(offy + SCALE * v for v in ys)
             _fill_triangle_aa(img, pxs, pys, c, 128)
-            _draw_line_aa(img, pxs[0], pys[0], pxs[1], pys[1], c, 255, width=3)
+            _draw_line_aa(img, pxs[0], pys[0], pxs[1], pys[1], c)
             if pxs[0] != pxs[1] and pys[0] != pys[1]:
                 _mask_segment_band(mask, pxs[0], pys[0], pxs[1], pys[1])
         # black curvature-vector numbers above the tile

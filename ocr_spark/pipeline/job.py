@@ -144,27 +144,23 @@ def extract_spans(
     docs: DataFrame,
     media: DataFrame,
     character_spacing: float = 8.0,
-    partitions: int | None = None,
     pdfs: DataFrame | None = None,
     fonts: tuple | list | None = None,
 ) -> DataFrame:
     """Logical plan for one slice of documents -> output span rows.
 
-    ``partitions`` sizes the pre-UDF salt shuffle. It is passed as an
-    EXPLICIT repartition width (default = defaultParallelism) because the
-    UDF stages are CPU-bound, not byte-bound: AQE's coalescing targets
-    partition *bytes* and would happily fuse thousands of cheap-looking
-    KB-sized PNG rows into one partition, serializing the OCR kernel on a
-    single core. An explicit width is exempt from AQE coalescing.
+    The pre-UDF salt shuffle has an EXPLICIT repartition width,
+    defaultParallelism, because the UDF stages are CPU-bound, not
+    byte-bound: AQE's coalescing targets partition *bytes* and would
+    happily fuse thousands of cheap-looking KB-sized PNG rows into one
+    partition, serializing the OCR kernel on a single core. An explicit
+    width is exempt from AQE coalescing.
 
     Width = exactly one task per core: the full-cardinality salt spreads
     pages statistically uniformly, so extra task waves only add scheduling
     overhead (measured: 2x width costs ~50% extra wall on the bench leg).
-    Deployments with heterogeneous executors can pass a larger width for
-    straggler hiding.
     """
-    if partitions is None:
-        partitions = docs.sparkSession.sparkContext.defaultParallelism
+    partitions = docs.sparkSession.sparkContext.defaultParallelism
     # a single large parquet file scans as 1-2 tasks; spread the docs
     # across the cluster BEFORE the explode so span generation, the
     # stripper and the join probe all run at full width. At real scale
@@ -319,7 +315,6 @@ def extract(
     buckets: int = 8,
     resume: bool = True,
     character_spacing: float = 8.0,
-    partitions: int | None = None,
     fonts: tuple | list | None = None,
     catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
 ) -> dict:
@@ -377,8 +372,7 @@ def extract(
     # 2 tasks and 64 on 37, so one task writes up to 4 buckets in series.
     slot = (F.array_position(F.lit(pending), F.col("bucket")) - 1).cast("int")
     out = (
-        extract_spans(subset, media, character_spacing,
-                      partitions=partitions, pdfs=pdfs, fonts=fonts)
+        extract_spans(subset, media, character_spacing, pdfs=pdfs, fonts=fonts)
         .withColumn("bucket", bucket_of.cast("int"))
         .repartitionById(len(pending), slot)
     )

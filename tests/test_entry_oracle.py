@@ -6,6 +6,7 @@ Default scale sf0.001 for speed; set OCR_SPARK_ORACLE_SF=/root/testdata/sf0.01
 to rehearse the exact driver configuration.
 """
 
+import importlib
 import math
 import os
 
@@ -106,6 +107,32 @@ def test_oracle_parity(spark, duck, name):
     duck_pdf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
     if name not in EXPECTED_EMPTY:
         assert len(spark_pdf) > 0, f"{name}: vacuous oracle match (0 rows)"
+    _assert_equal(name, spark_pdf, duck_pdf)
+
+
+# (query, operator module, constant, patched value): the registry and its
+# DuckDB twin both read the constant from the operator module when they run,
+# so a changed value moves both sides together
+ONE_HOME = [
+    ("minhash_signatures", "dedup", "MINHASH_BANDS", 6),
+    ("winnow_fingerprints", "dedup", "WINNOW_WINDOW", 6),
+    ("emb_cosine_topk", "similarity", "K", 5),
+    ("events_sessionize", "events", "SESSION_GAP_US", 10 * 60 * 1_000_000),
+    ("top_parts_per_type", "relational", "TOP_PARTS_K", 5),
+    ("doc_split_counts", "sampling", "SPLIT_WEIGHTS", {"train": 0.5, "val": 0.3, "test": 0.2}),
+]
+
+
+@pytest.mark.parametrize(
+    "name, module, const, value", ONE_HOME, ids=[f"{m}.{c}" for _n, m, c, _v in ONE_HOME]
+)
+def test_oracle_reads_operator_constants(spark, duck, monkeypatch, name, module, const, value):
+    mod = importlib.import_module(f"ocr_spark.functions.{module}")
+    assert getattr(mod, const) != value
+    monkeypatch.setattr(mod, const, value)
+    spark_pdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
+    duck_pdf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
+    assert len(spark_pdf) > 0, f"{name}: vacuous oracle match (0 rows)"
     _assert_equal(name, spark_pdf, duck_pdf)
 
 

@@ -190,8 +190,7 @@ def test_extract_spans_equals_driver_walk(
     _write_corpus(d, docs, media, pdfs)
 
     got = extract_spans(
-        read_documents(spark, d), read_media(spark, d),
-        partitions=4, pdfs=read_pdfs(spark, d),
+        read_documents(spark, d), read_media(spark, d), pdfs=read_pdfs(spark, d),
     ).select("doc_id", "ord", "kind", "text", "media_ref").collect()
     assert Counter(map(tuple, got)) == Counter(_oracle(docs, media, pdfs))
 
@@ -249,10 +248,10 @@ def test_extract_resume_commits_the_driver_walk(
     _write_corpus(d, docs, media, pdfs)
     out = f"{d}/out"
 
-    first = extract(spark, d, out, run_id="run-0", buckets=buckets, partitions=4)
+    first = extract(spark, d, out, run_id="run-0", buckets=buckets)
     assert (first["buckets_skipped"], first["buckets_done"]) == (0, buckets)
     _cut_manifest(f"{out}/_manifest", keep)
-    again = extract(spark, d, out, run_id="run-1", buckets=buckets, partitions=4)
+    again = extract(spark, d, out, run_id="run-1", buckets=buckets)
     assert (again["buckets_skipped"], again["buckets_done"]) == (
         len(keep), buckets - len(keep)
     )

@@ -167,8 +167,8 @@ def test_shingle_df_cap_bounds_hot_join_groups(spark):
     assert max_df < hot_df
 
     # uncapped: the hot shingle alone emits ~(0.3n)^2/2 pairs; capped: none
-    assert jaccard_pairs(sh, min_common=1).count() >= hot_df * (hot_df - 1) // 2
-    assert jaccard_pairs(sh, min_common=1, df_max=hot_df - 1).count() == 0
+    assert jaccard_pairs(sh).count() >= hot_df * (hot_df - 1) // 2
+    assert jaccard_pairs(sh, df_max=hot_df - 1).count() == 0
 
     sig = minhash_signatures(sh)
     assert lsh_candidate_pairs(sig).count() > 0  # hot buckets fire uncapped
@@ -202,8 +202,8 @@ def test_lsh_jaccard_est_capped_under_skew(spark, tmp_path):
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     # the blowup the caps exist to prevent: the stop-phrase alone ties
     # every hot-doc pair together ("click here to" + "here to subscribe"
-    # = 2 common shingles, passing min_common=2)
-    uncapped = jaccard_pairs(shingles(docs), min_common=2).count()
+    # = 2 common shingles, passing JACCARD_MIN_COMMON)
+    uncapped = jaccard_pairs(shingles(docs)).count()
     assert uncapped >= hot * (hot - 1) // 2
     got = entrymod.queries()["lsh_jaccard_est"](spark, str(tmp_path))
     assert got.count() == 0

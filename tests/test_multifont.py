@@ -201,12 +201,12 @@ def test_extract_spans_multifont_pipeline(sheets, tmp_path):
         got_multi = {
             (r.media_ref, r.text)
             for r in extract_spans(
-                docs_df, media_df, fonts=("arial", "courier"), partitions=2
+                docs_df, media_df, fonts=("arial", "courier")
             ).collect()
         }
         got_default = {
             (r.media_ref, r.text)
-            for r in extract_spans(docs_df, media_df, partitions=2).collect()
+            for r in extract_spans(docs_df, media_df).collect()
         }
     finally:
         spark.stop()

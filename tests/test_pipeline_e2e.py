@@ -71,10 +71,10 @@ def test_scan_width_probe_skips_wide_splittable_scans(spark, corpus):
     try:
         # tiny split size -> the one corpus file counts as many splits
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
-        wide = _plan_of(extract_spans(docs, media, partitions=4), "formatted")
+        wide = _plan_of(extract_spans(docs, media), "formatted")
         # huge split size -> the same file is genuinely a 1-wide scan
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-        narrow = _plan_of(extract_spans(docs, media, partitions=4), "formatted")
+        narrow = _plan_of(extract_spans(docs, media), "formatted")
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     assert "hashpartitioning(doc_id" not in wide

@@ -15,11 +15,13 @@ its spelling alone, whatever module defines it, so the walk can only err
 towards keeping code. A module or name nothing reaches is dead code; delete
 it or wire it in.
 
-The options audit holds every defaulted parameter of a package function to
+The options audit holds every defaulted parameter of a function of the
+package, of ``__spark_entry__.py``, of ``bench.py`` and of ``tools/*.py`` to
 the same standard: some call of a function of that name, in an entry file
 or in the package, sets it by keyword or by position (a ``**`` splat sets
-every parameter, a ``*`` splat every positional one). A parameter that only
-ever takes its default is a constant in disguise; fold it in.
+every parameter, a ``*`` splat every positional one) to something other than
+the parameter's own literal default. A parameter that only ever takes its
+default is a constant in disguise; fold it in.
 """
 
 import ast
@@ -38,6 +40,10 @@ ENTRY_FILES = (
         for p in glob.glob(os.path.join(REPO, d, "*.py"))
     ),
 )
+
+# files whose defs the options audit covers besides the package's
+# (perfbench/ belongs to the benchmark)
+AUDITED_ENTRY_FILES = tuple(f for f in ENTRY_FILES if not f.startswith("perfbench"))
 
 # top-level names kept only for tests; the walk starts from them too
 TEST_ONLY = {
@@ -202,9 +208,9 @@ def test_every_top_level_name_is_reached_from_an_entry_point():
 
 
 def _defaulted_params(tree: ast.Module):
-    """(function name, parameter, positional index or None) for every
-    defaulted parameter of every def in ``tree``; a method's positional
-    index does not count ``self``."""
+    """(function name, parameter, positional index or None, default) for
+    every defaulted parameter of every def in ``tree``; a method's
+    positional index does not count ``self``."""
     methods = {
         id(s) for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for s in c.body
     }
@@ -214,37 +220,63 @@ def _defaulted_params(tree: ast.Module):
         a = fn.args
         pos = a.posonlyargs + a.args
         shift = 1 if id(fn) in methods else 0
-        for i in range(len(pos) - len(a.defaults), len(pos)):
-            yield fn.name, pos[i].arg, i - shift
+        first = len(pos) - len(a.defaults)
+        for i, default in enumerate(a.defaults, first):
+            yield fn.name, pos[i].arg, i - shift, default
         for arg, default in zip(a.kwonlyargs, a.kw_defaults):
             if default is not None:
-                yield fn.name, arg.arg, None
+                yield fn.name, arg.arg, None, default
 
 
-def _sets(call: ast.Call, param: str, index: int | None) -> bool:
-    if any(k.arg in (None, param) for k in call.keywords):
-        return True
+def _literal(node: ast.expr):
+    """(type, value) of a literal expression; None for anything else."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return None
+    return type(v), v
+
+
+def _sets(call: ast.Call, param: str, index: int | None, default: ast.expr) -> bool:
+    """Whether ``call`` passes ``param`` a value other than its literal
+    ``default``."""
+    dflt = _literal(default)
+
+    def differs(arg: ast.expr) -> bool:
+        return dflt is None or _literal(arg) != dflt
+
+    for k in call.keywords:
+        if k.arg is None:
+            return True
+        if k.arg == param:
+            return differs(k.value)
     if index is None:
         return False
-    return len(call.args) > index or any(isinstance(a, ast.Starred) for a in call.args)
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    return len(call.args) > index and differs(call.args[index])
 
 
 def _unset_options(mods: dict[str, str]) -> list[str]:
     """``module.function(parameter)`` for every defaulted parameter of the
-    package that no call in an entry file or the package sets."""
+    package and the audited entry files that no call in an entry file or the
+    package sets."""
     trees = {mod: _parse(path) for mod, path in mods.items()}
+    entry_trees = {f: _parse(os.path.join(REPO, f)) for f in ENTRY_FILES}
     calls: dict[str, list[ast.Call]] = {}
-    for tree in [*trees.values(), *(_parse(os.path.join(REPO, f)) for f in ENTRY_FILES)]:
+    for tree in [*trees.values(), *entry_trees.values()]:
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 f = n.func
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
                 calls.setdefault(name, []).append(n)
+    for f in AUDITED_ENTRY_FILES:
+        trees[f[: -len(".py")].replace(os.sep, ".")] = entry_trees[f]
     return sorted(
         f"{mod}.{fn}({param})"
         for mod, tree in trees.items()
-        for fn, param, index in _defaulted_params(tree)
-        if not any(_sets(c, param, index) for c in calls.get(fn, ()))
+        for fn, param, index, default in _defaulted_params(tree)
+        if not any(_sets(c, param, index, default) for c in calls.get(fn, ()))
     )
 
 
@@ -253,7 +285,7 @@ def test_every_option_is_set_by_some_caller():
     stray = sorted(set(unset) - TEST_SET_OPTIONS.keys())
     assert not stray, (
         f"{len(stray)} defaulted parameters no entry point or package call "
-        f"sets; make each a constant: {stray}"
+        f"sets to anything but the default; make each a constant: {stray}"
     )
     stale = sorted(TEST_SET_OPTIONS.keys() - set(unset))
     assert not stale, f"allowlisted but set by a real caller, or gone: {stale}"

@@ -2,8 +2,8 @@
 # Catalyst plan audit of the headline queries: verifies predicate pushdown
 # (PushedFilters), column pruning (ReadSchema), join strategy, and counts
 # exchanges/python nodes. Output recorded in BENCH/PLANS.md per round.
-import sys, re, io
-sys.path.insert(0, "/root/repo")
+import os, sys, re, io
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from contextlib import redirect_stdout
 from pyspark.sql import SparkSession
 import __spark_entry__ as e

@@ -106,16 +106,14 @@ def main() -> None:
                fonts=args.fonts)
         return
 
-    from ocr_spark.fixtures import FIXTURE_VERSION, write_corpus
+    from ocr_spark.fixtures import FIXTURE_VERSION, ensure_built, write_corpus
 
     tag = f"{args.docs}x{args.pages}{'_skew' if args.skew else ''}"
     corpus = f"/tmp/ocr_spark_scaling/{tag}"
-    marker = os.path.join(corpus, "_DONE")
-    want = f"v{FIXTURE_VERSION} {tag}"
-    have = open(marker).read() if os.path.exists(marker) else None
-    if have != want:
-        write_corpus(corpus, n_docs=args.docs, n_pages=args.pages, skew=args.skew)
-        open(marker, "w").write(want)
+    ensure_built(
+        corpus, f"v{FIXTURE_VERSION} {tag}",
+        lambda: write_corpus(corpus, n_docs=args.docs, n_pages=args.pages, skew=args.skew),
+    )
 
     results = []
     for k in [int(c) for c in args.cpus.split(",")]:
