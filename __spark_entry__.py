@@ -1759,10 +1759,11 @@ def oracle_sql() -> dict[str, str]:
     }
     s_cols = ", ".join(f"s_{lang}" for lang in langs)
     split_bucket = f"substr(md5('{sampling.SPLIT_SALT}|' || doc_id::VARCHAR), 1, 8)"
-    split_whens = " ".join(
-        f"WHEN {split_bucket} < '{threshold}' THEN '{name}'"
-        for name, threshold in sampling.split_thresholds()
-    )
+    *first_splits, last_split = sampling.SPLIT_WEIGHTS
+    split_whens, cum = "", 0.0
+    for name in first_splits:
+        cum += sampling.SPLIT_WEIGHTS[name]
+        split_whens += f" WHEN {split_bucket} < '{_ht(cum)}' THEN '{name}'"
     sim_width = 64 // dedup.SIMHASH_BANDS
     emb_pairs = f"SELECT vec_a AS doc_a, vec_b AS doc_b FROM ({_sql_near_dup_pairs()})"
 
@@ -1962,12 +1963,13 @@ def oracle_sql() -> dict[str, str]:
             FROM p ASOF LEFT JOIN c
               ON p.user_id = c.user_id AND p.ts >= c.ts
         """,
-        # thresholds computed by the SAME helper the engine uses, compared
+        # cumulative thresholds summed here from SPLIT_WEIGHTS, each
+        # formatted by the SAME hex helper the engine uses, compared
         # lexicographically against the md5 hex prefix (identical ordering
         # in both engines — no integer parsing)
         "doc_split_counts": f"""
             SELECT lang,
-                   CASE {split_whens} ELSE '{list(sampling.SPLIT_WEIGHTS)[-1]}' END AS split,
+                   CASE{split_whens} ELSE '{last_split}' END AS split,
                    COUNT(*)::BIGINT AS n_docs
             FROM documents GROUP BY 1, 2
         """,

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .text import tokens
 
@@ -36,15 +36,16 @@ SIMHASH_MAX_HAMMING = 3
 SIMHASH_BANDS = 4  # > SIMHASH_MAX_HAMMING: the pigeonhole guarantee
 JACCARD_MIN_COMMON = 2  # shared shingles for a Jaccard pair
 
-# The word shingles of the token array ``_toks``, in order. A doc with fewer
-# than SHINGLE_WORDS tokens has none (sequence() would otherwise generate a
-# *descending* range in Spark).
-_SHINGLES = (
-    f"CASE WHEN size(_toks) < {SHINGLE_WORDS} THEN array() "
-    f"ELSE transform(sequence(1, size(_toks) - {SHINGLE_WORDS - 1}), i -> concat_ws(' ', "
-    + ", ".join(f"_toks[i - 1 + {j}]" for j in range(SHINGLE_WORDS))
-    + ")) END"
-)
+def _shingles() -> Column:
+    """The word shingles of the token array ``_toks``, in order. A doc with
+    fewer than SHINGLE_WORDS tokens has none (sequence() would otherwise
+    generate a *descending* range in Spark)."""
+    return F.expr(
+        f"CASE WHEN size(_toks) < {SHINGLE_WORDS} THEN array() "
+        f"ELSE transform(sequence(1, size(_toks) - {SHINGLE_WORDS - 1}), i -> concat_ws(' ', "
+        + ", ".join(f"_toks[i - 1 + {j}]" for j in range(SHINGLE_WORDS))
+        + ")) END"
+    )
 
 
 def exact_duplicates(df: DataFrame) -> DataFrame:
@@ -62,7 +63,7 @@ def shingles(df: DataFrame) -> DataFrame:
     """Distinct word shingles per doc: (doc_id, shingle)."""
     return (
         df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
-        .select(F.col("doc_id"), F.explode(F.expr(_SHINGLES)).alias("shingle"))
+        .select(F.col("doc_id"), F.explode(_shingles()).alias("shingle"))
         .distinct()
     )
 
@@ -542,7 +543,7 @@ def winnow_fingerprints(df: DataFrame) -> DataFrame:
 
     hashed = (
         df.select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
-        .select(F.col("doc_id"), F.posexplode(F.expr(_SHINGLES)).alias("pos", "sh"))
+        .select(F.col("doc_id"), F.posexplode(_shingles()).alias("pos", "sh"))
         .select(F.col("doc_id"), "pos", F.md5("sh").alias("h"))
     )
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(WINNOW_WINDOW - 1), 0)

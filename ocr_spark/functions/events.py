@@ -105,12 +105,13 @@ def asof_join(left: DataFrame, right: DataFrame, prefix: str = "asof_") -> DataF
 def range_count_preceding(
     left: DataFrame,
     right: DataFrame,
-    window_us: int = SESSION_GAP_US,
+    window_us: int | None = None,
     out_col: str = "n_prior",
 ) -> DataFrame:
     """Range join, bucketed: count right rows with timestamp in
     ``(left.ts - window_us, left.ts]`` for the same ``user_id``, for
-    every left row (zero-match rows kept with count 0).
+    every left row (zero-match rows kept with count 0). ``window_us``
+    defaults to SESSION_GAP_US as it is when the call runs.
 
     Spark has no native range join, and the naive theta-join
     (``r.ts BETWEEN l.ts - W AND l.ts``) plans as a per-group
@@ -127,6 +128,8 @@ def range_count_preceding(
     grouped on, and dropped before output), so two identical left rows
     each keep their own count instead of collapsing into one summed row.
     """
+    if window_us is None:
+        window_us = SESSION_GAP_US
     reserved = {"_l_us", "_bucket", "_r_by", "_r_us", "_l_rid"}
     for name, cols in (("left", left.columns), ("right", right.columns)):
         clash = reserved.intersection(cols)

@@ -37,17 +37,6 @@ def _hex_threshold(fraction: float) -> str:
     return format(max(0, int(fraction * _SPACE)), "08x")
 
 
-def split_thresholds() -> list[tuple[str, str]]:
-    """(split, hex threshold) for every split of SPLIT_WEIGHTS but the last:
-    a row lands in the first split whose threshold its hash bucket sorts
-    below, else in the last split (which absorbs rounding)."""
-    out, cum = [], 0.0
-    for name in list(SPLIT_WEIGHTS)[:-1]:
-        cum += SPLIT_WEIGHTS[name]
-        out.append((name, _hex_threshold(cum)))
-    return out
-
-
 def hash_bucket(id_col: Column, salt: str) -> Column:
     """First 8 hex chars of md5(salt|id) — the uniform sampling key.
     concat (not concat_ws) so a NULL id propagates to a NULL bucket,
@@ -70,15 +59,17 @@ def hash_split(df: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by cumulative hash ranges,
     in column ``split``.
 
-    SPLIT_WEIGHTS maps split name -> fraction (see split_thresholds).
-    Assignment is per-row and independent of everything except
+    SPLIT_WEIGHTS maps split name -> fraction (the last split absorbs
+    rounding). Assignment is per-row and independent of everything except
     (salt, doc_id), so splits are stable under corpus growth: adding
     documents never moves an existing document between splits — the
     property shuffling-based splitters lack.
     """
+    *first, last = SPLIT_WEIGHTS
     bucket = hash_bucket(F.col("doc_id"), SPLIT_SALT)
-    expr = F
-    for name, threshold in split_thresholds():
+    cum, expr = 0.0, F
+    for name in first:
+        cum += SPLIT_WEIGHTS[name]
         # F.when opens the CASE, Column.when extends it
-        expr = expr.when(bucket < threshold, F.lit(name))
-    return df.withColumn("split", expr.otherwise(F.lit(list(SPLIT_WEIGHTS)[-1])))
+        expr = expr.when(bucket < _hex_threshold(cum), F.lit(name))
+    return df.withColumn("split", expr.otherwise(F.lit(last)))

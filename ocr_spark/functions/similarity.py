@@ -146,7 +146,7 @@ def banded_sign_buckets(df: DataFrame, n_bands: int) -> DataFrame:
     return df.select(F.col("vec_id"), F.posexplode(buckets).alias("band", "bucket"))
 
 
-def near_dup_pairs_lsh(df: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+def near_dup_pairs_lsh(df: DataFrame, n_bands: int | None = None) -> DataFrame:
     """Scale-safe embedding near-duplicate pairs: a banded sign-LSH equi-join
     generates candidates (pairs agreeing on any band's full sign pattern),
     then the exact cosine predicate (> NEAR_DUP_COSINE) re-checks each
@@ -157,8 +157,9 @@ def near_dup_pairs_lsh(df: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     bands 1..n-1 recover cross-bucket near-dups it missed (the recall
     contract vs the brute-force baseline is asserted in
     tests/test_functions.py). Output: (vec_a, vec_b, sim_r4), same shape as
-    the brute-force oracle form."""
-    bk = banded_sign_buckets(df, n_bands)
+    the brute-force oracle form. ``n_bands`` defaults to N_BANDS as it is
+    when the call runs."""
+    bk = banded_sign_buckets(df, N_BANDS if n_bands is None else n_bands)
     a = bk.select(F.col("vec_id").alias("vec_a"), "band", "bucket")
     b = bk.select(F.col("vec_id").alias("vec_b"), "band", "bucket")
     cand = (
@@ -246,14 +247,20 @@ def ivf_assign(df, centroids):
     )
 
 
-def ivf_topk(df, n_clusters: int = IVF_CLUSTERS, sample_cap: int = IVF_SAMPLE_CAP):
+def ivf_topk(df, n_clusters: int | None = None, sample_cap: int | None = None):
     """IVF approximate top-k: queries search only their IVF_NPROBE nearest
     inverted lists instead of the whole corpus — the similarity join becomes
     an equi-join on cluster id with selectivity IVF_NPROBE/n_clusters.
+    ``n_clusters`` and ``sample_cap`` default to IVF_CLUSTERS and
+    IVF_SAMPLE_CAP as they are when the call runs.
     Output: (query_id, neighbor_id, rnk, sim_r4), same shape as cosine_topk."""
     import numpy as np
 
-    C = train_ivf_centroids(df, n_clusters, sample_cap)
+    C = train_ivf_centroids(
+        df,
+        IVF_CLUSTERS if n_clusters is None else n_clusters,
+        IVF_SAMPLE_CAP if sample_cap is None else sample_cap,
+    )
     base = with_norms(df).join(ivf_assign(df, C).select("vec_id", "cluster"), "vec_id")
 
     q_rows = base.where(F.col("vec_id") < N_QUERIES).select("vec_id", "vec").collect()

@@ -116,23 +116,30 @@ def test_oracle_parity(spark, duck, name):
 ONE_HOME = [
     ("minhash_signatures", "dedup", "MINHASH_BANDS", 6),
     ("winnow_fingerprints", "dedup", "WINNOW_WINDOW", 6),
+    ("ngram_jaccard", "dedup", "SHINGLE_WORDS", 2),
     ("emb_cosine_topk", "similarity", "K", 5),
+    ("emb_near_dups_lsh", "similarity", "N_BANDS", 2),
+    ("emb_ivf_topk", "similarity", "IVF_CLUSTERS", 8),
     ("events_sessionize", "events", "SESSION_GAP_US", 10 * 60 * 1_000_000),
+    ("events_range_clicks", "events", "SESSION_GAP_US", 10 * 60 * 1_000_000),
     ("top_parts_per_type", "relational", "TOP_PARTS_K", 5),
     ("doc_split_counts", "sampling", "SPLIT_WEIGHTS", {"train": 0.5, "val": 0.3, "test": 0.2}),
 ]
 
 
 @pytest.mark.parametrize(
-    "name, module, const, value", ONE_HOME, ids=[f"{m}.{c}" for _n, m, c, _v in ONE_HOME]
+    "name, module, const, value", ONE_HOME, ids=[f"{n}-{c}" for n, _m, c, _v in ONE_HOME]
 )
 def test_oracle_reads_operator_constants(spark, duck, monkeypatch, name, module, const, value):
     mod = importlib.import_module(f"ocr_spark.functions.{module}")
     assert getattr(mod, const) != value
+    before = _canon(duck.execute(entrymod.oracle_sql()[name]).fetchdf())
     monkeypatch.setattr(mod, const, value)
     spark_pdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
     duck_pdf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
     assert len(spark_pdf) > 0, f"{name}: vacuous oracle match (0 rows)"
+    # the constant must decide the answer, or both sides could ignore it
+    assert not before.equals(_canon(duck_pdf)), f"{name}: {const} changes nothing"
     _assert_equal(name, spark_pdf, duck_pdf)
 
 

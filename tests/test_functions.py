@@ -136,13 +136,14 @@ def test_sign_lsh_finds_planted_near_duplicate(spark):
     assert (0, 99990, 1) in got  # same signs -> same bucket -> top-1 by cosine
 
 
-def test_shingle_df_cap_bounds_hot_join_groups(spark):
+def test_shingle_df_cap_bounds_hot_join_groups(spark, monkeypatch):
     """Skew fixture: one stop-phrase shingle shared by 30% of docs. With the
     DF cap the hot shingle contributes no pairs (its join group is dropped
     before the self-join), while genuinely shared rare shingles survive —
     so pair count stays bounded by df_max^2 per shingle at any scale."""
     from pyspark.sql import functions as F
 
+    from ocr_spark.functions import dedup
     from ocr_spark.functions.dedup import (
         cap_shingle_df, jaccard_pairs, lsh_candidate_pairs,
         minhash_signatures, shingles,
@@ -166,6 +167,9 @@ def test_shingle_df_cap_bounds_hot_join_groups(spark):
     )
     assert max_df < hot_df
 
+    # one common shingle makes a pair, so a capped count of 0 shows that
+    # the cap drops BOTH hot shingles ("click here to", "here to subscribe")
+    monkeypatch.setattr(dedup, "JACCARD_MIN_COMMON", 1)
     # uncapped: the hot shingle alone emits ~(0.3n)^2/2 pairs; capped: none
     assert jaccard_pairs(sh).count() >= hot_df * (hot_df - 1) // 2
     assert jaccard_pairs(sh, df_max=hot_df - 1).count() == 0
