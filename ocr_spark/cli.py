@@ -18,20 +18,24 @@ def main(argv=None):
     ap = argparse.ArgumentParser(prog="ocr_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    ex = sub.add_parser("extract", help="run the extraction pipeline")
+    # the flags of both Spark subcommands
+    spark_job = argparse.ArgumentParser(add_help=False)
+    spark_job.add_argument("--character-spacing", type=float, default=8.0)
+    spark_job.add_argument(
+        "--fonts", default="arial", type=lambda s: tuple(f for f in s.split(",") if f),
+        help="comma list of bundled font sheets to learn (arial,courier); "
+             "multiple fonts accumulate into one template set",
+    )
+    spark_job.add_argument("--master", default=None,
+                           help="override master (default: from spark-submit)")
+    spark_job.add_argument("--shuffle-partitions", type=int, default=None)
+
+    ex = sub.add_parser("extract", parents=[spark_job], help="run the extraction pipeline")
     ex.add_argument("--input", required=True)
     ex.add_argument("--output", required=True)
     ex.add_argument("--run-id", default="run-0")
     ex.add_argument("--buckets", type=int, default=8)
     ex.add_argument("--no-resume", action="store_true")
-    ex.add_argument("--character-spacing", type=float, default=8.0)
-    ex.add_argument(
-        "--fonts", default="arial",
-        help="comma list of bundled font sheets to learn (arial,courier); "
-             "multiple fonts accumulate into one template set",
-    )
-    ex.add_argument("--master", default=None, help="override master (default: from spark-submit)")
-    ex.add_argument("--shuffle-partitions", type=int, default=None)
     ex.add_argument(
         "--catalog", choices=("parquet", "iceberg"), default="parquet",
         help="commit substrate: parquet (default; manifest-log substitute) "
@@ -43,20 +47,14 @@ def main(argv=None):
         help="warehouse URI for --catalog iceberg (default: <output>/warehouse)",
     )
 
-    st = sub.add_parser("stream", help="streaming extraction over arriving parquet files")
+    st = sub.add_parser("stream", parents=[spark_job],
+                        help="streaming extraction over arriving parquet files")
     st.add_argument("--stream-dir", required=True, help="directory watched for documents parquet")
     st.add_argument("--media-dir", required=True)
     st.add_argument("--output", required=True)
     st.add_argument("--checkpoint", required=True)
     st.add_argument("--continuous", action="store_true",
                     help="keep running (default: drain available files and stop)")
-    st.add_argument("--character-spacing", type=float, default=8.0)
-    st.add_argument(
-        "--fonts", default="arial",
-        help="comma list of bundled font sheets to learn (arial,courier)",
-    )
-    st.add_argument("--master", default=None)
-    st.add_argument("--shuffle-partitions", type=int, default=None)
 
     dr = sub.add_parser(
         "debug-render",
@@ -116,7 +114,7 @@ def main(argv=None):
                 buckets=args.buckets,
                 resume=not args.no_resume,
                 character_spacing=args.character_spacing,
-                fonts=tuple(f for f in args.fonts.split(",") if f),
+                fonts=args.fonts,
                 catalog=catalog_name,
             )
             print(json.dumps(metrics))
@@ -129,7 +127,7 @@ def main(argv=None):
                 args.checkpoint,
                 character_spacing=args.character_spacing,
                 available_now=not args.continuous,
-                fonts=tuple(f for f in args.fonts.split(",") if f),
+                fonts=args.fonts,
             )
             q.awaitTermination()
             print(json.dumps({"stream": "drained" if not args.continuous else "stopped"}))

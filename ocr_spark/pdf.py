@@ -44,6 +44,14 @@ _LENGTH = re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")
 # unrecoverable undercount produces; zlib payload tails are effectively
 # random bytes, so an all-whitespace tail is already a pathological input.
 _ENDSTREAM_AT = re.compile(rb"\s{0,1024}endstream")
+# inflated bytes one Flate stream may produce; a stream past it is skipped
+# as non-text, so a stream holds at most cap + 1 inflated bytes in memory.
+# Flate reaches ~1000:1 on uniform data: without a cap a 254 KB pdf holding
+# 256 MiB of zeros inflated all of it (557 MB traced peak). The value is
+# not sized on real pdfs (the repository holds none; the synthetic
+# fixtures' largest stream inflates to 146 bytes): it only has to sit far
+# above any text content stream, since images and fonts hold no text.
+_MAX_INFLATED = 1 << 26
 _BT_ET = re.compile(rb"BT(.*?)ET", re.DOTALL)
 # ( ... ) with escaped chars, followed by the operator
 _TJ_ONE = re.compile(rb"\(((?:\\.|[^\\()])*)\)\s*(Tj|')")
@@ -146,15 +154,30 @@ def _iter_streams(pdf: bytes):
         pos = keyword_end
 
 
+def _inflate(data: bytes) -> bytes | None:
+    """A Flate stream body inflated, or None past ``_MAX_INFLATED`` bytes.
+    An uncompressed content stream (or not Flate, or a truncated one) comes
+    back as-is, to be parsed raw."""
+    inflater = zlib.decompressobj()
+    try:
+        inflated = inflater.decompress(data, _MAX_INFLATED + 1)
+    except zlib.error:
+        return data
+    if len(inflated) > _MAX_INFLATED:
+        return None
+    return inflated if inflater.eof else data
+
+
 def extract_text(pdf: bytes) -> list[str]:
     """Per-content-stream text, in document order; streams with no text
-    operators (images, fonts, xref streams) are skipped."""
+    operators (images, fonts, xref streams) are skipped, and so is a Flate
+    stream that inflates past ``_MAX_INFLATED`` bytes."""
     texts = []
     for data in _iter_streams(pdf):
-        try:
-            data = zlib.decompress(data)
-        except zlib.error:
-            pass  # uncompressed content stream (or not Flate): parse as-is
+        # the helper drops an oversized buffer before the next stream inflates
+        data = _inflate(data)
+        if data is None:
+            continue
         blocks = [_block_text(b.group(1)) for b in _BT_ET.finditer(data)]
         text = " ".join(t for t in blocks if t)
         if text:

@@ -21,7 +21,8 @@ Scale design (north rule: 10^12 docs, N vs 4N executors):
   skips committed buckets and safely rewrites half-written ones — append-only
   Iceberg-style commit protocol on plain parquet.
 * ``stream_extract`` runs the same plan per micro-batch of a directory of
-  arriving documents files.
+  arriving documents files and commits each micro-batch as one bucket
+  through the same ``commit_buckets`` path.
 """
 
 from __future__ import annotations
@@ -295,74 +296,30 @@ class ParquetSink:
 
 def committed_buckets(manifest: DataFrame | None) -> set[int]:
     """Buckets with a committed manifest row (a re-committed bucket just
-    has more than one)."""
+    has more than one). Raises on rows of ``stream_extract`` (run_id
+    ``stream``): their partition ids are micro-batch ids, not doc buckets."""
     if manifest is None:
         return set()
-    return {
-        r.partition_id
-        for r in manifest.where(F.col("status") == "committed")
-        .select("partition_id")
-        .distinct()
-        .collect()
-    }
+    rows = (manifest.where(F.col("status") == "committed")
+            .select("partition_id", "run_id").distinct().collect())
+    if any(r.run_id == "stream" for r in rows):
+        raise ValueError("output dir holds stream_extract output; extract needs its own")
+    return {r.partition_id for r in rows}
 
 
-def extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    run_id: str = "run-0",
-    buckets: int = 8,
-    resume: bool = True,
-    character_spacing: float = 8.0,
-    fonts: tuple | list | None = None,
-    catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
-) -> dict:
-    """Run the full job with bucketed idempotent commits. Returns metrics.
+def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int:
+    """Write the span rows ``out`` (each carrying its ``bucket``) through
+    ``sink`` and commit one manifest row per ``pending`` bucket. Returns the
+    number of spans committed.
 
-    All pending (uncommitted) buckets are processed in one pass: a single
-    partitioned write (`spans/bucket=K`, dynamic partition overwrite) plus a
-    single per-bucket stats pass and one manifest write — so job-scheduling
-    overhead is amortized across buckets instead of paying write+agg+commit
-    per bucket (which capped scaling efficiency at small inputs). The commit
-    unit is the bucket: it counts as committed only once its manifest row
-    lands, and a rerun rewrites any bucket without one.
-
-    ``catalog`` switches the commit substrate from the parquet substitute to
-    a real Iceberg catalog of that name (guarded — the CLI calls
-    ``pipeline.catalog.require_iceberg`` first; see ``catalog.IcebergSink``).
-    The pass, commit unit, and resume semantics are identical in both
-    modes.
+    All pending buckets go in one pass: a single partitioned write
+    (`spans/bucket=K`, dynamic partition overwrite) plus a single per-bucket
+    stats pass and one manifest write — so job-scheduling overhead is
+    amortized across buckets instead of paying write+agg+commit per bucket
+    (which capped scaling efficiency at small inputs). The commit unit is
+    the bucket: it counts as committed only once its manifest row lands,
+    and a rerun rewrites any bucket without one.
     """
-    import re as _re
-
-    # run_id lands inside a SQL VALUES literal (manifest commit below):
-    # restrict it so a quote/metachar can never abort the run mid-commit
-    if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
-        raise ValueError(
-            f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r}); it is "
-            "embedded in the manifest SQL literal and in output paths"
-        )
-
-    docs = read_documents(spark, input_dir)
-    media = read_media(spark, input_dir)
-    pdfs = read_pdfs(spark, input_dir)
-    if catalog:
-        from .catalog import IcebergSink
-
-        sink = IcebergSink(spark, catalog)
-    else:
-        sink = ParquetSink(spark, output_dir)
-
-    committed = committed_buckets(sink.manifest()) if resume else set()
-    pending = [b for b in range(buckets) if b not in committed]
-    metrics = {"buckets_total": buckets, "buckets_skipped": len(committed), "spans": 0}
-    if not pending:
-        metrics["buckets_done"] = 0
-        return metrics
-
-    bucket_of = F.crc32(F.col("doc_id")) % buckets
-    subset = docs.where(bucket_of.isin(pending))
     # one shuffle collapses the tiny output rows to one file per bucket
     # BEFORE the committer: a partitionBy write from W wide partitions
     # creates W x |pending| files whose dynamic-overwrite commit is
@@ -371,19 +328,14 @@ def extract(
     # `pending`, one bucket a task: hashing the bucket ids puts 4 buckets on
     # 2 tasks and 64 on 37, so one task writes up to 4 buckets in series.
     slot = (F.array_position(F.lit(pending), F.col("bucket")) - 1).cast("int")
-    out = (
-        extract_spans(subset, media, character_spacing, pdfs=pdfs, fonts=fonts)
-        .withColumn("bucket", bucket_of.cast("int"))
-        .repartitionById(len(pending), slot)
-    )
-    sink.write_buckets(out, pending)
+    sink.write_buckets(out.repartitionById(len(pending), slot), pending)
 
     # manifest stats come from READING BACK the written files — cheaper
     # than persisting the whole output through the write (measured), and
     # the committed row counts/checksums then describe what actually
     # landed on storage, not what the plan produced in memory.
     stats = {
-        int(r["bucket"]): r
+        r["bucket"]: (r["docs"], r["spans"], r["media"], r["chk"])
         for r in sink.read_buckets(pending).groupBy("bucket")
         .agg(
             F.countDistinct("doc_id").alias("docs"),
@@ -406,29 +358,76 @@ def extract(
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     values = []
     for b in pending:
-        r = stats.get(b)
-        docs_n = int(r["docs"]) if r else 0
-        spans_n = int(r["spans"]) if r else 0
-        media_n = int(r["media"]) if r else 0
-        chk = str(r["chk"]) if r else "0"
+        docs_n, spans_n, media_n, chk = stats.get(b, (0, 0, 0, 0))
         values.append(
             f"('{run_id}', {b}, CAST({docs_n} AS BIGINT), CAST({spans_n} AS BIGINT), "
             f"CAST({media_n} AS BIGINT), '{chk}', '{now}', 'committed')"
         )
-        metrics["spans"] += spans_n
     # append-only commit log: one small file per run, no partition dirs,
     # no dynamic-overwrite listing — a re-committed bucket would just add a
     # row, and committed_buckets de-duplicates. Built as a SQL VALUES
     # literal (JVM LocalRelation): a python-list DataFrame would spin up a
     # Python runner for an 8-row write.
-    sink.append_manifest(spark.sql(
+    sink.append_manifest(out.sparkSession.sql(
         "SELECT * FROM VALUES "
         + ", ".join(values)
         + " AS t(run_id, partition_id, doc_count, span_count, media_count,"
         "        checksum, committed_at, status)"
     ).coalesce(1))
+    return sum(v[1] for v in stats.values())
 
-    metrics["buckets_done"] = len(pending)
+
+def extract(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    run_id: str = "run-0",
+    buckets: int = 8,
+    resume: bool = True,
+    character_spacing: float = 8.0,
+    fonts: tuple | list | None = None,
+    catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
+) -> dict:
+    """Run the full job with bucketed idempotent commits (``commit_buckets``
+    over every pending bucket). Returns metrics. A resume raises on a dir
+    that ``stream_extract`` wrote (see ``committed_buckets``).
+
+    ``catalog`` switches the commit substrate from the parquet substitute to
+    a real Iceberg catalog of that name (guarded — the CLI calls
+    ``pipeline.catalog.require_iceberg`` first; see ``catalog.IcebergSink``).
+    The pass, commit unit, and resume semantics are identical in both
+    modes.
+    """
+    import re as _re
+
+    # run_id lands inside a SQL VALUES literal (manifest commit): restrict
+    # it so a quote/metachar can never abort the run mid-commit
+    if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
+        raise ValueError(
+            f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r}); it is "
+            "embedded in the manifest SQL literal and in output paths"
+        )
+
+    docs = read_documents(spark, input_dir)
+    media = read_media(spark, input_dir)
+    pdfs = read_pdfs(spark, input_dir)
+    if catalog:
+        from .catalog import IcebergSink
+
+        sink = IcebergSink(spark, catalog)
+    else:
+        sink = ParquetSink(spark, output_dir)
+
+    committed = committed_buckets(sink.manifest()) if resume else set()
+    pending = [b for b in range(buckets) if b not in committed]
+    metrics = {"buckets_total": buckets, "buckets_skipped": len(committed),
+               "spans": 0, "buckets_done": len(pending)}
+    if pending:
+        bucket_of = F.crc32(F.col("doc_id")) % buckets
+        out = extract_spans(
+            docs.where(bucket_of.isin(pending)), media, character_spacing, pdfs=pdfs, fonts=fonts
+        ).withColumn("bucket", bucket_of.cast("int"))
+        metrics["spans"] = commit_buckets(sink, out, pending, run_id)
     return metrics
 
 
@@ -448,13 +447,16 @@ def stream_extract(
 
     The reference is strictly batch (SURVEY.md §2.8); this is a Spark-native
     addition. Each micro-batch runs ``extract_spans``, the batch plan, in
-    ``foreachBatch``. The streaming engine's checkpoint (offsets and WAL)
-    lets a killed stream resume at the last committed micro-batch, and each
-    batch's output goes to its own ``batch_id`` partition, so a replayed
-    batch overwrites itself instead of duplicating (exactly-once on top of
-    the file source's at-least-once replay)."""
+    ``foreachBatch`` and commits it through ``commit_buckets`` as one bucket
+    numbered by its batch id. The checkpoint lets a killed stream resume at
+    the last finished micro-batch; a replayed batch overwrites only its own
+    bucket, and a manifest row it appends twice counts once
+    (``committed_buckets``), so output is exactly-once. The output dir
+    belongs to the stream alone: ``extract`` refuses to resume from it, and
+    a stream started on a batch run's dir would overwrite its buckets."""
     media = read_media(spark, media_dir)
     pdfs = read_pdfs(spark, media_dir)
+    sink = ParquetSink(spark, output_dir)
 
     reader = spark.readStream.schema(DOCUMENTS)
     if max_files_per_trigger:
@@ -464,13 +466,7 @@ def stream_extract(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         out = extract_spans(batch_df, media, character_spacing=character_spacing,
                             pdfs=pdfs, fonts=fonts)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/spans")
-        )
+        commit_buckets(sink, out.withColumn("bucket", F.lit(batch_id)), [batch_id], "stream")
 
     writer = (
         docs.writeStream.foreachBatch(process)

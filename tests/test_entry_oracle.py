@@ -81,7 +81,6 @@ def _assert_equal(name, spark_pdf, duck_pdf):
 
 
 ORACLE_NAMES = sorted(entrymod.oracle_sql())
-ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 # queries whose CORRECT answer is zero rows at test scale; every other
 # oracle match must be non-vacuous (a 0==0 pass hides a broken predicate,
@@ -141,16 +140,6 @@ def test_oracle_reads_operator_constants(spark, duck, monkeypatch, name, module,
     # the constant must decide the answer, or both sides could ignore it
     assert not before.equals(_canon(duck_pdf)), f"{name}: {const} changes nothing"
     _assert_equal(name, spark_pdf, duck_pdf)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    df = entrymod.queries()[name](spark, SF_DIR)
-    n = df.count()
-    assert n > 0 or name == "dedup_exact", f"{name}: produced {n} rows"
-    # schema must be stable across invocations
-    df2 = entrymod.queries()[name](spark, SF_DIR)
-    assert df.schema == df2.schema
 
 
 def test_entry_smoke(spark):

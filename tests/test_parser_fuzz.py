@@ -198,6 +198,36 @@ def test_pdf_mutation_never_crashes(pages, compress, seed):
     assert all(isinstance(t, str) for t in out)
 
 
+def test_pdf_flate_bombs_are_skipped_with_bounded_memory():
+    """Decompression bombs, one whole Flate stream of 4x the per-stream
+    inflation cap in zeros (about 250 KB compressed) and two truncated ones
+    (no end marker), are skipped as non-text: the text stream after them
+    still parses, and inflating them holds no more than a small multiple
+    of the cap."""
+    import tracemalloc
+    import zlib as _zlib
+
+    from ocr_spark import pdf
+
+    z = _zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    bomb = b"".join(z.compress(zeros) for _ in range(4 * pdf._MAX_INFLATED >> 20)) + z.flush()
+    streams = [bomb, bomb[: len(bomb) // 2], bomb[: len(bomb) // 2],
+               _zlib.compress(b"BT (after the bombs) Tj ET")]
+    blob = b"%PDF-1.4\n" + b"".join(
+        b"%d 0 obj\n<< /Length %d /Filter /FlateDecode >>\nstream\n" % (i + 1, len(s))
+        + s + b"\nendstream\nendobj\n"
+        for i, s in enumerate(streams)
+    ) + b"%%EOF\n"
+    tracemalloc.start()
+    try:
+        assert pdf.extract_text(blob) == ["after the bombs"]
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 3 * pdf._MAX_INFLATED, peak
+
+
 # --------------------------------------------------------------------------
 # png (page rasters / F8 debug renders)
 # --------------------------------------------------------------------------

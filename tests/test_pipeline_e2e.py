@@ -112,10 +112,16 @@ def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
 
 def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     """Streaming extraction over two arriving files yields exactly the
-    oracle's spans, and a restart on the same checkpoint adds none."""
+    oracle's spans. Each micro-batch commits as one bucket numbered by its
+    batch id, with one manifest row whose counts and checksum describe that
+    bucket's spans, and a restart on the same checkpoint adds no span and
+    no manifest row. A batch resume over the stream's dir refuses to
+    start."""
+    import zlib
+
     import pyarrow.parquet as pq
 
-    from ocr_spark.pipeline.job import stream_extract
+    from ocr_spark.pipeline.job import extract, read_output, stream_extract
 
     stream_dir = str(tmp_path / "incoming")
     os.makedirs(stream_dir)
@@ -125,7 +131,7 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     pq.write_table(t.slice(0, n // 2), os.path.join(stream_dir, "part-0.parquet"))
     pq.write_table(t.slice(n // 2), os.path.join(stream_dir, "part-1.parquet"))
 
-    # each micro-batch write overwrites only its own batch_id partition,
+    # each micro-batch write overwrites only its own bucket partition,
     # by a per-write option: the session's mode stays as the caller set it
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "STATIC")
@@ -136,17 +142,44 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     )
     q.awaitTermination(300)
 
-    got = _spans_set(spark.read.parquet(f"{out_dir}/spans"))
+    got = read_output(spark, out_dir)
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
-    assert got == expected
+    assert _spans_set(got) == expected
+
+    by_bucket = {}
+    for r in got.collect():
+        by_bucket.setdefault(r.bucket, []).append(r)
+    assert sorted(by_bucket) == [0, 1]  # one bucket per arriving file
+    manifest = [
+        (r.run_id, r.partition_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.status)
+        for r in spark.read.parquet(f"{out_dir}/_manifest").collect()
+    ]
+    assert sorted(manifest) == [
+        (
+            "stream", b,
+            len({r.doc_id for r in rows}),
+            len(rows),
+            sum(r.kind == "media" for r in rows),
+            str(sum(zlib.crc32(f"{r.doc_id}\x1f{r.ord}\x1f{r.text or ''}".encode())
+                    for r in rows)),
+            "committed",
+        )
+        for b, rows in sorted(by_bucket.items())
+    ]
 
     # restart with no new files: no duplicates (checkpoint resume)
     q2 = stream_extract(
         spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out_dir}/spans").count() == len(expected)
+    assert read_output(spark, out_dir).count() == len(expected)
+    assert spark.read.parquet(f"{out_dir}/_manifest").count() == len(manifest)
     assert spark.conf.get(key) == "STATIC"
+
+    # its buckets are micro-batch ids: resuming them as doc buckets would
+    # skip buckets 0 and 1 and keep the stream's spans
+    with pytest.raises(ValueError, match="stream_extract"):
+        extract(spark, corpus, out_dir)
 
 
 def test_one_data_file_per_bucket(spark, corpus, tmp_path):

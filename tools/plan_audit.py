@@ -10,6 +10,7 @@ import __spark_entry__ as e
 
 spark = (SparkSession.builder.master("local[4]").appName("plans")
     .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false")
+    .config("spark.ui.showConsoleProgress","false")
     .config("spark.sql.session.timeZone","UTC").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 SF = "/root/testdata/sf0.01"
