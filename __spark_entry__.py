@@ -268,7 +268,7 @@ def entry(spark: SparkSession) -> DataFrame:
     docs = read_documents(spark, corpus)
     media = read_media(spark, corpus)
     pdfs = read_pdfs(spark, corpus)
-    synth_spans = extract_spans(docs, media, character_spacing=8.0, pdfs=pdfs)
+    synth_spans = extract_spans(docs, media, pdfs=pdfs)
 
     strip_udf = make_strip_udf()
     sf_docs = _docs(spark, "/root/testdata/sf0.001").select(
@@ -1176,16 +1176,13 @@ def _q_important_parts(spark, sf_dir):
     on both engines, so the comparison is bit-identical. The global scalar is
     a 1-row broadcast (never a shuffle); the per-part agg is the only fact
     shuffle. per_part feeds two consumers (the probe side and the global
-    scalar); without reuse Spark would rebuild the full lineitem scan + agg
-    for each — persist_if_large caches it when the source is big enough to
-    matter (the same size-adaptive rule the shingle subtree uses)."""
+    scalar); Spark's exchange reuse runs the lineitem scan + partial agg once
+    for both (ReusedExchange), so no cache is needed."""
     li = _read(spark, sf_dir, "lineitem").select(
         "l_partkey",
         relational.net_revenue().alias("rev"),
     )
-    per_part = dedup.persist_if_large(
-        li.groupBy("l_partkey").agg(F.sum("rev").alias("part_rev_dec"))
-    )
+    per_part = li.groupBy("l_partkey").agg(F.sum("rev").alias("part_rev_dec"))
     total = per_part.agg(
         F.sum("part_rev_dec").cast("double").alias("total_rev"),
         F.count(F.lit(1)).alias("n_parts"),
@@ -1340,10 +1337,9 @@ def _q_lsh_jaccard_est(spark, sf_dir):
     bucket-capped (cap_hot_buckets) — one stop-phrase shingle can no longer
     re-create the ~10^12-pair join group at corpus scale."""
     # the distinct-shingle frame feeds BOTH the minhash path and the true-
-    # Jaccard path (which caps it again); on large sources persisting it
-    # collapses the four scan->tokenize->distinct rebuilds into one compute
-    # (small sources recompute — measured faster, see persist_if_large)
-    sh = dedup.persist_if_large(dedup.shingles(_docs(spark, sf_dir)))
+    # Jaccard path (which caps it again); exchange reuse shares the one
+    # scan->tokenize->distinct shuffle among all its consumers
+    sh = dedup.shingles(_docs(spark, sf_dir))
     sig = dedup.cap_hot_buckets(dedup.minhash_signatures(sh), _DF_MAX)
     # equi-join on the (band, minhash) bucket key — never a per-band cross
     # join; pairs agreeing on zero bands simply don't appear (estimate 0)

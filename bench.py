@@ -102,17 +102,12 @@ def main() -> None:
     times: dict[str, float] = {}
     steal: dict[str, float | None] = {}
     run_meter = StealMeter()
-    from ocr_spark.functions.dedup import release_persisted
-
     for name in HEADLINE:
         m = StealMeter()
         t0 = time.perf_counter()
         _force(qmap[name](spark, SF_DIR))
         times[name] = round(time.perf_counter() - t0, 3)
         steal[name] = m.pct()
-        # drop any persist_if_large caches the leg installed: no later leg
-        # reuses them, and leaked InMemoryRelations would skew memory headroom
-        release_persisted()
 
     # flagship extraction throughput (corpus cached; synth excluded from timing)
     corpus = os.path.join(FIXTURE_ROOT, f"bench_{EXTRACT_DOCS}x{EXTRACT_PAGES}")
@@ -126,7 +121,7 @@ def main() -> None:
     media = read_media(spark, corpus)
     m = StealMeter()
     t0 = time.perf_counter()
-    _force(extract_spans(docs, media, character_spacing=8.0))
+    _force(extract_spans(docs, media))
     extract_s = time.perf_counter() - t0
     times["extract_spans"] = round(extract_s, 3)
     steal["extract_spans"] = m.pct()
@@ -143,7 +138,7 @@ def main() -> None:
     pdfs3 = read_pdfs(spark, corpus3)
     m = StealMeter()
     t0 = time.perf_counter()
-    _force(extract_spans(docs3, media3, character_spacing=8.0, pdfs=pdfs3))
+    _force(extract_spans(docs3, media3, pdfs=pdfs3))
     extract3_s = time.perf_counter() - t0
     times["extract_interleaved3"] = round(extract3_s, 3)
     steal["extract_interleaved3"] = m.pct()

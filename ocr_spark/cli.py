@@ -20,7 +20,6 @@ def main(argv=None):
 
     # the flags of both Spark subcommands
     spark_job = argparse.ArgumentParser(add_help=False)
-    spark_job.add_argument("--character-spacing", type=float, default=8.0)
     spark_job.add_argument(
         "--fonts", default="arial", type=lambda s: tuple(f for f in s.split(",") if f),
         help="comma list of bundled font sheets to learn (arial,courier); "
@@ -113,7 +112,6 @@ def main(argv=None):
                 run_id=args.run_id,
                 buckets=args.buckets,
                 resume=not args.no_resume,
-                character_spacing=args.character_spacing,
                 fonts=args.fonts,
                 catalog=catalog_name,
             )
@@ -125,7 +123,6 @@ def main(argv=None):
                 args.media_dir,
                 args.output,
                 args.checkpoint,
-                character_spacing=args.character_spacing,
                 available_now=not args.continuous,
                 fonts=args.fonts,
             )

@@ -23,6 +23,7 @@ import pyarrow.parquet as pq
 
 from .kernel.bitmap import black_mask
 from .kernel.classify import DEFAULT_ALPHABET
+from .kernel.segment import CHAR_SPACING  # noqa: F401 (the engine setting the gaps below pair with)
 from .png import decode_gray, encode_gray
 
 SEED = 1337
@@ -54,7 +55,6 @@ WORDLIST = [
 MARGIN = 12
 GLYPH_GAP = 3
 WORD_GAP = 20
-CHAR_SPACING = 8.0  # engine setting paired with these gaps
 
 SCALES = {
     "tiny": dict(n_docs=100, n_pages=60),

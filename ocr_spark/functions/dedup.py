@@ -19,13 +19,9 @@ same md5/token conventions (see functions/text.py header).
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .text import tokens
-
-_LOG = logging.getLogger(__name__)
 
 # Every operator reads (doc_id, text); the DuckDB twins in __spark_entry__
 # read these constants.
@@ -156,107 +152,6 @@ def lsh_candidate_pairs(sig: DataFrame, bucket_max: int | None = None) -> DataFr
     )
 
 
-# Source size above which a multiply-consumed derived frame is persisted
-# instead of recomputed per consumer. Measured crossover on this box:
-# at sf0.1 (~20 MB source, page-cache resident) recomputing the shingle
-# subtree 3x beats caching it 2x (2.2 s vs 4.1 s warm — materialization +
-# lost pipelining dominate tiny inputs); at 100 TB the 3x corpus re-read
-# is the bottleneck and the cache wins. 1 GiB splits those regimes with a
-# wide margin on both sides.
-REUSE_MIN_SOURCE_BYTES = 1 << 30
-
-
-def _source_bytes(df: DataFrame, cap: int) -> int:
-    """Total bytes of the frame's backing files (early-stop at ``cap``);
-    0 for non-file-backed inputs (unknown — treated as small). A sizing
-    FAILURE (filesystem error) is logged before falling back to 0 —
-    silently treating a huge source as small would quietly disable reuse
-    and triple the corpus I/O with no trace in any log."""
-    files = df.inputFiles()
-    if not files:
-        return 0
-    from ..pipeline.job import _hadoop_fs
-
-    total = 0
-    try:
-        for f in files:
-            p, fs = _hadoop_fs(df.sparkSession, f)
-            total += fs.getFileStatus(p).getLen()
-            if total >= cap:
-                return total
-    except Exception as exc:
-        _LOG.warning(
-            "source sizing failed (%s: %s) — treating frame as small, "
-            "subtree reuse disabled for this call", type(exc).__name__, exc
-        )
-        return 0
-    return total
-
-
-# Handles installed by persist_if_large, oldest first. Bounded: installing
-# beyond _PERSIST_CAP evicts (unpersists) the oldest handle, so a long-lived
-# session accumulates at most _PERSIST_CAP InMemoryRelations from this path
-# instead of one per call forever (ADVICE r04). The cap is safe because every
-# caller persists immediately before the consuming action — by the time 4
-# newer persists exist, the old frame's action has long finished.
-_PERSIST_CAP = 4
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> int:
-    """Unpersist every frame persist_if_large installed and return how many
-    were released. Call after the consuming action when the caller knows the
-    cache won't be reused (e.g. between bench legs)."""
-    n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped: nothing left to release
-    return n
-
-
-def persist_if_large(df: DataFrame) -> DataFrame:
-    """Persist a derived frame that several consumers will read — but only
-    when its backing source is big enough that recomputing the subtree per
-    consumer costs more than materializing it once (see
-    REUSE_MIN_SOURCE_BYTES for the measured crossover). Same
-    metadata-only sizing idea as pipeline.job._scan_width_estimate.
-
-    Installed caches are tracked in a bounded FIFO (``_PERSIST_CAP``):
-    the oldest entry is unpersisted when the cap is exceeded, and
-    ``release_persisted()`` drops them all eagerly.
-
-    An already-cached plan is returned untouched and NOT tracked again:
-    Spark's CacheManager keys by analyzed plan, so a second persist() of an
-    identical plan would alias the SAME InMemoryRelation — evicting the
-    older handle would silently drop the cache out from under the newer one.
-
-    Caller contract: run the consuming action before composing more than
-    ``_PERSIST_CAP`` persisted frames — eviction of a cache whose action has
-    not run yet silently forfeits the reuse (the eviction is logged so the
-    recompute has a trace)."""
-    if _source_bytes(df, REUSE_MIN_SOURCE_BYTES) >= REUSE_MIN_SOURCE_BYTES:
-        if df.is_cached:
-            return df
-        df = df.persist()
-        _PERSISTED.append(df)
-        if len(_PERSISTED) > _PERSIST_CAP:
-            old = _PERSISTED.pop(0)
-            try:
-                old.unpersist()
-                _LOG.warning(
-                    "persist_if_large FIFO full (%d): evicted the oldest "
-                    "cached frame — if its consuming action had not run yet, "
-                    "its subtree will recompute", _PERSIST_CAP,
-                )
-            except Exception:
-                pass  # already unpersisted / session gone
-    return df
-
-
 def jaccard_pairs(sh: DataFrame, df_max: int | None = None) -> DataFrame:
     """n-gram Jaccard similarity for every doc pair sharing at least
     JACCARD_MIN_COMMON shingles. The shingle equi-join only materializes
@@ -268,19 +163,13 @@ def jaccard_pairs(sh: DataFrame, df_max: int | None = None) -> DataFrame:
     group per shingle is then bounded by df_max at any corpus size.
 
     The (capped) shingle frame has three consumers (per-doc sizes + both
-    self-join sides); without a cache each rebuilds the whole scan ->
-    tokenize -> explode -> distinct -> window subtree — at 100 TB that is
-    3x the corpus I/O and 3x the tokenize CPU for identical bytes.
-    persist_if_large decides by source size: big sources cache, small ones
-    recompute — the measured-faster choice on BOTH sides of the crossover. The
-    InMemoryRelation keeps the window's hash(shingle) outputPartitioning
-    visible to Catalyst, so the self-join adds no new exchange over the
-    cached side, and Spark's cache manager keys on the canonicalized plan,
-    so sibling queries capping the same source share one entry.
+    self-join sides). They are identical subtrees, so Spark's exchange reuse
+    runs the scan -> tokenize -> explode -> distinct -> window subtree once
+    and the other consumers read its shuffle output (ReusedExchange): each
+    source row is read once, with no cache.
     Output: (doc_a, doc_b, n_common, n_a, n_b, jaccard)."""
     if df_max is not None:
         sh = cap_shingle_df(sh, df_max)
-    sh = persist_if_large(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")

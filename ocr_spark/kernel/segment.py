@@ -16,6 +16,11 @@ import numpy as np
 from .bitmap import black_mask, get_borders
 
 
+# the character spacing (px) the engine runs with on every page; the
+# synthesized corpora size their glyph and word gaps to it
+CHAR_SPACING = 8.0
+
+
 @dataclass
 class Settings:
     """Mirror of reference Settings.java (defaults :15-23)."""

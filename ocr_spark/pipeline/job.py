@@ -124,13 +124,6 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
         )
         width = 0
         for f in files:
-            # size-based splitting applies only to splittable formats; a
-            # gzipped json/csv file is ONE task no matter its size, and
-            # overcounting it would skip the repartition this probe exists
-            # to enforce
-            if not f.endswith((".parquet", ".orc")):
-                width += 1
-                continue
             p, fs = _hadoop_fs(spark, f)
             sz = fs.getFileStatus(p).getLen()
             width += max(1, -(-sz // mpb))
@@ -144,7 +137,6 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
 def extract_spans(
     docs: DataFrame,
     media: DataFrame,
-    character_spacing: float = 8.0,
     pdfs: DataFrame | None = None,
     fonts: tuple | list | None = None,
 ) -> DataFrame:
@@ -222,7 +214,7 @@ def extract_spans(
         )
     key = ["media_ref", "kind"]
     rows = exploded.where(F.col("kind").isin(kinds)).select("doc_id", "ord", *key)
-    blob_udf = make_ocr_udf(character_spacing=character_spacing, fonts=fonts)
+    blob_udf = make_ocr_udf(fonts=fonts)
     # Salting: the UDF input is spread over an explicit-width shuffle keyed
     # by a SALT column, never by the join key — an exchange on the join key
     # gets eliminated as redundant once the join-back requires the same
@@ -384,7 +376,6 @@ def extract(
     run_id: str = "run-0",
     buckets: int = 8,
     resume: bool = True,
-    character_spacing: float = 8.0,
     fonts: tuple | list | None = None,
     catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
 ) -> dict:
@@ -425,7 +416,7 @@ def extract(
     if pending:
         bucket_of = F.crc32(F.col("doc_id")) % buckets
         out = extract_spans(
-            docs.where(bucket_of.isin(pending)), media, character_spacing, pdfs=pdfs, fonts=fonts
+            docs.where(bucket_of.isin(pending)), media, pdfs=pdfs, fonts=fonts
         ).withColumn("bucket", bucket_of.cast("int"))
         metrics["spans"] = commit_buckets(sink, out, pending, run_id)
     return metrics
@@ -437,7 +428,6 @@ def stream_extract(
     media_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    character_spacing: float = 8.0,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     fonts: tuple | list | None = None,
@@ -464,8 +454,7 @@ def stream_extract(
     docs = reader.parquet(stream_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_spans(batch_df, media, character_spacing=character_spacing,
-                            pdfs=pdfs, fonts=fonts)
+        out = extract_spans(batch_df, media, pdfs=pdfs, fonts=fonts)
         commit_buckets(sink, out.withColumn("bucket", F.lit(batch_id)), [batch_id], "stream")
 
     writer = (

@@ -70,7 +70,7 @@ def make_strip_udf():
     return strip_udf
 
 
-def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = None):
+def make_ocr_udf(fonts: tuple | list | None = None):
     """Text of a batch of ``(kind, blob)`` rows: a ``media`` blob is a PNG page
     OCR'd with the bundled ``fonts`` (T1 multi-font; default arial), a ``pdf``
     blob yields its non-empty page texts in page order, space-joined
@@ -82,11 +82,11 @@ def make_ocr_udf(character_spacing: float = 8.0, fonts: tuple | list | None = No
     @pandas_udf(T.StringType())
     def ocr_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         from ..kernel.engine import recognize_pages
-        from ..kernel.segment import Settings
+        from ..kernel.segment import CHAR_SPACING, Settings
         from ..pdf import extract_text
         from ..png import decode_gray
 
-        settings = Settings(character_spacing=character_spacing)
+        settings = Settings(character_spacing=CHAR_SPACING)
 
         for kind, blob in batches:
             rows = list(zip(kind.tolist(), blob.tolist()))

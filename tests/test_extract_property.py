@@ -107,12 +107,12 @@ def _oracle(docs, media, pdfs):
 
     from ocr_spark.html.strip import strip_html
     from ocr_spark.kernel.engine import recognize
-    from ocr_spark.kernel.segment import Settings
+    from ocr_spark.kernel.segment import CHAR_SPACING, Settings
     from ocr_spark.pdf import extract_text
     from ocr_spark.pipeline.udfs import default_alphabet
     from ocr_spark.png import decode_gray
 
-    settings_, alpha = Settings(character_spacing=8.0), default_alphabet()
+    settings_, alpha = Settings(character_spacing=CHAR_SPACING), default_alphabet()
     rows = []
     for doc_id, spans in docs:
         for ord_, (kind, text, ref) in enumerate(spans or []):

@@ -403,58 +403,20 @@ def test_range_count_preceding_duplicate_left_rows(spark):
     assert "_l_rid" not in out.columns
 
 
-def test_jaccard_shingle_reuse_plan_and_equality(spark, monkeypatch):
-    """With reuse (a source above the size threshold), the capped shingle
-    subtree is computed ONCE: every scan in the plan tree resolves to a
-    single shared parquet-scan node under InMemoryRelation (round 3 rebuilt
-    it 4x — at 100 TB that is 4x corpus I/O). Values must be identical with
-    and without the cache."""
-    import io
-    import re
-    from contextlib import redirect_stdout
+@pytest.mark.parametrize("name", ["ngram_jaccard", "lsh_jaccard_est", "q11_important_parts"])
+def test_multi_consumer_subtree_scanned_once(spark, name):
+    """Each of these queries reads one derived frame from several consumers
+    (the shingle frame, the per-part revenue). Exchange reuse shares that
+    subtree: the final adaptive plan scans the source once and reads the
+    shared shuffle back through ReusedExchange, with no cache."""
+    import __spark_entry__ as entry
 
-    from ocr_spark.functions import dedup
-    from ocr_spark.functions.dedup import jaccard_pairs, shingles
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # below the threshold nothing is cached; collect before the cache exists,
-    # which would otherwise serve this identical plan too
-    plain = jaccard_pairs(shingles(docs), df_max=64)
-    assert "InMemoryRelation" not in plain._jdf.queryExecution().optimizedPlan().toString()
-    b = sorted(map(tuple, plain.collect()))
-    monkeypatch.setattr(dedup, "REUSE_MIN_SOURCE_BYTES", 1)
-    reused = jaccard_pairs(shingles(docs), df_max=64)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        reused.explain("formatted")
-    plan = buf.getvalue()
-    tree = plan.split("(1) ")[0]
-    scan_ids = set(re.findall(r"Scan parquet\s*\((\d+)\)", tree))
-    assert len(scan_ids) == 1, f"shingle subtree not shared: scan ids {scan_ids}"
-    assert "InMemoryRelation" in tree
-
-    a = sorted(map(tuple, reused.collect()))
-    assert a == b and len(a) > 0
-    spark.catalog.clearCache()
-
-
-def test_persist_if_large_threshold(spark, monkeypatch):
-    """Auto-reuse sizes the SOURCE, not the derived frame: below the
-    threshold the frame is returned unpersisted (recompute measured faster
-    for page-cache-resident inputs), above it the cache is installed."""
-    from ocr_spark.functions import dedup
-    from ocr_spark.functions.dedup import persist_if_large
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    small = persist_if_large(docs)  # source << 1 GiB threshold
-    assert not small.storageLevel.useMemory
-    monkeypatch.setattr(dedup, "REUSE_MIN_SOURCE_BYTES", 1)
-    forced = persist_if_large(docs)
-    assert forced.storageLevel.useMemory
-    forced.unpersist()
-    # non-file-backed frames size to 0 -> never persisted
-    mem = persist_if_large(spark.range(10))
-    assert not mem.storageLevel.useMemory
+    df = entry.queries()[name](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_simhash_near_dups_exact_recall_vs_bruteforce(spark):

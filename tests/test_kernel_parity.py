@@ -23,7 +23,7 @@ from ocr_spark.kernel.features import (
     extract_curvature,
     extract_slopes,
 )
-from ocr_spark.kernel.segment import Settings
+from ocr_spark.kernel.segment import CHAR_SPACING, Settings
 
 
 def _sheet(font):
@@ -163,7 +163,8 @@ def test_recognize_ignores_ruling_lines(arial_alphabet):
     canvas[60 : 60 + H, 60 : 60 + W] = page
     for y in (20, H + 100):
         canvas[y, 10 : W + 110] = 0
-    assert recognize(canvas, Settings(character_spacing=8.0), arial_alphabet) == "Spark Extract 1234"
+    settings = Settings(character_spacing=CHAR_SPACING)
+    assert recognize(canvas, settings, arial_alphabet) == "Spark Extract 1234"
 
 
 def test_matrix_memo_keys_on_every_pixel_extract_matrix_reads(arial_alphabet):
@@ -174,7 +175,7 @@ def test_matrix_memo_keys_on_every_pixel_extract_matrix_reads(arial_alphabet):
     from ocr_spark.kernel import engine
 
     page = render_page(["Spark", "Extract"], load_glyphs())
-    words = scan_page(page, Settings(character_spacing=8.0), arial_alphabet)
+    words = scan_page(page, Settings(character_spacing=CHAR_SPACING), arial_alphabet)
     boxes = [(c.x, c.y, c.w, c.h) for w in words for c in w.chars]
     assert len(boxes) == 12
     try:
@@ -215,7 +216,7 @@ def test_scan_pages_pages_do_not_affect_each_other(arial_alphabet, monkeypatch):
     wide[:, 2000 : 2000 + b.shape[1]] = b
     assert wide.size > engine._PIXELS_PER_SCAN
     pages = [a, blank, b, a, wide, b]
-    settings = Settings(character_spacing=8.0)
+    settings = Settings(character_spacing=CHAR_SPACING)
 
     alone = []
     for p in pages:
@@ -257,7 +258,7 @@ def test_recognize_pages_decodes_and_scans_pixel_bounded_groups(arial_alphabet, 
     per_group = -(-engine._PIXELS_PER_SCAN // a.size)
     assert per_group >= 2
     pages = [a] * per_group + [big, b, a]
-    settings = Settings(character_spacing=8.0)
+    settings = Settings(character_spacing=CHAR_SPACING)
     expected = [recognize(p, settings, arial_alphabet) for p in pages]
 
     pulled = []
@@ -294,7 +295,7 @@ def test_memo_caches_are_byte_bounded_lru(arial_alphabet):
     from ocr_spark.kernel import engine
 
     page = render_page(["Spark", "Extract", "1234"], load_glyphs())
-    settings = Settings(character_spacing=8.0)
+    settings = Settings(character_spacing=CHAR_SPACING)
     expected = recognize(page, settings, arial_alphabet)
     value = np.zeros(48, dtype=np.int64)
     chunk = 1 << 20

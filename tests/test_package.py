@@ -26,7 +26,7 @@ zip_finders = sorted(
 )
 from ocr_spark.fixtures import load_glyphs, render_page
 from ocr_spark.kernel.engine import recognize
-from ocr_spark.kernel.segment import Settings
+from ocr_spark.kernel.segment import CHAR_SPACING, Settings
 from ocr_spark.pdf import build_pdf, extract_text
 from ocr_spark.pipeline.udfs import load_alphabet
 
@@ -37,7 +37,7 @@ print(json.dumps({
     "chars": "".join(alpha.chars),
     "fonts": sorted(set(alpha.fonts)),
     "vectors": hashlib.sha1(alpha.vectors.tobytes()).hexdigest(),
-    "ocr": recognize(page, Settings(character_spacing=8.0), alpha),
+    "ocr": recognize(page, Settings(character_spacing=CHAR_SPACING), alpha),
     "pdf": extract_text(build_pdf([["a", "b"], ["c"]])),
     "zip_finders": zip_finders,
 }))
@@ -48,7 +48,7 @@ def test_package_zip_runs_standalone(tmp_path):
     from ocr_spark.fixtures import load_glyphs, render_page
     from ocr_spark.kernel.classify import Alphabet
     from ocr_spark.kernel.engine import recognize
-    from ocr_spark.kernel.segment import Settings
+    from ocr_spark.kernel.segment import CHAR_SPACING, Settings
     from ocr_spark.pdf import build_pdf, extract_text
     from ocr_spark.png import decode_gray
 
@@ -78,7 +78,7 @@ def test_package_zip_runs_standalone(tmp_path):
     assert got["chars"] == "".join(alpha.chars)
     assert got["fonts"] == ["arial", "courier"]
     assert got["vectors"] == hashlib.sha1(alpha.vectors.tobytes()).hexdigest()
-    assert got["ocr"] == recognize(page, Settings(character_spacing=8.0), alpha)
+    assert got["ocr"] == recognize(page, Settings(character_spacing=CHAR_SPACING), alpha)
     assert got["pdf"] == extract_text(build_pdf([["a", "b"], ["c"]])) == ["a b", "c"]
     assert got["zip_finders"] == []
 

@@ -182,6 +182,30 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
         extract(spark, corpus, out_dir)
 
 
+def test_cli_extract_then_resume(corpus, tmp_path):
+    """``ocr_spark.cli extract`` end to end, run twice on one output dir in
+    one process: the first run commits every expected span, the rerun finds
+    every bucket committed and writes nothing."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "out")
+    argv = ["extract", "--input", corpus, "--output", out_dir, "--master", "local[2]"]
+    script = f"from ocr_spark.cli import main; main({argv!r}); main({argv!r})"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    first, second = (
+        json.loads(line) for line in proc.stdout.splitlines() if line.startswith("{")
+    )
+    assert first["spans"] == pq.read_metadata(f"{corpus}/expected_spans.parquet").num_rows
+    assert second["buckets_skipped"] == second["buckets_total"]
+    assert second["spans"] == 0
+
+
 def test_one_data_file_per_bucket(spark, corpus, tmp_path):
     """The write shuffle sends each bucket to its own task, so each
     bucket's dir holds exactly one data file and no two buckets share a
