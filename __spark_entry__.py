@@ -258,17 +258,12 @@ def entry(spark: SparkSession) -> DataFrame:
     and PDF-parse paths. Returns the reassembled span table
     (doc_id, ord, kind, text, media_ref).
     """
-    from ocr_spark.pipeline.job import (
-        configure, extract_spans, read_documents, read_media, read_pdfs,
-    )
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
     from ocr_spark.pipeline.udfs import make_strip_udf
 
     configure(spark)
     corpus = _synth_corpus("tiny3")
-    docs = read_documents(spark, corpus)
-    media = read_media(spark, corpus)
-    pdfs = read_pdfs(spark, corpus)
-    synth_spans = extract_spans(docs, media, pdfs=pdfs)
+    synth_spans = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
 
     strip_udf = make_strip_udf()
     sf_docs = _docs(spark, "/root/testdata/sf0.001").select(
@@ -1492,11 +1487,11 @@ def _q_ocr_extract(spark, sf_dir):
     construction (fixtures.synthesize writes expected_spans.parquet from the
     words it rendered), so the DuckDB twin simply reads the expected table —
     a full rows+schema+value-hash check of the extraction output."""
-    from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
 
     configure(spark)
     corpus = _synth_corpus("tiny")
-    out = extract_spans(read_documents(spark, corpus), read_media(spark, corpus))
+    out = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
     return out.select(
         "doc_id", F.col("ord").cast("long").alias("ord"), "kind", "text", "media_ref"
     )
@@ -1507,16 +1502,11 @@ def _q_ocr_extract3(spark, sf_dir):
     kernel, pdf -> PDF parser; text and blobs are routed as separate cost
     classes (media and pdf share the blob route) and reassembled. Oracle:
     the tiny3 corpus's by-construction expected spans."""
-    from ocr_spark.pipeline.job import (
-        configure, extract_spans, read_documents, read_media, read_pdfs,
-    )
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
 
     configure(spark)
     corpus = _synth_corpus("tiny3")
-    out = extract_spans(
-        read_documents(spark, corpus), read_media(spark, corpus),
-        pdfs=read_pdfs(spark, corpus),
-    )
+    out = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
     return out.select(
         "doc_id", F.col("ord").cast("long").alias("ord"), "kind", "text", "media_ref"
     )

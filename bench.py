@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Bench harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints two JSON lines, the registry order first and the metrics last:
+(default: the number of CPUs this process may run on) and prints two JSON
+lines, the registry order first and the metrics last:
 
   {"registry_order": [name, ...]}
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -24,8 +25,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from perfbench.host import driver_memory_mb, nproc  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", nproc()))
 EXTRACT_DOCS = int(os.environ.get("OCR_SPARK_BENCH_DOCS", "4000"))
 EXTRACT_PAGES = int(os.environ.get("OCR_SPARK_BENCH_PAGES", "800"))
 
@@ -66,9 +69,8 @@ def main() -> None:
     from ocr_spark.fixtures import (
         FIXTURE_ROOT, FIXTURE_VERSION, ensure_built, ensure_corpus, write_corpus,
     )
-    from ocr_spark.pipeline.job import configure, extract_spans, read_documents, read_media, read_pdfs
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
     from ocr_spark.procstat import StealMeter
-    from perfbench.host import driver_memory_mb
 
     builder = (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -95,7 +97,7 @@ def main() -> None:
     #     worker spin-up.
     _force(qmap["q6_forecast_revenue"](spark, SF_DIR))
     tiny = ensure_corpus(os.path.join(FIXTURE_ROOT, "tiny"))
-    _force(extract_spans(read_documents(spark, tiny), read_media(spark, tiny)))
+    _force(extract_spans(read_documents(spark, tiny), read_blobs(spark, tiny)))
 
     # Per-leg hypervisor-steal telemetry (VERDICT r03 #2): a leg's seconds are
     # only interpretable next to how much CPU the host actually delivered.
@@ -118,10 +120,10 @@ def main() -> None:
         lambda: write_corpus(corpus, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES),
     )
     docs = read_documents(spark, corpus)
-    media = read_media(spark, corpus)
+    blobs = read_blobs(spark, corpus)
     m = StealMeter()
     t0 = time.perf_counter()
-    _force(extract_spans(docs, media))
+    _force(extract_spans(docs, blobs))
     extract_s = time.perf_counter() - t0
     times["extract_spans"] = round(extract_s, 3)
     steal["extract_spans"] = m.pct()
@@ -134,11 +136,10 @@ def main() -> None:
         lambda: write_corpus(corpus3, n_docs=EXTRACT_DOCS, n_pages=EXTRACT_PAGES, pdf_p=0.25),
     )
     docs3 = read_documents(spark, corpus3)
-    media3 = read_media(spark, corpus3)
-    pdfs3 = read_pdfs(spark, corpus3)
+    blobs3 = read_blobs(spark, corpus3)
     m = StealMeter()
     t0 = time.perf_counter()
-    _force(extract_spans(docs3, media3, pdfs=pdfs3))
+    _force(extract_spans(docs3, blobs3))
     extract3_s = time.perf_counter() - t0
     times["extract_interleaved3"] = round(extract3_s, 3)
     steal["extract_interleaved3"] = m.pct()

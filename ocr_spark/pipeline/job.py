@@ -8,16 +8,17 @@ Scale design (north rule: 10^12 docs, N vs 4N executors):
   shuffle; skew-join enabled).
 * Two cost classes are routed separately — text and blob. A blob span
   (a media page to OCR or a pdf to parse) costs ~10-100x a text span, so
-  the two never share a task boundary; media and pdf share one route and
-  one blob->text UDF.
+  the two never share a task boundary. Every span whose kind is not
+  ``text`` takes the one blob route: one blob table (``read_blobs``), one
+  blob->text UDF, and null text for a span with no blob row.
 * Skew defusal: the blob UDF runs once per distinct (media_ref, kind),
   hash-repartitioned on a full-cardinality crc32(media_ref) salt; a hot
   ref or a document with 10^3 media spans spreads over the whole cluster
   instead of stalling one task (AQE skew-join is the backstop for the
   join-back).
 * Resume: the doc space is split into `buckets` by crc32(doc_id); each
-  bucket writes to its own spans/bucket=K dir with overwrite semantics and
-  then commits one manifest row (lineage + metrics + checksum). A rerun
+  bucket's dir is deleted and rewritten (spans/bucket=K), and then the
+  bucket commits one manifest row (lineage + metrics + checksum). A rerun
   skips committed buckets and safely rewrites half-written ones — append-only
   Iceberg-style commit protocol on plain parquet.
 * ``stream_extract`` runs the same plan per micro-batch of a directory of
@@ -74,13 +75,6 @@ def read_documents(spark: SparkSession, input_dir: str) -> DataFrame:
     return spark.read.schema(DOCUMENTS).parquet(f"{input_dir}/documents.parquet")
 
 
-def read_media(spark: SparkSession, input_dir: str) -> DataFrame:
-    # never read the test-only `truth` column: explicit schema prunes it
-    return spark.read.schema(MEDIA).parquet(f"{input_dir}/media.parquet").select(
-        "media_ref", "png"
-    )
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     """(Path, FileSystem) for ``path`` via the Hadoop FS API — the one home
     for the jvm Path/getFileSystem incantation (works for any scheme)."""
@@ -89,17 +83,23 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return hpath, fs
 
 
-def read_pdfs(spark: SparkSession, input_dir: str) -> DataFrame | None:
-    """Optional third-modality table (three-kind corpora): None when the
-    corpus has no pdfs.parquet, so plain text+media corpora route media
-    blobs alone (and drop pdf spans) — but a corpus that DOES ship pdfs gets
-    its pdf spans routed beside the media pages instead of silently
-    dropped."""
+def read_blobs(spark: SparkSession, input_dir: str) -> DataFrame:
+    """The corpus's one blob table, ``(media_ref, kind, blob)``: every media
+    page as kind ``media``, plus every pdf as kind ``pdf`` when the corpus
+    ships a pdfs.parquet. A span whose (media_ref, kind) has no row here
+    reads as null text (``extract_spans``)."""
+    # never read the test-only `truth` column: explicit schema prunes it
+    blobs = spark.read.schema(MEDIA).parquet(f"{input_dir}/media.parquet").select(
+        "media_ref", F.lit("media").alias("kind"), F.col("png").alias("blob")
+    )
     path = f"{input_dir}/pdfs.parquet"
     hpath, fs = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    return spark.read.schema("media_ref string, pdf binary").parquet(path)
+    if fs.exists(hpath):
+        blobs = blobs.unionByName(
+            spark.read.schema("media_ref string, pdf binary").parquet(path)
+            .select("media_ref", F.lit("pdf").alias("kind"), F.col("pdf").alias("blob"))
+        )
+    return blobs
 
 
 def _scan_width_estimate(docs: DataFrame, need: int) -> int:
@@ -136,11 +136,12 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
 
 def extract_spans(
     docs: DataFrame,
-    media: DataFrame,
-    pdfs: DataFrame | None = None,
+    blobs: DataFrame,
     fonts: tuple | list | None = None,
 ) -> DataFrame:
     """Logical plan for one slice of documents -> output span rows.
+    ``blobs`` is the blob table of ``read_blobs``. A text span goes to the
+    stripper, and a span of any other kind to the blob->text UDF.
 
     The pre-UDF salt shuffle has an EXPLICIT repartition width,
     defaultParallelism, because the UDF stages are CPU-bound, not
@@ -197,23 +198,16 @@ def extract_spans(
         )
     )
 
-    # one route for every blob kind (media pages, pdfs): the blob->text UDF
-    # runs once per DISTINCT (media_ref, kind) and its text joins back to
-    # the span occurrences, so kernel cost scales with |distinct refs| and a
-    # hot ref (one page or pdf referenced by many docs) cannot skew the
-    # stage. Keyed on (media_ref, kind): a ref string present in both the
-    # media and the pdf table reads each kind's own blob. pdf spans are
-    # routed only when a pdf table is given, else dropped.
-    kinds = ["media"] if pdfs is None else ["media", "pdf"]
-    blobs = media.select(
-        "media_ref", F.lit("media").alias("kind"), F.col("png").alias("blob")
-    )
-    if pdfs is not None:
-        blobs = blobs.unionByName(
-            pdfs.select("media_ref", F.lit("pdf").alias("kind"), F.col("pdf").alias("blob"))
-        )
+    # one route for every other kind: the blob->text UDF runs once per
+    # DISTINCT (media_ref, kind) and its text joins back to the span
+    # occurrences, so kernel cost scales with |distinct refs| and a hot ref
+    # (one page or pdf referenced by many docs) cannot skew the stage. Keyed
+    # on (media_ref, kind): a ref string present in both the media and the
+    # pdf table reads each kind's own blob, and a span with no blob row (a
+    # dangling ref, a pdf in a corpus without pdfs, an unknown kind) joins
+    # back as null text. A null kind takes neither route: it is dropped.
     key = ["media_ref", "kind"]
-    rows = exploded.where(F.col("kind").isin(kinds)).select("doc_id", "ord", *key)
+    rows = exploded.where(F.col("kind") != "text").select("doc_id", "ord", *key)
     blob_udf = make_ocr_udf(fonts=fonts)
     # Salting: the UDF input is spread over an explicit-width shuffle keyed
     # by a SALT column, never by the join key — an exchange on the join key
@@ -241,9 +235,9 @@ def extract_spans(
 
 class ParquetSink:
     """The default commit substrate, plain parquet under ``output_dir``:
-    span buckets in ``spans/bucket=K`` dirs replaced by a dynamic partition
-    overwrite (a per-write option: the session conf is left alone),
-    manifest rows appended under ``_manifest``. The Iceberg twin
+    span buckets in ``spans/bucket=K`` dirs, each replaced by deleting it
+    and appending its new rows, and manifest rows appended under
+    ``_manifest``. The Iceberg twin
     is ``catalog.IcebergSink``; ``extract`` only talks to this interface."""
 
     def __init__(self, spark: SparkSession, output_dir: str):
@@ -261,17 +255,14 @@ class ParquetSink:
         return self.spark.read.schema(MANIFEST).parquet(self.manifest_dir)
 
     def write_buckets(self, out: DataFrame, buckets: list[int]) -> None:
-        # dynamic overwrite only replaces partitions present in the new
-        # data; clear stale half-written dirs for buckets that may end empty
-        for b in buckets:
-            hpath, fs = _hadoop_fs(self.spark, f"{self.spans_dir}/bucket={b}")
+        # delete every pending bucket's dir, half-written or not, then
+        # append. The committer's _temporary dir goes too: a run killed
+        # mid-write leaves its committed tasks' files there, and the next
+        # append's job commit would merge them into the buckets as duplicates.
+        for d in [f"bucket={b}" for b in buckets] + ["_temporary"]:
+            hpath, fs = _hadoop_fs(self.spark, f"{self.spans_dir}/{d}")
             fs.delete(hpath, True)
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.spans_dir)
-        )
+        out.write.mode("append").partitionBy("bucket").parquet(self.spans_dir)
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         # explicit schema: a zero-row run leaves no partition dirs to
@@ -293,7 +284,7 @@ def committed_buckets(manifest: DataFrame | None) -> set[int]:
     if manifest is None:
         return set()
     rows = (manifest.where(F.col("status") == "committed")
-            .select("partition_id", "run_id").distinct().collect())
+            .select("partition_id", "run_id").collect())
     if any(r.run_id == "stream" for r in rows):
         raise ValueError("output dir holds stream_extract output; extract needs its own")
     return {r.partition_id for r in rows}
@@ -305,8 +296,8 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
     number of spans committed.
 
     All pending buckets go in one pass: a single partitioned write
-    (`spans/bucket=K`, dynamic partition overwrite) plus a single per-bucket
-    stats pass and one manifest write — so job-scheduling overhead is
+    (`spans/bucket=K`) plus a single per-bucket stats pass and one
+    manifest write — so job-scheduling overhead is
     amortized across buckets instead of paying write+agg+commit per bucket
     (which capped scaling efficiency at small inputs). The commit unit is
     the bucket: it counts as committed only once its manifest row lands,
@@ -314,8 +305,8 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
     """
     # one shuffle collapses the tiny output rows to one file per bucket
     # BEFORE the committer: a partitionBy write from W wide partitions
-    # creates W x |pending| files whose dynamic-overwrite commit is
-    # driver-serial — file count, not data size, was the scaling ceiling.
+    # creates W x |pending| files whose job commit is driver-serial —
+    # file count, not data size, was the scaling ceiling.
     # Each bucket goes to the write task numbered by its position in
     # `pending`, one bucket a task: hashing the bucket ids puts 4 buckets on
     # 2 tasks and 64 on 37, so one task writes up to 4 buckets in series.
@@ -355,11 +346,10 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
             f"('{run_id}', {b}, CAST({docs_n} AS BIGINT), CAST({spans_n} AS BIGINT), "
             f"CAST({media_n} AS BIGINT), '{chk}', '{now}', 'committed')"
         )
-    # append-only commit log: one small file per run, no partition dirs,
-    # no dynamic-overwrite listing — a re-committed bucket would just add a
-    # row, and committed_buckets de-duplicates. Built as a SQL VALUES
-    # literal (JVM LocalRelation): a python-list DataFrame would spin up a
-    # Python runner for an 8-row write.
+    # append-only commit log: one small file per run, no partition dirs —
+    # a re-committed bucket would just add a row, and committed_buckets
+    # de-duplicates. Built as a SQL VALUES literal (JVM LocalRelation): a
+    # python-list DataFrame would spin up a Python runner for an 8-row write.
     sink.append_manifest(out.sparkSession.sql(
         "SELECT * FROM VALUES "
         + ", ".join(values)
@@ -400,8 +390,7 @@ def extract(
         )
 
     docs = read_documents(spark, input_dir)
-    media = read_media(spark, input_dir)
-    pdfs = read_pdfs(spark, input_dir)
+    blobs = read_blobs(spark, input_dir)
     if catalog:
         from .catalog import IcebergSink
 
@@ -416,7 +405,7 @@ def extract(
     if pending:
         bucket_of = F.crc32(F.col("doc_id")) % buckets
         out = extract_spans(
-            docs.where(bucket_of.isin(pending)), media, pdfs=pdfs, fonts=fonts
+            docs.where(bucket_of.isin(pending)), blobs, fonts=fonts
         ).withColumn("bucket", bucket_of.cast("int"))
         metrics["spans"] = commit_buckets(sink, out, pending, run_id)
     return metrics
@@ -444,8 +433,7 @@ def stream_extract(
     (``committed_buckets``), so output is exactly-once. The output dir
     belongs to the stream alone: ``extract`` refuses to resume from it, and
     a stream started on a batch run's dir would overwrite its buckets."""
-    media = read_media(spark, media_dir)
-    pdfs = read_pdfs(spark, media_dir)
+    blobs = read_blobs(spark, media_dir)
     sink = ParquetSink(spark, output_dir)
 
     reader = spark.readStream.schema(DOCUMENTS)
@@ -454,7 +442,7 @@ def stream_extract(
     docs = reader.parquet(stream_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_spans(batch_df, media, pdfs=pdfs, fonts=fonts)
+        out = extract_spans(batch_df, blobs, fonts=fonts)
         commit_buckets(sink, out.withColumn("bucket", F.lit(batch_id)), [batch_id], "stream")
 
     writer = (

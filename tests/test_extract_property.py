@@ -5,12 +5,15 @@ documents gives. The walk calls the kernels directly, one span at a time:
 * text  -> ``strip_html``
 * media -> ``recognize(decode_gray(png))``, None for a missing ref or a
   null blob
-* pdf   -> ``" ".join(extract_text(blob)) or None``, None likewise; pdf
-  spans are dropped when the corpus ships no pdfs.parquet
+* pdf   -> ``" ".join(extract_text(blob)) or None``, None likewise, and for
+  every pdf span when the corpus ships no pdfs.parquet
+* any other kind -> None: no blob table holds it
+* a null kind -> no row
 
 Refs come from a small pool, so one example can hold hot refs (many spans
 on one blob), dangling refs, null blobs, a ref string present in both the
-media and the pdf table, empty and null span arrays. Any plan rewrite
+media and the pdf table, empty and null span arrays, and spans of a kind
+no blob table holds or of a null kind. Any plan rewrite
 (routing, semi-join, salt, join-back) must keep this property.
 
 A second property drives ``extract()`` itself over the same corpora: with
@@ -87,7 +90,10 @@ _pdf_entry = st.one_of(
 )
 _span = st.one_of(
     st.tuples(st.just("text"), _html_value, st.none()),
-    st.tuples(st.sampled_from(["media", "pdf"]), st.none(), st.sampled_from(_REFS + [None])),
+    st.tuples(
+        st.sampled_from(["media", "pdf", "video", None]), st.none(),
+        st.sampled_from(_REFS + [None]),
+    ),
 )
 _doc = st.one_of(st.none(), st.lists(_span, max_size=6))
 
@@ -113,16 +119,17 @@ def _oracle(docs, media, pdfs):
     from ocr_spark.png import decode_gray
 
     settings_, alpha = Settings(character_spacing=CHAR_SPACING), default_alphabet()
+    tables = {"media": media, "pdf": pdfs or {}}
     rows = []
     for doc_id, spans in docs:
         for ord_, (kind, text, ref) in enumerate(spans or []):
+            if kind is None:
+                continue
             if kind == "text":
                 out = strip_html(pd.Series([text], dtype=object))[0]
                 rows.append((doc_id, ord_, kind, out, None))
                 continue
-            if kind == "pdf" and pdfs is None:
-                continue
-            blob = (media if kind == "media" else pdfs).get(ref)
+            blob = tables.get(kind, {}).get(ref)
             if blob is None:
                 out = None
             elif kind == "media":
@@ -178,7 +185,7 @@ def _write_corpus(d, docs, media, pdfs):
 def test_extract_spans_equals_driver_walk(
     spark, tmp_path_factory, docs, media_entries, pdf_entries, ship_pdfs
 ):
-    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media, read_pdfs
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
     docs = [(f"d{i}", spans) for i, spans in enumerate(docs)]
     media = {r: _blob(e) for r, e in zip(_REFS, media_entries) if e[0] != "absent"}
@@ -189,9 +196,9 @@ def test_extract_spans_equals_driver_walk(
     d = tempfile.mkdtemp(dir=tmp_path_factory.getbasetemp())
     _write_corpus(d, docs, media, pdfs)
 
-    got = extract_spans(
-        read_documents(spark, d), read_media(spark, d), pdfs=read_pdfs(spark, d),
-    ).select("doc_id", "ord", "kind", "text", "media_ref").collect()
+    got = extract_spans(read_documents(spark, d), read_blobs(spark, d)).select(
+        "doc_id", "ord", "kind", "text", "media_ref"
+    ).collect()
     assert Counter(map(tuple, got)) == Counter(_oracle(docs, media, pdfs))
 
 

@@ -154,7 +154,7 @@ def test_extract_spans_multifont_pipeline(sheets, tmp_path):
     pytest.importorskip("pyspark")
     from pyspark.sql import SparkSession
 
-    from ocr_spark.pipeline.job import configure, extract_spans
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs
     from ocr_spark.png import encode_gray
 
     arial, courier = sheets
@@ -197,16 +197,14 @@ def test_extract_spans_multifont_pipeline(sheets, tmp_path):
     spark = configure(builder).getOrCreate()
     try:
         docs_df = spark.read.parquet(str(tmp_path / "documents.parquet"))
-        media_df = spark.read.parquet(str(tmp_path / "media.parquet"))
+        blobs = read_blobs(spark, str(tmp_path))
         got_multi = {
             (r.media_ref, r.text)
-            for r in extract_spans(
-                docs_df, media_df, fonts=("arial", "courier")
-            ).collect()
+            for r in extract_spans(docs_df, blobs, fonts=("arial", "courier")).collect()
         }
         got_default = {
             (r.media_ref, r.text)
-            for r in extract_spans(docs_df, media_df).collect()
+            for r in extract_spans(docs_df, blobs).collect()
         }
     finally:
         spark.stop()

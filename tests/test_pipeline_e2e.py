@@ -63,18 +63,18 @@ def test_scan_width_probe_skips_wide_splittable_scans(spark, corpus):
     wide scan (no pre-UDF doc_id repartition — that redundant shuffle cost
     the 32-core scaling leg ~half its throughput), while a genuinely
     narrow scan must still repartition."""
-    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
     docs = read_documents(spark, corpus)
-    media = read_media(spark, corpus)
+    blobs = read_blobs(spark, corpus)
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         # tiny split size -> the one corpus file counts as many splits
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
-        wide = _plan_of(extract_spans(docs, media), "formatted")
+        wide = _plan_of(extract_spans(docs, blobs), "formatted")
         # huge split size -> the same file is genuinely a 1-wide scan
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1g")
-        narrow = _plan_of(extract_spans(docs, media), "formatted")
+        narrow = _plan_of(extract_spans(docs, blobs), "formatted")
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     assert "hashpartitioning(doc_id" not in wide
@@ -94,8 +94,8 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
 
 
 def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
-    """The span write asks for dynamic partition overwrite on itself; the
-    session keeps its mode, so a caller's later static overwrite still
+    """The span write sets no session conf: the session keeps its
+    partition overwrite mode, so a caller's later static overwrite still
     replaces every partition."""
     from ocr_spark.pipeline.job import extract
 
@@ -131,8 +131,8 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     pq.write_table(t.slice(0, n // 2), os.path.join(stream_dir, "part-0.parquet"))
     pq.write_table(t.slice(n // 2), os.path.join(stream_dir, "part-1.parquet"))
 
-    # each micro-batch write overwrites only its own bucket partition,
-    # by a per-write option: the session's mode stays as the caller set it
+    # each micro-batch replaces only its own bucket dir (delete, then
+    # append): the session's overwrite mode stays as the caller set it
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "STATIC")
     out_dir = str(tmp_path / "out")
@@ -245,6 +245,26 @@ def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
     assert len(jobs) <= 12, f"{len(jobs)} jobs, {len(stages)} stages"
 
 
+def test_fully_committed_rerun_is_one_job(spark, corpus, tmp_path):
+    """A rerun that finds every bucket committed runs one Spark job, the
+    manifest read, and writes nothing."""
+    from ocr_spark.pipeline.job import extract
+
+    out_dir = str(tmp_path / "out")
+    extract(spark, corpus, out_dir, buckets=4)
+    sc = spark.sparkContext
+    group = "committed-rerun-job-count"
+    sc.setJobGroup(group, "job count of a fully committed rerun")
+    try:
+        again = extract(spark, corpus, out_dir, buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (again["buckets_skipped"], again["spans"]) == (4, 0)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, f"{len(jobs)} jobs"
+
+
 def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     """Three-kind interleaving: text spans -> stripper, media spans -> OCR,
     pdf spans -> PDF parser, reassembled with exact span equality. Media
@@ -253,9 +273,7 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from ocr_spark.fixtures import synthesize, synthesize_pdfs
-    from ocr_spark.pipeline.job import (
-        configure, extract_spans, read_documents, read_media, read_pdfs,
-    )
+    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
 
     corpus = str(tmp_path / "pdf_corpus")
     os.makedirs(corpus)
@@ -290,9 +308,7 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
             assert spark.conf.get(k) == v, k
     with pytest.raises(Exception, match="spark.sql.shuffle.partitions"):
         configure(spark, shuffle_partitions=-1)
-    docs = read_documents(spark, corpus)
-    media_df = read_media(spark, corpus)
-    spans = extract_spans(docs, media_df, pdfs=read_pdfs(spark, corpus))
+    spans = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
     got = _spans_set(spans)
     expected_set = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert got == expected_set
@@ -368,16 +384,43 @@ def test_resume_from_unreadable_manifest_raises(spark, corpus, tmp_path):
 
 def test_rerun_after_partial_write_no_dupes(spark, corpus, tmp_path):
     """Kill between parquet write and manifest commit -> bucket rewritten."""
-    from ocr_spark.pipeline.job import extract, extract_spans, read_documents, read_media, read_output
+    from ocr_spark.pipeline.job import extract, extract_spans, read_blobs, read_documents, read_output
 
     out_dir = str(tmp_path / "out_partial")
     # simulate a half-written bucket: write bucket 1's data without manifest
     docs = read_documents(spark, corpus)
-    media = read_media(spark, corpus)
     subset = docs.where(F.crc32(F.col("doc_id")) % 4 == 1)
-    extract_spans(subset, media).write.mode("overwrite").parquet(f"{out_dir}/spans/bucket=1")
+    extract_spans(subset, read_blobs(spark, corpus)).write.mode("overwrite").parquet(f"{out_dir}/spans/bucket=1")
 
     extract(spark, corpus, out_dir, buckets=4)
+    got = read_output(spark, out_dir)
+    expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
+    assert _spans_set(got) == expected
+    assert got.count() == len(expected)
+
+
+def test_rerun_after_write_killed_before_job_commit_no_dupes(spark, corpus, tmp_path):
+    """Kill between task commit and job commit: the committer left a
+    committed task's files under spans/_temporary. The rewrite of that
+    bucket must not merge them in as duplicates."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ocr_spark.pipeline.job import extract, read_output
+
+    out_dir = str(tmp_path / "out_killed")
+    extract(spark, corpus, out_dir, buckets=4)
+    part = next(f for f in os.listdir(f"{out_dir}/spans/bucket=1") if f.endswith(".parquet"))
+    task_dir = f"{out_dir}/spans/_temporary/0/task_202601010000_0001_m_000001/bucket=1"
+    os.makedirs(task_dir)
+    shutil.copy(f"{out_dir}/spans/bucket=1/{part}", f"{task_dir}/part-00001-killed.c000.parquet")
+    manifest_dir = f"{out_dir}/_manifest"
+    log = pq.read_table(manifest_dir)
+    shutil.rmtree(manifest_dir)
+    os.makedirs(manifest_dir)
+    pq.write_table(log.filter(pc.field("partition_id") != 1), f"{manifest_dir}/part-0.parquet")
+
+    assert extract(spark, corpus, out_dir, buckets=4)["buckets_done"] == 1
     got = read_output(spark, out_dir)
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))
     assert _spans_set(got) == expected
@@ -425,7 +468,7 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     from ocr_spark.fixtures import load_glyphs, render_page
     from ocr_spark.pdf import build_pdf
     from ocr_spark.png import encode_gray
-    from ocr_spark.pipeline.job import extract_spans, read_documents, read_media, read_pdfs
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
     span_type = pa.struct(
         [("kind", pa.string()), ("text", pa.string()),
@@ -473,9 +516,7 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
     pq.write_table(media_t, f"{d}/media.parquet")
     pq.write_table(pdfs_t, f"{d}/pdfs.parquet")
 
-    out = extract_spans(
-        read_documents(spark, d), read_media(spark, d), pdfs=read_pdfs(spark, d)
-    ).collect()
+    out = extract_spans(read_documents(spark, d), read_blobs(spark, d)).collect()
     rows = {(r.doc_id, r.ord, r.kind, r.text, r.media_ref) for r in out}
     assert rows == {
         ("d-dangling", 0, "media", None, "pg-nope"),
@@ -490,6 +531,53 @@ def test_edge_cases_dangling_ref_and_empty_docs(spark, tmp_path):
         ("d-media", 3, "media", "Spark Extract", "pg-a2"),
         ("d-shared", 0, "media", "Spark Extract", "shared"),
         ("d-shared", 1, "pdf", "x y", "shared"),
+    }
+
+
+def test_blob_route_without_a_pdf_table(spark, tmp_path):
+    """Every span whose kind is not text takes the blob route: in a corpus
+    that ships no pdfs.parquet a pdf span reads as null text, and so does a
+    span of a kind no blob table holds, even on a ref the media table has;
+    a span with a null kind yields no row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_spark.fixtures import load_glyphs, render_page
+    from ocr_spark.png import encode_gray
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
+
+    span_type = pa.struct(
+        [("kind", pa.string()), ("text", pa.string()),
+         ("media_ref", pa.string()), ("offset", pa.int32())]
+    )
+    spans = [("media", None, "pg-a"), ("pdf", None, "pdf-a"), ("video", None, "pg-a"),
+             ("video", None, "vid-a"), (None, "plain text here", "pg-a"),
+             ("text", "plain text here", None)]
+    page = render_page(["Spark"], load_glyphs())
+    d = str(tmp_path / "no_pdfs")
+    os.makedirs(d)
+    pq.write_table(pa.table({
+        "doc_id": ["d0"],
+        "spans": pa.array(
+            [[{"kind": k, "text": t, "media_ref": r, "offset": i}
+              for i, (k, t, r) in enumerate(spans)]],
+            type=pa.list_(span_type),
+        ),
+    }), f"{d}/documents.parquet")
+    pq.write_table(pa.table({
+        "media_ref": ["pg-a"],
+        "width": pa.array([page.shape[1]], pa.int32()),
+        "height": pa.array([page.shape[0]], pa.int32()),
+        "png": pa.array([encode_gray(page)], pa.binary()),
+    }), f"{d}/media.parquet")
+
+    out = extract_spans(read_documents(spark, d), read_blobs(spark, d)).collect()
+    assert {(r.ord, r.kind, r.text, r.media_ref) for r in out} == {
+        (0, "media", "Spark", "pg-a"),
+        (1, "pdf", None, "pdf-a"),
+        (2, "video", None, "pg-a"),
+        (3, "video", None, "vid-a"),
+        (5, "text", "plain text here", None),
     }
 
 
