@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -252,28 +253,29 @@ def _synth_corpus(scale: str = "tiny") -> str:
 # --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full interleaved extraction. sf0.001 documents ride through
-    the text-span path (stripper UDF); a deterministic synthesized corpus
-    (text+media+pdf spans, truth known by construction) exercises the OCR
-    and PDF-parse paths. Returns the reassembled span table
+    """Flagship: full interleaved extraction. Each sf0.001 document rides
+    through as a one-text-span document beside a deterministic synthesized
+    corpus (text+media+pdf spans, truth known by construction), all in one
+    ``extract_spans`` call, so the stripper, the OCR kernel and the PDF
+    parser run on their one route each. Returns the reassembled span table
     (doc_id, ord, kind, text, media_ref).
     """
-    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
-    from ocr_spark.pipeline.udfs import make_strip_udf
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
-    configure(spark)
     corpus = _synth_corpus("tiny3")
-    synth_spans = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
-
-    strip_udf = make_strip_udf()
     sf_docs = _docs(spark, "/root/testdata/sf0.001").select(
         F.concat(F.lit("sf-"), F.col("doc_id").cast("string")).alias("doc_id"),
-        F.lit(0).cast("int").alias("ord"),
-        F.lit("text").alias("kind"),
-        strip_udf(F.col("text")).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
+        F.array(
+            F.struct(
+                F.lit("text").alias("kind"),
+                F.col("text"),
+                F.lit(None).cast("string").alias("media_ref"),
+                F.lit(None).cast("int").alias("offset"),
+            )
+        ).alias("spans"),
     )
-    return synth_spans.unionByName(sf_docs)
+    docs = read_documents(spark, corpus).unionByName(sf_docs)
+    return extract_spans(docs, read_blobs(spark, corpus))
 
 
 # --------------------------------------------------------------------------
@@ -1481,31 +1483,17 @@ def _sql_ivf_topk() -> str:
     )
 
 
-def _q_ocr_extract(spark, sf_dir):
-    """Flagship, oracle-checked: the OCR+strip extraction over the
-    deterministic synthesized interleaved corpus. The corpus carries truth by
-    construction (fixtures.synthesize writes expected_spans.parquet from the
-    words it rendered), so the DuckDB twin simply reads the expected table —
-    a full rows+schema+value-hash check of the extraction output."""
-    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
+def _q_ocr_extract(scale, spark, sf_dir):
+    """Flagship, oracle-checked: the extraction over the deterministic
+    synthesized interleaved corpus of ``scale``: text -> stripper, media ->
+    OCR kernel, pdf (tiny3) -> PDF parser, text and blobs routed as separate
+    cost classes and reassembled. The corpus carries truth by construction
+    (fixtures.synthesize writes expected_spans.parquet from the words it
+    rendered), so the DuckDB twin simply reads the expected table — a full
+    rows+schema+value-hash check of the extraction output."""
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
-    configure(spark)
-    corpus = _synth_corpus("tiny")
-    out = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
-    return out.select(
-        "doc_id", F.col("ord").cast("long").alias("ord"), "kind", "text", "media_ref"
-    )
-
-
-def _q_ocr_extract3(spark, sf_dir):
-    """Three-kind interleaved extraction: text -> stripper, media -> OCR
-    kernel, pdf -> PDF parser; text and blobs are routed as separate cost
-    classes (media and pdf share the blob route) and reassembled. Oracle:
-    the tiny3 corpus's by-construction expected spans."""
-    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
-
-    configure(spark)
-    corpus = _synth_corpus("tiny3")
+    corpus = _synth_corpus(scale)
     out = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
     return out.select(
         "doc_id", F.col("ord").cast("long").alias("ord"), "kind", "text", "media_ref"
@@ -1617,8 +1605,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # adjacent to its TPC-H siblings rather than splitting the family.
         "brand_volume": _q_brand_volume,
         # --- driver-green in r03 AND r04 (CORRECTNESS_r03/r04.json) ---
-        "ocr_extract_spans": _q_ocr_extract,
-        "ocr_extract_interleaved3": _q_ocr_extract3,
+        "ocr_extract_spans": partial(_q_ocr_extract, "tiny"),
+        "ocr_extract_interleaved3": partial(_q_ocr_extract, "tiny3"),
         "media_image_features": _q_image_features,
         "media_image_resize": _q_image_resize,
         "media_audio_features": _q_audio_features,

@@ -117,7 +117,7 @@ def _matrix_of(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int) -> np.n
 
 def load_pages(grays: list[np.ndarray], settings: Settings) -> list[list[WordBox]]:
     """OCREngine.loadPage (:54-71) per page: segmentation only."""
-    rects = find_character_rectangles_batch(grays, settings)
+    rects = find_character_rectangles_batch(grays)
     return [
         split_words(gray, find_word_rectangles(r, settings), settings)
         for gray, r in zip(grays, rects)

@@ -20,17 +20,18 @@ from .bitmap import black_mask, get_borders
 # synthesized corpora size their glyph and word gaps to it
 CHAR_SPACING = 8.0
 
+# the reference Settings.java defaults (:15-23) that no caller changes
+CHAR_ASPECT_RATIO = 1.4
+MIN_SYMBOL_WIDTH, MAX_SYMBOL_WIDTH = 1, 100
+MIN_SYMBOL_HEIGHT, MAX_SYMBOL_HEIGHT = 1, 75
+
 
 @dataclass
 class Settings:
-    """Mirror of reference Settings.java (defaults :15-23)."""
+    """The one setting of reference Settings.java a caller sets: the G2
+    sensor size in px. Every stage takes it, as in the reference."""
 
-    character_aspect_ratio: float = 1.4
-    character_spacing: float = 0.0
-    min_symbol_width: int = 1
-    max_symbol_width: int = 100
-    min_symbol_height: int = 1
-    max_symbol_height: int = 75
+    character_spacing: float
 
 
 @dataclass
@@ -57,11 +58,12 @@ class WordBox:
 
 
 def find_character_rectangles(gray, settings: Settings):
-    """G1 for one page: ``find_character_rectangles_batch`` of ``[gray]``."""
-    return find_character_rectangles_batch([gray], settings)[0]
+    """G1 for one page: ``find_character_rectangles_batch`` of ``[gray]``.
+    G1 reads no setting, only the symbol size constants."""
+    return find_character_rectangles_batch([gray])[0]
 
 
-def find_character_rectangles_batch(grays, settings: Settings):
+def find_character_rectangles_batch(grays):
     """G1 (PageSegmenter.findCharacterRectangles, :107-199) for a list of
     pages, every seed of every page grown and shrunk in one lockstep: per
     page, the rect list [(x, y, w, h)] in reference order (seed row-major
@@ -130,10 +132,8 @@ def find_character_rectangles_batch(grays, settings: Settings):
             + 8 * right.astype(np.int64)
         )
 
-    max_w = settings.max_symbol_width
-    max_h = settings.max_symbol_height
-    min_w = settings.min_symbol_width
-    min_h = settings.min_symbol_height
+    max_w, max_h = MAX_SYMBOL_WIDTH, MAX_SYMBOL_HEIGHT
+    min_w, min_h = MIN_SYMBOL_WIDTH, MIN_SYMBOL_HEIGHT
 
     # grow (cap +3 so oversized blobs can be rejected, :125-127)
     growing = np.ones(len(seeds), dtype=bool)
@@ -236,13 +236,14 @@ def find_word_rectangles(char_rects, settings: Settings):
     return [
         w
         for w in words
-        if settings.min_symbol_height <= w[3] <= settings.max_symbol_height and w[2] != 0
+        if MIN_SYMBOL_HEIGHT <= w[3] <= MAX_SYMBOL_HEIGHT and w[2] != 0
     ]
 
 
 def split_words(gray, word_rects, settings: Settings):
     """G3-G6 (WordSegmenter.scanPage path): per word, column-projection
-    character ranges, glued-glyph splitting, ordered child boxes."""
+    character ranges, glued-glyph splitting, ordered child boxes. Reads no
+    setting, only the aspect ratio and symbol size constants."""
     mask = black_mask(gray)
     H, W = mask.shape
     colsum = np.zeros((H + 1, W), dtype=np.int32)
@@ -293,14 +294,14 @@ def split_words(gray, word_rects, settings: Settings):
             if eff_h <= 0:
                 sym_count = 1
             else:
-                sym_count = int(np.ceil(rw / (settings.character_aspect_ratio * eff_h)))
+                sym_count = int(np.ceil(rw / (CHAR_ASPECT_RATIO * eff_h)))
             if rw > 0 and sym_count <= 1:
                 word.chars.append(CharBox(wx + rx, wy, rw, wh, char_index))
                 char_index += 1
             elif rw > 0:
                 # splitCharacter (:63-110)
                 sw = rw / sym_count
-                seek = settings.min_symbol_width // 4
+                seek = MIN_SYMBOL_WIDTH // 4
                 prev_split = 0
                 for si in range(1, sym_count):
                     split = 0
@@ -313,13 +314,13 @@ def split_words(gray, word_rects, settings: Settings):
                         if f < fill:
                             fill = f
                             split = split_pos
-                    if split > prev_split and split - prev_split > settings.min_symbol_width:
+                    if split > prev_split and split - prev_split > MIN_SYMBOL_WIDTH:
                         word.chars.append(
                             CharBox(wx + rx + prev_split - 1, wy, split - prev_split, wh, char_index)
                         )
                         char_index += 1
                     prev_split = split
-                if rw - prev_split > settings.min_symbol_width:
+                if rw - prev_split > MIN_SYMBOL_WIDTH:
                     word.chars.append(
                         CharBox(wx + rx + prev_split, wy, rw - prev_split, wh, char_index)
                     )

@@ -3,8 +3,9 @@
 This container ships no Iceberg runtime jar and has no network to fetch one
 (re-verified every round; see BENCH/BASELINE.md "Iceberg commits"), so the
 pipeline's default commit protocol is the parquet substitute implemented in
-``job.ParquetSink``: append-only manifest rows as the commit unit, dynamic
-partition overwrite for idempotent bucket rewrite. The semantics are already
+``job.ParquetSink``: append-only manifest rows as the commit unit, and an
+idempotent bucket rewrite that deletes each pending bucket dir (and the
+committer's ``_temporary``) before appending. The semantics are already
 Iceberg-shaped; this module makes the swap a CODE PATH instead of prose:
 
 - ``--catalog iceberg`` on the CLI routes writes through ``writeTo(...)``
@@ -102,7 +103,8 @@ def require_iceberg(catalog_name: str = "ocr") -> list[str]:
             (or type=rest/hive with the matching catalog properties). The
             pipeline then commits span buckets with writeTo(...).overwrite-
             Partitions() and manifest rows with writeTo(...).append() instead
-            of the parquet + dynamic-partition-overwrite substitute.
+            of the parquet substitute (delete each pending bucket dir, then
+            append).
             """
         )
     )

@@ -41,11 +41,12 @@ SPANS_WITH_BUCKET = T.StructType(
 )
 
 
-def configure(builder_or_spark, shuffle_partitions: int | None = None):
-    """Engine defaults: Arrow on, AQE on (coalesce + skew-join), capped
-    Arrow batch size so media batches (PNG blobs) bound worker memory."""
+def configure(builder, shuffle_partitions: int | None = None):
+    """Engine defaults on a ``SparkSession.Builder``: AQE on (coalesce +
+    skew-join), capped Arrow batch size so media batches (PNG blobs) bound
+    worker memory. A session is configured once, where it is built; the
+    pipeline never rewrites a live one."""
     conf = {
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -59,16 +60,9 @@ def configure(builder_or_spark, shuffle_partitions: int | None = None):
     }
     if shuffle_partitions:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if isinstance(builder_or_spark, SparkSession):
-        # a live session keeps its static confs (spark.serializer,
-        # spark.locality.wait); any other key that fails to set raises
-        for k, v in conf.items():
-            if builder_or_spark.conf.isModifiable(k):
-                builder_or_spark.conf.set(k, v)
-        return builder_or_spark
     for k, v in conf.items():
-        builder_or_spark = builder_or_spark.config(k, v)
-    return builder_or_spark
+        builder = builder.config(k, v)
+    return builder
 
 
 def read_documents(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -137,7 +131,7 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
 def extract_spans(
     docs: DataFrame,
     blobs: DataFrame,
-    fonts: tuple | list | None = None,
+    fonts: tuple | list = ("arial",),
 ) -> DataFrame:
     """Logical plan for one slice of documents -> output span rows.
     ``blobs`` is the blob table of ``read_blobs``. A text span goes to the
@@ -353,8 +347,7 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
     sink.append_manifest(out.sparkSession.sql(
         "SELECT * FROM VALUES "
         + ", ".join(values)
-        + " AS t(run_id, partition_id, doc_count, span_count, media_count,"
-        "        checksum, committed_at, status)"
+        + f" AS t({', '.join(MANIFEST.fieldNames())})"
     ).coalesce(1))
     return sum(v[1] for v in stats.values())
 
@@ -366,7 +359,7 @@ def extract(
     run_id: str = "run-0",
     buckets: int = 8,
     resume: bool = True,
-    fonts: tuple | list | None = None,
+    fonts: tuple | list = ("arial",),
     catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
 ) -> dict:
     """Run the full job with bucketed idempotent commits (``commit_buckets``
@@ -386,7 +379,7 @@ def extract(
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
         raise ValueError(
             f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r}); it is "
-            "embedded in the manifest SQL literal and in output paths"
+            "embedded in the manifest SQL literal"
         )
 
     docs = read_documents(spark, input_dir)
@@ -419,7 +412,7 @@ def stream_extract(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    fonts: tuple | list | None = None,
+    fonts: tuple | list = ("arial",),
 ):
     """Start (and with ``available_now`` run to completion) the streaming
     extraction over a directory of documents parquet files.

@@ -50,9 +50,9 @@ def load_alphabet(fonts: tuple = ("arial",)) -> Alphabet:
 
     from ..png import decode_gray
 
-    for f in fonts:
-        if f not in BUNDLED_FONTS:
-            raise ValueError(f"unknown font {f!r}; bundled: {BUNDLED_FONTS}")
+    # an empty list would learn no templates and fail on the workers
+    if not fonts or not set(fonts) <= set(BUNDLED_FONTS):
+        raise ValueError(f"fonts must name bundled sheets {BUNDLED_FONTS}; got {fonts!r}")
     alpha = Alphabet()
     for f in fonts:
         sheet = resources.files("ocr_spark").joinpath(f"data/{f}.gray.png").read_bytes()
@@ -70,14 +70,14 @@ def make_strip_udf():
     return strip_udf
 
 
-def make_ocr_udf(fonts: tuple | list | None = None):
+def make_ocr_udf(fonts: tuple | list = ("arial",)):
     """Text of a batch of ``(kind, blob)`` rows: a ``media`` blob is a PNG page
-    OCR'd with the bundled ``fonts`` (T1 multi-font; default arial), a ``pdf``
+    OCR'd with the bundled ``fonts`` (T1 multi-font), a ``pdf``
     blob yields its non-empty page texts in page order, space-joined
     (ocr_spark.pdf documents the parsed subset). The Alphabet rides in the
     closure; each task builds Settings once and reuses it across its Arrow
     batches."""
-    alpha = load_alphabet(tuple(fonts)) if fonts else default_alphabet()
+    alpha = load_alphabet(tuple(fonts))
 
     @pandas_udf(T.StringType())
     def ocr_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:

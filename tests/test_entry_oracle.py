@@ -146,3 +146,41 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert [f.name for f in df.schema.fields] == ["doc_id", "ord", "kind", "text", "media_ref"]
+
+
+class _Recorder:
+    """A stand-in builder that records what ``configure`` sets."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+
+def test_registry_leaves_the_session_conf_alone(spark):
+    """``entry`` and the OCR registry queries run on the caller's session as
+    it was built: every key ``configure`` sets keeps its prior value."""
+    from ocr_spark.pipeline.job import configure
+
+    # the static keys (serializer, locality wait) cannot change at runtime
+    conf = {
+        k: {"true": "false", "false": "true"}.get(v) or str(int(v) + 1)
+        for k, v in configure(_Recorder(), 3).conf.items()
+        if spark.conf.isModifiable(k)
+    }
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        entrymod.entry(spark)
+        for name in ("ocr_extract_spans", "ocr_extract_interleaved3"):
+            entrymod.queries()[name](spark, SF_DIR)
+        assert {k: spark.conf.get(k) for k in conf} == conf
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -93,6 +93,19 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
     assert got == expected  # (kind, text, media_ref, order) per doc, 100%
 
 
+def test_committed_manifest_reads_back_as_manifest_schema(spark, corpus, tmp_path):
+    """The commit log read with no schema has schemas.MANIFEST's field
+    names and types, in order: the SQL VALUES literal that writes it takes
+    its column names from MANIFEST and casts every count to BIGINT."""
+    from ocr_spark.pipeline.job import extract
+    from ocr_spark.schemas import MANIFEST
+
+    out_dir = str(tmp_path / "out")
+    extract(spark, corpus, out_dir, buckets=2)
+    got = spark.read.parquet(f"{out_dir}/_manifest").schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in MANIFEST]
+
+
 def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
     """The span write sets no session conf: the session keeps its
     partition overwrite mode, so a caller's later static overwrite still
@@ -273,7 +286,7 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from ocr_spark.fixtures import synthesize, synthesize_pdfs
-    from ocr_spark.pipeline.job import configure, extract_spans, read_blobs, read_documents
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
 
     corpus = str(tmp_path / "pdf_corpus")
     os.makedirs(corpus)
@@ -287,27 +300,6 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
     pq.write_table(expected, os.path.join(corpus, "expected_spans.parquet"))
     pq.write_table(pdf_tbl, os.path.join(corpus, "pdfs.parquet"))
 
-    # on a live session configure sets every key Spark lets it modify (a
-    # bad value raises) and leaves only the static ones alone
-    class _Recorder:
-        def __init__(self):
-            self.conf = {}
-
-        def config(self, k, v):
-            self.conf[k] = v
-            return self
-
-    conf = configure(_Recorder()).conf
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    configure(spark)
-    assert {k for k in conf if not spark.conf.isModifiable(k)} == {
-        "spark.serializer", "spark.locality.wait"
-    }
-    for k, v in conf.items():
-        if spark.conf.isModifiable(k):
-            assert spark.conf.get(k) == v, k
-    with pytest.raises(Exception, match="spark.sql.shuffle.partitions"):
-        configure(spark, shuffle_partitions=-1)
     spans = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
     got = _spans_set(spans)
     expected_set = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))

@@ -16,12 +16,13 @@ towards keeping code. A module or name nothing reaches is dead code; delete
 it or wire it in.
 
 The options audit holds every defaulted parameter of a function of the
-package, of ``__spark_entry__.py``, of ``bench.py`` and of ``tools/*.py`` to
-the same standard: some call of a function of that name, in an entry file
-or in the package, sets it by keyword or by position (a ``**`` splat sets
-every parameter, a ``*`` splat every positional one) to something other than
-the parameter's own literal default. A parameter that only ever takes its
-default is a constant in disguise; fold it in.
+package, of ``__spark_entry__.py``, of ``bench.py`` and of ``tools/*.py``,
+and every field with a literal default of a dataclass of the package, to
+the same standard: some call of a function or class of that name, outside
+it, in an entry file or in the package, sets it by keyword or by position
+(a ``**`` splat sets every parameter, a ``*`` splat every positional one) to
+something other than its own literal default. An option that only ever
+takes its default is a constant in disguise; fold it in.
 """
 
 import ast
@@ -207,25 +208,43 @@ def test_every_top_level_name_is_reached_from_an_entry_point():
     assert not dead, f"top-level names no entry point reaches: {dead}"
 
 
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    for d in cls.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == "dataclass":
+            return True
+    return False
+
+
 def _defaulted_params(tree: ast.Module):
-    """(function name, parameter, positional index or None, default) for
-    every defaulted parameter of every def in ``tree``; a method's
-    positional index does not count ``self``."""
+    """(function name, parameter, positional index or None, default, ids of
+    the calls inside it) for every defaulted parameter of every def in
+    ``tree``, and for every field with a literal default of every dataclass
+    (its constructor's parameter); a method's positional index does not
+    count ``self``."""
     methods = {
         id(s) for c in ast.walk(tree) if isinstance(c, ast.ClassDef) for s in c.body
     }
-    for fn in ast.walk(tree):
-        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            own = {id(n) for n in ast.walk(node) if isinstance(n, ast.Call)}
+        if isinstance(node, ast.ClassDef) and _is_dataclass(node):
+            fields = [s for s in node.body if isinstance(s, ast.AnnAssign)]
+            for i, f in enumerate(fields):
+                # a default_factory is no literal: the audit skips it
+                if f.value is not None and _literal(f.value) is not None:
+                    yield node.name, f.target.id, i, f.value, own
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             continue
-        a = fn.args
+        a = node.args
         pos = a.posonlyargs + a.args
-        shift = 1 if id(fn) in methods else 0
+        shift = 1 if id(node) in methods else 0
         first = len(pos) - len(a.defaults)
         for i, default in enumerate(a.defaults, first):
-            yield fn.name, pos[i].arg, i - shift, default
+            yield node.name, pos[i].arg, i - shift, default, own
         for arg, default in zip(a.kwonlyargs, a.kw_defaults):
             if default is not None:
-                yield fn.name, arg.arg, None, default
+                yield node.name, arg.arg, None, default, own
 
 
 def _literal(node: ast.expr):
@@ -275,8 +294,10 @@ def _unset_options(mods: dict[str, str]) -> list[str]:
     return sorted(
         f"{mod}.{fn}({param})"
         for mod, tree in trees.items()
-        for fn, param, index, default in _defaulted_params(tree)
-        if not any(_sets(c, param, index, default) for c in calls.get(fn, ()))
+        for fn, param, index, default, own in _defaulted_params(tree)
+        if not any(
+            _sets(c, param, index, default) for c in calls.get(fn, ()) if id(c) not in own
+        )
     )
 
 
