@@ -28,47 +28,22 @@ def _check_box(shape: tuple, x: int, y: int, w: int, h: int) -> None:
 def get_borders(mask: np.ndarray, x: int, y: int, w: int, h: int):
     """P12 border trim (Bitmap.getBorders, Bitmap.java:506-568).
 
-    Returns (top, left, bottom, right). Quirk preserved: the bottom scan
-    starts at row y+h and the right scan at column x+w — one row/column
-    OUTSIDE the box (Bitmap.java:529,555). Callers must guarantee
-    y+h < page height and x+w < page width (true for any page with margins;
-    the reference throws/wraps otherwise).
+    Returns (top, left, bottom, right): how many rows/columns each side's
+    scan passes before its first ink, 0 where it finds none. Quirk
+    preserved: the bottom scan starts at row y+h and the right scan at
+    column x+w, one row/column OUTSIDE the box (Bitmap.java:529,555).
     """
     _check_box(mask.shape, x, y, w, h)
-    x1, y1 = x + w, y + h
-
-    box = mask[y:y1, x:x1]
-    rows = box.any(axis=1)
-    cols = box.any(axis=0)
-
-    top = int(np.argmax(rows)) if rows.any() else 0
-
-    # bottom: rows y1 .. y, row y1 restricted to cols [x, x1)
-    bottom = 0
-    if mask[y1, x:x1].any():
-        bottom = 0
-    else:
-        below = rows[::-1]  # row y1-1 first
-        if below.any():
-            bottom = int(np.argmax(below)) + 1
-        else:
-            bottom = 0
-    # NOTE: Java sets bottom = y1 - (first black row scanning down from y1);
-    # if row y1 itself has black, bottom = 0, matching the branch above.
-
-    left = int(np.argmax(cols)) if cols.any() else 0
-
-    right = 0
-    if mask[y:y1, x1].any():
-        right = 0
-    else:
-        rcols = cols[::-1]
-        if rcols.any():
-            right = int(np.argmax(rcols)) + 1
-        else:
-            right = 0
-
-    return top, left, bottom, right
+    if w == 0 or h == 0:
+        return 0, 0, 0, 0  # argmax of an empty array raises
+    box = mask[y : y + h, x : x + w]
+    rows, cols = box.any(axis=1), box.any(axis=0)
+    return (
+        int(rows.argmax()),
+        int(cols.argmax()),
+        int(rows[::-1].argmax()) + 1 if rows.any() and not mask[y + h, x : x + w].any() else 0,
+        int(cols[::-1].argmax()) + 1 if cols.any() and not mask[y : y + h, x + w].any() else 0,
+    )
 
 
 def extract_matrix(gray: np.ndarray, x: int, y: int, w: int, h: int, n: int):

@@ -4,7 +4,8 @@ G1 is vectorized across all seeds of a batch of pages simultaneously (the
 reference grows one box per seed in turn; the per-seed state machines are
 independent, so they advance in lockstep here — identical results, ~100x
 less Python overhead).
-G2-G6 operate on dozens of rectangles and stay as faithful loops.
+G2 and G4-G6 operate on dozens of rectangles and stay loops; G3 reads each
+word's column projection from the page's column prefix sums.
 """
 
 from __future__ import annotations
@@ -106,9 +107,10 @@ def find_character_rectangles_batch(grays):
     h = np.full(len(seeds), 2, dtype=np.int64)
 
     def scan_bounds(ia):
-        """PageSegmenter.scanBounds (:202-236): bitmask TOP=1 LEFT=2 BOTTOM=4 RIGHT=8."""
-        # guard: the reference would wrap the raster for x<0/y<0; clamp instead
-        # (unreachable for pages with margins, which the pipeline guarantees)
+        """PageSegmenter.scanBounds (:202-236): 0/1 flags (top, left, bottom,
+        right), each 1 where that edge of the box touches ink."""
+        # the reference would wrap the raster for x<0/y<0; clamp instead and
+        # drop, after the shrink, every rect that leaves the page
         xs, ys = np.maximum(x[ia], 0), np.maximum(y[ia], 0)
         Ws, Hs = W[ia], H[ia]
         cw = np.minimum(w[ia], Ws - xs - 1)
@@ -121,16 +123,13 @@ def find_character_rectangles_batch(grays):
         r1 = r0 + ch * (Ws + 1)
         c0 = coff[ia] + ys * Ws + xs
         c1 = c0 + ch * Ws
-        top = rowsum[r0 + cw] - rowsum[r0] > 0
-        bottom = rowsum[r1 + cw] - rowsum[r1] > 0
-        left = colsum[c1] - colsum[c0] > 0
-        right = colsum[c1 + cw] - colsum[c0 + cw] > 0
-        return (
-            top.astype(np.int64)
-            + 2 * left.astype(np.int64)
-            + 4 * bottom.astype(np.int64)
-            + 8 * right.astype(np.int64)
+        edges = (
+            rowsum[r0 + cw] > rowsum[r0],
+            colsum[c1] > colsum[c0],
+            rowsum[r1 + cw] > rowsum[r1],
+            colsum[c1 + cw] > colsum[c0 + cw],
         )
+        return [e.astype(np.int64) for e in edges]
 
     max_w, max_h = MAX_SYMBOL_WIDTH, MAX_SYMBOL_HEIGHT
     min_w, min_h = MIN_SYMBOL_WIDTH, MIN_SYMBOL_HEIGHT
@@ -142,18 +141,12 @@ def find_character_rectangles_batch(grays):
         if not active.any():
             break
         ia = np.nonzero(active)[0]
-        s = scan_bounds(ia)
-        t = (s & 1) != 0
-        l = (s & 2) != 0
-        b = (s & 4) != 0
-        r = (s & 8) != 0
+        t, l, b, r = scan_bounds(ia)
         y[ia] -= t
-        h[ia] += t
         x[ia] -= l
-        w[ia] += l
-        h[ia] += b
-        w[ia] += r
-        growing[ia[s == 0]] = False
+        h[ia] += t + b
+        w[ia] += l + r
+        growing[ia[t + l + b + r == 0]] = False
 
     # shrink to tight fit (:155-181)
     shrinking = np.ones(len(seeds), dtype=bool)
@@ -162,20 +155,19 @@ def find_character_rectangles_batch(grays):
         if not active.any():
             break
         ia = np.nonzero(active)[0]
-        s = scan_bounds(ia)
-        t = (s & 1) == 0
-        l = (s & 2) == 0
-        b = (s & 4) == 0
-        r = (s & 8) == 0
-        y[ia] += t
-        h[ia] -= t
-        x[ia] += l
-        w[ia] -= l
-        h[ia] -= b
-        w[ia] -= r
-        shrinking[ia[s == 15]] = False
+        t, l, b, r = scan_bounds(ia)
+        y[ia] += 1 - t
+        x[ia] += 1 - l
+        h[ia] -= 2 - t - b
+        w[ia] -= 2 - l - r
+        shrinking[ia[t + l + b + r == 4]] = False
 
-    keep = (w >= min_w) & (w <= max_w) & (h >= min_h) & (h <= max_h)
+    keep = (
+        (w >= min_w) & (w <= max_w) & (h >= min_h) & (h <= max_h)
+        # on the page as the probes read it, row y+h and column x+w too
+        # (bitmap._check_box): ink on a page edge grows a box off the page
+        & (x >= 0) & (y >= 0) & (x + w < W) & (y + h < H)
+    )
     rects = np.stack([page, x, y, w, h], axis=1)[keep]
     out = [[] for _ in grays]
     if len(rects):
@@ -243,87 +235,41 @@ def find_word_rectangles(char_rects, settings: Settings):
 def split_words(gray, word_rects, settings: Settings):
     """G3-G6 (WordSegmenter.scanPage path): per word, column-projection
     character ranges, glued-glyph splitting, ordered child boxes. Reads no
-    setting, only the aspect ratio and symbol size constants."""
+    setting, only the aspect ratio and symbol size constants. Word rects lie
+    on the page with row y+h and column x+w, as G1's and G2's do."""
     mask = black_mask(gray)
-    H, W = mask.shape
-    colsum = np.zeros((H + 1, W), dtype=np.int32)
+    colsum = np.zeros((mask.shape[0] + 1, mask.shape[1]), dtype=np.int32)
     np.cumsum(mask, axis=0, out=colsum[1:, :])
-
-    def col_fill(ax: int, ay: int, ah: int) -> float:
-        # WordSegmenter.countVerticalLineFillRatio (:161-183)
-        if ax < 0 or ax >= W:
-            return 0.0
-        y0 = max(ay, 0)
-        y1 = min(ay + ah, H)
-        n = y1 - y0
-        return float(colsum[y1, ax] - colsum[y0, ax]) / n
 
     words = []
     for (wx, wy, ww, wh) in word_rects:
         word = WordBox(wx, wy, ww, wh)
-
-        # getCharacterRanges (:113-144)
-        ranges = []
-        x = 0
-        while x < ww:
-            width = -1
-            for i in range(ww - x):
-                if col_fill(wx + x + i, wy, wh) > 0:
-                    width = i
-                    break
-            if width == -1:
-                break
-            x += width
-            width = -1
-            for i in range(ww - x):
-                if col_fill(wx + x + i, wy, wh) == 0:
-                    width = i
-                    break
-            if width == -1:
-                width = ww - x
-            if width > 0:
-                ranges.append((x, width))
-                x += width
-            x += 1
-
-        # splitTextBox (:26-60)
-        char_index = 0
-        for (rx, rw) in ranges:
-            t, l, b, r = get_borders(mask, wx + rx, wy, rw, wh)
+        # getCharacterRanges (:113-144): the maximal runs of columns that
+        # hold ink (countVerticalLineFillRatio > 0, :161-183)
+        ink = colsum[wy + wh, wx : wx + ww] > colsum[wy, wx : wx + ww]
+        runs = np.flatnonzero(np.diff(np.concatenate(([0], ink, [0])))).reshape(-1, 2)
+        for rx, end in runs.tolist():
+            rw = end - rx
+            # splitTextBox (:26-60)
+            t, _, b, _ = get_borders(mask, wx + rx, wy, rw, wh)
             eff_h = wh - t - b
-            if eff_h <= 0:
-                sym_count = 1
-            else:
-                sym_count = int(np.ceil(rw / (CHAR_ASPECT_RATIO * eff_h)))
-            if rw > 0 and sym_count <= 1:
-                word.chars.append(CharBox(wx + rx, wy, rw, wh, char_index))
-                char_index += 1
-            elif rw > 0:
-                # splitCharacter (:63-110)
-                sw = rw / sym_count
-                seek = MIN_SYMBOL_WIDTH // 4
-                prev_split = 0
-                for si in range(1, sym_count):
-                    split = 0
-                    fill = float(2**31 - 1)
-                    for sx in range(-seek, seek + 1):
-                        split_pos = int(sw * si + sx)
-                        if split_pos <= prev_split or split_pos > rw:
-                            continue
-                        f = col_fill(wx + rx + split_pos, wy, wh)
-                        if f < fill:
-                            fill = f
-                            split = split_pos
-                    if split > prev_split and split - prev_split > MIN_SYMBOL_WIDTH:
-                        word.chars.append(
-                            CharBox(wx + rx + prev_split - 1, wy, split - prev_split, wh, char_index)
-                        )
-                        char_index += 1
-                    prev_split = split
-                if rw - prev_split > MIN_SYMBOL_WIDTH:
-                    word.chars.append(
-                        CharBox(wx + rx + prev_split, wy, rw - prev_split, wh, char_index)
-                    )
-                    char_index += 1
+            sym_count = int(np.ceil(rw / (CHAR_ASPECT_RATIO * eff_h))) if eff_h > 0 else 1
+            if sym_count <= 1:
+                word.chars.append(CharBox(wx + rx, wy, rw, wh, len(word.chars)))
+                continue
+            # splitCharacter (:63-110): the reference takes the emptiest
+            # column within +-MIN_SYMBOL_WIDTH // 4 = 0 of each even share,
+            # so a cut is the share itself; one not past the previous cut
+            # becomes 0
+            prev = 0
+            for i in range(1, sym_count):
+                cut = int(rw / sym_count * i)
+                if cut <= prev:
+                    cut = 0
+                if cut - prev > MIN_SYMBOL_WIDTH:
+                    word.chars.append(CharBox(wx + rx + prev - 1, wy, cut - prev, wh, len(word.chars)))
+                prev = cut
+            if rw - prev > MIN_SYMBOL_WIDTH:
+                word.chars.append(CharBox(wx + rx + prev, wy, rw - prev, wh, len(word.chars)))
         words.append(word)
     return words

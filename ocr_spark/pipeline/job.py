@@ -4,8 +4,8 @@ reassemble -> bucketed idempotent commit.
 Scale design (north rule: 10^12 docs, N vs 4N executors):
 
 * Catalyst does the relational work: posexplode, kind routing, the
-  (media_ref, kind) semi-join and join-back (AQE picks broadcast vs
-  shuffle; skew-join enabled).
+  (media_ref, kind) semi-join and join-back (AQE, on by Spark's default,
+  picks broadcast vs shuffle and splits skewed join partitions).
 * Two cost classes are routed separately — text and blob. A blob span
   (a media page to OCR or a pdf to parse) costs ~10-100x a text span, so
   the two never share a task boundary. Every span whose kind is not
@@ -42,15 +42,14 @@ SPANS_WITH_BUCKET = T.StructType(
 
 
 def configure(builder, shuffle_partitions: int | None = None):
-    """Engine defaults on a ``SparkSession.Builder``: AQE on (coalesce +
-    skew-join), capped Arrow batch size so media batches (PNG blobs) bound
-    worker memory. A session is configured once, where it is built; the
-    pipeline never rewrites a live one."""
+    """Engine settings on a ``SparkSession.Builder``, each one a change from
+    Spark's default: a capped Arrow batch size so media batches (PNG blobs)
+    bound worker memory, Kryo, no locality wait and 16 MB file splits. AQE
+    with partition coalescing and skew-join is Spark's default and stays
+    unset. A session is configured once, where it is built; the pipeline
+    never rewrites a live one."""
     conf = {
         "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         # single-node/local: never trade a task slot for locality
         "spark.locality.wait": "0s",
@@ -411,7 +410,6 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
     fonts: tuple | list = ("arial",),
 ):
     """Start (and with ``available_now`` run to completion) the streaming
@@ -429,10 +427,7 @@ def stream_extract(
     blobs = read_blobs(spark, media_dir)
     sink = ParquetSink(spark, output_dir)
 
-    reader = spark.readStream.schema(DOCUMENTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(stream_dir)
+    docs = spark.readStream.schema(DOCUMENTS).parquet(stream_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         out = extract_spans(batch_df, blobs, fonts=fonts)

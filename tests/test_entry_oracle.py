@@ -159,6 +159,27 @@ class _Recorder:
         return self
 
 
+def test_configure_sets_no_spark_sql_default(spark):
+    """Every ``spark.sql.*`` key ``configure`` sets changes the session: its
+    value differs from what the session reads once the key is unset."""
+    from ocr_spark.pipeline.job import configure
+
+    conf = {k: v for k, v in configure(_Recorder(), 3).conf.items() if k.startswith("spark.sql.")}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        defaults = {}
+        for k in conf:
+            spark.conf.unset(k)
+            defaults[k] = spark.conf.get(k)
+        assert {k: v for k, v in conf.items() if v == defaults[k]} == {}
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_registry_leaves_the_session_conf_alone(spark):
     """``entry`` and the OCR registry queries run on the caller's session as
     it was built: every key ``configure`` sets keeps its prior value."""

@@ -124,12 +124,13 @@ def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
 
 
 def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
-    """Streaming extraction over two arriving files yields exactly the
-    oracle's spans. Each micro-batch commits as one bucket numbered by its
-    batch id, with one manifest row whose counts and checksum describe that
-    bucket's spans, and a restart on the same checkpoint adds no span and
-    no manifest row. A batch resume over the stream's dir refuses to
-    start."""
+    """Streaming extraction over two files that arrive one after the other
+    yields exactly the oracle's spans. The first file is drained, then the
+    second arrives and a restart on the same checkpoint picks it up. Each
+    micro-batch commits as one bucket numbered by its batch id, with one
+    manifest row whose counts and checksum describe that bucket's spans,
+    and a restart with no new file adds no span and no manifest row. A
+    batch resume over the stream's dir refuses to start."""
     import zlib
 
     import pyarrow.parquet as pq
@@ -138,22 +139,19 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
 
     stream_dir = str(tmp_path / "incoming")
     os.makedirs(stream_dir)
-    # two "arriving" files -> two micro-batch-able inputs
     t = pq.read_table(os.path.join(corpus, "documents.parquet"))
     n = t.num_rows
-    pq.write_table(t.slice(0, n // 2), os.path.join(stream_dir, "part-0.parquet"))
-    pq.write_table(t.slice(n // 2), os.path.join(stream_dir, "part-1.parquet"))
 
     # each micro-batch replaces only its own bucket dir (delete, then
     # append): the session's overwrite mode stays as the caller set it
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "STATIC")
     out_dir = str(tmp_path / "out")
-    q = stream_extract(
-        spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
+    # two "arriving" files, each drained by its own run: micro-batches 0, 1
+    for part, rows in enumerate((t.slice(0, n // 2), t.slice(n // 2))):
+        pq.write_table(rows, os.path.join(stream_dir, f"part-{part}.parquet"))
+        q = stream_extract(spark, stream_dir, corpus, out_dir, str(tmp_path / "ckpt"))
+        q.awaitTermination(300)
 
     got = read_output(spark, out_dir)
     expected = _spans_set(spark.read.parquet(f"{corpus}/expected_spans.parquet"))

@@ -1,13 +1,16 @@
 """Property-based tests (SURVEY.md §5.4): random inputs against independent
 reference implementations / invariants."""
 
+import glob
+import os
+
 import numpy as np
 import pytest
 
 hypothesis = pytest.importorskip("hypothesis")
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
-from conftest import REPO  # noqa: F401
+from conftest import GOLDENS, REPO  # noqa: F401
 
 
 @settings(max_examples=100, deadline=None)
@@ -253,3 +256,63 @@ def test_winnowing_guarantee():
     a = [str(v) for v in rng.choice(vocab, size=10)] + shared
     b = shared + [str(v) for v in rng.choice(vocab, size=10)]
     assert winnow(a) & winnow(b)
+
+
+def _random_page(rng, margin):
+    """A white page of random ink blocks, its outer ``margin`` px left white."""
+    H, W = int(rng.integers(12, 60)), int(rng.integers(12, 90))
+    page = np.full((H, W), 255, np.uint8)
+    inner = page[margin : H - margin, margin : W - margin]
+    for _ in range(int(rng.integers(1, 8))):
+        h, w = int(rng.integers(1, 12)), int(rng.integers(1, 12))
+        y = int(rng.integers(0, max(inner.shape[0] - h, 0) + 1))
+        x = int(rng.integers(0, max(inner.shape[1] - w, 0) + 1))
+        block = inner[y : y + h, x : x + w]
+        block[rng.random(block.shape) < 0.7] = 0
+    return page
+
+
+def test_recognize_scans_pages_with_ink_on_the_edge(arial_alphabet):
+    """Ink on a page edge grows G1 boxes off the page. G1 drops them, so a
+    page needs no white margin: a block in columns 0-9, a U glyph touching
+    row 0 and seeded random pages with no margin all scan to a str."""
+    from ocr_spark.kernel.engine import recognize
+    from ocr_spark.kernel.segment import CHAR_SPACING, Settings
+
+    settings = Settings(character_spacing=CHAR_SPACING)
+    block = np.full((30, 40), 255, np.uint8)
+    block[10:20, 0:10] = 0
+    u = np.full((30, 40), 255, np.uint8)
+    u[0:12, 10:12] = u[0:12, 18:20] = u[10:12, 10:20] = 0
+    rng = np.random.default_rng(20)
+    pages = [block, u] + [_random_page(rng, 0) for _ in range(300)]
+    for i, page in enumerate(pages):
+        assert isinstance(recognize(page, settings, arial_alphabet), str), i
+
+
+def test_white_padding_shifts_every_box_and_keeps_every_text(arial_alphabet):
+    """Padding a page with k white rows and columns on every side moves
+    every word box and char box by k and keeps every text: the scan goldens
+    and seeded random pages with a margin of at least 2 px."""
+    from ocr_spark.kernel.engine import scan_page
+    from ocr_spark.kernel.segment import CHAR_SPACING, Settings
+    from ocr_spark.png import decode_gray
+
+    settings = Settings(character_spacing=CHAR_SPACING)
+
+    def boxes(page, k):
+        return [
+            ((w.x - k, w.y - k, w.w, w.h), w.text,
+             [(c.x - k, c.y - k, c.w, c.h, c.char) for c in w.chars])
+            for w in scan_page(page, settings, arial_alphabet)
+        ]
+
+    pages = []
+    for path in sorted(glob.glob(os.path.join(GOLDENS, "scan_*.gray.png"))):
+        with open(path, "rb") as f:
+            pages.append(decode_gray(f.read()))
+    rng = np.random.default_rng(21)
+    pages += [_random_page(rng, int(rng.integers(2, 5))) for _ in range(200)]
+    for i, page in enumerate(pages):
+        k = int(rng.integers(1, 6))
+        assert boxes(np.pad(page, k, constant_values=255), k) == boxes(page, 0), i

@@ -70,8 +70,6 @@ TEST_SET_OPTIONS = {
     "ocr_spark.functions.events.range_count_preceding(window_us)":
         "exact window-boundary hits on a 1 s window",
     "ocr_spark.y4m.build_y4m(fps)": "the parser fuzz round-trips the frame-rate header",
-    "ocr_spark.pipeline.job.stream_extract(max_files_per_trigger)":
-        "a multi-batch stream over a small corpus",
 }
 
 
