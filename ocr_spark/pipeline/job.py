@@ -4,8 +4,9 @@ reassemble -> bucketed idempotent commit.
 Scale design (north rule: 10^12 docs, N vs 4N executors):
 
 * Catalyst does the relational work: posexplode, kind routing, the
-  (media_ref, kind) semi-join and join-back (AQE, on by Spark's default,
-  picks broadcast vs shuffle and splits skewed join partitions).
+  media_ref semi-join and the (media_ref, kind) join-back (AQE, on by
+  Spark's default, picks broadcast vs shuffle and splits skewed join
+  partitions).
 * Two cost classes are routed separately — text and blob. A blob span
   (a media page to OCR or a pdf to parse) costs ~10-100x a text span, so
   the two never share a task boundary. Every span whose kind is not
@@ -30,7 +31,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..schemas import DOCUMENTS, MANIFEST, MEDIA, OUTPUT_SPANS
 from .udfs import make_ocr_udf, make_strip_udf
@@ -194,11 +195,15 @@ def extract_spans(
     # one route for every other kind: the blob->text UDF runs once per
     # DISTINCT (media_ref, kind) and its text joins back to the span
     # occurrences, so kernel cost scales with |distinct refs| and a hot ref
-    # (one page or pdf referenced by many docs) cannot skew the stage. Keyed
-    # on (media_ref, kind): a ref string present in both the media and the
-    # pdf table reads each kind's own blob, and a span with no blob row (a
-    # dangling ref, a pdf in a corpus without pdfs, an unknown kind) joins
-    # back as null text. A null kind takes neither route: it is dropped.
+    # (one page or pdf referenced by many docs) cannot skew the stage. The
+    # join-back is keyed on (media_ref, kind): a ref string present in both
+    # the media and the pdf table reads each kind's own blob, and a span
+    # with no blob row (a dangling ref, a pdf in a corpus without pdfs, an
+    # unknown kind) joins back as null text. A null kind takes neither
+    # route: it is dropped. The semi-join is keyed on media_ref alone, so
+    # every branch of the blob union builds the same broadcast and the plan
+    # reuses one; a blob whose ref is referenced only under another kind is
+    # decoded and its text dropped by the join-back.
     key = ["media_ref", "kind"]
     rows = exploded.where(F.col("kind") != "text").select("doc_id", "ord", *key)
     blob_udf = make_ocr_udf(fonts=fonts)
@@ -211,7 +216,7 @@ def extract_spans(
     # `partitions` distinct values into `partitions` buckets is balls-in-bins
     # (measured: 3.4x stragglers).
     processed = (
-        blobs.join(rows, key, "left_semi")
+        blobs.join(rows, "media_ref", "left_semi")
         .withColumn("_salt", F.crc32(F.col("media_ref")))
         .repartition(partitions, "_salt")
         .select(*key, blob_udf(F.col("kind"), F.col("blob")).alias("out_text"))
@@ -288,13 +293,13 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
     ``sink`` and commit one manifest row per ``pending`` bucket. Returns the
     number of spans committed.
 
-    All pending buckets go in one pass: a single partitioned write
-    (`spans/bucket=K`) plus a single per-bucket stats pass and one
-    manifest write — so job-scheduling overhead is
-    amortized across buckets instead of paying write+agg+commit per bucket
-    (which capped scaling efficiency at small inputs). The commit unit is
-    the bucket: it counts as committed only once its manifest row lands,
-    and a rerun rewrites any bucket without one.
+    All pending buckets go in two Spark actions: a single partitioned write
+    (`spans/bucket=K`), then a single manifest append whose rows are
+    aggregated from the written files as it runs — so job-scheduling
+    overhead is amortized across buckets instead of paying write+agg+commit
+    per bucket (which capped scaling efficiency at small inputs). The commit
+    unit is the bucket: it counts as committed only once its manifest row
+    lands, and a rerun rewrites any bucket without one.
     """
     # one shuffle collapses the tiny output rows to one file per bucket
     # BEFORE the committer: a partitionBy write from W wide partitions
@@ -309,46 +314,37 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
     # manifest stats come from READING BACK the written files — cheaper
     # than persisting the whole output through the write (measured), and
     # the committed row counts/checksums then describe what actually
-    # landed on storage, not what the plan produced in memory.
-    stats = {
-        r["bucket"]: (r["docs"], r["spans"], r["media"], r["chk"])
-        for r in sink.read_buckets(pending).groupBy("bucket")
-        .agg(
-            F.countDistinct("doc_id").alias("docs"),
-            F.count(F.lit(1)).alias("spans"),
-            F.sum((F.col("kind") == "media").cast("long")).alias("media"),
-            F.sum(
-                F.crc32(
-                    F.concat_ws(
-                        "\x1f",
-                        "doc_id",
-                        F.col("ord").cast("string"),
-                        F.coalesce("text", F.lit("")),
-                    )
-                )
-            ).alias("chk"),
-        )
-        .collect()
-    }
-
-    now = time.strftime("%Y-%m-%dT%H:%M:%S")
-    values = []
-    for b in pending:
-        docs_n, spans_n, media_n, chk = stats.get(b, (0, 0, 0, 0))
-        values.append(
-            f"('{run_id}', {b}, CAST({docs_n} AS BIGINT), CAST({spans_n} AS BIGINT), "
-            f"CAST({media_n} AS BIGINT), '{chk}', '{now}', 'committed')"
-        )
+    # landed on storage, not what the plan produced in memory. One null
+    # row per pending bucket (null doc_id, ord and kind: no span) makes an
+    # empty bucket commit zeros.
+    written = sink.read_buckets(pending).unionByName(
+        out.sparkSession.range(1).select(F.explode(F.lit(pending)).alias("bucket")),
+        allowMissingColumns=True,
+    )
+    chk = F.crc32(F.concat_ws(
+        "\x1f", "doc_id", F.col("ord").cast("string"), F.coalesce("text", F.lit(""))
+    ))
+    # the span total rides the manifest write: one sum over its rows
+    spans = Observation()
     # append-only commit log: one small file per run, no partition dirs —
     # a re-committed bucket would just add a row, and committed_buckets
-    # de-duplicates. Built as a SQL VALUES literal (JVM LocalRelation): a
-    # python-list DataFrame would spin up a Python runner for an 8-row write.
-    sink.append_manifest(out.sparkSession.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(values)
-        + f" AS t({', '.join(MANIFEST.fieldNames())})"
-    ).coalesce(1))
-    return sum(v[1] for v in stats.values())
+    # de-duplicates. Every column is non-null, as an Iceberg manifest
+    # table created from it requires (the coalesces change no value).
+    sink.append_manifest(
+        written.groupBy("bucket").agg(
+            F.countDistinct("doc_id").alias("doc_count"),
+            F.count("ord").alias("span_count"),
+            F.count(F.when(F.col("kind") == "media", 1)).alias("media_count"),
+            F.coalesce(F.sum(chk), F.lit(0)).cast("string").alias("checksum"),
+        ).select(
+            F.lit(run_id).alias("run_id"),
+            F.coalesce("bucket", F.lit(0)).alias("partition_id"),
+            "doc_count", "span_count", "media_count", "checksum",
+            F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")).alias("committed_at"),
+            F.lit("committed").alias("status"),
+        ).observe(spans, F.sum("span_count").alias("spans")).coalesce(1)
+    )
+    return spans.get["spans"]
 
 
 def extract(
@@ -373,13 +369,12 @@ def extract(
     """
     import re as _re
 
-    # run_id lands inside a SQL VALUES literal (manifest commit): restrict
-    # it so a quote/metachar can never abort the run mid-commit
+    # run_id is the manifest's lineage key, which readers of the commit log
+    # filter on in SQL and shell: keep it a plain token, no quote or metachar
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
-        raise ValueError(
-            f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r}); it is "
-            "embedded in the manifest SQL literal"
-        )
+        raise ValueError(f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r})")
+    if buckets < 1:
+        raise ValueError(f"buckets must be at least 1 (got {buckets})")
 
     docs = read_documents(spark, input_dir)
     blobs = read_blobs(spark, input_dir)

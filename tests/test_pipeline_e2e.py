@@ -81,6 +81,29 @@ def test_scan_width_probe_skips_wide_splittable_scans(spark, corpus):
     assert "hashpartitioning(doc_id" in narrow
 
 
+def test_blob_semi_join_builds_one_broadcast(spark, corpus):
+    """The semi-join that picks the referenced blobs is keyed on media_ref
+    alone, so the media and the pdf branch of the blob union build the same
+    broadcast: the executed plan holds one BroadcastExchange, one
+    ReusedExchange of it, and 3 documents scans (text route, blob route,
+    broadcast build) on a scan wide enough to need no doc repartition."""
+    import re
+
+    from ocr_spark.pipeline.job import extract_spans, read_blobs, read_documents
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+        df = extract_spans(read_documents(spark, corpus), read_blobs(spark, corpus))
+        df.collect()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert len(re.findall(r"\+- BroadcastExchange", plan)) == 1, plan
+    assert len(re.findall(r"\+- ReusedExchange", plan)) == 1, plan
+    assert plan.count("documents.parquet") == 3, plan
+
+
 def test_extraction_span_equality(spark, corpus, tmp_path):
     from ocr_spark.pipeline.job import extract, read_output
 
@@ -95,8 +118,13 @@ def test_extraction_span_equality(spark, corpus, tmp_path):
 
 def test_committed_manifest_reads_back_as_manifest_schema(spark, corpus, tmp_path):
     """The commit log read with no schema has schemas.MANIFEST's field
-    names and types, in order: the SQL VALUES literal that writes it takes
-    its column names from MANIFEST and casts every count to BIGINT."""
+    names and types, in order, and its parquet files declare every field
+    required: an Iceberg manifest table created from them has a required
+    partition_id, and Spark refuses to append nullable values to it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     from ocr_spark.pipeline.job import extract
     from ocr_spark.schemas import MANIFEST
 
@@ -104,6 +132,22 @@ def test_committed_manifest_reads_back_as_manifest_schema(spark, corpus, tmp_pat
     extract(spark, corpus, out_dir, buckets=2)
     got = spark.read.parquet(f"{out_dir}/_manifest").schema
     assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in MANIFEST]
+    files = glob.glob(f"{out_dir}/_manifest/*.parquet")
+    assert files
+    for f in files:
+        assert [fld.name for fld in pq.read_schema(f) if fld.nullable] == [], f
+
+
+def test_extract_rejects_fewer_than_one_bucket(spark, corpus, tmp_path):
+    """buckets=0 would leave no bucket to write: extract refuses it instead
+    of reporting a run that committed nothing."""
+    from ocr_spark.pipeline.job import extract
+
+    out_dir = str(tmp_path / "out")
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="buckets"):
+            extract(spark, corpus, out_dir, buckets=n)
+    assert not os.path.exists(out_dir)
 
 
 def test_extract_leaves_partition_overwrite_mode_alone(spark, corpus, tmp_path):
@@ -237,7 +281,7 @@ def test_one_data_file_per_bucket(spark, corpus, tmp_path):
 
 
 def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
-    """One extract of the tiny corpus runs at most 12 Spark jobs (26-27
+    """One extract of the tiny corpus runs at most 10 Spark jobs (24
     stages on a 4-core host). A change that adds jobs to the fixed cost of
     every extract fails here; one that removes jobs lowers the bound."""
     from ocr_spark.pipeline.job import extract
@@ -253,7 +297,26 @@ def test_tiny_extract_job_count_is_bounded(spark, corpus, tmp_path):
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
-    assert len(jobs) <= 12, f"{len(jobs)} jobs, {len(stages)} stages"
+    assert len(jobs) <= 10, f"{len(jobs)} jobs, {len(stages)} stages"
+
+
+def test_stream_micro_batch_job_count_is_bounded(spark, corpus, tmp_path):
+    """One stream_extract micro-batch over the tiny corpus runs at most 10
+    Spark jobs (24 stages on a 4-core host), as a batch extract does: the
+    stream's thread runs every job of its run under the job group of its
+    run id."""
+    from ocr_spark.pipeline.job import stream_extract
+
+    stream_dir = str(tmp_path / "incoming")
+    os.makedirs(stream_dir)
+    shutil.copy(os.path.join(corpus, "documents.parquet"), stream_dir)
+    q = stream_extract(spark, stream_dir, corpus, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    assert q.lastProgress["batchId"] == 0  # one micro-batch
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    assert 0 < len(jobs) <= 10, f"{len(jobs)} jobs, {len(stages)} stages"
 
 
 def test_fully_committed_rerun_is_one_job(spark, corpus, tmp_path):
