@@ -103,7 +103,8 @@ def _scan_width_estimate(docs: DataFrame, need: int) -> int:
     reached. A single large splittable parquet file correctly reports its
     split count — counting FILES here once cost the 8-core scaling leg
     ~25% by re-shuffling an already-30-way scan (round-3 regression).
-    Returns 0 for non-file-backed inputs (unknown width)."""
+    Returns 0 for non-file-backed inputs (unknown width). It sizes only the
+    doc repartition; the OCR stage takes the salt exchange's width."""
     files = docs.inputFiles()
     if not files:
         return 0
@@ -151,19 +152,18 @@ def extract_spans(
     partitions = docs.sparkSession.sparkContext.defaultParallelism
     # a single large parquet file scans as 1-2 tasks; spread the docs
     # across the cluster BEFORE the explode so span generation, the
-    # stripper and the join probe all run at full width. At real scale
-    # the input is thousands of files and the scan is already wide, so
-    # only repartition when the scan is narrower than the target.
-    # Width probe via file metadata (sizes vs maxPartitionBytes) — no
-    # plan-to-RDD translation per extract call, and splittable
-    # single-file scans report their true split width instead of "1"
-    # (counting files alone re-shuffled a 30-way scan and cost the
-    # 8-core scaling leg ~25%). Non-file inputs (in-memory frames,
-    # non-file streaming micro-batches) report width 0 and therefore
-    # ALWAYS repartition: deliberate — their width is unknowable
-    # without an RDD probe, a redundant shuffle of doc rows is cheap,
-    # and an undetected narrow input serializes the OCR stage onto one
-    # core (the measured disaster this probe exists to prevent).
+    # stripper and the join-back's probe side run at full width (the OCR
+    # stage reads the salt exchange below, whose explicit width holds
+    # whatever the scan width). At real scale the input is thousands of
+    # files and the scan is already wide, so only repartition when the
+    # scan is narrower than the target. Width probe via file metadata
+    # (sizes vs maxPartitionBytes) — no plan-to-RDD translation per
+    # extract call, and splittable single-file scans report their true
+    # split width instead of "1" (counting files alone re-shuffled a
+    # 30-way scan and cost the 8-core scaling leg ~25%). Non-file inputs
+    # (in-memory frames, non-file streaming micro-batches) report width 0
+    # and therefore ALWAYS repartition: their width is unknowable without
+    # an RDD probe, and a redundant shuffle of doc rows is cheap.
     if _scan_width_estimate(docs, partitions // 2) < partitions // 2:
         docs = docs.repartition(partitions, "doc_id")
     exploded = docs.select(

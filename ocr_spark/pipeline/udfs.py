@@ -1,24 +1,23 @@
 """Arrow-vectorized UDFs: the HTML stripper and the one blob->text UDF.
-The blob UDF takes a ``(kind, blob)`` batch and dispatches on kind: media
-pages go to the NumPy OCR kernel, pdfs to the PDF parser; a null blob or a
-blob with no text gives null.
+``blob_texts`` is the blob route's rule over plain lists (media pages to the
+NumPy OCR kernel, pdfs to the PDF parser, null for a null blob or one with no
+text), and ``ocr_udf`` a scalar pandas UDF that calls it per Arrow batch.
 
 The ``Alphabet`` is learned in memory on the driver and captured by the
 blob UDF closure (Spark pickles it once per executor — ~39 KB pickled for
 arial, the broadcast-variable pattern without the broadcast plumbing). All
-heavy work is per-batch NumPy: the UDF hands the media pages of each Arrow
+heavy work is per-batch NumPy: ``blob_texts`` hands the media pages of a
 batch to one ``engine.recognize_pages`` call, which decodes and scans them
 in pixel-bounded groups (memoized by glyph window and matrix).
 
-Both UDFs call ``forget_zip_finders`` after each call or batch, so the next
-task's ``importlib.invalidate_caches()`` has no zip archive to re-read
-(120-210 ms of CPU per task on Python 3.11). Lazy imports inside a UDF cache
-the finders again, so dropping them once at import is not enough."""
+Both UDFs call ``forget_zip_finders`` after each call, so the next task's
+``importlib.invalidate_caches()`` has no zip archive to re-read (120-210 ms
+of CPU per task on Python 3.11). Lazy imports inside a UDF cache the
+finders again, so dropping them once at import is not enough."""
 
 from __future__ import annotations
 
 import functools
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import types as T
@@ -70,42 +69,42 @@ def make_strip_udf():
     return strip_udf
 
 
+def blob_texts(kinds: list, blobs: list, alpha: Alphabet) -> list[str | None]:
+    """Text of each ``(kind, blob)`` pair, in order, on local data: None for a
+    null blob; a ``media`` blob is a PNG page OCR'd with ``alpha``; any other
+    kind is a pdf, its non-empty page texts space-joined, None if it has none
+    (ocr_spark.pdf documents the parsed subset)."""
+    from ..kernel.engine import recognize_pages
+    from ..kernel.segment import CHAR_SPACING, Settings
+    from ..pdf import extract_text
+    from ..png import decode_gray
+
+    rows = list(zip(kinds, blobs))
+    # a generator: recognize_pages decodes as it goes, one pixel-bounded
+    # group of pages at a time
+    grays = (
+        decode_gray(bytes(b)) for k, b in rows if k == "media" and b is not None
+    )
+    texts = iter(recognize_pages(grays, Settings(character_spacing=CHAR_SPACING), alpha))
+    return [
+        None if b is None
+        else next(texts) if k == "media"
+        else " ".join(extract_text(bytes(b))) or None
+        for k, b in rows
+    ]
+
+
 def make_ocr_udf(fonts: tuple | list = ("arial",)):
-    """Text of a batch of ``(kind, blob)`` rows: a ``media`` blob is a PNG page
-    OCR'd with the bundled ``fonts`` (T1 multi-font), a ``pdf``
-    blob yields its non-empty page texts in page order, space-joined
-    (ocr_spark.pdf documents the parsed subset). The Alphabet rides in the
-    closure; each task builds Settings once and reuses it across its Arrow
-    batches."""
+    """``blob_texts`` over ``(kind, blob)`` columns, with the bundled ``fonts``
+    (T1 multi-font) learned on the driver and carried in the closure."""
     alpha = load_alphabet(tuple(fonts))
 
     @pandas_udf(T.StringType())
-    def ocr_udf(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        from ..kernel.engine import recognize_pages
-        from ..kernel.segment import CHAR_SPACING, Settings
-        from ..pdf import extract_text
-        from ..png import decode_gray
-
-        settings = Settings(character_spacing=CHAR_SPACING)
-
-        for kind, blob in batches:
-            rows = list(zip(kind.tolist(), blob.tolist()))
-            # a generator: recognize_pages decodes as it goes, one pixel-bounded
-            # group of pages at a time
-            grays = (
-                decode_gray(bytes(b)) for k, b in rows if k == "media" and b is not None
-            )
-            texts = iter(recognize_pages(grays, settings, alpha))
-            yield pd.Series(
-                [
-                    None if b is None
-                    else next(texts) if k == "media"
-                    else " ".join(extract_text(bytes(b))) or None
-                    for k, b in rows
-                ],
-                index=blob.index,
-                dtype=object,
-            )
-            forget_zip_finders()
+    def ocr_udf(kind: pd.Series, blob: pd.Series) -> pd.Series:
+        out = pd.Series(
+            blob_texts(kind.tolist(), blob.tolist(), alpha), index=blob.index, dtype=object
+        )
+        forget_zip_finders()
+        return out
 
     return ocr_udf

@@ -316,3 +316,51 @@ def test_white_padding_shifts_every_box_and_keeps_every_text(arial_alphabet):
     for i, page in enumerate(pages):
         k = int(rng.integers(1, 6))
         assert boxes(np.pad(page, k, constant_values=255), k) == boxes(page, 0), i
+
+
+def test_blob_texts_is_each_blob_alone_on_local_data(arial_alphabet, monkeypatch):
+    """``blob_texts`` runs on plain lists, no Spark session: media, pdf and
+    null blobs interleaved, a pdf with no text, and enough media pixels for
+    ``recognize_pages`` to scan two groups. Each text equals the one its
+    blob gives alone."""
+    from ocr_spark.kernel import engine
+    from ocr_spark.kernel.segment import CHAR_SPACING, Settings
+    from ocr_spark.pdf import build_pdf, extract_text
+    from ocr_spark.pipeline.udfs import blob_texts
+    from ocr_spark.png import decode_gray
+
+    pngs = []
+    for path in sorted(glob.glob(os.path.join(GOLDENS, "scan_*.gray.png"))):
+        with open(path, "rb") as f:
+            pngs.append(f.read())
+    pngs += pngs[::-1]
+    assert sum(decode_gray(b).size for b in pngs) > engine._PIXELS_PER_SCAN
+    pdfs = [build_pdf([["hello world"], [], ["page three"]]), build_pdf([[]]),
+            build_pdf([["one"]], compress=False)]
+    rows = []
+    for i, png in enumerate(pngs):
+        rows.append(("media", png))
+        if i % 5 == 0:
+            rows.append(("pdf", pdfs[(i // 5) % len(pdfs)]))
+        if i % 7 == 3:
+            rows.append(("media" if i % 2 else "pdf", None))
+
+    settings = Settings(character_spacing=CHAR_SPACING)
+    want = [
+        None if b is None
+        else engine.recognize(decode_gray(b), settings, arial_alphabet) if k == "media"
+        else " ".join(extract_text(b)) or None
+        for k, b in rows
+    ]
+    assert want[rows.index(("pdf", pdfs[1]))] is None and "hello world page three" in want
+
+    groups, scan_pages = [], engine.scan_pages
+
+    def counted(grays, *args):
+        groups.append(len(grays))
+        return scan_pages(grays, *args)
+
+    monkeypatch.setattr(engine, "scan_pages", counted)
+    kinds, blobs = zip(*rows)
+    assert blob_texts(list(kinds), list(blobs), arial_alphabet) == want
+    assert len(groups) >= 2 and sum(groups) == len(pngs)

@@ -192,7 +192,7 @@ def _unreached_names(mods: dict[str, str]) -> list[str]:
 def test_every_package_module_is_reached_from_an_entry_point():
     seen, mods = _reached()
     # the walk sees through function-local relative imports such as
-    # udfs.make_ocr_udf's ``from ..kernel.engine import recognize_pages``
+    # udfs.blob_texts's ``from ..kernel.engine import recognize_pages``
     assert {"ocr_spark.pipeline.udfs", "ocr_spark.kernel.engine", "ocr_spark.procstat"} <= seen
     dead = sorted(
         m for m, path in mods.items()

@@ -1,17 +1,20 @@
 #!/usr/bin/env python3
 # Catalyst plan audit of the headline queries: verifies predicate pushdown
 # (PushedFilters), column pruning (ReadSchema), join strategy, and counts
-# exchanges/python nodes. Output recorded in BENCH/PLANS.md per round.
-import os, sys, re, io
+# exchanges/python nodes. It runs each query and reads AQE's executed final
+# plan, so exchange reuse (ReusedExchange) and pruned branches show. Output
+# recorded in BENCH/PLANS.md per round.
+import os, sys, re
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from contextlib import redirect_stdout
+from collections import Counter
 from pyspark.sql import SparkSession
 import __spark_entry__ as e
+from ocr_spark.pipeline.job import configure
 
-spark = (SparkSession.builder.master("local[4]").appName("plans")
-    .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false")
-    .config("spark.ui.showConsoleProgress","false")
-    .config("spark.sql.session.timeZone","UTC").getOrCreate())
+spark = configure(SparkSession.builder.master("local[4]").appName("plans")
+    .config("spark.ui.enabled","false").config("spark.ui.showConsoleProgress","false")
+    # a plan's text cuts each scan's metadata (ReadSchema) at 100 chars by default
+    .config("spark.sql.maxMetadataStringLength", "1000"), 8).getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 SF = "/root/testdata/sf0.01"
 
@@ -35,23 +38,29 @@ AUDIT = ["q1_pricing_summary","q3_order_revenue","q5_nation_volume","brand_volum
 q = e.queries()
 for name in AUDIT:
     df = q[name](spark, SF)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    n_exch = len(re.findall(r"\bExchange\b", plan))
-    n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
-    n_smj = len(re.findall(r"SortMergeJoin|ShuffledHashJoin", plan))
-    n_wsc = len(re.findall(r"WholeStageCodegen", plan))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":  # no exchange: no AQE
+        plan = plan.executedPlan()
+    plan = plan.toString()
+    # one node a line: its name follows the tree prefix and codegen marker
+    nodes = Counter(re.findall(r"(?m)^[ :|+-]*(?:\*\(\d+\) )?(\w+)", plan))
+    n_exch = nodes["Exchange"]
+    n_bex = nodes["BroadcastExchange"]
+    n_reused = nodes["ReusedExchange"]
+    n_bhj = nodes["BroadcastHashJoin"]
+    n_smj = nodes["SortMergeJoin"] + nodes["ShuffledHashJoin"]
+    n_wsc = len(set(re.findall(r"\*\((\d+)\)", plan)))
+    # the executed plan also prints the empty lists
+    pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p]
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    n_py = len(re.findall(r"ArrowEvalPython|BatchEvalPython|FlatMapsInPandas|MapInPandas", plan))
-    n_cart = len(re.findall(r"BroadcastNestedLoopJoin|CartesianProduct", plan))
+    n_py = sum(nodes[k] for k in ("ArrowEvalPython", "BatchEvalPython", "FlatMapsInPandas", "MapInPandas"))
+    n_cart = nodes["BroadcastNestedLoopJoin"] + nodes["CartesianProduct"]
     # single-partition exchanges (a global-sort/global-window funnel unless
     # the input is already limit-bounded); top-k queries must show 0 here
-    n_sp = len(re.findall(r"SinglePartition", plan))
-    n_tko = len(re.findall(r"TakeOrderedAndProject", plan))
-    print(f"== {name}: exchanges={n_exch} bcastJoin={n_bhj} shuffleJoin={n_smj} codegen={n_wsc} pythonNodes={n_py} cartesian={n_cart} singlePartExch={n_sp} takeOrdered={n_tko}")
+    n_sp = len(re.findall(r"(?m)^[ :|+-]*Exchange SinglePartition", plan))
+    n_tko = nodes["TakeOrderedAndProject"]
+    print(f"== {name}: exchanges={n_exch} bcastExch={n_bex} reused={n_reused} bcastJoin={n_bhj} shuffleJoin={n_smj} codegen={n_wsc} pythonNodes={n_py} cartesian={n_cart} singlePartExch={n_sp} takeOrdered={n_tko}")
     for p in pushed[:4]:
         print(f"   pushed: [{p[:100]}]")
     for s in schemas[:4]:
