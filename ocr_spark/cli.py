@@ -38,8 +38,9 @@ def main(argv=None):
     ex.add_argument(
         "--catalog", choices=("parquet", "iceberg"), default="parquet",
         help="commit substrate: parquet (default; manifest-log substitute) "
-             "or iceberg (requires the iceberg-spark-runtime jar — the CLI "
-             "fails fast with exact swap instructions when it is absent)",
+             "or iceberg (the session must load the iceberg-spark-runtime, "
+             "e.g. via --packages; extract fails before any Spark job, with "
+             "exact swap instructions, when it cannot)",
     )
     ex.add_argument(
         "--warehouse", default=None,
@@ -91,15 +92,11 @@ def main(argv=None):
 
     catalog_name = None
     if args.cmd == "extract" and args.catalog == "iceberg":
-        # fail fast, BEFORE paying session spin-up: raises IcebergUnavailable
-        # with the exact --packages/--conf swap lines when no runtime jar
-        from ocr_spark.pipeline.catalog import configure_iceberg, require_iceberg
+        from ocr_spark.pipeline.catalog import configure_iceberg
 
         catalog_name = "ocr"
-        jars = require_iceberg(catalog_name)
         builder = configure_iceberg(
-            builder, args.warehouse or f"{args.output}/warehouse", catalog_name,
-            jars=jars,
+            builder, args.warehouse or f"{args.output}/warehouse", catalog_name
         )
 
     spark = builder.getOrCreate()

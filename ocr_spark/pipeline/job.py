@@ -275,16 +275,20 @@ class ParquetSink:
         rows.write.mode("append").parquet(self.manifest_dir)
 
 
-def committed_buckets(manifest: DataFrame | None) -> set[int]:
+def committed_buckets(manifest: DataFrame | None, run_id: str) -> set[int]:
     """Buckets with a committed manifest row (a re-committed bucket just
-    has more than one). Raises on rows of ``stream_extract`` (run_id
-    ``stream``): their partition ids are micro-batch ids, not doc buckets."""
+    has more than one), as seen by the writer of ``run_id``. An output dir
+    belongs to ``stream_extract`` (run_id ``stream``, whose partition ids
+    are micro-batch ids) or to ``extract`` (doc buckets), never to both:
+    raises when either finds a row of the other."""
     if manifest is None:
         return set()
     rows = (manifest.where(F.col("status") == "committed")
             .select("partition_id", "run_id").collect())
-    if any(r.run_id == "stream" for r in rows):
-        raise ValueError("output dir holds stream_extract output; extract needs its own")
+    stream = run_id == "stream"
+    if any((r.run_id == "stream") != stream for r in rows):
+        owner, writer = ("extract", "stream_extract") if stream else ("stream_extract", "extract")
+        raise ValueError(f"output dir holds {owner} output; {writer} needs its own")
     return {r.partition_id for r in rows}
 
 
@@ -359,13 +363,14 @@ def extract(
 ) -> dict:
     """Run the full job with bucketed idempotent commits (``commit_buckets``
     over every pending bucket). Returns metrics. A resume raises on a dir
-    that ``stream_extract`` wrote (see ``committed_buckets``).
+    that ``stream_extract`` wrote (see ``committed_buckets``); the run id
+    ``stream`` is that writer's and is refused here.
 
     ``catalog`` switches the commit substrate from the parquet substitute to
-    a real Iceberg catalog of that name (guarded — the CLI calls
-    ``pipeline.catalog.require_iceberg`` first; see ``catalog.IcebergSink``).
-    The pass, commit unit, and resume semantics are identical in both
-    modes.
+    a real Iceberg catalog of that name (see ``catalog.IcebergSink``, which
+    raises ``IcebergUnavailable`` before any input is read when the session
+    cannot load the catalog's class). The pass, commit unit, and resume
+    semantics are identical in both modes.
     """
     import re as _re
 
@@ -373,19 +378,21 @@ def extract(
     # filter on in SQL and shell: keep it a plain token, no quote or metachar
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
         raise ValueError(f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r})")
+    if run_id == "stream":
+        raise ValueError('run_id "stream" is reserved for stream_extract')
     if buckets < 1:
         raise ValueError(f"buckets must be at least 1 (got {buckets})")
 
-    docs = read_documents(spark, input_dir)
-    blobs = read_blobs(spark, input_dir)
     if catalog:
         from .catalog import IcebergSink
 
         sink = IcebergSink(spark, catalog)
     else:
         sink = ParquetSink(spark, output_dir)
+    docs = read_documents(spark, input_dir)
+    blobs = read_blobs(spark, input_dir)
 
-    committed = committed_buckets(sink.manifest()) if resume else set()
+    committed = committed_buckets(sink.manifest(), run_id) if resume else set()
     pending = [b for b in range(buckets) if b not in committed]
     metrics = {"buckets_total": buckets, "buckets_skipped": len(committed),
                "spans": 0, "buckets_done": len(pending)}
@@ -418,9 +425,11 @@ def stream_extract(
     bucket, and a manifest row it appends twice counts once
     (``committed_buckets``), so output is exactly-once. The output dir
     belongs to the stream alone: ``extract`` refuses to resume from it, and
-    a stream started on a batch run's dir would overwrite its buckets."""
+    the stream refuses to start on a batch run's dir, whose buckets its
+    micro-batches would overwrite."""
     blobs = read_blobs(spark, media_dir)
     sink = ParquetSink(spark, output_dir)
+    committed_buckets(sink.manifest(), "stream")
 
     docs = spark.readStream.schema(DOCUMENTS).parquet(stream_dir)
 

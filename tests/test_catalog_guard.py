@@ -1,76 +1,93 @@
-"""The --catalog iceberg guard (VERDICT r04 #9): no Spark session needed —
-the whole point is that the failure happens BEFORE session spin-up, with
-actionable swap instructions. The Iceberg commit path itself runs last, on a
-local session against a stubbed ``writeTo`` chain and table catalog."""
+"""The --catalog iceberg guard (VERDICT r04 #9): ``extract(catalog=...)``
+refuses, with actionable swap instructions, unless the session can load the
+class its catalog names, and it does so before it reads any input or runs a
+Spark job. The Iceberg commit path itself runs last, on a local session
+against a stubbed ``writeTo`` chain and table catalog."""
 
 import os
+import subprocess
+import sys
 
 import pytest
 
-from conftest import REPO  # noqa: F401
+from conftest import REPO
 
 
-def test_no_iceberg_runtime_in_this_container(monkeypatch):
-    from ocr_spark.pipeline.catalog import iceberg_runtime_jars
+@pytest.fixture(scope="module")
+def corpus(tmp_path_factory):
+    import pyarrow.parquet as pq
 
-    monkeypatch.delenv("OCR_SPARK_ICEBERG_JARS_DIR", raising=False)
-    assert iceberg_runtime_jars() == []
+    from ocr_spark.fixtures import synthesize
 
-
-def test_require_iceberg_raises_with_swap_instructions(monkeypatch):
-    from ocr_spark.pipeline.catalog import IcebergUnavailable, require_iceberg
-
-    monkeypatch.delenv("OCR_SPARK_ICEBERG_JARS_DIR", raising=False)
-    with pytest.raises(IcebergUnavailable) as exc:
-        require_iceberg()
-    msg = str(exc.value)
-    # the message must be a usable recipe, not just a refusal
-    assert "--packages org.apache.iceberg:iceberg-spark-runtime" in msg
-    assert "spark.sql.catalog.ocr=org.apache.iceberg.spark.SparkCatalog" in msg
-    assert "warehouse" in msg
-    assert "--catalog iceberg" in msg
+    out = str(tmp_path_factory.mktemp("corpus"))
+    documents, media, expected = synthesize(16, 8, seed=3)
+    pq.write_table(documents, os.path.join(out, "documents.parquet"))
+    pq.write_table(media, os.path.join(out, "media.parquet"))
+    return out, expected
 
 
-def test_require_iceberg_passes_when_jar_staged(monkeypatch, tmp_path):
-    from ocr_spark.pipeline.catalog import require_iceberg
-
-    jar = tmp_path / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar"
-    jar.write_bytes(b"PK")  # detection is by name, same as Spark's classpath glob
-    monkeypatch.setenv("OCR_SPARK_ICEBERG_JARS_DIR", str(tmp_path))
-    assert str(jar) in require_iceberg()
-
-
-def test_configure_iceberg_puts_staged_jars_on_the_classpath(monkeypatch, tmp_path):
-    """A jar that passed the guard from a non-default location must reach
-    spark.jars — otherwise the guard passes and the JVM still dies later
-    with ClassNotFoundException."""
+@pytest.fixture(scope="module")
+def spark():
     from pyspark.sql import SparkSession
 
-    from ocr_spark.pipeline.catalog import configure_iceberg
+    from ocr_spark.pipeline.job import configure
 
-    b = SparkSession.builder
-    jar = str(tmp_path / "iceberg-spark-runtime-4.0_2.13-1.10.0.jar")
-    configure_iceberg(b, "file:///tmp/wh", "ocr", jars=[jar])
-    opts = b._options
-    assert opts["spark.jars"] == jar
-    assert opts["spark.sql.catalog.ocr"] == "org.apache.iceberg.spark.SparkCatalog"
-    assert opts["spark.sql.catalog.ocr.warehouse"] == "file:///tmp/wh"
+    s = configure(
+        SparkSession.builder.master("local[2]")
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false")
+    ).getOrCreate()
+    yield s
+    s.stop()
 
 
-def test_cli_catalog_iceberg_fails_fast(monkeypatch, tmp_path):
-    """The CLI must raise the guard error before building any session (this
-    test stays sub-second precisely because no JVM ever starts)."""
-    from ocr_spark.cli import main
+def test_require_iceberg_raises_with_swap_instructions(spark, corpus, tmp_path):
+    """Without a loadable catalog class (the Iceberg class with no runtime
+    jar here, or no catalog configured at all) extract raises with a usable
+    recipe, before it runs a Spark job or writes anything."""
     from ocr_spark.pipeline.catalog import IcebergUnavailable
+    from ocr_spark.pipeline.job import extract
 
-    monkeypatch.delenv("OCR_SPARK_ICEBERG_JARS_DIR", raising=False)
-    with pytest.raises(IcebergUnavailable):
-        main([
-            "extract",
-            "--input", str(tmp_path / "in"),
-            "--output", str(tmp_path / "out"),
-            "--catalog", "iceberg",
-        ])
+    key = "spark.sql.catalog.ocr"
+    sc = spark.sparkContext
+    for plugin in ("org.apache.iceberg.spark.SparkCatalog", None):
+        if plugin:
+            spark.conf.set(key, plugin)
+        group = f"iceberg-guard-{plugin}"
+        sc.setJobGroup(group, "jobs of a refused iceberg extract")
+        out = tmp_path / "out"
+        try:
+            with pytest.raises(IcebergUnavailable) as exc:
+                extract(spark, corpus[0], str(out), catalog="ocr")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.unset(key)
+        msg = str(exc.value)
+        # the message must be a usable recipe, not just a refusal
+        assert "--packages org.apache.iceberg:iceberg-spark-runtime" in msg
+        assert "spark.sql.catalog.ocr=org.apache.iceberg.spark.SparkCatalog" in msg
+        assert "warehouse" in msg
+        assert "--catalog iceberg" in msg
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], plugin
+        assert not out.exists(), plugin
+
+
+def test_cli_catalog_iceberg_fails_fast(tmp_path):
+    """The CLI only configures the catalog on its session builder; the
+    session it starts cannot load the catalog's class, so extract refuses
+    before it reads its (here missing) input. A subprocess, because ``main``
+    stops its session."""
+    out = tmp_path / "out"
+    proc = subprocess.run(
+        [sys.executable, "-m", "ocr_spark.cli", "extract", "--catalog", "iceberg",
+         "--master", "local[1]", "--input", str(tmp_path / "in"), "--output", str(out)],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "IcebergUnavailable" in proc.stderr
+    assert "--packages" in proc.stderr
+    assert not out.exists()
 
 
 class _FakeIceberg:
@@ -111,28 +128,18 @@ class _FakeWriter:
         self.cat.tables[self.name] = kept.unionByName(self.df)
 
 
-def test_iceberg_sink_commits_through_writeto(monkeypatch, tmp_path):
+def test_iceberg_sink_commits_through_writeto(spark, corpus, monkeypatch, tmp_path):
     """extract(catalog=...) end to end on the Iceberg sink: the first run
     creates both tables (spans partitioned by bucket), the resumed run reads
     its committed set from the manifest table, overwrites the span
-    partitions of its pending buckets and appends to the manifest."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import SparkSession
+    partitions of its pending buckets and appends to the manifest. The
+    catalog names a class Spark ships; the stubs below mean it is never
+    instantiated."""
+    from ocr_spark.pipeline.job import extract
 
-    from ocr_spark.fixtures import synthesize
-    from ocr_spark.pipeline.job import configure, extract
-
-    corpus = str(tmp_path / "corpus")
-    os.makedirs(corpus)
-    documents, media, expected = synthesize(16, 8, seed=3)
-    pq.write_table(documents, os.path.join(corpus, "documents.parquet"))
-    pq.write_table(media, os.path.join(corpus, "media.parquet"))
-
-    spark = configure(
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
+    corpus, expected = corpus
+    key = "spark.sql.catalog.ocr"
+    spark.conf.set(key, "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
     try:
         cat = _FakeIceberg()
         monkeypatch.setattr(type(spark.range(1)), "writeTo", lambda df, name: cat.writer(df, name))
@@ -162,4 +169,4 @@ def test_iceberg_sink_commits_through_writeto(monkeypatch, tmp_path):
         assert sorted(r.partition_id for r in manifest.collect()) == [0, 1, 2, 3]
         assert not os.path.exists(out)  # nothing went through the parquet sink
     finally:
-        spark.stop()
+        spark.conf.unset(key)

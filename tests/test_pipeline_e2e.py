@@ -237,6 +237,41 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
         extract(spark, corpus, out_dir)
 
 
+def test_extract_refuses_the_stream_run_id(spark, corpus, tmp_path):
+    """``stream`` is stream_extract's run id: a batch run committing under
+    it would read its own manifest as stream output and refuse to resume.
+    It is refused before anything is written."""
+    from ocr_spark.pipeline.job import extract
+
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="reserved"):
+        extract(spark, corpus, str(out), run_id="stream")
+    assert not out.exists()
+
+
+def test_stream_refuses_a_batch_output_dir(spark, corpus, tmp_path):
+    """stream_extract does not start on a dir a batch extract committed:
+    its first micro-batch, bucket 0, would replace the batch's bucket 0
+    under a manifest row that still describes the rows it deleted. Every
+    file of the batch's output stays byte-identical."""
+    from ocr_spark.pipeline.job import extract, stream_extract
+
+    out = tmp_path / "out"
+    extract(spark, corpus, str(out), buckets=4)
+
+    def files():
+        return {p.relative_to(out): p.read_bytes() for p in out.rglob("*") if p.is_file()}
+
+    before = files()
+    assert any("bucket=0" in str(p) for p in before)
+    stream_dir = tmp_path / "incoming"
+    stream_dir.mkdir()
+    shutil.copy(os.path.join(corpus, "documents.parquet"), stream_dir)
+    with pytest.raises(ValueError, match="holds extract output"):
+        stream_extract(spark, str(stream_dir), corpus, str(out), str(tmp_path / "ckpt"))
+    assert files() == before
+
+
 def test_cli_extract_then_resume(corpus, tmp_path):
     """``ocr_spark.cli extract`` end to end, run twice on one output dir in
     one process: the first run commits every expected span, the rerun finds

@@ -15,6 +15,10 @@ its spelling alone, whatever module defines it, so the walk can only err
 towards keeping code. A module or name nothing reaches is dead code; delete
 it or wire it in.
 
+The environment audit allows the package one environment read, the fixture
+cache path (a deployment path); anything else a deployment varies is a
+Spark conf, a CLI flag or a parameter, never a hidden knob.
+
 The options audit holds every defaulted parameter of a function of the
 package, of ``__spark_entry__.py``, of ``bench.py`` and of ``tools/*.py``,
 and every field with a literal default of a dataclass of the package, to
@@ -71,6 +75,9 @@ TEST_SET_OPTIONS = {
         "exact window-boundary hits on a 1 s window",
     "ocr_spark.y4m.build_y4m(fps)": "the parser fuzz round-trips the frame-rate header",
 }
+
+# the only environment variables the package may read: name -> why
+ENV_READS = {"OCR_SPARK_FIXTURES": "the fixture cache path, a deployment path"}
 
 
 def _parse(path: str) -> ast.Module:
@@ -308,3 +315,37 @@ def test_every_option_is_set_by_some_caller():
     )
     stale = sorted(TEST_SET_OPTIONS.keys() - set(unset))
     assert not stale, f"allowlisted but set by a real caller, or gone: {stale}"
+
+
+def _env_reads(path: str) -> list[str]:
+    """The variable of every ``os.environ``/``os.getenv`` read in a file:
+    the name of ``environ[NAME]``, ``environ.get(NAME)`` and
+    ``getenv(NAME)``, and the source text of any other read."""
+    tree = _parse(path)
+    parent = {id(c): n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    out = []
+    for n in ast.walk(tree):
+        name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+        if name not in ("environ", "getenv"):
+            continue
+        p = parent[id(n)]
+        if name == "environ" and isinstance(p, ast.Subscript):
+            key = p.slice
+        elif name == "environ" and isinstance(p, ast.Attribute) and p.attr == "get":
+            key = parent[id(p)].args[0]
+        elif name == "getenv" and isinstance(p, ast.Call):
+            key = p.args[0]
+        else:
+            key = p
+        out.append(key.value if isinstance(key, ast.Constant) else ast.unparse(key))
+    return out
+
+
+def test_package_reads_no_environment_knob():
+    reads = sorted(
+        f"{mod}: {var}"
+        for mod, path in _package_modules().items()
+        for var in _env_reads(path)
+        if var not in ENV_READS
+    )
+    assert not reads, f"environment reads outside {sorted(ENV_READS)}: {reads}"
