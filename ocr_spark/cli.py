@@ -34,7 +34,6 @@ def main(argv=None):
     ex.add_argument("--output", required=True)
     ex.add_argument("--run-id", default="run-0")
     ex.add_argument("--buckets", type=int, default=8)
-    ex.add_argument("--no-resume", action="store_true")
     ex.add_argument(
         "--catalog", choices=("parquet", "iceberg"), default="parquet",
         help="commit substrate: parquet (default; manifest-log substitute) "
@@ -108,7 +107,6 @@ def main(argv=None):
                 args.output,
                 run_id=args.run_id,
                 buckets=args.buckets,
-                resume=not args.no_resume,
                 fonts=args.fonts,
                 catalog=catalog_name,
             )

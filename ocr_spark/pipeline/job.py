@@ -19,12 +19,13 @@ Scale design (north rule: 10^12 docs, N vs 4N executors):
   join-back).
 * Resume: the doc space is split into `buckets` by crc32(doc_id); each
   bucket's dir is deleted and rewritten (spans/bucket=K), and then the
-  bucket commits one manifest row (lineage + metrics + checksum). A rerun
-  skips committed buckets and safely rewrites half-written ones — append-only
-  Iceberg-style commit protocol on plain parquet.
+  bucket commits one manifest row (lineage + metrics + checksum + bucket
+  count). A rerun with the same count skips committed buckets and safely
+  rewrites half-written ones — append-only Iceberg-style commit protocol
+  on plain parquet.
 * ``stream_extract`` runs the same plan per micro-batch of a directory of
   arriving documents files and commits each micro-batch as one bucket
-  through the same ``commit_buckets`` path.
+  through the same ``commit_buckets`` path, with bucket count 0.
 """
 
 from __future__ import annotations
@@ -275,26 +276,28 @@ class ParquetSink:
         rows.write.mode("append").parquet(self.manifest_dir)
 
 
-def committed_buckets(manifest: DataFrame | None, run_id: str) -> set[int]:
-    """Buckets with a committed manifest row (a re-committed bucket just
-    has more than one), as seen by the writer of ``run_id``. An output dir
-    belongs to ``stream_extract`` (run_id ``stream``, whose partition ids
-    are micro-batch ids) or to ``extract`` (doc buckets), never to both:
-    raises when either finds a row of the other."""
+def committed_buckets(manifest: DataFrame | None, buckets: int) -> set[int]:
+    """Partition ids with a manifest row (a re-committed one has more than
+    one), for a writer that cuts ``buckets`` doc buckets, or micro-batches
+    when ``buckets`` is 0 (``stream_extract``). Raises unless every row
+    records the same cut: an id cut another way names other documents."""
     if manifest is None:
         return set()
-    rows = (manifest.where(F.col("status") == "committed")
-            .select("partition_id", "run_id").collect())
-    stream = run_id == "stream"
-    if any((r.run_id == "stream") != stream for r in rows):
-        owner, writer = ("extract", "stream_extract") if stream else ("stream_extract", "extract")
-        raise ValueError(f"output dir holds {owner} output; {writer} needs its own")
+    rows = manifest.select("partition_id", "buckets").collect()
+    stray = {r.buckets for r in rows} - {buckets}
+    if stray:
+        n = stray.pop()
+        held = ("output that records no bucket count" if n is None
+                else "stream_extract output" if n == 0 else f"extract output in {n} buckets")
+        writer = "stream_extract" if buckets == 0 else f"extract with {buckets} buckets"
+        raise ValueError(f"output dir holds {held}; {writer} needs its own")
     return {r.partition_id for r in rows}
 
 
-def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int:
+def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str, buckets: int) -> int:
     """Write the span rows ``out`` (each carrying its ``bucket``) through
-    ``sink`` and commit one manifest row per ``pending`` bucket. Returns the
+    ``sink`` and commit one manifest row per ``pending`` bucket, which
+    records the cut ``buckets`` (see ``committed_buckets``). Returns the
     number of spans committed.
 
     All pending buckets go in two Spark actions: a single partitioned write
@@ -344,8 +347,8 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str) -> int
             F.lit(run_id).alias("run_id"),
             F.coalesce("bucket", F.lit(0)).alias("partition_id"),
             "doc_count", "span_count", "media_count", "checksum",
-            F.lit(time.strftime("%Y-%m-%dT%H:%M:%S")).alias("committed_at"),
-            F.lit("committed").alias("status"),
+            F.lit(time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())).alias("committed_at"),
+            F.lit(buckets).alias("buckets"),
         ).observe(spans, F.sum("span_count").alias("spans")).coalesce(1)
     )
     return spans.get["spans"]
@@ -357,14 +360,14 @@ def extract(
     output_dir: str,
     run_id: str = "run-0",
     buckets: int = 8,
-    resume: bool = True,
     fonts: tuple | list = ("arial",),
     catalog: str | None = None,  # Iceberg catalog name (see pipeline.catalog)
 ) -> dict:
     """Run the full job with bucketed idempotent commits (``commit_buckets``
-    over every pending bucket). Returns metrics. A resume raises on a dir
-    that ``stream_extract`` wrote (see ``committed_buckets``); the run id
-    ``stream`` is that writer's and is refused here.
+    over every pending bucket). Returns metrics. A rerun skips committed
+    buckets, and raises before any write on a dir cut into another bucket
+    count or by ``stream_extract`` (``committed_buckets``); a recompute
+    goes to a fresh output dir.
 
     ``catalog`` switches the commit substrate from the parquet substitute to
     a real Iceberg catalog of that name (see ``catalog.IcebergSink``, which
@@ -378,8 +381,6 @@ def extract(
     # filter on in SQL and shell: keep it a plain token, no quote or metachar
     if not _re.fullmatch(r"[A-Za-z0-9._-]+", run_id):
         raise ValueError(f"run_id must match [A-Za-z0-9._-]+ (got {run_id!r})")
-    if run_id == "stream":
-        raise ValueError('run_id "stream" is reserved for stream_extract')
     if buckets < 1:
         raise ValueError(f"buckets must be at least 1 (got {buckets})")
 
@@ -389,10 +390,9 @@ def extract(
         sink = IcebergSink(spark, catalog)
     else:
         sink = ParquetSink(spark, output_dir)
+    committed = committed_buckets(sink.manifest(), buckets)
     docs = read_documents(spark, input_dir)
     blobs = read_blobs(spark, input_dir)
-
-    committed = committed_buckets(sink.manifest(), run_id) if resume else set()
     pending = [b for b in range(buckets) if b not in committed]
     metrics = {"buckets_total": buckets, "buckets_skipped": len(committed),
                "spans": 0, "buckets_done": len(pending)}
@@ -401,7 +401,7 @@ def extract(
         out = extract_spans(
             docs.where(bucket_of.isin(pending)), blobs, fonts=fonts
         ).withColumn("bucket", bucket_of.cast("int"))
-        metrics["spans"] = commit_buckets(sink, out, pending, run_id)
+        metrics["spans"] = commit_buckets(sink, out, pending, run_id, buckets)
     return metrics
 
 
@@ -424,18 +424,18 @@ def stream_extract(
     the last finished micro-batch; a replayed batch overwrites only its own
     bucket, and a manifest row it appends twice counts once
     (``committed_buckets``), so output is exactly-once. The output dir
-    belongs to the stream alone: ``extract`` refuses to resume from it, and
-    the stream refuses to start on a batch run's dir, whose buckets its
-    micro-batches would overwrite."""
+    belongs to the stream alone (its manifest rows record 0 buckets):
+    ``extract`` refuses to resume from it, and the stream refuses to start
+    on a batch run's dir, whose buckets its micro-batches would overwrite."""
     blobs = read_blobs(spark, media_dir)
     sink = ParquetSink(spark, output_dir)
-    committed_buckets(sink.manifest(), "stream")
+    committed_buckets(sink.manifest(), 0)
 
     docs = spark.readStream.schema(DOCUMENTS).parquet(stream_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         out = extract_spans(batch_df, blobs, fonts=fonts)
-        commit_buckets(sink, out.withColumn("bucket", F.lit(batch_id)), [batch_id], "stream")
+        commit_buckets(sink, out.withColumn("bucket", F.lit(batch_id)), [batch_id], "stream", 0)
 
     writer = (
         docs.writeStream.foreachBatch(process)

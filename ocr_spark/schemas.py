@@ -47,6 +47,6 @@ MANIFEST = T.StructType(
         T.StructField("media_count", T.LongType()),
         T.StructField("checksum", T.StringType()),
         T.StructField("committed_at", T.StringType()),
-        T.StructField("status", T.StringType()),
+        T.StructField("buckets", T.IntegerType(), False),
     ]
 )

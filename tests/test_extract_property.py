@@ -21,7 +21,9 @@ A second property drives ``extract()`` itself over the same corpora: with
 died between writing spans and committing them), then a rerun. The
 committed spans must equal the same walk, each in bucket
 ``crc32(doc_id) % buckets``, and every bucket must hold exactly one manifest
-row whose counts and checksum describe those spans.
+row whose counts and checksum describe those spans and that records the
+bucket count. A rerun with another bucket count is refused after one job,
+the manifest read, and leaves every output file byte-identical.
 """
 
 import functools
@@ -30,6 +32,7 @@ import shutil
 import tempfile
 import zlib
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -202,15 +205,16 @@ def test_extract_spans_equals_driver_walk(
     assert Counter(map(tuple, got)) == Counter(_oracle(docs, media, pdfs))
 
 
-def _manifest_row(run_id, rows):
-    """The manifest row ``extract()`` commits for a bucket holding ``rows``."""
+def _manifest_row(run_id, buckets, rows):
+    """The manifest row ``extract()`` commits for a bucket holding ``rows``
+    in a run cut into ``buckets``."""
     return (
         run_id,
         len({r[0] for r in rows}),
         len(rows),
         sum(r[2] == "media" for r in rows),
         str(sum(zlib.crc32(f"{r[0]}\x1f{r[1]}\x1f{r[3] or ''}".encode()) for r in rows)),
-        "committed",
+        buckets,
     )
 
 
@@ -235,7 +239,12 @@ def _cut_manifest(manifest_dir, keep):
     pdf_entries=st.lists(_pdf_entry, min_size=len(_REFS), max_size=len(_REFS)),
     ship_pdfs=st.booleans(),
     cut=st.integers(1, 5).flatmap(
-        lambda n: st.tuples(st.just(n), st.sets(st.integers(0, n - 1)))
+        lambda n: st.tuples(
+            st.just(n),
+            st.sets(st.integers(0, n - 1)),
+            # a second bucket count, never the first
+            st.integers(1, 4).map(lambda k: k + (k >= n)),
+        )
     ),
 )
 def test_extract_resume_commits_the_driver_walk(
@@ -244,7 +253,7 @@ def test_extract_resume_commits_the_driver_walk(
     from ocr_spark.pipeline.job import SPANS_WITH_BUCKET, extract
     from ocr_spark.schemas import MANIFEST
 
-    buckets, keep = cut
+    buckets, keep, other = cut
     docs = [(f"d{i}", spans) for i, spans in enumerate(docs)]
     media = {r: _blob(e) for r, e in zip(_REFS, media_entries) if e[0] != "absent"}
     pdfs = (
@@ -263,6 +272,22 @@ def test_extract_resume_commits_the_driver_walk(
         len(keep), buckets - len(keep)
     )
 
+    def files():
+        return {p: p.read_bytes() for p in Path(out).rglob("*") if p.is_file()}
+
+    before = files()
+    sc = spark.sparkContext
+    group = f"rerun-with-{other}-buckets-{os.path.basename(d)}"
+    sc.setJobGroup(group, "a rerun cut into another bucket count")
+    try:
+        with pytest.raises(ValueError, match=f"in {buckets} buckets; extract with {other} buckets"):
+            extract(spark, d, out, run_id="run-2", buckets=other)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert files() == before
+
     want = [
         (*row, zlib.crc32(row[0].encode()) % buckets)
         for row in _oracle(docs, media, pdfs)
@@ -279,8 +304,8 @@ def test_extract_resume_commits_the_driver_walk(
     assert sorted(r.partition_id for r in manifest) == list(range(buckets))
     for r in manifest:
         assert (
-            r.run_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.status
+            r.run_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.buckets
         ) == _manifest_row(
-            "run-0" if r.partition_id in keep else "run-1",
+            "run-0" if r.partition_id in keep else "run-1", buckets,
             [w for w in want if w[5] == r.partition_id],
         )

@@ -6,6 +6,7 @@ import os
 import shutil
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -45,6 +46,11 @@ def _spans_set(df):
         (r.doc_id, r.ord, r.kind, r.text, r.media_ref)
         for r in df.select("doc_id", "ord", "kind", "text", "media_ref").collect()
     }
+
+
+def _files(d):
+    """Every file under ``d``, by path, with its bytes."""
+    return {p: p.read_bytes() for p in d.rglob("*") if p.is_file()}
 
 
 def _plan_of(df, mode="simple"):
@@ -120,7 +126,8 @@ def test_committed_manifest_reads_back_as_manifest_schema(spark, corpus, tmp_pat
     """The commit log read with no schema has schemas.MANIFEST's field
     names and types, in order, and its parquet files declare every field
     required: an Iceberg manifest table created from them has a required
-    partition_id, and Spark refuses to append nullable values to it."""
+    partition_id, and Spark refuses to append nullable values to it. Each
+    row's committed_at is a UTC time with a ``Z`` suffix."""
     import glob
 
     import pyarrow.parquet as pq
@@ -130,8 +137,10 @@ def test_committed_manifest_reads_back_as_manifest_schema(spark, corpus, tmp_pat
 
     out_dir = str(tmp_path / "out")
     extract(spark, corpus, out_dir, buckets=2)
-    got = spark.read.parquet(f"{out_dir}/_manifest").schema
-    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in MANIFEST]
+    log = spark.read.parquet(f"{out_dir}/_manifest")
+    assert [(f.name, f.dataType) for f in log.schema] == [(f.name, f.dataType) for f in MANIFEST]
+    for r in log.collect():
+        time.strptime(r.committed_at, "%Y-%m-%dT%H:%M:%SZ")  # raises without the Z
     files = glob.glob(f"{out_dir}/_manifest/*.parquet")
     assert files
     for f in files:
@@ -174,7 +183,8 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
     micro-batch commits as one bucket numbered by its batch id, with one
     manifest row whose counts and checksum describe that bucket's spans,
     and a restart with no new file adds no span and no manifest row. A
-    batch resume over the stream's dir refuses to start."""
+    batch resume over the stream's dir refuses to start and leaves every
+    file byte-identical."""
     import zlib
 
     import pyarrow.parquet as pq
@@ -206,7 +216,7 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
         by_bucket.setdefault(r.bucket, []).append(r)
     assert sorted(by_bucket) == [0, 1]  # one bucket per arriving file
     manifest = [
-        (r.run_id, r.partition_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.status)
+        (r.run_id, r.partition_id, r.doc_count, r.span_count, r.media_count, r.checksum, r.buckets)
         for r in spark.read.parquet(f"{out_dir}/_manifest").collect()
     ]
     assert sorted(manifest) == [
@@ -217,7 +227,7 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
             sum(r.kind == "media" for r in rows),
             str(sum(zlib.crc32(f"{r.doc_id}\x1f{r.ord}\x1f{r.text or ''}".encode())
                     for r in rows)),
-            "committed",
+            0,
         )
         for b, rows in sorted(by_bucket.items())
     ]
@@ -233,20 +243,22 @@ def test_stream_extract_matches_batch_oracle(spark, corpus, tmp_path):
 
     # its buckets are micro-batch ids: resuming them as doc buckets would
     # skip buckets 0 and 1 and keep the stream's spans
+    before = _files(tmp_path / "out")
     with pytest.raises(ValueError, match="stream_extract"):
         extract(spark, corpus, out_dir)
+    assert _files(tmp_path / "out") == before
 
 
-def test_extract_refuses_the_stream_run_id(spark, corpus, tmp_path):
-    """``stream`` is stream_extract's run id: a batch run committing under
-    it would read its own manifest as stream output and refuse to resume.
-    It is refused before anything is written."""
+def test_batch_run_named_stream_resumes(spark, corpus, tmp_path):
+    """``stream`` is a run id like any other: what marks an output dir as
+    the stream's is the bucket count its manifest rows record (0), so a
+    batch run named ``stream`` commits and its rerun resumes."""
     from ocr_spark.pipeline.job import extract
 
-    out = tmp_path / "out"
-    with pytest.raises(ValueError, match="reserved"):
-        extract(spark, corpus, str(out), run_id="stream")
-    assert not out.exists()
+    out_dir = str(tmp_path / "out")
+    assert extract(spark, corpus, out_dir, run_id="stream", buckets=2)["buckets_done"] == 2
+    again = extract(spark, corpus, out_dir, run_id="stream", buckets=2)
+    assert (again["buckets_skipped"], again["buckets_done"]) == (2, 0)
 
 
 def test_stream_refuses_a_batch_output_dir(spark, corpus, tmp_path):
@@ -258,42 +270,47 @@ def test_stream_refuses_a_batch_output_dir(spark, corpus, tmp_path):
 
     out = tmp_path / "out"
     extract(spark, corpus, str(out), buckets=4)
-
-    def files():
-        return {p.relative_to(out): p.read_bytes() for p in out.rglob("*") if p.is_file()}
-
-    before = files()
+    before = _files(out)
     assert any("bucket=0" in str(p) for p in before)
     stream_dir = tmp_path / "incoming"
     stream_dir.mkdir()
     shutil.copy(os.path.join(corpus, "documents.parquet"), stream_dir)
     with pytest.raises(ValueError, match="holds extract output"):
         stream_extract(spark, str(stream_dir), corpus, str(out), str(tmp_path / "ckpt"))
-    assert files() == before
+    assert _files(out) == before
 
 
 def test_cli_extract_then_resume(corpus, tmp_path):
-    """``ocr_spark.cli extract`` end to end, run twice on one output dir in
-    one process: the first run commits every expected span, the rerun finds
-    every bucket committed and writes nothing."""
+    """``ocr_spark.cli extract`` end to end, run three times on one output
+    dir in one process: the first run commits every expected span, the
+    rerun finds every bucket committed and writes nothing, and a third run
+    with ``--buckets 4`` over the 8-bucket dir exits non-zero, naming both
+    counts, and leaves the commit log as it was."""
     import json
 
     import pyarrow.parquet as pq
 
     out_dir = str(tmp_path / "out")
     argv = ["extract", "--input", corpus, "--output", out_dir, "--master", "local[2]"]
-    script = f"from ocr_spark.cli import main; main({argv!r}); main({argv!r})"
+    other = argv + ["--buckets", "4"]
+    script = f"from ocr_spark.cli import main; main({argv!r}); main({argv!r}); main({other!r})"
     proc = subprocess.run(
         [sys.executable, "-c", script], cwd=REPO, capture_output=True, text=True,
         timeout=600,
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.returncode != 0
+    assert "holds extract output in 8 buckets; extract with 4 buckets" in proc.stderr, (
+        proc.stderr[-4000:]
+    )
     first, second = (
         json.loads(line) for line in proc.stdout.splitlines() if line.startswith("{")
     )
     assert first["spans"] == pq.read_metadata(f"{corpus}/expected_spans.parquet").num_rows
     assert second["buckets_skipped"] == second["buckets_total"]
     assert second["spans"] == 0
+    log = pq.read_table(f"{out_dir}/_manifest")
+    assert sorted(log["partition_id"].to_pylist()) == list(range(8))
+    assert set(log["buckets"].to_pylist()) == {8}
 
 
 def test_one_data_file_per_bucket(spark, corpus, tmp_path):
@@ -420,6 +437,7 @@ def test_extraction_with_interleaved_pdf_spans(spark, tmp_path):
 
 
 def test_resume_is_idempotent(spark, corpus, tmp_path):
+    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -430,12 +448,17 @@ def test_resume_is_idempotent(spark, corpus, tmp_path):
     # a run killed after committing buckets 0 and 1: the spans of 2 and 3
     # are on disk, but the commit log has no row for them
     manifest_dir = f"{out_dir}/_manifest"
-    log = pq.read_table(manifest_dir)
+    log = pq.read_table(manifest_dir).filter(pc.field("partition_id") < 2)
     shutil.rmtree(manifest_dir)
     os.makedirs(manifest_dir)
+    # a commit log from before rows recorded their bucket count is refused
     pq.write_table(
-        log.filter(pc.field("partition_id") < 2), f"{manifest_dir}/part-0.parquet"
+        log.drop_columns(["buckets"]).append_column("status", pa.array(["committed"] * 2)),
+        f"{manifest_dir}/part-0.parquet",
     )
+    with pytest.raises(ValueError, match="records no bucket count"):
+        extract(spark, corpus, out_dir, buckets=4)
+    pq.write_table(log, f"{manifest_dir}/part-0.parquet")
 
     # second run resumes: skips the two committed buckets, finishes the rest
     metrics = extract(spark, corpus, out_dir, buckets=4)
@@ -450,7 +473,7 @@ def test_resume_is_idempotent(spark, corpus, tmp_path):
     # manifest: every bucket committed exactly once
     m = spark.read.parquet(f"{out_dir}/_manifest")
     assert m.count() == 4
-    assert m.where(F.col("status") == "committed").count() == 4
+    assert m.where(F.col("buckets") == 4).count() == 4
     assert m.agg(F.sum("span_count")).collect()[0][0] == len(expected)
 
 
@@ -467,7 +490,7 @@ def test_resume_from_unreadable_manifest_raises(spark, corpus, tmp_path):
         f.write(b"not a parquet file" * 8)
 
     with pytest.raises(Exception, match="_manifest"):
-        extract(spark, corpus, out_dir, buckets=4, resume=True)
+        extract(spark, corpus, out_dir, buckets=4)
 
 
 def test_rerun_after_partial_write_no_dupes(spark, corpus, tmp_path):
