@@ -1,10 +1,19 @@
 """spark-submit entry point (absolute imports: spark-submit runs this file
 as a top-level script, with the package supplied via --py-files).
 
-  spark-submit --py-files dist/ocr_spark.zip ocr_spark/cli.py extract \
-      --input /data/corpus --output /data/out --buckets 64
+  spark-submit --master 'local[4]' --py-files dist/ocr_spark.zip \
+      ocr_spark/cli.py extract --input /data/corpus --output /data/out --buckets 64
 
-Also runnable as `python3 -m ocr_spark.cli ...` for local smoke runs.
+Spark settings (master, shuffle partitions, catalogs) come only from Spark's
+own launch settings: spark-submit's ``--master`` and ``--conf``, or
+``PYSPARK_SUBMIT_ARGS`` under ``python3 -m ocr_spark.cli``, e.g.
+
+  PYSPARK_SUBMIT_ARGS="--master local[4] pyspark-shell" \
+      python3 -m ocr_spark.cli extract --input /data/corpus --output /data/out
+
+``extract --catalog NAME`` commits to the Iceberg catalog ``NAME`` that the
+launch configured (``--conf spark.sql.catalog.NAME=...``) in place of
+``--output DIR``.
 """
 
 from __future__ import annotations
@@ -25,25 +34,19 @@ def main(argv=None):
         help="comma list of bundled font sheets to learn (arial,courier); "
              "multiple fonts accumulate into one template set",
     )
-    spark_job.add_argument("--master", default=None,
-                           help="override master (default: from spark-submit)")
-    spark_job.add_argument("--shuffle-partitions", type=int, default=None)
 
     ex = sub.add_parser("extract", parents=[spark_job], help="run the extraction pipeline")
     ex.add_argument("--input", required=True)
-    ex.add_argument("--output", required=True)
     ex.add_argument("--run-id", default="run-0")
     ex.add_argument("--buckets", type=int, default=8)
-    ex.add_argument(
-        "--catalog", choices=("parquet", "iceberg"), default="parquet",
-        help="commit substrate: parquet (default; manifest-log substitute) "
-             "or iceberg (the session must load the iceberg-spark-runtime, "
-             "e.g. via --packages; extract fails before any Spark job, with "
-             "exact swap instructions, when it cannot)",
-    )
-    ex.add_argument(
-        "--warehouse", default=None,
-        help="warehouse URI for --catalog iceberg (default: <output>/warehouse)",
+    where = ex.add_mutually_exclusive_group(required=True)
+    where.add_argument("--output", help="output dir (parquet spans + manifest)")
+    where.add_argument(
+        "--catalog",
+        help="Iceberg catalog the session already has (spark-submit --conf "
+             "spark.sql.catalog.NAME=...); extract fails before any Spark "
+             "job, with exact swap instructions, when the session cannot "
+             "load its class",
     )
 
     st = sub.add_parser("stream", parents=[spark_job],
@@ -84,21 +87,7 @@ def main(argv=None):
 
     from ocr_spark.pipeline.job import configure, extract, stream_extract
 
-    builder = SparkSession.builder.appName(f"ocr_spark.{args.cmd}")
-    if args.master:
-        builder = builder.master(args.master)
-    builder = configure(builder, args.shuffle_partitions)
-
-    catalog_name = None
-    if args.cmd == "extract" and args.catalog == "iceberg":
-        from ocr_spark.pipeline.catalog import configure_iceberg
-
-        catalog_name = "ocr"
-        builder = configure_iceberg(
-            builder, args.warehouse or f"{args.output}/warehouse", catalog_name
-        )
-
-    spark = builder.getOrCreate()
+    spark = configure(SparkSession.builder.appName(f"ocr_spark.{args.cmd}")).getOrCreate()
     try:
         if args.cmd == "extract":
             metrics = extract(
@@ -108,7 +97,7 @@ def main(argv=None):
                 run_id=args.run_id,
                 buckets=args.buckets,
                 fonts=args.fonts,
-                catalog=catalog_name,
+                catalog=args.catalog,
             )
             print(json.dumps(metrics))
         else:  # stream

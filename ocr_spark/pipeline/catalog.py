@@ -1,12 +1,14 @@
-"""The Iceberg commit substrate behind ``--catalog iceberg`` (VERDICT r04 #9).
+"""The Iceberg commit substrate behind ``extract --catalog NAME``.
 
 The pipeline's default commit protocol is the parquet substitute
 implemented in ``job.ParquetSink``: append-only manifest rows as the commit
 unit, and an idempotent bucket rewrite that deletes each pending bucket dir
 (and the committer's ``_temporary``) before appending. ``IcebergSink``
-commits the same units through ``writeTo(...)`` against a configured Spark
-catalog: atomic ``overwritePartitions`` for span buckets, ``append`` for the
-manifest.
+commits the same units through ``writeTo(...)`` against the Spark catalog
+``NAME``: atomic ``overwritePartitions`` for span buckets, ``append`` for
+the manifest. The catalog is the session's own, as its launch configured it
+(spark-submit ``--conf spark.sql.catalog.NAME=...``, or
+``PYSPARK_SUBMIT_ARGS``); the package sets none of its properties.
 
 Whether the runtime is there is asked of the session itself: the sink
 raises ``IcebergUnavailable``, with the exact spark-submit / conf lines a
@@ -31,20 +33,6 @@ ICEBERG_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
 
 class IcebergUnavailable(RuntimeError):
     """Raised when the session cannot load the Iceberg catalog's class."""
-
-
-def configure_iceberg(builder, warehouse: str, catalog_name: str = "ocr"):
-    """Attach a hadoop-type Iceberg catalog to a session builder; the
-    runtime jar itself comes from spark-submit's ``--packages``/``--jars``
-    or ``spark.jars``."""
-    return (
-        builder.config(
-            f"spark.sql.catalog.{catalog_name}",
-            "org.apache.iceberg.spark.SparkCatalog",
-        )
-        .config(f"spark.sql.catalog.{catalog_name}.type", "hadoop")
-        .config(f"spark.sql.catalog.{catalog_name}.warehouse", warehouse)
-    )
 
 
 class IcebergSink:
@@ -72,7 +60,7 @@ class IcebergSink:
                     --conf spark.sql.catalog.{catalog}.type=hadoop \\
                     --conf spark.sql.catalog.{catalog}.warehouse=<warehouse-uri> \\
                     --py-files dist/ocr_spark.zip ocr_spark/cli.py extract \\
-                    --catalog iceberg --input ... --output ...
+                    --catalog {catalog} --input ...
 
                 (or type=rest/hive with the matching catalog properties). The
                 pipeline then commits span buckets with writeTo(...).overwrite-

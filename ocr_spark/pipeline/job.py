@@ -357,7 +357,7 @@ def commit_buckets(sink, out: DataFrame, pending: list[int], run_id: str, bucket
 def extract(
     spark: SparkSession,
     input_dir: str,
-    output_dir: str,
+    output_dir: str | None,
     run_id: str = "run-0",
     buckets: int = 8,
     fonts: tuple | list = ("arial",),
@@ -369,11 +369,12 @@ def extract(
     count or by ``stream_extract`` (``committed_buckets``); a recompute
     goes to a fresh output dir.
 
-    ``catalog`` switches the commit substrate from the parquet substitute to
-    a real Iceberg catalog of that name (see ``catalog.IcebergSink``, which
-    raises ``IcebergUnavailable`` before any input is read when the session
-    cannot load the catalog's class). The pass, commit unit, and resume
-    semantics are identical in both modes.
+    ``catalog`` switches the commit substrate from the parquet substitute
+    under ``output_dir`` to the session's Iceberg catalog of that name (see
+    ``catalog.IcebergSink``, which raises ``IcebergUnavailable`` before any
+    input is read when the session cannot load the catalog's class); with a
+    catalog, ``output_dir`` is ignored and may be ``None``. The pass, commit
+    unit, and resume semantics are identical in both modes.
     """
     import re as _re
 

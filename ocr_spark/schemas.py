@@ -22,8 +22,6 @@ DOCUMENTS = T.StructType(
 MEDIA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
         T.StructField("png", T.BinaryType()),
     ]
 )

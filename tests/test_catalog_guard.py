@@ -1,8 +1,9 @@
-"""The --catalog iceberg guard (VERDICT r04 #9): ``extract(catalog=...)``
-refuses, with actionable swap instructions, unless the session can load the
-class its catalog names, and it does so before it reads any input or runs a
-Spark job. The Iceberg commit path itself runs last, on a local session
-against a stubbed ``writeTo`` chain and table catalog."""
+"""The ``extract --catalog NAME`` guard: ``extract(catalog=...)`` refuses,
+with actionable swap instructions, unless the session can load the class its
+catalog names, and it does so before it reads any input or runs a Spark job.
+The CLI passes Spark's launch settings through to the session unchanged. The
+Iceberg commit path itself runs last, on a local session against a stubbed
+``writeTo`` chain and table catalog."""
 
 import os
 import subprocess
@@ -68,26 +69,81 @@ def test_require_iceberg_raises_with_swap_instructions(spark, corpus, tmp_path):
         assert "--packages org.apache.iceberg:iceberg-spark-runtime" in msg
         assert "spark.sql.catalog.ocr=org.apache.iceberg.spark.SparkCatalog" in msg
         assert "warehouse" in msg
-        assert "--catalog iceberg" in msg
+        assert "--catalog ocr" in msg
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], plugin
         assert not out.exists(), plugin
 
 
+def _submit_env(*spark_args):
+    """The environment of a ``python -m ocr_spark.cli`` subprocess whose
+    session starts with ``spark_args`` as spark-submit arguments."""
+    return dict(os.environ, PYSPARK_SUBMIT_ARGS=" ".join((*spark_args, "pyspark-shell")))
+
+
 def test_cli_catalog_iceberg_fails_fast(tmp_path):
-    """The CLI only configures the catalog on its session builder; the
-    session it starts cannot load the catalog's class, so extract refuses
-    before it reads its (here missing) input. A subprocess, because ``main``
-    stops its session."""
-    out = tmp_path / "out"
+    """``extract --catalog NAME`` refuses when the session it starts cannot
+    load the catalog's class (here no catalog is configured at all), before
+    it reads its (here missing) input or writes anything. A subprocess,
+    because ``main`` stops its session."""
     proc = subprocess.run(
-        [sys.executable, "-m", "ocr_spark.cli", "extract", "--catalog", "iceberg",
-         "--master", "local[1]", "--input", str(tmp_path / "in"), "--output", str(out)],
+        [sys.executable, "-m", "ocr_spark.cli", "extract", "--catalog", "ocr",
+         "--input", str(tmp_path / "in")],
         cwd=REPO, capture_output=True, text=True, timeout=300,
+        env=_submit_env("--master", "local[1]"),
     )
     assert proc.returncode != 0
     assert "IcebergUnavailable" in proc.stderr
     assert "--packages" in proc.stderr
-    assert not out.exists()
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_cli_passes_spark_submit_settings_through(tmp_path):
+    """The CLI adds no Spark setting of its own: the master, the catalog's
+    three properties and the shuffle partitions that the launch gave reach
+    the session unchanged, and ``--catalog NAME`` names that catalog in
+    place of an output dir. ``extract`` is replaced by a recorder, so no
+    Iceberg runtime is needed. ``--output`` and ``--catalog`` together are
+    a usage error."""
+    import json
+
+    from ocr_spark.cli import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["extract", "--input", str(tmp_path), "--output", str(tmp_path / "out"),
+              "--catalog", "ocr"])
+    assert exc.value.code == 2
+
+    launch = {
+        "spark.sql.catalog.ocr": "org.apache.iceberg.spark.SparkCatalog",
+        "spark.sql.catalog.ocr.type": "rest",
+        "spark.sql.catalog.ocr.warehouse": str(tmp_path / "wh"),
+        "spark.sql.shuffle.partitions": "3",
+    }
+    script = f"""
+import json
+import ocr_spark.pipeline.job as job
+from ocr_spark.cli import main
+
+def record(spark, input_dir, output_dir, **kw):
+    got = {{k: spark.conf.get(k) for k in {sorted(launch)!r}}}
+    got.update(master=spark.sparkContext.master, output_dir=output_dir,
+               catalog=kw["catalog"])
+    print("RECORDED " + json.dumps(got))
+    return {{}}
+
+job.extract = record
+main(["extract", "--input", {str(tmp_path)!r}, "--catalog", "ocr"])
+"""
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, capture_output=True, text=True,
+        timeout=300,
+        env=_submit_env("--master", "local[1]",
+                        *(f"--conf {k}={v}" for k, v in launch.items())),
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    (line,) = [ln for ln in proc.stdout.splitlines() if ln.startswith("RECORDED ")]
+    got = json.loads(line[len("RECORDED "):])
+    assert got == {**launch, "master": "local[1]", "output_dir": None, "catalog": "ocr"}
 
 
 class _FakeIceberg:

@@ -291,12 +291,13 @@ def test_cli_extract_then_resume(corpus, tmp_path):
     import pyarrow.parquet as pq
 
     out_dir = str(tmp_path / "out")
-    argv = ["extract", "--input", corpus, "--output", out_dir, "--master", "local[2]"]
+    argv = ["extract", "--input", corpus, "--output", out_dir]
     other = argv + ["--buckets", "4"]
     script = f"from ocr_spark.cli import main; main({argv!r}); main({argv!r}); main({other!r})"
     proc = subprocess.run(
         [sys.executable, "-c", script], cwd=REPO, capture_output=True, text=True,
         timeout=600,
+        env=dict(os.environ, PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell"),
     )
     assert proc.returncode != 0
     assert "holds extract output in 8 buckets; extract with 4 buckets" in proc.stderr, (
